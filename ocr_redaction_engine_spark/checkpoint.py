@@ -8,7 +8,8 @@ an append-only parquet/Iceberg lineage table keyed by a stable hash bucket of
 ``doc_id``:
 
     checkpoint(bucket int, status string, attempt int, n_docs long,
-               n_spans long, n_pages long, n_boxes long, wall_sec double)
+               n_spans long, n_pages long, n_boxes long, n_chars long,
+               wall_sec double)
 
 * Claiming/resume   = anti-join the input against completed buckets (S1/S2).
 * Completion        = one appended row per bucket after its output commit
@@ -17,7 +18,14 @@ an append-only parquet/Iceberg lineage table keyed by a stable hash bucket of
                       bucket-partitioned dynamic overwrite makes reruns
                       idempotent).
 * Metrics           = per-bucket aggregates (A8) — queryable lineage instead
-                      of log lines.
+                      of log lines. Each is observed on the frame a sink
+                      writes (:class:`BucketMetrics`), inside the write job
+                      itself: n_docs = documents the wave processed (after
+                      the validity route), n_spans = span rows written,
+                      n_pages = span rows with a media_ref, n_boxes =
+                      redaction rows written (0 for extraction), n_chars =
+                      sum of the written span texts' lengths. Rows written
+                      before n_chars existed read it back as null.
 
 Bucketing uses xxhash64(doc_id) so the same document always lands in the same
 bucket across runs and cluster sizes — the property that makes resume exact
@@ -28,12 +36,14 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from .session import local_frame
 
 CHECKPOINT_SCHEMA = (
     "bucket int, status string, attempt int, n_docs long, n_spans long, "
-    "n_pages long, n_boxes long, wall_sec double"
+    "n_pages long, n_boxes long, n_chars long, wall_sec double"
 )
 
 
@@ -49,23 +59,21 @@ def completed_buckets(spark: SparkSession, ckpt_dir: str) -> set[int]:
     """Read the lineage table; a MISSING table means "fresh run" — any other
     failure (corrupt files, storage errors) must RAISE, not silently restart:
     at the 10^12-doc design point a transient read error misread as "fresh"
-    would reprocess every bucket (idempotent but catastrophic)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        # explicit schema: a ckpt dir holding only hidden _claims files has
-        # no visible parquet to infer from but is a legitimate fresh run;
-        # corrupt data files still fail at scan time, not silently
-        rows = (
-            spark.read.schema(CHECKPOINT_SCHEMA).parquet(ckpt_dir)
-            .filter(F.col("status") == "done")
-            .select("bucket").distinct().collect()
-        )
-        return {r.bucket for r in rows}
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return set()
-        raise
+    would reprocess every bucket (idempotent but catastrophic). Existence
+    is asked of the filesystem, not learned from a failed read, so a fresh
+    run submits no query."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(ckpt_dir)
+    if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
+        return set()
+    # explicit schema: a ckpt dir holding only hidden _claims files has
+    # no visible parquet to infer from but is a legitimate fresh run;
+    # corrupt data files still fail at scan time, not silently
+    rows = (
+        spark.read.schema(CHECKPOINT_SCHEMA).parquet(ckpt_dir)
+        .filter(F.col("status") == "done")
+        .select("bucket").distinct().collect()
+    )
+    return {r.bucket for r in rows}
 
 
 def filter_remaining(docs_with_bucket: DataFrame, done: set[int]) -> DataFrame:
@@ -78,15 +86,67 @@ def filter_remaining(docs_with_bucket: DataFrame, done: set[int]) -> DataFrame:
     return docs_with_bucket.filter(~F.col("bucket").isin(list(done)))
 
 
+def checkpoint_frame(spark: SparkSession, rows: list[dict]) -> DataFrame:
+    """Lineage rows as a CHECKPOINT_SCHEMA frame; missing metrics are 0."""
+    return local_frame(spark, [
+        (r["bucket"], r.get("status", "done"), r.get("attempt", 1),
+         r.get("n_docs", 0), r.get("n_spans", 0), r.get("n_pages", 0),
+         r.get("n_boxes", 0), r.get("n_chars", 0), r.get("wall_sec", 0.0))
+        for r in rows], CHECKPOINT_SCHEMA)
+
+
 def append_checkpoint(spark: SparkSession, ckpt_dir: str, rows: list[dict]) -> None:
     if not rows:
         return
-    spark.createDataFrame(
-        [(r["bucket"], r.get("status", "done"), r.get("attempt", 1),
-          r.get("n_docs", 0), r.get("n_spans", 0), r.get("n_pages", 0),
-          r.get("n_boxes", 0), r.get("wall_sec", 0.0)) for r in rows],
-        schema=CHECKPOINT_SCHEMA,
-    ).write.mode("append").parquet(ckpt_dir)
+    checkpoint_frame(spark, rows).write.mode("append").parquet(ckpt_dir)
+
+
+class BucketMetrics:
+    """Per-bucket lineage sums observed on the frame ONE sink writes.
+
+    For every metric ``name=column`` and bucket ``b`` of the wave's group,
+    Spark sums the per-row column over the rows whose ``bucket`` is b while
+    the sink's write job runs, so lineage costs no re-read of the output.
+    Attach with :meth:`on` to a frame no other sink's plan contains (an
+    observation that reaches two queries reports the first to finish), and
+    call :meth:`get` only after that write succeeded — it blocks until the
+    observed query reports. Observe rejects DISTINCT aggregates, so every
+    metric is a sum.
+    """
+
+    def __init__(self, group: list[int], bucket: Column | None = None,
+                 **metrics: Column):
+        self.group, self.metrics = list(group), metrics
+        self.bucket = F.col("bucket") if bucket is None else bucket
+        self._obs = Observation()
+
+    def on(self, df: DataFrame) -> DataFrame:
+        return df.observe(self._obs, *[
+            F.sum(F.when(self.bucket == b, v)).alias(f"{k}_{b}")
+            for k, v in self.metrics.items() for b in self.group])
+
+    def get(self) -> dict[int, dict[str, int]]:
+        row = self._obs.get
+        return {b: {k: int(row[f"{k}_{b}"] or 0) for k in self.metrics}
+                for b in self.group}
+
+
+def span_metrics() -> dict[str, Column]:
+    """The lineage metrics of a flat span-sequence sink (spans, main_spans)."""
+    return {"n_spans": F.lit(1),
+            "n_pages": (F.col("media_ref") != "").cast("int"),
+            "n_chars": F.length("text")}
+
+
+def lineage_rows(group: list[int], wall_sec: float,
+                 *observed: BucketMetrics) -> list[dict]:
+    """One ``done`` row per bucket of the wave, merging every observed
+    sink's metrics; the wave's wall time is split evenly."""
+    got = [m.get() for m in observed]
+    return [{"bucket": b, "status": "done",
+             "wall_sec": wall_sec / max(1, len(group)),
+             **{k: v for g in got for k, v in g[b].items()}}
+            for b in group]
 
 
 class StageTimer:
@@ -152,12 +212,12 @@ def claim_buckets(spark: SparkSession, ckpt_dir: str, buckets: list[int],
     if not buckets:
         return set()
     now = time.time()
-    rows = spark.createDataFrame(
-        [(int(b), claimant, now) for b in buckets], schema=CLAIMS_SCHEMA)
+    rows = local_frame(spark, [(int(b), claimant, now) for b in buckets],
+                       CLAIMS_SCHEMA)
     if backend is None:
         target = claims_target or _claims_dir(ckpt_dir)
         rows.write.mode("append").parquet(target)
-        all_claims = spark.read.parquet(target).collect()
+        all_claims = spark.read.schema(CLAIMS_SCHEMA).parquet(target).collect()
     else:
         from . import lakehouse
         resolved = lakehouse.pick_backend(spark, backend)

@@ -199,7 +199,8 @@ def run_extraction_job(spark: SparkSession, documents_path: str,
     """Batch extraction with partition-granular resume — same lineage
     machinery as the redaction job (checkpoint.py): stable
     xxhash64(doc_id) buckets, bucket-partitioned dynamic overwrite
-    (idempotent reruns), lineage appended only after the data commit."""
+    (idempotent reruns), lineage appended only after the data commit and
+    observed during it (checkpoint.BucketMetrics)."""
     cfg = config or ExtractionConfig()
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
@@ -212,32 +213,16 @@ def run_extraction_job(spark: SparkSession, documents_path: str,
     for g in range(0, len(remaining), cfg.bucket_group):
         group = remaining[g: g + cfg.bucket_group]
         timer = ckpt.StageTimer()
-        wave_docs = docs.filter(F.col("bucket").isin(group))
-        out = ckpt.with_bucket(
-            extract_spans(wave_docs.drop("bucket"), media_pages, cfg), cfg.n_buckets)
+        # both union branches scan the observed documents; an observation
+        # is reported once per query, so n_docs counts each document once
+        docs_m = ckpt.BucketMetrics(group, n_docs=F.lit(1))
+        out_m = ckpt.BucketMetrics(group, **ckpt.span_metrics())
+        wave_docs = docs_m.on(docs.filter(F.col("bucket").isin(group)))
+        out = out_m.on(ckpt.with_bucket(
+            extract_spans(wave_docs.drop("bucket"), media_pages, cfg), cfg.n_buckets))
         out.write.mode("overwrite").partitionBy("bucket").parquet(f"{out_dir}/main_spans")
-
-        m = {r["bucket"]: r for r in
-             spark.read.parquet(f"{out_dir}/main_spans")
-             .filter(F.col("bucket").isin(group))
-             .groupBy("bucket")
-             .agg(F.countDistinct("doc_id").alias("n_docs"),
-                  F.count("*").alias("n_spans"),
-                  F.countDistinct(F.when(F.col("media_ref") != "", F.col("media_ref")))
-                  .alias("n_pages"),
-                  F.sum(F.length("text")).alias("n_chars"))
-             .collect()}
-        wall = timer.elapsed()
-        ckpt.append_checkpoint(spark, ckpt_dir, [
-            {"bucket": bk, "status": "done",
-             "n_docs": m[bk]["n_docs"] if bk in m else 0,
-             "n_spans": m[bk]["n_spans"] if bk in m else 0,
-             "n_pages": m[bk]["n_pages"] if bk in m else 0,
-             # lineage schema reuse: n_boxes carries extracted chars here
-             "n_boxes": int(m[bk]["n_chars"]) if bk in m and m[bk]["n_chars"] is not None else 0,
-             "wall_sec": wall / max(1, len(group))}
-            for bk in group
-        ])
+        ckpt.append_checkpoint(spark, ckpt_dir, ckpt.lineage_rows(
+            group, timer.elapsed(), docs_m, out_m))
         stats["waves"] += 1
     stats["buckets_total"] = cfg.n_buckets
     return stats

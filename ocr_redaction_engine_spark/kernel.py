@@ -397,6 +397,10 @@ def _lower_places(places_t: tuple) -> tuple:
     return tuple(p.lower() for p in places_t)
 
 
+#: A numbered (``\1``) or named (``(?P=name)``) backreference.
+_BACKREF = re.compile(r"\\[1-9]|\(\?P=")
+
+
 @lru_cache(maxsize=64)
 def _places_literal_ok(places_t: tuple) -> bool:
     """The ``str.find`` fast path is sound only for plain-ASCII,
@@ -422,14 +426,21 @@ def _place_candidates(words, place_list):
     unescaped IGNORECASE union regex per token — an exactly equivalent
     prefilter for the inner ``_ci(place).search(t)`` test by ∃-semantics —
     and to all indices if the union itself fails to compile (in which case
-    the inner loop raises on the same bad pattern, like the reference)."""
+    the inner loop raises on the same bad pattern, like the reference).
+    Places with a backreference stay out of the union — the alternation
+    renumbers their groups — and are searched one by one."""
     places_t = tuple(place_list)
     if not _places_literal_ok(places_t):
+        united = tuple(p for p in places_t if not _BACKREF.search(p))
+        alone = [p for p in places_t if _BACKREF.search(p)]
         try:
-            union = _ci_union(places_t)
+            regs = [_ci(p) for p in alone]
+            if united:
+                regs.append(_ci_union(united))
         except re.error:
             return list(range(len(words)))
-        return [i for i, w in enumerate(words) if union.search(w[4])]
+        return [i for i, w in enumerate(words)
+                if any(r.search(w[4]) for r in regs)]
     lowered = "\n".join(w[4] for w in words).lower()
     starts, pos = [], 0
     for w in words:

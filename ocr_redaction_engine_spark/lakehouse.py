@@ -175,12 +175,8 @@ def append_checkpoint_table(spark: SparkSession, target: str,
     the append is an ACID commit (concurrent writers serialize instead of
     clobbering files); parquet keeps checkpoint.append_checkpoint's
     append-mode directory semantics."""
-    from .checkpoint import CHECKPOINT_SCHEMA
+    from .checkpoint import checkpoint_frame
     if not rows:
         return pick_backend(spark, backend)
-    df = spark.createDataFrame(
-        [(r["bucket"], r.get("status", "done"), r.get("attempt", 1),
-          r.get("n_docs", 0), r.get("n_spans", 0), r.get("n_pages", 0),
-          r.get("n_boxes", 0), r.get("wall_sec", 0.0)) for r in rows],
-        schema=CHECKPOINT_SCHEMA)
-    return write_table(df, target, backend=backend, mode="append")
+    return write_table(checkpoint_frame(spark, rows), target, backend=backend,
+                       mode="append")

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 #: Extension whitelist (in_progress/process_in_progress_status.py:81).
 VALID_EXTENSIONS = ("jpg", "jpeg", "tiff")
 
@@ -118,9 +120,8 @@ def route_with_collected(documents: DataFrame, invalid_rows) -> tuple:
     zero added plan cost when the set is empty (the common case), a literal
     isin filter for small sets, a broadcast anti-join against a local frame
     past 1000 ids."""
-    spark = documents.sparkSession
-    invalid = spark.createDataFrame(
-        [tuple(r) for r in invalid_rows], INVALID_DDL)
+    invalid = local_frame(documents.sparkSession,
+                          [tuple(r) for r in invalid_rows], INVALID_DDL)
     if not invalid_rows:
         return documents, invalid
     ids = [r[0] for r in invalid_rows]

@@ -19,9 +19,11 @@ partitioning is too coarse for the Python stage; AQE splits join skew).
 from __future__ import annotations
 
 import logging
-from dataclasses import dataclass
+import threading
+from dataclasses import dataclass, replace
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import checkpoint as ckpt
@@ -30,8 +32,10 @@ from .operators.extract import extract_page_rows
 from .operators.redactions import build_redactions, build_values
 from .operators.reassemble import assemble_documents, reassemble_flat
 from .operators.tokenize import tokenize_fixture
-from .operators.validate import (VALID_EXTENSIONS, collect_invalid,
-                                 route_with_collected, validity_route)
+from .operators.validate import (INVALID_DDL, VALID_EXTENSIONS,
+                                 collect_invalid, route_with_collected,
+                                 validity_route)
+from .session import local_frame
 
 _log = logging.getLogger(__name__)
 
@@ -71,13 +75,18 @@ class PipelineConfig:
 
 def run_pipeline(documents: DataFrame, media_pages: DataFrame,
                  config: PipelineConfig | None = None,
-                 counters: dict | None = None) -> dict[str, DataFrame]:
+                 counters: dict | None = None,
+                 observe_docs: Callable[[DataFrame], DataFrame] | None = None
+                 ) -> dict[str, DataFrame]:
     """Plan builder: returns the output DataFrames. With
     ``cfg.validate=True`` (the default) it EAGERLY runs the bounded
     validity-probe job at call time (one slim schema-pruned scan, like the
     reference's promotion-time check); set ``validate=False`` or pre-supply
     ``cfg.invalid_rows`` to restore a fully lazy build. ``counters`` =
-    optional accumulator dict for live progress metrics (A8)."""
+    optional accumulator dict for live progress metrics (A8).
+    ``observe_docs`` wraps the valid documents feeding the ``spans`` output
+    only (run_job's lineage n_docs observation), so the extract outputs'
+    plans do not carry it."""
     cfg = config or PipelineConfig()
     if cfg.validate:
         # P1: INVALID_DOCUMENT is terminal BEFORE any processing — one slim
@@ -98,11 +107,8 @@ def run_pipeline(documents: DataFrame, media_pages: DataFrame,
         else:
             documents, invalid = route_with_collected(documents, inv_rows)
     else:
-        invalid = documents.sparkSession.createDataFrame(
-            [], "doc_id string, status string, task_result string, reason string")
-    spans = explode_spans(documents)
-    text_spans, media_spans = route_spans(spans)
-
+        invalid = local_frame(documents.sparkSession, [], INVALID_DDL)
+    media_spans = route_spans(explode_spans(documents))[1]
     pages = tokenize_fixture(media_spans, media_pages)
     if cfg.extract_partitions:
         # page-granular spread before the Python boundary: Arrow-stage cost is
@@ -113,9 +119,10 @@ def run_pipeline(documents: DataFrame, media_pages: DataFrame,
     # SQL-expressible classification workloads
     extracted = extract_page_rows(pages, cfg.level, counters, places=cfg.places)
 
-    from .operators.xml_sink import render_redactions_xml, render_values_xml
-
-    flat_spans = reassemble_flat(text_spans, media_spans)
+    # the spans output explodes its own copy of the documents, so an
+    # observe_docs observation reaches the spans plan only
+    spans_docs = documents if observe_docs is None else observe_docs(documents)
+    flat_spans = reassemble_flat(*route_spans(explode_spans(spans_docs)))
     return {
         "spans": flat_spans,
         "documents": assemble_documents(flat_spans),
@@ -124,9 +131,6 @@ def run_pipeline(documents: DataFrame, media_pages: DataFrame,
         "page_rows": extracted,
         "redactions": build_redactions(extracted),
         "values": build_values(extracted),
-        # byte-identical reference XML documents (lazy; computed only if forced)
-        "redactions_xml": render_redactions_xml(extracted),
-        "values_xml": render_values_xml(extracted),
         # P1 third terminal status (empty frame when cfg.validate=False)
         "invalid": invalid,
     }
@@ -138,8 +142,9 @@ def run_job(spark: SparkSession, documents_path: str, media_pages_path: str,
 
     Buckets (stable xxhash64(doc_id) % n) are processed in groups; each group
     writes its outputs partitioned by bucket (dynamic overwrite → idempotent
-    reruns) and then appends its lineage rows. A killed run resumes by
-    anti-joining completed buckets (north_rule).
+    reruns) and then appends its lineage rows, whose counts are observed
+    during the sink writes (checkpoint.BucketMetrics). A killed run resumes
+    by anti-joining completed buckets (north_rule).
     """
     cfg = config or PipelineConfig()
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -176,8 +181,6 @@ def run_job(spark: SparkSession, documents_path: str, media_pages_path: str,
     # P1 validity: probe the WHOLE corpus once (the reference validates once,
     # at promotion), write the status sink, and thread the collected rows
     # into every wave so no wave re-runs the probe join
-    from dataclasses import replace as _replace
-    from .operators.validate import INVALID_DDL
     if cfg.validate:
         slim_docs = spark.read.schema(
             "doc_id string, spans array<struct<kind:string,media_ref:string>>"
@@ -189,14 +192,15 @@ def run_job(spark: SparkSession, documents_path: str, media_pages_path: str,
                                     cfg.ext_whitelist)[1]
         else:
             inv_rows_cfg = inv_rows
-            inv_df = spark.createDataFrame(
-                [tuple(r) for r in inv_rows], INVALID_DDL)
+            inv_df = local_frame(spark, [tuple(r) for r in inv_rows], INVALID_DDL)
     else:
         inv_rows_cfg = []
-        inv_df = spark.createDataFrame([], INVALID_DDL)
-    ckpt.with_bucket(inv_df, cfg.n_buckets).write.mode("overwrite") \
-        .partitionBy("bucket").parquet(f"{out_dir}/invalid")
-    wave_cfg = _replace(cfg, invalid_rows=inv_rows_cfg)
+        inv_df = local_frame(spark, [], INVALID_DDL)
+    inv_obs = Observation()
+    ckpt.with_bucket(inv_df.observe(inv_obs, F.count(F.lit(1)).alias("n")),
+                     cfg.n_buckets) \
+        .write.mode("overwrite").partitionBy("bucket").parquet(f"{out_dir}/invalid")
+    wave_cfg = replace(cfg, invalid_rows=inv_rows_cfg)
 
     stats = {"buckets_done_before": len(done), "waves": 0,
              "buckets_skipped_claimed": len(buckets_lost)}
@@ -204,7 +208,14 @@ def run_job(spark: SparkSession, documents_path: str, media_pages_path: str,
         group = remaining[g: g + cfg.bucket_group]
         timer = ckpt.StageTimer()
         wave_docs = docs.filter(F.col("bucket").isin(group))
-        outs = run_pipeline(wave_docs.drop("bucket"), media_pages, wave_cfg, counters)
+        # lineage: documents on the spans sink's scan, span and box rows on
+        # the spans and redactions sink frames — each in one sink's plan
+        docs_m = ckpt.BucketMetrics(group, ckpt.bucket_col(cfg.n_buckets),
+                                    n_docs=F.lit(1))
+        spans_m = ckpt.BucketMetrics(group, **ckpt.span_metrics())
+        red_m = ckpt.BucketMetrics(group, n_boxes=F.lit(1))
+        outs = run_pipeline(wave_docs.drop("bucket"), media_pages, wave_cfg,
+                            counters, observe_docs=docs_m.on)
         # redactions + values both derive from the flat extract output;
         # persist it so the Arrow stage runs once per wave, not per sink
         page_rows = outs["page_rows"].persist()
@@ -214,13 +225,11 @@ def run_job(spark: SparkSession, documents_path: str, media_pages_path: str,
         # Arrow stage's JVM threads block on the Python workers (r5;
         # redactions then values stay sequential — the first fills the
         # page_rows cache the second reads)
-        import threading
-
         spans_err: list[BaseException] = []
 
         def _write_spans():
             try:
-                ckpt.with_bucket(outs["spans"], cfg.n_buckets).write \
+                spans_m.on(ckpt.with_bucket(outs["spans"], cfg.n_buckets)).write \
                     .mode("overwrite").partitionBy("bucket") \
                     .parquet(f"{out_dir}/spans")
             except BaseException as e:   # re-raised on the main thread
@@ -229,7 +238,7 @@ def run_job(spark: SparkSession, documents_path: str, media_pages_path: str,
         spans_t = threading.Thread(target=_write_spans)
         spans_t.start()
         try:
-            red = ckpt.with_bucket(outs["redactions"], cfg.n_buckets)
+            red = red_m.on(ckpt.with_bucket(outs["redactions"], cfg.n_buckets))
             red.write.mode("overwrite").partitionBy("bucket").parquet(f"{out_dir}/redactions")
             vals = ckpt.with_bucket(outs["values"], cfg.n_buckets)
             vals.write.mode("overwrite").partitionBy("bucket").parquet(f"{out_dir}/values")
@@ -239,35 +248,12 @@ def run_job(spark: SparkSession, documents_path: str, media_pages_path: str,
         if spans_err:
             raise spans_err[0]
 
-        # per-bucket lineage metrics from the data just written (A8)
-        m = {r["bucket"]: r for r in
-             spark.read.parquet(f"{out_dir}/spans").filter(F.col("bucket").isin(group))
-             .groupBy("bucket")
-             .agg(F.countDistinct("doc_id").alias("n_docs"), F.count("*").alias("n_spans"),
-                  F.countDistinct(F.when(F.col("media_ref") != "", F.col("media_ref")))
-                  .alias("n_pages"))
-             .collect()}
-        b = {r["bucket"]: r["n_boxes"] for r in
-             spark.read.parquet(f"{out_dir}/redactions").filter(F.col("bucket").isin(group))
-             .groupBy("bucket").agg(F.count("*").alias("n_boxes")).collect()}
-        wall = timer.elapsed()
-        ckpt.append_checkpoint(spark, ckpt_dir, [
-            {"bucket": bk, "status": "done",
-             "n_docs": m[bk]["n_docs"] if bk in m else 0,
-             "n_spans": m[bk]["n_spans"] if bk in m else 0,
-             "n_pages": m[bk]["n_pages"] if bk in m else 0,
-             "n_boxes": b.get(bk, 0),
-             "wall_sec": wall / max(1, len(group))}
-            for bk in group
-        ])
+        # per-bucket lineage metrics (A8), observed during the writes above
+        ckpt.append_checkpoint(spark, ckpt_dir, ckpt.lineage_rows(
+            group, timer.elapsed(), docs_m, spans_m, red_m))
         stats["waves"] += 1
     stats["buckets_total"] = cfg.n_buckets
     stats["acc_pages"] = counters["pages"].value
     stats["acc_rejected"] = counters["rejected"].value
-    # explicit schema: a zero-invalid run leaves the partitioned dir empty,
-    # which schema inference cannot read (and downstream readers should use
-    # the same pattern)
-    stats["n_invalid"] = spark.read.schema(
-        "doc_id string, status string, task_result string, reason string, "
-        "bucket int").parquet(f"{out_dir}/invalid").count()
+    stats["n_invalid"] = inv_obs.get["n"]
     return stats

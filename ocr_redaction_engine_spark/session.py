@@ -43,3 +43,19 @@ def get_spark(app_name: str = "ocrr-spark", cores: int | None = None,
     for k, v in confs.items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, ddl: str):
+    """A small driver-built DataFrame (claims, invalid-status and lineage
+    rows) from a ``pyarrow.Table`` with the explicit ``ddl`` schema. The
+    Arrow batches go straight to the JVM, where ``createDataFrame(list)``
+    pickles the rows through a Python worker when the frame is read; the
+    explicit schema also types a zero-row table."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = _parse_datatype_string(ddl)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)

@@ -146,7 +146,8 @@ def stream_extraction(spark: SparkSession, documents_path: str,
     micro-batch's files are superseded in the log, and readers going
     through the sink directory see each batch once. ``availableNow`` drains
     the backlog and stops; rerunning later picks up only new files (the
-    reference's 5 s re-poll, checkpointed)."""
+    reference's 5 s re-poll, checkpointed) from ``{ckpt_dir}/main_spans``;
+    reprocessing = delete that checkpoint."""
     from .extraction_pipeline import ExtractionConfig, extract_spans
 
     cfg = config or ExtractionConfig()
@@ -155,7 +156,7 @@ def stream_extraction(spark: SparkSession, documents_path: str,
     q = (extract_spans(docs, media_pages, cfg).writeStream
          .format("parquet")
          .option("path", f"{out_dir}/main_spans")
-         .option("checkpointLocation", f"{ckpt_dir}/extraction")
+         .option("checkpointLocation", f"{ckpt_dir}/main_spans")
          .trigger(availableNow=True)
          .start())
     if await_termination:
@@ -328,32 +329,6 @@ def run_windowed_stream(spark: SparkSession, events_path: str, ckpt_dir: str,
         .start()
     )
     q.awaitTermination()
-
-
-def stream_extraction(spark: SparkSession, documents_path: str,
-                      media_pages_path: str, out_dir: str, ckpt_dir: str,
-                      await_termination: bool = True):
-    """Main-content extraction as ONE native streaming query: the html strip
-    is per-row array HOFs (stateless), pdf/text are narrow projections, and
-    the media branch is a stream-static equi-join — all append-mode legal,
-    so the whole north-rule pipeline streams with exactly-once file-sink
-    semantics and no state store. New crawl files under ``documents_path``
-    become micro-batches; reprocessing = delete the checkpoint."""
-    from .extraction_pipeline import extract_spans
-
-    docs = read_documents_stream(spark, documents_path)
-    media_pages = spark.read.parquet(media_pages_path)  # static side
-    q = (
-        extract_spans(docs, media_pages).writeStream
-        .format("parquet")
-        .option("path", f"{out_dir}/main_spans")
-        .option("checkpointLocation", f"{ckpt_dir}/main_spans")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if await_termination:
-        q.awaitTermination()
-    return q
 
 
 def stream_interval_join(clicks: DataFrame, errors: DataFrame,

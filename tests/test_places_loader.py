@@ -120,3 +120,21 @@ def test_place_candidates_nonliteral_fallback():
     # uncompilable pattern: degrade to all indices; the inner loop then
     # raises on the same bad pattern exactly like the reference would
     assert _place_candidates(words, ["(["]) == [0, 1, 2, 3]
+
+
+def test_place_candidates_backreference_place():
+    """In the alternation ``(?:(x)y)|(?:(a)\\1)`` the ``\\1`` refers to
+    ``(x)``'s group, so the union missed tokens the per-place test hits.
+    Backreference places take the per-pattern search; the candidate set
+    must equal the per-place union."""
+    import re
+
+    from ocr_redaction_engine_spark.kernel import _place_candidates
+
+    assert _place_candidates([(0, 0, 1, 1, "aa")], ["(x)y", "(a)\\1"]) == [0]
+    words = [(0, 0, 1, 1, t) for t in ("aa", "xy", "q", "ABAB", "bb")]
+    places = ["(x)y", "(a)\\1", "(?P<p>ab)(?P=p)", "z+"]
+    want = [i for i, w in enumerate(words)
+            if any(re.search(p, w[4], re.IGNORECASE) for p in places)]
+    assert want == [0, 1, 3]
+    assert _place_candidates(words, places) == want

@@ -435,3 +435,27 @@ def test_stream_extraction_matches_batch_and_resumes(spark, tmp_path):
     stream_extraction(spark, f"{base}/in/documents", f"{base}/in/media_pages",
                       f"{base}/out", f"{base}/ckpt")
     assert spark.read.parquet(f"{base}/out/main_spans").count() == n_before
+
+
+def test_stream_extraction_honours_config(spark, tmp_path):
+    """stream_extraction takes an ExtractionConfig: a stricter ``min_len``
+    drops html blocks the default keeps, exactly as the oracle with the
+    same threshold does. Its checkpoint lives in ``<ckpt_dir>/main_spans``,
+    where streams started before the config argument existed keep theirs."""
+    from ocr_redaction_engine_spark import corpus, oracle
+    from ocr_redaction_engine_spark.extraction_pipeline import ExtractionConfig
+    from tests.conftest import docs_to_df, pages_to_df
+
+    base = str(tmp_path)
+    docs, pages = corpus.build_web_corpus_local(7, 40)
+    docs_to_df(spark, docs).write.parquet(f"{base}/in/documents")
+    pages_to_df(spark, pages).write.parquet(f"{base}/in/media_pages")
+    streaming.stream_extraction(spark, f"{base}/in/documents",
+                                f"{base}/in/media_pages", f"{base}/out",
+                                f"{base}/ckpt", config=ExtractionConfig(min_len=60))
+    got = {(r["doc_id"], r["order"], r["kind"], r["text"], r["media_ref"])
+           for r in spark.read.parquet(f"{base}/out/main_spans").collect()}
+    want = set(oracle.expected_extracted_spans(docs, pages, min_len=60))
+    assert got == want
+    assert want < set(oracle.expected_extracted_spans(docs, pages))
+    assert (tmp_path / "ckpt" / "main_spans" / "offsets").is_dir()
