@@ -38,8 +38,6 @@ def main():
                     help="redaction level (settings/configuration.ini:10-13 analog)")
     ap.add_argument("--buckets", type=int, default=32, help="resume granularity")
     ap.add_argument("--bucket-group", type=int, default=8, help="buckets per commit wave")
-    ap.add_argument("--extract-partitions", type=int, default=None,
-                    help="explicit repartition before the Arrow stage (optional)")
     ap.add_argument("--places-file", default=None,
                     help="newline-separated address dictionary (e.g. the "
                          "reference's full 1,391-entry helper/places.py list "
@@ -56,7 +54,6 @@ def main():
         spark, args.documents, args.media_pages, args.out, args.checkpoint,
         PipelineConfig(level=args.level, n_buckets=args.buckets,
                        bucket_group=args.bucket_group,
-                       extract_partitions=args.extract_partitions,
                        places=places),
     )
     print(json.dumps(stats))

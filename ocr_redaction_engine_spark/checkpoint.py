@@ -11,7 +11,8 @@ an append-only parquet/Iceberg lineage table keyed by a stable hash bucket of
                n_spans long, n_pages long, n_boxes long, n_chars long,
                wall_sec double)
 
-* Claiming/resume   = anti-join the input against completed buckets (S1/S2).
+* Claiming/resume   = :func:`run_waves` skips completed buckets (S1) and,
+                      given a claim step, buckets another driver won (S2).
 * Completion        = one appended row per bucket after its output commit
                       (write order: data first, lineage second → a crash
                       re-processes at most the in-flight bucket group, and the
@@ -34,12 +35,16 @@ at 10^12 documents.
 
 from __future__ import annotations
 
+import logging
 import time
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .session import local_frame
+
+_log = logging.getLogger(__name__)
 
 CHECKPOINT_SCHEMA = (
     "bucket int, status string, attempt int, n_docs long, n_spans long, "
@@ -74,16 +79,6 @@ def completed_buckets(spark: SparkSession, ckpt_dir: str) -> set[int]:
         .select("bucket").distinct().collect()
     )
     return {r.bucket for r in rows}
-
-
-def filter_remaining(docs_with_bucket: DataFrame, done: set[int]) -> DataFrame:
-    """Resume anti-join. For a small completed set a literal isin-NOT filter
-    pushes into the scan; a broadcast anti-join would be used for very large
-    checkpoint tables — at 10^12 docs the bucket count stays O(10^4-10^5),
-    so the literal filter always suffices."""
-    if not done:
-        return docs_with_bucket
-    return docs_with_bucket.filter(~F.col("bucket").isin(list(done)))
 
 
 def checkpoint_frame(spark: SparkSession, rows: list[dict]) -> DataFrame:
@@ -149,12 +144,62 @@ def lineage_rows(group: list[int], wall_sec: float,
             for b in group]
 
 
-class StageTimer:
-    def __init__(self):
-        self.t0 = time.time()
+def write_buckets(df: DataFrame, n_buckets: int, path: str,
+                  *observed: BucketMetrics) -> None:
+    """Write ``df`` partitioned by bucket with the observations attached.
+    The overwrite is dynamic as a write option, so only the buckets the
+    frame holds are replaced (idempotent reruns) and the session's
+    ``partitionOverwriteMode`` is left alone."""
+    df = with_bucket(df, n_buckets)
+    for m in observed:
+        df = m.on(df)
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic") \
+        .partitionBy("bucket").parquet(path)
 
-    def elapsed(self) -> float:
-        return time.time() - self.t0
+
+def run_waves(spark: SparkSession, documents: DataFrame, ckpt_dir: str,
+              n_buckets: int, bucket_group: int,
+              write_wave: Callable[[list[int], DataFrame],
+                                   tuple[BucketMetrics, ...]],
+              claim: Callable[[list[int]], set[int]] | None = None) -> dict:
+    """The resumable wave loop both batch jobs run.
+
+    Skips the buckets the lineage table at ``ckpt_dir`` has done, then, if
+    ``claim`` is given, keeps only the buckets it returns as won (S2). The
+    rest go in waves of ``bucket_group``: ``write_wave(group, wave_docs)``
+    writes the wave's sinks (:func:`write_buckets`) and returns the
+    :class:`BucketMetrics` observed on them; the lineage rows are appended
+    only after it returns, so a crash re-processes at most that wave."""
+    done = completed_buckets(spark, ckpt_dir)
+    remaining = sorted(set(range(n_buckets)) - done)
+    lost = []
+    if claim is not None and remaining:
+        won = claim(remaining)
+        lost = sorted(set(remaining) - won)
+        if lost:
+            # not necessarily a problem (another live driver owns them) —
+            # but if THAT driver crashed, these buckets stay unprocessed
+            # until a rerun with a claim TTL (or its claimant id)
+            _log.warning(
+                "skipping %d bucket(s) claimed by other drivers and not yet "
+                "done: %s — if the claimant crashed, rerun with "
+                "claim_ttl_sec set to reap the stale leases", len(lost), lost)
+        remaining = sorted(won)
+
+    stats = {"buckets_done_before": len(done), "waves": 0,
+             "buckets_skipped_claimed": len(lost)}
+    for g in range(0, len(remaining), bucket_group):
+        group = remaining[g: g + bucket_group]
+        t0 = time.time()
+        observed = write_wave(
+            group, documents.filter(bucket_col(n_buckets).isin(group)))
+        # a module-global lookup: a patched checkpoint.append_checkpoint
+        # (how the kill/resume tests crash a run) takes effect
+        append_checkpoint(spark, ckpt_dir, lineage_rows(
+            group, time.time() - t0, *observed))
+        stats["waves"] += 1
+    stats["buckets_total"] = n_buckets
+    return stats
 
 
 # ---------------------------------------------------------------------------
@@ -190,8 +235,9 @@ def claim_buckets(spark: SparkSession, ckpt_dir: str, buckets: list[int],
     — without it, a crashed claimant's rows win forever and ``run_job``
     silently finishes with those buckets unprocessed (documented recovery
     without a TTL: rerun with the crashed driver's claimant id, or delete
-    ``<ckpt_dir>/_claims``). Size the TTL above the worst-case bucket-group
-    wall time: a live-but-slow driver whose lease expires can have a bucket
+    ``<ckpt_dir>/_claims``). Leases are written once per run and never
+    renewed, so size the TTL above the worst-case wall time of the whole
+    run: a live-but-slow driver whose lease expires can have a bucket
     stolen, which costs duplicate WORK only — every sink is
     bucket-partitioned dynamic overwrite, so reruns are idempotent and
     duplicate rows are impossible. Staleness is judged against this call's

@@ -54,72 +54,6 @@ class ExtractionConfig:
     bucket_group: int = 8          # buckets committed per wave
 
 
-def extract_html_spans(spans: DataFrame, cfg: ExtractionConfig) -> DataFrame:
-    """HTML boilerplate strip per span — SHUFFLE-FREE: because one span is
-    one row, the DOM-block segmentation + scoring + keep-filter + ordered
-    reassembly all run as array higher-order functions on that row (split →
-    transform/filter → concat_ws), never leaving the task. Semantics are
-    identical to the grouped variant (analytics/extraction.strip_boilerplate,
-    kept for block-level analytics); a span whose every block is dropped
-    yields no row, matching the grouped groupBy behavior and the oracle."""
-    html = spans.filter(F.col("kind") == "html").select(
-        "doc_id", "offset",
-        F.regexp_replace(
-            F.regexp_replace("text", r"(?s)<script[^>]*>.*?</script>", " "),
-            r"(?s)<style[^>]*>.*?</style>", " ",
-        ).alias("clean"),
-    )
-
-    def btext(b):
-        return F.trim(F.regexp_replace(F.regexp_replace(b, r"<[^>]*>", " "), r"\s+", " "))
-
-    def anchor_chars(b):
-        return F.aggregate(
-            F.regexp_extract_all(b, F.lit(r"<a [^>]*>([^<]*)</a>"), F.lit(1)),
-            F.lit(0).cast("long"), lambda a, x: a + F.length(x))
-
-    scored = html.select(
-        "doc_id", "offset",
-        F.filter(
-            F.transform(
-                F.split("clean", r"</p>|</div>|</nav>|</footer>"),
-                lambda b: F.struct(
-                    btext(b).alias("btext"),
-                    anchor_chars(b).alias("anchor_chars"),
-                ),
-            ),
-            lambda s: (F.length(s["btext"]) >= cfg.min_len)
-            & ((s["anchor_chars"] / F.greatest(F.length(s["btext"]), F.lit(1)))
-               <= cfg.max_link_density),
-        ).alias("kept"),
-    )
-    return scored.filter(F.size("kept") > 0).select(
-        "doc_id", F.col("offset").alias("order"), F.lit("html").alias("kind"),
-        F.concat_ws(" ", F.transform("kept", lambda s: s["btext"])).alias("text"),
-        F.lit("").alias("media_ref"))
-
-
-def extract_pdf_spans(spans: DataFrame) -> DataFrame:
-    """Two-column reading-order recovery: the span text is the naive y-then-x
-    scan of a two-column page (token 2r = column 0 row r, token 2r+1 =
-    column 1 row r), so the true reading order is all even-index tokens then
-    all odd-index tokens. Array HOFs only — narrow, zero shuffle."""
-    toks = F.split(F.col("text"), " ")
-    evens = F.filter(toks, lambda x, i: i % 2 == F.lit(0))
-    odds = F.filter(toks, lambda x, i: i % 2 == F.lit(1))
-    return spans.filter(F.col("kind") == "pdf").select(
-        "doc_id", F.col("offset").alias("order"), F.lit("pdf").alias("kind"),
-        F.concat_ws(" ", F.concat(evens, odds)).alias("text"),
-        F.lit("").alias("media_ref"))
-
-
-def extract_text_spans(spans: DataFrame) -> DataFrame:
-    """Plain text spans are already main content — passthrough."""
-    return spans.filter(F.col("kind") == "text").select(
-        "doc_id", F.col("offset").alias("order"), F.lit("text").alias("kind"),
-        "text", F.lit("").alias("media_ref"))
-
-
 def extract_media_spans(spans: DataFrame, media_pages: DataFrame) -> DataFrame:
     """Media spans resolve through the OCR backing table; the extracted text
     is the page's full OCR text (lines joined) — the image_to_string analog
@@ -140,8 +74,15 @@ def _narrow_kind_spans(spans: DataFrame, cfg: ExtractionConfig) -> DataFrame:
     the row shape, so a kind-dispatched CASE computes each row's extracted
     text in a single scan instead of a 3-way self-union that re-reads the
     documents table per branch (at 100 TB the scan count IS the cost).
-    Row-for-row identical to the per-branch operators, which remain the
-    unit-tested single-kind API."""
+
+    html: boilerplate strip per span — one span is one row, so DOM-block
+    segmentation, scoring, keep-filter and ordered reassembly are array
+    higher-order functions on that row (semantics of the grouped
+    analytics/extraction.strip_boilerplate); a span whose every block is
+    dropped yields no row, like the oracle. pdf: two-column reading order —
+    the text is the naive y-then-x scan (token 2r = column 0 row r, token
+    2r+1 = column 1 row r), so even-index tokens come first, then odd.
+    text: already main content, passed through."""
     clean = F.regexp_replace(
         F.regexp_replace("text", r"(?s)<script[^>]*>.*?</script>", " "),
         r"(?s)<style[^>]*>.*?</style>", " ")
@@ -196,33 +137,20 @@ def extract_spans(documents: DataFrame, media_pages: DataFrame,
 def run_extraction_job(spark: SparkSession, documents_path: str,
                        media_pages_path: str, out_dir: str, ckpt_dir: str,
                        config: ExtractionConfig | None = None) -> dict:
-    """Batch extraction with partition-granular resume — same lineage
-    machinery as the redaction job (checkpoint.py): stable
-    xxhash64(doc_id) buckets, bucket-partitioned dynamic overwrite
-    (idempotent reruns), lineage appended only after the data commit and
-    observed during it (checkpoint.BucketMetrics)."""
+    """Batch extraction with partition-granular resume — the redaction
+    job's wave loop (checkpoint.run_waves) with one sink, ``main_spans``."""
     cfg = config or ExtractionConfig()
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-    docs = ckpt.with_bucket(spark.read.parquet(documents_path), cfg.n_buckets)
     media_pages = spark.read.parquet(media_pages_path)
-    done = ckpt.completed_buckets(spark, ckpt_dir)
-    remaining = sorted(set(range(cfg.n_buckets)) - done)
 
-    stats = {"buckets_done_before": len(done), "waves": 0}
-    for g in range(0, len(remaining), cfg.bucket_group):
-        group = remaining[g: g + cfg.bucket_group]
-        timer = ckpt.StageTimer()
+    def write_wave(group, wave_docs):
         # both union branches scan the observed documents; an observation
         # is reported once per query, so n_docs counts each document once
-        docs_m = ckpt.BucketMetrics(group, n_docs=F.lit(1))
+        docs_m = ckpt.BucketMetrics(group, ckpt.bucket_col(cfg.n_buckets),
+                                    n_docs=F.lit(1))
         out_m = ckpt.BucketMetrics(group, **ckpt.span_metrics())
-        wave_docs = docs_m.on(docs.filter(F.col("bucket").isin(group)))
-        out = out_m.on(ckpt.with_bucket(
-            extract_spans(wave_docs.drop("bucket"), media_pages, cfg), cfg.n_buckets))
-        out.write.mode("overwrite").partitionBy("bucket").parquet(f"{out_dir}/main_spans")
-        ckpt.append_checkpoint(spark, ckpt_dir, ckpt.lineage_rows(
-            group, timer.elapsed(), docs_m, out_m))
-        stats["waves"] += 1
-    stats["buckets_total"] = cfg.n_buckets
-    return stats
+        ckpt.write_buckets(extract_spans(docs_m.on(wave_docs), media_pages, cfg),
+                           cfg.n_buckets, f"{out_dir}/main_spans", out_m)
+        return docs_m, out_m
+
+    return ckpt.run_waves(spark, spark.read.parquet(documents_path), ckpt_dir,
+                          cfg.n_buckets, cfg.bucket_group, write_wave)

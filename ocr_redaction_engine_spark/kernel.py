@@ -408,9 +408,11 @@ def _places_literal_ok(places_t: tuple) -> bool:
     qualifies). Places loaded via ``load_places`` are arbitrary regex
     fragments per the reference's ``_ci(place).search`` inner test, so a
     metachar ('.') or non-ASCII case-folding place must take the
-    regex-union prefilter instead."""
-    return all(p.isascii() and re.escape(p) == p and "\n" not in p
-               for p in places_t)
+    regex-union prefilter instead. A space is a literal in a regex too
+    (``re.escape`` escapes it anyway), so multi-word places such as
+    "New Delhi" keep the fast path."""
+    return all(p.isascii() and re.escape(p) == p.replace(" ", "\\ ")
+               and "\n" not in p for p in places_t)
 
 
 def _place_candidates(words, place_list):

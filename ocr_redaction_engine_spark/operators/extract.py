@@ -23,7 +23,6 @@ Output: one row per extracted value and one row per redaction box.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .. import kernel
 
@@ -124,22 +123,3 @@ def extract_page_rows(pages: DataFrame, level: int = 1,
                 yield pd.DataFrame({c: [] for c in _COLS})
 
     return pages.mapInPandas(run, schema=PAGE_ROWS_SCHEMA_DDL)
-
-
-def rejected_unknown_pages(unknown_pages: DataFrame) -> DataFrame:
-    """UNKNOWN pages bypass the Arrow stage entirely: the REJECTED 80 % box
-    row built from pure Catalyst expressions (process_ocrr.py:74-77;
-    int() truncates toward zero and height >= 0, so floor is exact)."""
-    return unknown_pages.select(
-        "doc_id", "offset", "media_ref", "document_name",
-        F.lit("REJECTED").alias("status"),
-        F.lit("box").alias("row_kind"),
-        F.lit(-1).alias("field_idx"),
-        F.lit("__PAGE__").alias("field"),
-        F.lit("").alias("value"),
-        F.lit(1).alias("seq"),
-        F.lit(0).alias("x1"), F.lit(0).alias("y1"),
-        F.col("width").alias("x2"),
-        F.floor(F.col("height") * F.lit(0.8)).cast("int").alias("y2"),
-        F.lit(False).alias("boxes_failed"),
-    )

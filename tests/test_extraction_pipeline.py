@@ -70,24 +70,14 @@ def test_plan_is_udf_free(web_dfs):
 def test_html_pdf_text_branches_are_exchange_free(spark, web_dfs):
     """The html strip runs as per-row array HOFs and pdf/text are narrow
     projections: dropping the media branch, the physical plan must contain
-    ZERO Exchange — the whole non-media pipeline is scan → project → union.
+    ZERO Exchange — the whole non-media pipeline is scan → project.
     (The media join is the pipeline's single, unavoidable shuffle.)"""
     from ocr_redaction_engine_spark.extraction_pipeline import (
-        ExtractionConfig,
-        extract_html_spans,
-        extract_pdf_spans,
-        extract_text_spans,
-    )
+        ExtractionConfig, _narrow_kind_spans)
     from ocr_redaction_engine_spark.operators.explode import explode_spans
 
     docs_df, _ = web_dfs
-    spans = explode_spans(docs_df)
-    cfg = ExtractionConfig()
-    nonmedia = (
-        extract_html_spans(spans, cfg)
-        .unionByName(extract_pdf_spans(spans))
-        .unionByName(extract_text_spans(spans))
-    )
+    nonmedia = _narrow_kind_spans(explode_spans(docs_df), ExtractionConfig())
     plan = nonmedia._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
 

@@ -10,6 +10,9 @@ rows, n_docs = documents the wave processed — which includes a valid
 document that writes no rows (an empty ``spans`` array, an html span that
 is all boilerplate).
 
+Both jobs write their partitioned sinks with a per-write dynamic
+overwrite option, so the caller's session conf is left as it was.
+
 The job-count pins are ceilings, like tests/test_plan_audit.py's plan
 pins: a change that adds a Spark job to a warm run fails here; one that
 removes a job passes (lower the pin when you bank it).
@@ -146,6 +149,23 @@ def _jobs(spark, run) -> int:
     run()
     bus.waitUntilEmpty()
     return len(set(sc.statusTracker().getJobIdsForGroup()) - before)
+
+
+def test_jobs_leave_session_overwrite_mode_alone(spark, redact_input,
+                                                 extract_input, tmp_path):
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        run_job(spark, *redact_input, str(tmp_path / "out_r"),
+                str(tmp_path / "ckpt_r"), PipelineConfig(**REDACT_CFG))
+        assert spark.conf.get(key) == "STATIC"
+        run_extraction_job(spark, *extract_input, str(tmp_path / "out_x"),
+                           str(tmp_path / "ckpt_x"),
+                           ExtractionConfig(**EXTRACT_CFG))
+        assert spark.conf.get(key) == "STATIC"
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_warm_run_job_spark_jobs(spark, redact_input, tmp_path):

@@ -122,6 +122,26 @@ def test_place_candidates_nonliteral_fallback():
     assert _place_candidates(words, ["(["]) == [0, 1, 2, 3]
 
 
+def test_place_candidates_multiword_literal_fast_path():
+    """A space is a literal in the reference's ``_ci(place).search`` test,
+    so a multi-word list stays on the ``str.find`` path, and its candidates
+    equal the per-place regex loop — the separator between tokens is a
+    newline, so "New Delhi" matches within one token only."""
+    from ocr_redaction_engine_spark.kernel import (
+        _ci, _place_candidates, _places_literal_ok)
+
+    places = ["New Delhi", "Navi Mumbai", "Pune"]
+    assert _places_literal_ok(tuple(places))
+    assert not _places_literal_ok(("New  Delhi.",))
+    words = [(0, 0, 1, 1, t) for t in (
+        "NEW DELHI", "New", "Delhi", "south new delhi-110001",
+        "Navi  Mumbai", "navi mumbai", "pune", "Delhi New")]
+    want = [i for i, w in enumerate(words)
+            if any(_ci(p).search(w[4]) for p in places)]
+    assert want == [0, 3, 5, 6]
+    assert _place_candidates(words, places) == want
+
+
 def test_place_candidates_backreference_place():
     """In the alternation ``(?:(x)y)|(?:(a)\\1)`` the ``\\1`` refers to
     ``(x)``'s group, so the union missed tokens the per-place test hits.
