@@ -28,8 +28,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from ocr_redaction_engine_spark.session import get_spark  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 BENCH_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "360000"))
 CORPUS_DIR = os.environ.get("SPARK_GRAFT_BENCH_CORPUS", "/tmp/orx_bench_corpus")
 WARM_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_WARM", "1"))   # untimed JIT/worker warm-up
@@ -117,47 +119,9 @@ HEADLINE = [
 ]
 
 
-def _shm_scratch() -> str | None:
-    """Shuffle scratch on the RAM-backed tmpfs when it is present and large
-    (the cluster analog: fast local NVMe for spark.local.dir). Measured
-    r5: −8% wall and a much tighter distribution on the 32-lane pipeline —
-    32 concurrent shuffle writers contend on the disk-backed /tmp."""
-    try:
-        st = os.statvfs("/dev/shm")
-        if st.f_bavail * st.f_frsize > 8 << 30:   # >8 GiB free
-            path = "/dev/shm/spark_bench"
-            os.makedirs(path, exist_ok=True)
-            return path
-    except OSError:
-        pass
-    return None
-
-
-def _session(cpus: int):
-    from pyspark.sql import SparkSession
-    b = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-        .config("spark.driver.memory", "24g")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        # 4 waves of scan tasks instead of 1: the 64-task narrow stages
-        # showed max/median task skew of 2.5-3.3 at 32 lanes — one oversized
-        # last-wave task held the whole stage. Finer splits pack the tail
-        # (measured r5: −12% extraction wall at 32 cores, neutral at 8).
-        .config("spark.sql.files.minPartitionNum", str(4 * cpus))
-        # batch-throughput GC: small but consistent win at 32 lanes
-        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .appName(f"bench-{cpus}")
-    )
-    shm = _shm_scratch()
-    if shm:
-        b = b.config("spark.local.dir", shm)
-    spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
+def shuffle_extra(cpus: int) -> dict:
+    """Bench legs keep at least 8 shuffle partitions at low lane counts."""
+    return {"spark.sql.shuffle.partitions": str(max(cpus, 8))}
 
 
 def _force(df):
@@ -247,10 +211,7 @@ def host_probe(seconds: float = 1.0) -> float:
     whether a slow wall was the engine or the neighbors (this multi-tenant
     VM swings between ~5 % and ~80 % steal on a minutes scale)."""
     t0 = time.time()
-    i = 0
-    while time.time() - t0 < seconds:
-        for _ in range(100000):
-            i += 1
+    i = _burn(seconds)
     return round(i / (time.time() - t0) / 1e6, 1)
 
 
@@ -312,36 +273,19 @@ def parallel_host_probe(procs: int, seconds: float = 1.0) -> float:
     return round(sum(counts) / seconds / 1e6, 1)
 
 
-def run_pipeline_once(cpus: int, n_docs: int, single: bool = False,
-                      corpus_base: str | None = None) -> dict:
-    from ocr_redaction_engine_spark.pipeline import PipelineConfig, run_pipeline
+def _leg(cpus: int, n_docs: int, single: bool, corpus_base: str | None,
+         ensure, make_pass) -> dict:
+    """One fresh-JVM throughput leg: ``ensure(spark, n_docs, corpus_base)``
+    materializes the corpus, ``make_pass(spark, docs_path, pages_path)``
+    returns the callable that runs one pass, and the leg reports the
+    min-of-N pass wall next to the host probes taken just before it."""
+    spark = get_spark(f"bench-{cpus}", cpus, shuffle_extra(cpus))
+    spark.sparkContext.setLogLevel("ERROR")
+    one_pass = make_pass(spark, *ensure(spark, n_docs, corpus_base))
 
-    spark = _session(cpus)
-    docs_path, pages_path = ensure_corpus(spark, n_docs, corpus_base)
-    documents = spark.read.parquet(docs_path)
-    media_pages = spark.read.parquet(pages_path)
-
-    cfg = PipelineConfig(probe_documents=spark.read.schema(
-        "doc_id string, spans array<struct<kind:string,media_ref:string>>"
-    ).parquet(docs_path))  # validity probe reads the pruned view; no explicit
-    # repartition: the tokenize join's hash partitioning on media_ref already
-    # feeds the Arrow stage evenly
-
-    def one_pass():
-        # the two sinks are independent jobs: force them CONCURRENTLY so the
-        # JVM-only spans branch fills cores while the Arrow stage's JVM
-        # threads block on the Python workers, and the two jobs' driver
-        # planning gaps overlap (r5; same results, better schedule — the
-        # production run_job writes its per-wave sinks the same way)
-        import threading
+    def timed():
         t0 = time.time()
-        outs = run_pipeline(documents, media_pages, cfg)
-        ts = [threading.Thread(target=_force, args=(outs[k],))
-              for k in ("spans", "redactions")]
-        for t in ts:
-            t.start()
-        for t in ts:
-            t.join()
+        one_pass()
         return time.time() - t0
 
     # Warm passes (untimed): spawn+import the Python Arrow workers, C2-JIT the
@@ -360,41 +304,7 @@ def run_pipeline_once(cpus: int, n_docs: int, single: bool = False,
     probe = host_probe()
     pprobe = parallel_host_probe(cpus)
     sprobe = parallel_stream_probe(cpus)
-    walls = sorted(one_pass() for _ in range(n_timed))
-    wall = walls[0]
-    spark.stop()
-    return {"cpus": cpus, "n_docs": n_docs, "wall_sec": round(wall, 3),
-            "walls": [round(w, 3) for w in walls],
-            "host_probe_miters": probe,
-            "host_parallel_miters": pprobe,
-            "host_stream_gbs": sprobe,
-            "docs_per_sec": round(n_docs / wall, 2)}
-
-
-def run_extraction_once(cpus: int, n_docs: int, single: bool = False,
-                        corpus_base: str | None = None) -> dict:
-    """One fresh-JVM throughput pass of the main-content extraction pipeline
-    (extraction_pipeline.extract_spans forced via a noop sink — engine cost,
-    not parquet-write cost)."""
-    from ocr_redaction_engine_spark.extraction_pipeline import extract_spans
-
-    spark = _session(cpus)
-    docs_path, pages_path = ensure_web_corpus(spark, n_docs, corpus_base)
-    documents = spark.read.parquet(docs_path)
-    media_pages = spark.read.parquet(pages_path)
-
-    def one_pass():
-        t0 = time.time()
-        _force(extract_spans(documents, media_pages))
-        return time.time() - t0
-
-    for _ in range(WARM_RUNS):
-        one_pass()
-    n_timed = 1 if single else TIMED_RUNS + 2
-    probe = host_probe()
-    pprobe = parallel_host_probe(cpus)
-    sprobe = parallel_stream_probe(cpus)
-    walls = sorted(one_pass() for _ in range(n_timed))
+    walls = sorted(timed() for _ in range(n_timed))
     spark.stop()
     return {"cpus": cpus, "n_docs": n_docs, "wall_sec": round(walls[0], 3),
             "walls": [round(w, 3) for w in walls],
@@ -404,6 +314,56 @@ def run_extraction_once(cpus: int, n_docs: int, single: bool = False,
             "docs_per_sec": round(n_docs / walls[0], 2)}
 
 
+def _pipeline_pass(spark, docs_path: str, pages_path: str):
+    import threading
+
+    from ocr_redaction_engine_spark.pipeline import PipelineConfig, run_pipeline
+
+    documents = spark.read.parquet(docs_path)
+    media_pages = spark.read.parquet(pages_path)
+    cfg = PipelineConfig(probe_documents=spark.read.schema(
+        "doc_id string, spans array<struct<kind:string,media_ref:string>>"
+    ).parquet(docs_path))  # validity probe reads the pruned view; no explicit
+    # repartition: the tokenize join's hash partitioning on media_ref already
+    # feeds the Arrow stage evenly
+
+    def one_pass():
+        # the two sinks are independent jobs: force them CONCURRENTLY so the
+        # JVM-only spans branch fills cores while the Arrow stage's JVM
+        # threads block on the Python workers, and the two jobs' driver
+        # planning gaps overlap (r5; same results, better schedule — the
+        # production run_job writes its per-wave sinks the same way)
+        outs = run_pipeline(documents, media_pages, cfg)
+        ts = [threading.Thread(target=_force, args=(outs[k],))
+              for k in ("spans", "redactions")]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join()
+    return one_pass
+
+
+def _extraction_pass(spark, docs_path: str, pages_path: str):
+    from ocr_redaction_engine_spark.extraction_pipeline import extract_spans
+
+    documents = spark.read.parquet(docs_path)
+    media_pages = spark.read.parquet(pages_path)
+    return lambda: _force(extract_spans(documents, media_pages))
+
+
+def run_pipeline_once(cpus: int, n_docs: int, single: bool = False,
+                      corpus_base: str | None = None) -> dict:
+    return _leg(cpus, n_docs, single, corpus_base, ensure_corpus,
+                _pipeline_pass)
+
+
+def run_extraction_once(cpus: int, n_docs: int, single: bool = False,
+                        corpus_base: str | None = None) -> dict:
+    """One fresh-JVM throughput pass of the main-content extraction pipeline
+    (extraction_pipeline.extract_spans forced via a noop sink — engine cost,
+    not parquet-write cost)."""
+    return _leg(cpus, n_docs, single, corpus_base, ensure_web_corpus,
+                _extraction_pass)
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--pipeline-only", action="store_true")
@@ -464,7 +424,8 @@ def main():
 
     import __spark_entry__ as entry_mod
 
-    spark = _session(args.cpus)
+    spark = get_spark(f"bench-{args.cpus}", args.cpus, shuffle_extra(args.cpus))
+    spark.sparkContext.setLogLevel("ERROR")
     ensure_corpus(spark, args.ndocs)
     qtimes = {}
     qs = entry_mod.queries()

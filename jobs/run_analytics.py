@@ -15,6 +15,9 @@ the first ``--show`` rows when no ``--out`` is given). The registry file
 ``__spark_entry__.py`` ships alongside the package zip — it is the
 data-engineer-facing catalog, kept out of the library so query inventory
 changes never force a package rebuild.
+
+Master, executors and memory come from spark-submit; the SQL semantics
+(UTC, AQE, Arrow batches) from ``session.get_spark``, as in tests.
 """
 
 from __future__ import annotations
@@ -24,11 +27,10 @@ import json
 import os
 import sys
 
-from pyspark.sql import SparkSession
-
 # the registry sits at the repo/deploy root next to the package zip
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as registry  # noqa: E402
+from ocr_redaction_engine_spark.session import get_spark  # noqa: E402
 
 
 def main():
@@ -52,7 +54,7 @@ def main():
         ap.error(f"unknown query {args.query!r}; --list shows the "
                  f"{len(qs)} registered names")
 
-    spark = SparkSession.builder.appName(f"ocrr-analytics-{args.query}").getOrCreate()
+    spark = get_spark(f"ocrr-analytics-{args.query}")
     df = qs[args.query](spark, args.sf_dir)
     if args.out:
         df.write.mode("overwrite").parquet(args.out)

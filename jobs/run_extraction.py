@@ -13,6 +13,9 @@ interleaved text+media documents, resumable from checkpoint).
 
 Same resume contract as the redaction job: a killed run rerun with the same
 --checkpoint resumes at bucket granularity; a complete job reruns as a no-op.
+
+Master, executors and memory come from spark-submit; the SQL semantics
+(UTC, AQE, Arrow batches) from ``session.get_spark``, as in tests.
 """
 
 from __future__ import annotations
@@ -20,12 +23,11 @@ from __future__ import annotations
 import argparse
 import json
 
-from pyspark.sql import SparkSession
-
 from ocr_redaction_engine_spark.extraction_pipeline import (
     ExtractionConfig,
     run_extraction_job,
 )
+from ocr_redaction_engine_spark.session import get_spark
 
 
 def main():
@@ -42,7 +44,7 @@ def main():
     ap.add_argument("--bucket-group", type=int, default=8, help="buckets per commit wave")
     args = ap.parse_args()
 
-    spark = SparkSession.builder.appName("main-content-extraction").getOrCreate()
+    spark = get_spark("main-content-extraction")
     stats = run_extraction_job(
         spark, args.documents, args.media_pages, args.out, args.checkpoint,
         ExtractionConfig(min_len=args.min_len,

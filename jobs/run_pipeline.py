@@ -9,10 +9,12 @@
         --checkpoint s3://corpus/ckpt \
         --level 1 --buckets 4096 --bucket-group 64
 
-The session comes from spark-submit (master/executors/memory are cluster
-submission args, not code); ``--buckets`` is the resume granularity — at the
-10^12-document design point use O(10^3-10^4) buckets so one lost wave is
-bounded work (SURVEY.md §7.1 step 7).
+Master, executors and memory come from spark-submit; the SQL semantics
+(UTC, AQE, Arrow batches) from ``session.get_spark``, as in tests.
+
+``--buckets`` is the resume granularity — at the 10^12-document design
+point use O(10^3-10^4) buckets so one lost wave is bounded work (SURVEY.md
+§7.1 step 7).
 
 A killed run rerun with the same --checkpoint resumes from the last
 completed bucket group; rerunning a complete job is a no-op (waves: 0).
@@ -23,9 +25,8 @@ from __future__ import annotations
 import argparse
 import json
 
-from pyspark.sql import SparkSession
-
 from ocr_redaction_engine_spark.pipeline import PipelineConfig, run_job
+from ocr_redaction_engine_spark.session import get_spark
 
 
 def main():
@@ -49,7 +50,7 @@ def main():
         from ocr_redaction_engine_spark.places import load_places
         places = load_places(args.places_file)
 
-    spark = SparkSession.builder.appName("ocrr-redaction-pipeline").getOrCreate()
+    spark = get_spark("ocrr-redaction-pipeline")
     stats = run_job(
         spark, args.documents, args.media_pages, args.out, args.checkpoint,
         PipelineConfig(level=args.level, n_buckets=args.buckets,

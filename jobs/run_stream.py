@@ -6,14 +6,16 @@ up only new files (the reference's 5 s poll loop, with exactly-once progress).
 
     spark-submit --py-files dist/ocr_redaction_engine_spark.zip \
         jobs/run_stream.py --documents ... --media-pages ... --out ... --checkpoint ...
+
+Master, executors and memory come from spark-submit; the SQL semantics
+(UTC, AQE, Arrow batches) from ``session.get_spark``, as in tests.
 """
 
 from __future__ import annotations
 
 import argparse
 
-from pyspark.sql import SparkSession
-
+from ocr_redaction_engine_spark.session import get_spark
 from ocr_redaction_engine_spark.streaming import stream_pipeline
 
 
@@ -26,7 +28,7 @@ def main():
     ap.add_argument("--level", type=int, default=1, choices=(0, 1))
     args = ap.parse_args()
 
-    spark = SparkSession.builder.appName("ocrr-redaction-stream").getOrCreate()
+    spark = get_spark("ocrr-redaction-stream")
     stream_pipeline(spark, args.documents, args.media_pages,
                     args.out, args.checkpoint, level=args.level)
 

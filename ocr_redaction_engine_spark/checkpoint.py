@@ -165,31 +165,33 @@ def run_waves(spark: SparkSession, documents: DataFrame, ckpt_dir: str,
     """The resumable wave loop both batch jobs run.
 
     Skips the buckets the lineage table at ``ckpt_dir`` has done, then, if
-    ``claim`` is given, keeps only the buckets it returns as won (S2). The
-    rest go in waves of ``bucket_group``: ``write_wave(group, wave_docs)``
-    writes the wave's sinks (:func:`write_buckets`) and returns the
-    :class:`BucketMetrics` observed on them; the lineage rows are appended
-    only after it returns, so a crash re-processes at most that wave."""
+    ``claim`` is given, keeps only the buckets it returns as won (S2), and
+    renews the lease on the buckets still to do before every later wave,
+    dropping any it lost meanwhile. The rest go in waves of
+    ``bucket_group``: ``write_wave(group, wave_docs)`` writes the wave's
+    sinks (:func:`write_buckets`) and returns the :class:`BucketMetrics`
+    observed on them; the lineage rows are appended only after it returns,
+    so a crash re-processes at most that wave."""
     done = completed_buckets(spark, ckpt_dir)
     remaining = sorted(set(range(n_buckets)) - done)
-    lost = []
-    if claim is not None and remaining:
-        won = claim(remaining)
-        lost = sorted(set(remaining) - won)
-        if lost:
-            # not necessarily a problem (another live driver owns them) —
-            # but if THAT driver crashed, these buckets stay unprocessed
-            # until a rerun with a claim TTL (or its claimant id)
-            _log.warning(
-                "skipping %d bucket(s) claimed by other drivers and not yet "
-                "done: %s — if the claimant crashed, rerun with "
-                "claim_ttl_sec set to reap the stale leases", len(lost), lost)
-        remaining = sorted(won)
-
     stats = {"buckets_done_before": len(done), "waves": 0,
-             "buckets_skipped_claimed": len(lost)}
-    for g in range(0, len(remaining), bucket_group):
-        group = remaining[g: g + bucket_group]
+             "buckets_skipped_claimed": 0}
+    while remaining:
+        if claim is not None:
+            # the first call claims; each later one renews the lease (a
+            # fresh claim row keeps it live for another TTL)
+            won = claim(remaining)
+            if newly_lost := [b for b in remaining if b not in won]:
+                _log.warning(
+                    "skipping %d bucket(s) claimed by other drivers and not "
+                    "yet done: %s — if the claimant crashed, rerun with "
+                    "claim_ttl_sec set to reap the stale leases",
+                    len(newly_lost), newly_lost)
+                stats["buckets_skipped_claimed"] += len(newly_lost)
+            remaining = [b for b in remaining if b in won]
+            if not remaining:
+                break
+        group, remaining = remaining[:bucket_group], remaining[bucket_group:]
         t0 = time.time()
         observed = write_wave(
             group, documents.filter(bucket_col(n_buckets).isin(group)))
@@ -224,26 +226,25 @@ def claim_buckets(spark: SparkSession, ckpt_dir: str, buckets: list[int],
     """Write-intent claim with a deterministic single-winner rule and an
     optional lease TTL.
 
-    Protocol: append (bucket, claimant, ts) rows, then read back EVERY claim
-    and keep only buckets whose winner — min row by (ts, claimant), a total
-    order — is this claimant. Any driver that reads after both writes land
-    computes the same winner, so the claim set is consistent.
+    Protocol: append (bucket, claimant, ts) rows, read back the claims on
+    ``buckets`` and replay them in (ts, claimant) order: a row takes its
+    bucket when nobody holds it and renews it when its claimant holds it;
+    any other row lost when written, and is ignored. This claimant keeps
+    what it holds at the end. The replay depends on the rows alone, so
+    every driver that reads after both writes land agrees.
 
-    ``ttl_sec``: claims older than the TTL are treated as ABANDONED LEASES
-    and ignored in the winner computation, so a recovery driver (any
-    claimant id) wins buckets a crashed driver claimed but never completed
-    — without it, a crashed claimant's rows win forever and ``run_job``
-    silently finishes with those buckets unprocessed (documented recovery
-    without a TTL: rerun with the crashed driver's claimant id, or delete
-    ``<ckpt_dir>/_claims``). Leases are written once per run and never
-    renewed, so size the TTL above the worst-case wall time of the whole
-    run: a live-but-slow driver whose lease expires can have a bucket
-    stolen, which costs duplicate WORK only — every sink is
-    bucket-partitioned dynamic overwrite, so reruns are idempotent and
-    duplicate rows are impossible. Staleness is judged against this call's
-    own write timestamp, so the comparison is same-clock on a single
-    recovery driver; cross-driver clock skew must stay well under the TTL
-    (the standard lease assumption).
+    ``ttl_sec``: a holder whose latest row is older than the TTL when the
+    next row comes has an ABANDONED LEASE, and that row takes the bucket,
+    so a recovery driver (any claimant id) wins buckets a crashed driver
+    never completed — without it, a crashed claimant holds forever and
+    ``run_job`` silently skips its buckets (recovery without a TTL: rerun
+    with its claimant id, or delete ``<ckpt_dir>/_claims``).
+    :func:`run_waves` renews the lease before every later wave, so size
+    the TTL above one wave's worst-case wall time: a slow driver whose
+    lease expires mid-wave can have a bucket stolen, which costs duplicate
+    WORK only (every sink is bucket-partitioned dynamic overwrite).
+    Cross-driver clock skew must stay well under the TTL (the standard
+    lease assumption).
 
     ``backend``: None = raw parquet append (default, unchanged semantics).
     'delta' / 'iceberg' / 'parquet' / 'auto' route the claim append and
@@ -263,7 +264,7 @@ def claim_buckets(spark: SparkSession, ckpt_dir: str, buckets: list[int],
     if backend is None:
         target = claims_target or _claims_dir(ckpt_dir)
         rows.write.mode("append").parquet(target)
-        all_claims = spark.read.schema(CLAIMS_SCHEMA).parquet(target).collect()
+        claims = spark.read.schema(CLAIMS_SCHEMA).parquet(target)
     else:
         from . import lakehouse
         resolved = lakehouse.pick_backend(spark, backend)
@@ -274,16 +275,14 @@ def claim_buckets(spark: SparkSession, ckpt_dir: str, buckets: list[int],
                 "silently miss the catalog")
         target = claims_target or _claims_dir(ckpt_dir)
         lakehouse.write_table(rows, target, backend=resolved, mode="append")
-        all_claims = lakehouse.read_table(spark, target,
-                                          backend=resolved).collect()
-    best: dict[int, tuple] = {}
-    for r in all_claims:
-        if ttl_sec is not None and now - r["ts"] > ttl_sec:
-            continue                      # abandoned lease — up for grabs
-        k = (r["ts"], r["claimant"])
-        if r["bucket"] not in best or k < best[r["bucket"]]:
-            best[r["bucket"]] = k
-    # this call's own rows carry ts=now, so every requested bucket has a
-    # live claim; .get is belt-and-braces against a ttl_sec <= 0 misuse
-    return {b for b in buckets
-            if best.get(b, (now, claimant))[1] == claimant}
+        claims = lakehouse.read_table(spark, target, backend=resolved)
+    holder: dict[int, tuple[str, float]] = {}
+    for r in sorted(claims.where(F.col("bucket").isin(buckets)).collect(),
+                    key=lambda r: (r["ts"], r["claimant"])):
+        held = holder.get(r["bucket"])
+        if (held is None or held[0] == r["claimant"]
+                or ttl_sec is not None and r["ts"] - held[1] > ttl_sec):
+            holder[r["bucket"]] = (r["claimant"], r["ts"])
+    # this call's own rows are in the replay, so every requested bucket has
+    # a holder; .get is belt-and-braces against a read that misses them
+    return {b for b in buckets if holder.get(b, (claimant,))[0] == claimant}

@@ -50,8 +50,8 @@ class PipelineConfig:
     # corpus instead of double-processing it
     claim_ttl_sec: float | None = None  # lease TTL: claims older than this
     # without a done row count as abandoned, so a recovery driver wins them
-    # (leases are never renewed: size above the worst-case wall time of the
-    # whole run; see claim_buckets)
+    # (run_waves renews the lease before every wave: size above the
+    # worst-case wall time of one wave; see claim_buckets)
     claims_backend: str | None = None  # None = raw parquet; 'delta' /
     # 'iceberg' / 'auto' route claims through the ACID lakehouse adapter
     # for exact single-processing (serialized claim commits)
@@ -201,7 +201,12 @@ def run_job(spark: SparkSession, documents_path: str, media_pages_path: str,
     if cfg.claimant is not None:
         # S2 multi-writer claim: process only the buckets this driver wins
         # (single-winner rule documented at checkpoint.claim_buckets)
+        claimed = []
+
         def claim(buckets):
+            if claimed and cfg.claim_ttl_sec is None:
+                return set(buckets)   # no TTL: a lease never lapses
+            claimed.append(True)
             return ckpt.claim_buckets(
                 spark, ckpt_dir, buckets, cfg.claimant,
                 ttl_sec=cfg.claim_ttl_sec, backend=cfg.claims_backend,

@@ -26,7 +26,7 @@ def main():
     import pytesseract  # the fake — proves PYTHONPATH carries the stack
     assert pytesseract.Output.DICT == "dict"
 
-    spark = get_spark("real-ocr-paths", cores=4, shuffle_partitions=4)
+    spark = get_spark("real-ocr-paths", cores=4)
     spark.sparkContext.setLogLevel("ERROR")
 
     from ocr_redaction_engine_spark.analytics.multimodal import (

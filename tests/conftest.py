@@ -11,7 +11,7 @@ N_DOCS = 200
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("ocrr-tests", cores=8, shuffle_partitions=8)
+    s = get_spark("ocrr-tests", cores=8)
     yield s
 
 

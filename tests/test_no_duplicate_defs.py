@@ -1,5 +1,6 @@
-"""No module of the package defines the same top-level name twice, and
-every top-level package name is used somewhere.
+"""No module of the package defines the same top-level name twice, every
+top-level package name is used somewhere, and only ``session.get_spark``
+builds a SparkSession.
 
 A second ``def``/``class`` with an earlier one's name silently replaces
 it at import, so the first definition is dead code that still reads as
@@ -82,3 +83,35 @@ def test_every_top_level_package_def_is_used():
              for p in sorted(PACKAGE.rglob("*.py"))
              if (dead := unreferenced_top_level_defs(p.read_text(), used))}
     assert found == {}
+
+
+def builder_sites(source: str) -> list[str]:
+    """The top-level def (or ``<module>``) around every read of
+    ``SparkSession.builder``."""
+    out = []
+    for top in ast.parse(source).body:
+        where = top.name if isinstance(top, DEFS) else "<module>"
+        out += [where for n in ast.walk(top)
+                if isinstance(n, ast.Attribute) and n.attr == "builder"
+                and getattr(n.value, "id", getattr(n.value, "attr", None))
+                == "SparkSession"]
+    return out
+
+
+def test_scan_catches_a_hand_rolled_builder():
+    src = ("from pyspark.sql import SparkSession\n"
+           "import pyspark\n\n"
+           "def start():\n"
+           "    return SparkSession.builder.master('local[2]').getOrCreate()\n\n"
+           "s = pyspark.sql.SparkSession.builder.getOrCreate()\n"
+           "b = builder = other.builder\n")
+    assert builder_sites(src) == ["start", "<module>"]
+
+
+def test_only_get_spark_builds_a_session():
+    """Every job, tool, test and bench leg gets its session from
+    ``session.get_spark``, so they all run the same SQL semantics."""
+    files = [f for u in USERS for f in ([u] if u.is_file() else u.rglob("*.py"))]
+    found = {str(f.relative_to(ROOT)): sites for f in files
+             if (sites := builder_sites(f.read_text()))}
+    assert found == {"ocr_redaction_engine_spark/session.py": ["get_spark"]}

@@ -166,6 +166,80 @@ def test_claim_ttl_reaps_abandoned_leases(spark, tmp_path):
         spark, ckpt_dir, [0, 1, 2, 3], "rescue-z", ttl_sec=3600) == set()
 
 
+LEASE_TTL = 100.0
+
+
+class _Clock:
+    """Stands in for the ``time`` module inside ``checkpoint``."""
+    t = 1000.0
+
+    def time(self):
+        return self.t
+
+
+def _lease_run(spark, monkeypatch, ckpt_dir, n, wave_sec, peer_at):
+    """``run_waves`` over ``n`` buckets, one per wave, as driver-a with a
+    ``LEASE_TTL`` lease, on a fake clock each wave advances by ``wave_sec``.
+    ``peer_at = (wave, offset)``: that far into that wave, a TTL-enabled
+    peer claims the buckets no earlier wave wrote. Returns (written
+    buckets, the peer's won set, stats)."""
+    clock = _Clock()
+    monkeypatch.setattr(checkpoint, "time", clock)
+    written, peer_won = [], set()
+
+    def write_wave(group, wave_docs):
+        if len(written) == peer_at[0]:
+            clock.t += peer_at[1]
+            peer_won.update(checkpoint.claim_buckets(
+                spark, ckpt_dir, [b for b in range(n) if b not in written],
+                "peer", ttl_sec=LEASE_TTL))
+            clock.t -= peer_at[1]
+        clock.t += wave_sec
+        written.extend(group)
+        return ()
+
+    stats = checkpoint.run_waves(
+        spark, spark.createDataFrame([("d",)], "doc_id string"), ckpt_dir,
+        n, 1, write_wave,
+        claim=lambda bs: checkpoint.claim_buckets(
+            spark, ckpt_dir, bs, "driver-a", ttl_sec=LEASE_TTL))
+    return written, peer_won, stats
+
+
+@pytest.mark.parametrize("peer_at", [(2, 10.0), (0, 30.0)],
+                         ids=["after_first_row_expired", "before_renewal"])
+def test_run_waves_renewed_lease_holds(spark, monkeypatch, tmp_path, peer_at):
+    """60 s waves under a 100 s TTL: driver-a's first claim row has expired
+    by wave 3, but run_waves renewed the lease before waves 2 and 3.
+    after_first_row_expired: a peer claiming 10 s into wave 3 wins nothing
+    (without renewal it takes bucket 2). before_renewal: a peer that claims
+    30 s into wave 1 loses and drops the buckets; the renewals keep them
+    with driver-a, which writes all three (had the still-live losing row
+    counted at the wave-3 renewal, bucket 2 would go unprocessed)."""
+    ckpt_dir = str(tmp_path / "ckpt")
+    written, peer_won, stats = _lease_run(spark, monkeypatch, ckpt_dir, 3,
+                                          60.0, peer_at)
+    assert peer_won == set()
+    assert written == [0, 1, 2]
+    assert stats["waves"] == 3 and stats["buckets_skipped_claimed"] == 0
+    assert checkpoint.completed_buckets(spark, ckpt_dir) == {0, 1, 2}
+
+
+def test_run_waves_drops_buckets_lost_before_renewal(spark, monkeypatch,
+                                                     tmp_path):
+    """A 150 s wave outlasts the 100 s TTL: a peer claiming 120 s into it
+    takes both buckets (bucket 0, still being written, costs duplicate
+    work only), and the renewal before wave 2 drops bucket 1 and counts
+    it."""
+    ckpt_dir = str(tmp_path / "ckpt")
+    written, peer_won, stats = _lease_run(spark, monkeypatch, ckpt_dir, 2,
+                                          150.0, (0, 120.0))
+    assert peer_won == {0, 1}
+    assert written == [0]
+    assert stats["waves"] == 1 and stats["buckets_skipped_claimed"] == 1
+    assert checkpoint.completed_buckets(spark, ckpt_dir) == {0}
+
+
 def test_claim_buckets_lakehouse_routing(spark, tmp_path):
     """Claims routed through the lakehouse adapter (VERDICT r4 #2): with the
     sandbox's parquet backend the adapter path must behave identically to
@@ -206,9 +280,11 @@ def test_claim_buckets_delta_acid(spark, tmp_path):
     assert won[0] == set(range(8)) and won[1] == set() and won[2] == set()
 
 
-def test_run_job_skips_and_reports_foreign_claims(spark, corpus_input, tmp_path):
+def test_run_job_skips_and_reports_foreign_claims(spark, corpus_input, tmp_path,
+                                                  monkeypatch):
     """run_job must surface (stats + warning), not silently drop, buckets
-    another claimant holds; with claim_ttl_sec a recovery run reaps them."""
+    another claimant holds; with claim_ttl_sec a recovery run reaps them.
+    It renews the claim before every later wave only when a TTL is set."""
     import time as _t
     base = corpus_input
     docs, pages = f"{base}/input/documents", f"{base}/input/media_pages"
@@ -217,9 +293,13 @@ def test_run_job_skips_and_reports_foreign_claims(spark, corpus_input, tmp_path)
     # a "crashed" driver claimed half the buckets and never completed them
     assert checkpoint.claim_buckets(
         spark, ckpt_dir, [0, 1, 2, 3], "crashed") == {0, 1, 2, 3}
+    calls, claim = [], checkpoint.claim_buckets
+    monkeypatch.setattr(checkpoint, "claim_buckets",
+                        lambda *a, **k: calls.append(a[2]) or claim(*a, **k))
     stats = run_job(spark, docs, pages, out, ckpt_dir,
                     PipelineConfig(claimant="driver-b", **CFG))
     assert stats["buckets_skipped_claimed"] == 4
+    assert calls == [list(range(8))]      # 2 waves, no TTL: one claim
     assert checkpoint.completed_buckets(spark, ckpt_dir) == {4, 5, 6, 7}
     # recovery: TTL reaps the stale leases and finishes the corpus
     _t.sleep(1.2)
@@ -227,6 +307,7 @@ def test_run_job_skips_and_reports_foreign_claims(spark, corpus_input, tmp_path)
                      PipelineConfig(claimant="driver-b", claim_ttl_sec=1.0,
                                     **CFG))
     assert stats2["buckets_skipped_claimed"] == 0
+    assert calls[1:] == [[0, 1, 2, 3], [2, 3]]   # renewed before wave 2
     assert checkpoint.completed_buckets(spark, ckpt_dir) == set(range(8))
     # outputs equal a clean single-driver run
     ref_out = str(tmp_path / "ref")

@@ -25,6 +25,7 @@ Usage: python tools/cc_sf01_check.py [--sf-dir DIR]
 """
 from __future__ import annotations
 
+import os
 import sys
 
 sys.path.insert(0, "/root/repo")
@@ -38,20 +39,12 @@ def main():
     if "--sf-dir" in argv:
         SF_DIR = argv[argv.index("--sf-dir") + 1]
 
-    from pyspark.sql import SparkSession
-
     from ocr_redaction_engine_spark.analytics.dedup import (
         apply_dedup, candidate_pairs, connected_components,
         duplicate_representatives)
+    from ocr_redaction_engine_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("cc_sf01_check")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
+    spark = get_spark("cc_sf01_check", len(os.sched_getaffinity(0)))
     spark.sparkContext.setLogLevel("WARN")
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
 

@@ -21,7 +21,7 @@ SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 from ocr_redaction_engine_spark.planaudit import audit_plan  # noqa: E402
 from ocr_redaction_engine_spark.session import get_spark  # noqa: E402
 
-spark = get_spark("plan-audit", cores=8, shuffle_partitions=8)
+spark = get_spark("plan-audit", cores=8)
 spark.sparkContext.setLogLevel("ERROR")
 
 import __spark_entry__ as entry  # noqa: E402

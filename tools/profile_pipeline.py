@@ -8,14 +8,16 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-cpus = int(sys.argv[1]) if len(sys.argv) > 1 else 32
+import bench  # noqa: E402
+from ocr_redaction_engine_spark.session import get_spark  # noqa: E402
+
+cpus = int(sys.argv[1]) if len(sys.argv) > 1 else bench.CPUS
 n_docs = int(sys.argv[2]) if len(sys.argv) > 2 else 360000
 
-import bench
-
-spark = bench._session(cpus)
+spark = get_spark(f"profile-{cpus}", cpus, bench.shuffle_extra(cpus))
+spark.sparkContext.setLogLevel("ERROR")
 docs_path, pages_path = bench.ensure_corpus(spark, n_docs)
 stages = bench.stage_profile(spark, docs_path, pages_path)
 print(json.dumps({"cpus": cpus, "n_docs": n_docs, "stages": stages}))

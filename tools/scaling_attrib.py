@@ -171,21 +171,15 @@ def parse_eventlog(path: str, t0_ms: float, t1_ms: float, cores: int) -> dict:
 def run_leg(which: str, cpus: int, n_docs: int) -> dict:
     """One warmed+timed pass with event logging, decomposed."""
     import bench  # repo-root bench.py
-    from pyspark.sql import SparkSession
+    from ocr_redaction_engine_spark.session import get_spark
 
     elog = tempfile.mkdtemp(prefix=f"elog_{which}_{cpus}_")
-    spark = (SparkSession.builder.master(f"local[{cpus}]")
-             .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-             .config("spark.driver.memory", "24g")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-             .config("spark.ui.enabled", "false")
-             .config("spark.ui.showConsoleProgress", "false")
-             .config("spark.eventLog.enabled", "true")
-             .config("spark.eventLog.compress", "false")
-             .config("spark.eventLog.rolling.enabled", "false")
-             .config("spark.eventLog.dir", f"file://{elog}")
-             .appName(f"attrib-{which}-{cpus}").getOrCreate())
+    spark = get_spark(f"attrib-{which}-{cpus}", cpus, {
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.rolling.enabled": "false",
+        "spark.eventLog.dir": f"file://{elog}",
+    })
     spark.sparkContext.setLogLevel("ERROR")
 
     if which == "extraction":

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
+import re
 import sys
 
 import duckdb
@@ -47,18 +49,13 @@ def table_hash(cols, rows):
 
 def main():
     global SF_DIR
-    from pyspark.sql import SparkSession
     import __spark_entry__ as entry_mod
+    from ocr_redaction_engine_spark.session import get_spark
 
     argv = sys.argv[1:]
     if "--sf-dir" in argv:
         i = argv.index("--sf-dir")
         SF_DIR = argv[i + 1]
-        argv = argv[:i] + argv[i + 2:]
-    driver_mem = "8g"
-    if "--driver-mem" in argv:   # sf1 duplicate-heavy joins need more heap
-        i = argv.index("--driver-mem")
-        driver_mem = argv[i + 1]
         argv = argv[:i] + argv[i + 2:]
     stream_collect = "--stream-collect" in argv
     if stream_collect:
@@ -74,18 +71,11 @@ def main():
     print(f"# selfcheck over {SF_DIR}")
     print(f"# engines: duckdb {duckdb.__version__}, pyspark {pyspark.__version__}")
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", driver_mem)
-        # the compare collects full result sets; duplicate-heavy scale
-        # steps (sf1's 10x replica structure) legitimately return
-        # GB-sized candidate-pair tables
-        .config("spark.driver.maxResultSize", "16g")
-        .config("spark.sql.adaptive.enabled", "true")
-        .appName("selfcheck")
-        .getOrCreate()
-    )
+    # the compare collects full result sets; duplicate-heavy scale steps
+    # (sf1's 10x replica structure) legitimately return GB-sized
+    # candidate-pair tables
+    spark = get_spark("selfcheck", len(os.sched_getaffinity(0)),
+                      {"spark.driver.maxResultSize": "16g"})
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
@@ -96,26 +86,33 @@ def main():
     oracles = entry_mod.oracle_sql()
     # Golden-parquet oracles that read the SF tables are pinned to the scale
     # they were generated at (the driver gate runs sf0.01). When checking
-    # another --sf-dir, swap in an ``_sf<X>``-suffixed golden IF one exists
-    # (tools/write_bpe_golden.py --sf-dir regenerates it); goldens for
-    # fixed-corpus queries (the pipeline ones ignore sf_dir) have no twin
-    # and keep their path.
-    import os
-    import re as _re
+    # another --sf-dir, swap in the ``_sf<X>``-suffixed twin of every golden
+    # file (tools/write_bpe_golden.py --sf-dir regenerates it); a query
+    # whose twin is missing fails instead of comparing against the sf0.01
+    # golden. The fixed-corpus pipeline goldens are directories
+    # (``*.parquet/*.parquet``), which the pattern does not match: they
+    # keep their path.
     sf_tag = os.path.basename(SF_DIR.rstrip("/"))
+    missing_twin = {}
     if sf_tag != "sf0.01":
-        def _swap(sql: str) -> str:
+        def _swap(name: str, sql: str) -> str:
             def sub(m):
-                stem, ext = m.group(1), m.group(2)
-                twin = f"{stem}_{sf_tag}.{ext}"
-                return f"'{twin}'" if os.path.exists(twin) else m.group(0)
-            return _re.sub(r"'(/root/repo/tests/golden/[^'.]+)\.(parquet)'",
-                           sub, sql)
-        oracles = {k: _swap(v) for k, v in oracles.items()}
+                twin = f"{m.group(1)}_{sf_tag}.{m.group(2)}"
+                if not os.path.exists(twin):
+                    missing_twin[name] = twin
+                return f"'{twin}'"
+            return re.sub(r"'([^']*/tests/golden/[^'.]+)\.(parquet)'", sub, sql)
+        oracles = {k: _swap(k, v) for k, v in oracles.items()}
     only = set(argv)
     failures = []
     for name, fn in qs.items():
         if only and name not in only:
+            continue
+        if name in missing_twin:
+            print(f"FAIL  {name}: golden {missing_twin[name]} is missing; "
+                  f"write it with tools/write_bpe_golden.py --sf-dir {SF_DIR} "
+                  f"--out {missing_twin[name]}")
+            failures.append(name)
             continue
         try:
             df = fn(spark, SF_DIR)

@@ -8,10 +8,10 @@ lowest-rank, leftmost occurrence).
 
 Run: python tools/write_bpe_golden.py [--sf-dir DIR --out FILE]
     The default writes the sf0.01 golden the driver gate reads; --sf-dir
-    regenerates the reference at another scale (tools/selfcheck.py swaps
-    in an ``_sf<X>``-suffixed golden automatically when one exists, so the
-    sf0.1 scale-step gate checks the real sf0.1 encode instead of
-    mismatching the sf0.01 golden).
+    regenerates the reference at another scale; write it to the
+    ``_sf<X>``-suffixed twin, which tools/selfcheck.py swaps in (and fails
+    the query when it is missing), so the sf0.1 scale-step gate checks the
+    real sf0.1 encode instead of mismatching the sf0.01 golden.
 """
 from __future__ import annotations
 

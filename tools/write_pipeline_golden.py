@@ -38,7 +38,7 @@ def main():
         red_full.append((doc_id, media_ref, status, field, seq, x1, y1, x2, y2,
                          frame_id, document_id))
 
-    spark = get_spark("golden", cores=4, shuffle_partitions=4)
+    spark = get_spark("golden", cores=4)
     spark.createDataFrame(spans, SPANS_DDL).coalesce(1) \
         .write.mode("overwrite").parquet(f"{OUT}/pipeline_spans.parquet")
     spark.createDataFrame(red_full, RED_DDL).coalesce(1) \
