@@ -10,7 +10,8 @@ Default run:
      sandbox stand-in for N vs 4N executors).
 
 Prints ONE JSON line:
-  {"metric": "...", "value": docs_per_sec_at_N, "unit": "sec", ...,
+  {"metric": "end_to_end_redaction_wall_sec", "value": wall_sec_at_N,
+   "unit": "sec", "docs_per_sec": docs_per_sec_at_N, ...,
    "queries": {name: sec}, "sf": 0.1, "scaling": {...}}
 
 Subprocess mode (internal): ``python bench.py --pipeline-only --cpus K``
@@ -317,15 +318,16 @@ def _leg(cpus: int, n_docs: int, single: bool, corpus_base: str | None,
 def _pipeline_pass(spark, docs_path: str, pages_path: str):
     import threading
 
-    from ocr_redaction_engine_spark.pipeline import PipelineConfig, run_pipeline
+    from ocr_redaction_engine_spark.operators.validate import (PROBE_DDL,
+                                                               split_valid)
+    from ocr_redaction_engine_spark.pipeline import run_pipeline
 
     documents = spark.read.parquet(docs_path)
     media_pages = spark.read.parquet(pages_path)
-    cfg = PipelineConfig(probe_documents=spark.read.schema(
-        "doc_id string, spans array<struct<kind:string,media_ref:string>>"
-    ).parquet(docs_path))  # validity probe reads the pruned view; no explicit
-    # repartition: the tokenize join's hash partitioning on media_ref already
-    # feeds the Arrow stage evenly
+    # validity probe reads the pruned view; no explicit repartition: the
+    # tokenize join's hash partitioning on media_ref already feeds the Arrow
+    # stage evenly
+    slim_docs = spark.read.schema(PROBE_DDL).parquet(docs_path)
 
     def one_pass():
         # the two sinks are independent jobs: force them CONCURRENTLY so the
@@ -333,7 +335,9 @@ def _pipeline_pass(spark, docs_path: str, pages_path: str):
         # threads block on the Python workers, and the two jobs' driver
         # planning gaps overlap (r5; same results, better schedule — the
         # production run_job writes its per-wave sinks the same way)
-        outs = run_pipeline(documents, media_pages, cfg)
+        valid, _ = split_valid(documents, media_pages,
+                               probe_documents=slim_docs)
+        outs = run_pipeline(valid, media_pages)
         ts = [threading.Thread(target=_force, args=(outs[k],))
               for k in ("spans", "redactions")]
         for t in ts:
@@ -541,7 +545,7 @@ def main():
 
     hi = runs[args.cpus]
     result = {
-        "metric": "end_to_end_redaction_docs_per_sec",
+        "metric": "end_to_end_redaction_wall_sec",
         "value": round(hi["wall_sec"], 3),
         "unit": "sec",
         "queries": qtimes,

@@ -1,8 +1,17 @@
 """spark-submit entry point for the streaming (availableNow) pipeline.
 
 Drains everything currently in the documents directory through the redaction
-pipeline as native Structured Streaming queries, then exits; re-running picks
-up only new files (the reference's 5 s poll loop, with exactly-once progress).
+pipeline (``streaming.stream_pipeline``: one ``foreachBatch`` query, each
+micro-batch routed through ``validate.split_valid`` like the batch job), then
+exits; re-running picks up only new files (the reference's 5 s poll loop,
+with exactly-once progress).
+
+Output: four sinks under ``--out`` — ``spans``, ``redactions``, ``values``
+and ``invalid`` (INVALID_DOCUMENT status rows; invalid documents reach no
+other sink) — each partitioned by ``batch_id``. Progress lives in
+``{--checkpoint}/validated``. This layout differs from the older
+two-sink native stream, so start a deployed stream on fresh ``--out`` and
+``--checkpoint`` directories.
 
     spark-submit --py-files dist/ocr_redaction_engine_spark.zip \
         jobs/run_stream.py --documents ... --media-pages ... --out ... --checkpoint ...

@@ -8,8 +8,8 @@ which then crashes on the ``document['taskid']`` key typo; we keep the
 notification, not the crash). So this is a thin, optional edge adapter:
 ``foreachPartition`` with one connection per partition and per-document
 payloads — the standard Spark side-effect sink shape. It serves both the
-completion sink (S10) and the invalid-document variant (P1): pass
-``run_pipeline(...)["invalid"]`` and the payloads carry
+completion sink (S10) and the invalid-document variant (P1): pass the
+invalid frame of ``validate.split_valid(...)`` and the payloads carry
 (doc_id, status, task_result, reason). The HTTP transport is injected
 (the sandbox has no network); any callable
 ``sender(payloads: list[dict]) -> None`` works.

@@ -96,6 +96,12 @@ def validity_route(documents: DataFrame, media_pages: DataFrame,
 
 INVALID_DDL = "doc_id string, status string, task_result string, reason string"
 
+#: Schema-pruned documents view for the probe: Spark's generator
+#: nested-column aliasing cannot prune a multi-field struct access through
+#: an explode, so an explicit pruned re-read is how the probe avoids
+#: reading spans.text.
+PROBE_DDL = "doc_id string, spans array<struct<kind:string,media_ref:string>>"
+
 #: Above this many invalid documents the collected route refuses (driver
 #: memory guard) and callers fall back to the lazy anti-join plan.
 COLLECT_CAP = 100_000
@@ -106,7 +112,7 @@ def collect_invalid(documents: DataFrame, media_pages: DataFrame,
                     cap: int = COLLECT_CAP):
     """Run the probe ONCE and return its rows as a list (None if the
     invalid set exceeds ``cap`` — pathological corpus, use the lazy route).
-    The list is what run_pipeline threads into every sink plan as a
+    The list is what split_valid threads into every sink plan as a
     map-side filter, so forcing N sinks costs one probe job, not N."""
     rows = (invalid_documents(documents, media_pages, whitelist)
             .limit(cap + 1).collect())
@@ -131,3 +137,25 @@ def route_with_collected(documents: DataFrame, invalid_rows) -> tuple:
         valid = documents.join(F.broadcast(invalid.select("doc_id")),
                                "doc_id", "left_anti")
     return valid, invalid
+
+
+def split_valid(documents: DataFrame, media_pages: DataFrame,
+                whitelist: tuple = VALID_EXTENSIONS,
+                probe_documents: DataFrame | None = None
+                ) -> tuple[DataFrame, DataFrame]:
+    """(valid documents, invalid status rows) — the one P1 route every job
+    takes before any processing.
+
+    The slim (doc_id, media_ref)⋈(media_ref, ext) probe over
+    ``probe_documents`` (a :data:`PROBE_DDL` re-read of the same documents;
+    default ``documents``) runs EAGERLY here, exactly once, like the
+    reference's promotion-time check, so the sink plans carry only a
+    map-side filter — zero added cost when the corpus is clean. Past
+    COLLECT_CAP invalid documents it falls back to the lazy
+    :func:`validity_route`."""
+    inv_rows = collect_invalid(
+        documents if probe_documents is None else probe_documents,
+        media_pages, whitelist)
+    if inv_rows is None:
+        return validity_route(documents, media_pages, whitelist)
+    return route_with_collected(documents, inv_rows)

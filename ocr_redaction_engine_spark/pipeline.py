@@ -13,12 +13,16 @@ output itself is shuffle-free; assembling array-form documents adds one hash
 agg on doc_id. Skew from media-heavy documents dissolves at explode time —
 the unit of work is the page, and pages hash uniformly across tasks (AQE
 splits join skew).
+
+``run_pipeline`` only builds plans over documents that are already routed:
+the P1 validity split (INVALID_DOCUMENT) is ``validate.split_valid``, which
+``run_job`` and ``streaming.stream_pipeline`` call once before it.
 """
 
 from __future__ import annotations
 
 import threading
-from dataclasses import dataclass, replace
+from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -30,8 +34,7 @@ from .operators.extract import extract_page_rows
 from .operators.redactions import build_redactions, build_values
 from .operators.reassemble import assemble_documents, reassemble_flat
 from .operators.tokenize import tokenize_fixture
-from .operators.validate import (VALID_EXTENSIONS, collect_invalid,
-                                 route_with_collected, validity_route)
+from .operators.validate import PROBE_DDL, VALID_EXTENSIONS, split_valid
 
 
 @dataclass
@@ -42,7 +45,6 @@ class PipelineConfig:
     places: list[str] | None = None  # address dictionary override (default:
     # places.PLACES_LIST; load the reference's full 1,391-entry list here in
     # production — it ships to executors inside the Arrow UDF closure)
-    validate: bool = True          # P1 validity route (INVALID_DOCUMENT)
     ext_whitelist: tuple = VALID_EXTENSIONS
     claimant: str | None = None    # multi-writer id (S2): when set, run_job
     # claims its remaining buckets through checkpoint.claim_buckets and
@@ -57,32 +59,6 @@ class PipelineConfig:
     # for exact single-processing (serialized claim commits)
     claims_target: str | None = None  # claims table override (required as a
     # catalog name for iceberg)
-    probe_documents: DataFrame | None = None  # slimmer view of the SAME
-    # documents used only by the validity probe — e.g. a schema-pruned
-    # parquet re-read ("doc_id string, spans array<struct<kind:string,
-    # media_ref:string>>"): Spark's generator nested-column aliasing cannot
-    # prune multi-field struct access through an explode, so an explicit
-    # pruned scan is how the probe avoids reading spans.text
-
-
-def _validity_split(documents: DataFrame, media_pages: DataFrame,
-                    cfg: PipelineConfig, probe_documents: DataFrame
-                    ) -> tuple[DataFrame, DataFrame]:
-    """(valid documents, invalid status rows); no split when
-    ``cfg.validate`` is False.
-
-    P1: INVALID_DOCUMENT is terminal BEFORE any processing — one slim
-    (doc_id, media_ref)⋈(media_ref, ext) probe over ``probe_documents`` is
-    evaluated EAGERLY here (exactly once, like the reference's
-    promotion-time check), so the sink plans carry only a map-side filter —
-    zero added cost when the corpus is clean instead of a probe re-run per
-    forced sink."""
-    inv_rows = (collect_invalid(probe_documents, media_pages, cfg.ext_whitelist)
-                if cfg.validate else [])
-    if inv_rows is None:
-        # pathological corpus (> COLLECT_CAP invalid docs): lazy route
-        return validity_route(documents, media_pages, cfg.ext_whitelist)
-    return route_with_collected(documents, inv_rows)
 
 
 def run_pipeline(documents: DataFrame, media_pages: DataFrame,
@@ -90,19 +66,14 @@ def run_pipeline(documents: DataFrame, media_pages: DataFrame,
                  counters: dict | None = None,
                  observe_docs: Callable[[DataFrame], DataFrame] | None = None
                  ) -> dict[str, DataFrame]:
-    """Plan builder: returns the output DataFrames. With
-    ``cfg.validate=True`` (the default) it EAGERLY runs the bounded
-    validity-probe job at call time (one slim schema-pruned scan, like the
-    reference's promotion-time check); set ``validate=False`` for a fully
-    lazy build of already-routed documents. ``counters`` =
+    """Plan builder: returns the output DataFrames and submits no Spark
+    job. ``documents`` are taken as valid: route them through
+    ``validate.split_valid`` first (P1). ``counters`` =
     optional accumulator dict for live progress metrics (A8).
     ``observe_docs`` wraps the valid documents feeding the ``spans`` output
     only (run_job's lineage n_docs observation), so the extract outputs'
     plans do not carry it."""
     cfg = config or PipelineConfig()
-    documents, invalid = _validity_split(
-        documents, media_pages, cfg,
-        cfg.probe_documents if cfg.probe_documents is not None else documents)
     media_spans = route_spans(explode_spans(documents))[1]
     pages = tokenize_fixture(media_spans, media_pages)
     # identify + extract fused in ONE Arrow stage (kernel-side bank);
@@ -122,8 +93,6 @@ def run_pipeline(documents: DataFrame, media_pages: DataFrame,
         "page_rows": extracted,
         "redactions": build_redactions(extracted),
         "values": build_values(extracted),
-        # P1 third terminal status (empty frame when cfg.validate=False)
-        "invalid": invalid,
     }
 
 
@@ -142,10 +111,9 @@ def run_job(spark: SparkSession, documents_path: str, media_pages_path: str,
     media_pages = spark.read.parquet(media_pages_path)
 
     # P1 validity over the whole corpus, probed through a schema-pruned scan
-    slim_docs = spark.read.schema(
-        "doc_id string, spans array<struct<kind:string,media_ref:string>>"
-    ).parquet(documents_path)
-    documents, invalid = _validity_split(documents, media_pages, cfg, slim_docs)
+    slim_docs = spark.read.schema(PROBE_DDL).parquet(documents_path)
+    documents, invalid = split_valid(documents, media_pages,
+                                     cfg.ext_whitelist, slim_docs)
     inv_obs = Observation()
     ckpt.write_buckets(invalid.observe(inv_obs, F.count(F.lit(1)).alias("n")),
                        cfg.n_buckets, f"{out_dir}/invalid")
@@ -154,7 +122,6 @@ def run_job(spark: SparkSession, documents_path: str, media_pages_path: str,
     # the checkpoint lineage rows
     counters = {"pages": spark.sparkContext.accumulator(0),
                 "rejected": spark.sparkContext.accumulator(0)}
-    wave_cfg = replace(cfg, validate=False)
 
     def write_wave(group, wave_docs):
         # lineage: documents on the spans sink's scan, span and box rows on
@@ -163,7 +130,7 @@ def run_job(spark: SparkSession, documents_path: str, media_pages_path: str,
                                     n_docs=F.lit(1))
         spans_m = ckpt.BucketMetrics(group, **ckpt.span_metrics())
         red_m = ckpt.BucketMetrics(group, n_boxes=F.lit(1))
-        outs = run_pipeline(wave_docs, media_pages, wave_cfg, counters,
+        outs = run_pipeline(wave_docs, media_pages, cfg, counters,
                             observe_docs=docs_m.on)
         # redactions + values both derive from the flat extract output;
         # persist it so the Arrow stage runs once per wave, not per sink

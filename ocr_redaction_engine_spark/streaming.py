@@ -8,9 +8,13 @@ drains everything that has arrived and stops — rerunning the job later picks
 up only new files, exactly like the reference's re-poll, but with
 exactly-once checkpointed progress instead of status flags.
 
-Every operator on the redaction path is stateless (explode, stream-static
-join on media_ref, the Arrow extraction stage, narrow sinks), so both
-branches run as *native* streaming queries — no foreachBatch escape hatch.
+The redaction stream (``stream_pipeline``) runs each micro-batch through
+``foreachBatch``: the P1 validity split needs the batch's invalid set before
+any span is written, so each batch calls the batch job's own
+``validate.split_valid`` + ``pipeline.run_pipeline`` and returns what the
+batch job returns on the same documents. The extraction stream
+(``stream_extraction``) is stateless end to end and runs as a *native*
+streaming query.
 
 ``windowed_event_rollup`` adds the late-data story the reference never had:
 watermarked tumbling-window aggregation (append mode emits a window only
@@ -24,10 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .corpus import DOCUMENTS_DDL
-from .operators.explode import explode_spans, route_spans
-from .operators.extract import extract_page_rows
-from .operators.redactions import build_redactions
-from .operators.reassemble import reassemble_flat
+from .operators.validate import split_valid
+from .pipeline import PipelineConfig, run_pipeline
 
 
 def read_documents_stream(spark: SparkSession, documents_path: str,
@@ -41,51 +43,12 @@ def read_documents_stream(spark: SparkSession, documents_path: str,
     return reader.parquet(documents_path)
 
 
-def stream_pipeline(spark: SparkSession, documents_path: str, media_pages_path: str,
-                    out_dir: str, ckpt_dir: str, level: int = 1,
-                    await_termination: bool = True):
-    """Run the redaction pipeline as two native streaming queries
-    (spans + redactions), each with its own checkpoint, drained with
-    ``availableNow``. Returns the two StreamingQuery handles."""
-    docs = read_documents_stream(spark, documents_path)
-    media_pages = spark.read.parquet(media_pages_path)  # static side
-
-    spans = explode_spans(docs)
-    text_spans, media_spans = route_spans(spans)
-
-    from .operators.tokenize import tokenize_fixture
-    pages = tokenize_fixture(media_spans, media_pages)
-    redactions = build_redactions(extract_page_rows(pages, level))
-
-    q_spans = (
-        reassemble_flat(text_spans, media_spans).writeStream
-        .format("parquet")
-        .option("path", f"{out_dir}/spans")
-        .option("checkpointLocation", f"{ckpt_dir}/spans")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_red = (
-        redactions.writeStream
-        .format("parquet")
-        .option("path", f"{out_dir}/redactions")
-        .option("checkpointLocation", f"{ckpt_dir}/redactions")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if await_termination:
-        q_spans.awaitTermination()
-        q_red.awaitTermination()
-    return q_spans, q_red
-
-
-def stream_pipeline_validated(spark: SparkSession, documents_path: str,
-                              media_pages_path: str, out_dir: str,
-                              ckpt_dir: str, level: int = 1,
-                              await_termination: bool = True):
-    """Streaming twin of the FULL batch pipeline including the P1
+def stream_pipeline(spark: SparkSession, documents_path: str,
+                    media_pages_path: str, out_dir: str, ckpt_dir: str,
+                    level: int = 1, await_termination: bool = True):
+    """Streaming redaction job: the batch pipeline including the P1
     INVALID_DOCUMENT route, via ``foreachBatch``: each micro-batch runs the
-    batch wiring (eager validity probe → routed spans/redactions/values +
+    batch wiring (``split_valid`` → routed spans/redactions/values +
     invalid status sink). Document rows are atomic — a document's spans
     array arrives whole in exactly one micro-batch — so the doc-level
     validity decision inside a batch is identical to the batch job's.
@@ -101,14 +64,13 @@ def stream_pipeline_validated(spark: SparkSession, documents_path: str,
     IN_PROGRESS poll loop (in_progress/process_in_progress_status.py:57-67)
     becomes the file source trigger, and its per-document status writes
     become the invalid sink's rows."""
-    from .pipeline import PipelineConfig, run_pipeline
-
     docs = read_documents_stream(spark, documents_path)
     media_pages = spark.read.parquet(media_pages_path)  # static side
     cfg = PipelineConfig(level=level)
 
     def process(batch_df, batch_id):
-        outs = run_pipeline(batch_df, media_pages, cfg)
+        valid, invalid = split_valid(batch_df, media_pages, cfg.ext_whitelist)
+        outs = {**run_pipeline(valid, media_pages, cfg), "invalid": invalid}
         page_rows = outs["page_rows"].persist()
         try:
             for name in ("spans", "redactions", "values", "invalid"):

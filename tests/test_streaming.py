@@ -68,9 +68,14 @@ def test_incremental_drain_no_duplicates(spark, stream_dirs):
     assert spark.read.parquet(f"{base}/out/spans").count() == before
 
     # new arrivals (doc indexes beyond the existing corpus → fresh doc_ids):
-    # only the delta is processed
+    # only the delta is processed. Their media pages land in the static
+    # table first — without them the documents are INVALID (P1 missing_media)
     from ocr_redaction_engine_spark.corpus import gen_document
-    new_docs, _ = zip(*[gen_document(42, i) for i in range(200000, 200010)])
+    from tests.conftest import pages_to_df
+    new_docs, new_pages = zip(*[gen_document(42, i)
+                                for i in range(200000, 200010)])
+    pages_to_df(spark, [p for ps in new_pages for p in ps]) \
+        .write.mode("append").parquet(f"{base}/input/media_pages")
     from ocr_redaction_engine_spark.corpus import DOCUMENTS_DDL
     spark.createDataFrame(
         [(d["doc_id"], [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in d["spans"]])
@@ -356,16 +361,15 @@ def test_stream_stream_interval_join_equals_batch(spark, tmp_path):
 
 
 def test_stream_pipeline_validated_matches_batch(spark, tmp_path):
-    """foreachBatch streaming twin with the P1 route: draining a corpus
+    """The streaming redaction job honours the P1 route: draining a corpus
     with planted invalid docs produces exactly the batch pipeline's spans
     and invalid statuses."""
     from ocr_redaction_engine_spark import corpus, oracle
-    from ocr_redaction_engine_spark.streaming import stream_pipeline_validated
 
     base = str(tmp_path)
     corpus.write_corpus(spark, f"{base}/in", n_docs=80, seed=42,
                         partitions=3, invalid_every=13)
-    stream_pipeline_validated(spark, f"{base}/in/documents",
+    streaming.stream_pipeline(spark, f"{base}/in/documents",
                               f"{base}/in/media_pages",
                               f"{base}/out", f"{base}/ckpt")
     docs, pages = corpus.build_corpus_local(42, 80)
@@ -378,6 +382,9 @@ def test_stream_pipeline_validated_matches_batch(spark, tmp_path):
            for r in spark.read.parquet(f"{base}/out/spans").collect()}
     valid_docs = [d for d in docs if d["doc_id"] not in expected]
     assert got == set(oracle.expected_spans(valid_docs))
+    values = spark.read.parquet(f"{base}/out/values")
+    assert values.count() > 0
+    assert values.where(F.col("doc_id").isin(*expected)).count() == 0
 
     # Idempotency under micro-batch replay: wipe the streaming checkpoint so
     # the SAME input replays as the same batch_id, and re-drain. The
@@ -387,7 +394,7 @@ def test_stream_pipeline_validated_matches_batch(spark, tmp_path):
               for name in ("spans", "redactions", "values", "invalid")}
     import shutil
     shutil.rmtree(f"{base}/ckpt")
-    stream_pipeline_validated(spark, f"{base}/in/documents",
+    streaming.stream_pipeline(spark, f"{base}/in/documents",
                               f"{base}/in/media_pages",
                               f"{base}/out", f"{base}/ckpt")
     after = {name: spark.read.parquet(f"{base}/out/{name}").count()

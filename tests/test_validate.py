@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from ocr_redaction_engine_spark import corpus, oracle
 from ocr_redaction_engine_spark.operators.validate import (
-    invalid_documents, validity_route)
+    invalid_documents, split_valid, validity_route)
 from ocr_redaction_engine_spark.pipeline import PipelineConfig, run_pipeline
 
 
@@ -50,12 +50,13 @@ def test_invalid_documents_matches_oracle(spark):
 def test_invalid_docs_excluded_from_every_sink(spark):
     docs, pages, expected = _corrupted()
     docs_df, pages_df = _dfs(spark, docs, pages)
-    outs = run_pipeline(docs_df, pages_df, PipelineConfig(validate=True))
+    valid, invalid = split_valid(docs_df, pages_df)
+    outs = run_pipeline(valid, pages_df)
     bad = set(expected)
     for sink in ("spans", "redactions", "values"):
         hit = (outs[sink].where(F.col("doc_id").isin(*bad)).count())
         assert hit == 0, f"invalid doc leaked into {sink}"
-    inv = {r["doc_id"] for r in outs["invalid"].collect()}
+    inv = {r["doc_id"] for r in invalid.collect()}
     assert inv == bad
 
 
@@ -64,7 +65,7 @@ def test_valid_docs_unaffected_by_routing(spark):
     corrupted corpus must equal the oracle over the valid subset."""
     docs, pages, expected = _corrupted()
     docs_df, pages_df = _dfs(spark, docs, pages)
-    outs = run_pipeline(docs_df, pages_df)
+    outs = run_pipeline(split_valid(docs_df, pages_df)[0], pages_df)
     got = {(r["doc_id"], r["order"], r["kind"], r["text"], r["media_ref"])
            for r in outs["spans"].collect()}
     valid_docs = [d for d in docs if d["doc_id"] not in expected]
@@ -72,14 +73,24 @@ def test_valid_docs_unaffected_by_routing(spark):
     assert got == want
 
 
-def test_validate_off_is_passthrough(spark):
-    docs, pages, expected = _corrupted()
-    docs_df, pages_df = _dfs(spark, docs, pages)
-    outs = run_pipeline(docs_df, pages_df, PipelineConfig(validate=False))
-    assert outs["invalid"].count() == 0
-    # without routing the bad-extension docs still flow (their pages exist)
-    bad_ext = [k for k, v in expected.items() if v == "bad_extension"]
-    assert outs["spans"].where(F.col("doc_id").isin(*bad_ext)).count() > 0
+def test_run_pipeline_submits_no_job(spark, tmp_path):
+    """run_pipeline only builds plans: on a parquet corpus with planted
+    invalid documents it returns without submitting a Spark job (the
+    validity probe is split_valid's, run by the caller)."""
+    base = str(tmp_path)
+    corpus.write_corpus(spark, f"{base}/in", n_docs=80, seed=42,
+                        partitions=3, invalid_every=13)
+    docs_df = spark.read.parquet(f"{base}/in/documents")
+    pages_df = spark.read.parquet(f"{base}/in/media_pages")
+    sc = spark.sparkContext
+    sc.setJobGroup("run_pipeline_lazy", "run_pipeline plan build")
+    try:
+        run_pipeline(docs_df, pages_df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("run_pipeline_lazy")) == []
 
 
 def test_invalid_webhook_payloads(spark):

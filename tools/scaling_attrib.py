@@ -193,18 +193,19 @@ def run_leg(which: str, cpus: int, n_docs: int) -> dict:
             bench._force(extract_spans(documents, media_pages))
             return time.time() - t0
     else:
-        from ocr_redaction_engine_spark.pipeline import (PipelineConfig,
-                                                         run_pipeline)
+        from ocr_redaction_engine_spark.operators.validate import (
+            PROBE_DDL, split_valid)
+        from ocr_redaction_engine_spark.pipeline import run_pipeline
         docs_path, pages_path = bench.ensure_corpus(spark, n_docs)
         documents = spark.read.parquet(docs_path)
         media_pages = spark.read.parquet(pages_path)
-        cfg = PipelineConfig(probe_documents=spark.read.schema(
-            "doc_id string, spans array<struct<kind:string,media_ref:string>>"
-        ).parquet(docs_path))
+        slim_docs = spark.read.schema(PROBE_DDL).parquet(docs_path)
 
         def one_pass():
             t0 = time.time()
-            outs = run_pipeline(documents, media_pages, cfg)
+            valid, _ = split_valid(documents, media_pages,
+                                   probe_documents=slim_docs)
+            outs = run_pipeline(valid, media_pages)
             bench._force(outs["spans"])
             bench._force(outs["redactions"])
             return time.time() - t0
