@@ -3,19 +3,26 @@
 Default run:
   1. times the headline ``queries()`` entries at ``$SPARK_GRAFT_SF_DIR``
      (default /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]``;
-  2. measures end-to-end redaction-pipeline throughput (docs/sec) on a
-     deterministic synthetic interleaved corpus (seed 42) at TWO parallelism
-     levels — N/4 and N cores, fresh JVM each (subprocess) — and reports
-     scaling efficiency = (docs_s_N / docs_s_N4) / 4 (BASELINE.json north_rule;
-     sandbox stand-in for N vs 4N executors).
+  2. measures end-to-end docs/sec of the production batch jobs,
+     ``pipeline.run_job`` (redaction) and
+     ``extraction_pipeline.run_extraction_job`` (main-content extraction),
+     each with its default config, on a deterministic synthetic corpus
+     (seed 42) at THREE parallelism levels — N/16, N/4 and N cores (the
+     distinct ones), fresh JVM each (subprocess) — and reports the step
+     scaling efficiency (docs_s_b / docs_s_a) / (b / a) between adjacent
+     levels (BASELINE.json north_rule; sandbox stand-in for N vs 4N
+     executors).
+
+Every session, query and leg alike, is ``session.get_spark(name, cpus)``:
+the conf the jobs and perfbench run under.
 
 Prints ONE JSON line:
   {"metric": "end_to_end_redaction_wall_sec", "value": wall_sec_at_N,
    "unit": "sec", "docs_per_sec": docs_per_sec_at_N, ...,
-   "queries": {name: sec}, "sf": 0.1, "scaling": {...}}
+   "queries": {name: sec}, "sf": 0.1, "scaling_efficiency": {...}}
 
 Subprocess mode (internal): ``python bench.py --pipeline-only --cpus K``
-prints a small JSON dict for one pipeline run.
+(or ``--extraction-only``) prints a small JSON dict for one leg.
 """
 from __future__ import annotations
 
@@ -25,10 +32,13 @@ import os
 import shutil
 import subprocess
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from ocr_redaction_engine_spark.extraction_pipeline import run_extraction_job  # noqa: E402
+from ocr_redaction_engine_spark.pipeline import run_job  # noqa: E402
 from ocr_redaction_engine_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -120,11 +130,6 @@ HEADLINE = [
 ]
 
 
-def shuffle_extra(cpus: int) -> dict:
-    """Bench legs keep at least 8 shuffle partitions at low lane counts."""
-    return {"spark.sql.shuffle.partitions": str(max(cpus, 8))}
-
-
 def _force(df):
     df.write.format("noop").mode("overwrite").save()
 
@@ -154,56 +159,6 @@ def ensure_web_corpus(spark, n_docs: int, base: str | None = None) -> tuple[str,
         write_web_corpus(spark, base, n_docs, seed=42, partitions=64)
         open(marker, "w").close()
     return f"{base}/documents", f"{base}/media_pages"
-
-
-def stage_profile(spark, docs_path: str, pages_path: str, level: int = 1) -> dict:
-    """Per-stage wall times of the pipeline's independent actions (VERDICT r1
-    #8: make engine-vs-host attribution measurable). Each stage is forced as
-    its own action after one warm pass; times overlap by construction (the
-    Arrow stage re-runs the tokenize join, the sinks persist the extract
-    output first), so read them as cumulative cuts, not a partition."""
-    import time as _t
-
-    from pyspark.sql import functions as F
-    from ocr_redaction_engine_spark.operators.explode import explode_spans, route_spans
-    from ocr_redaction_engine_spark.operators.extract import extract_page_rows
-    from ocr_redaction_engine_spark.operators.redactions import build_redactions, build_values
-    from ocr_redaction_engine_spark.operators.reassemble import reassemble_flat
-    from ocr_redaction_engine_spark.operators.tokenize import tokenize_fixture
-
-    documents = spark.read.parquet(docs_path)
-    media_pages = spark.read.parquet(pages_path)
-    text_spans, media_spans = route_spans(explode_spans(documents))
-    pages = tokenize_fixture(media_spans, media_pages)
-    extracted = extract_page_rows(pages, level)
-
-    def timed(df):
-        _force(df)          # warm (JIT, page cache, Python workers)
-        walls = []
-        for _ in range(2):  # min-of-2: steal shelter for attribution too
-            t0 = _t.time()
-            _force(df)
-            walls.append(_t.time() - t0)
-        return round(min(walls), 3)
-
-    stages = {
-        "scan_documents": timed(documents),
-        "scan_pages": timed(media_pages),
-        "text_branch_spans": timed(reassemble_flat(text_spans, media_spans)),
-        "tokenize_join": timed(pages),
-        "arrow_extract": timed(extracted),
-    }
-    persisted = extracted.persist()
-    _force(persisted)
-    t0 = _t.time()
-    _force(build_redactions(persisted))
-    _force(build_values(persisted))
-    stages["sinks_after_extract"] = round(_t.time() - t0, 3)
-    persisted.unpersist()
-    stages["python_rows_note"] = (
-        "arrow_extract includes tokenize_join upstream; sinks timed over a "
-        "persisted extract output")
-    return stages
 
 
 def host_probe(seconds: float = 1.0) -> float:
@@ -274,20 +229,37 @@ def parallel_host_probe(procs: int, seconds: float = 1.0) -> float:
     return round(sum(counts) / seconds / 1e6, 1)
 
 
-def _leg(cpus: int, n_docs: int, single: bool, corpus_base: str | None,
-         ensure, make_pass) -> dict:
-    """One fresh-JVM throughput leg: ``ensure(spark, n_docs, corpus_base)``
-    materializes the corpus, ``make_pass(spark, docs_path, pages_path)``
-    returns the callable that runs one pass, and the leg reports the
-    min-of-N pass wall next to the host probes taken just before it."""
-    spark = get_spark(f"bench-{cpus}", cpus, shuffle_extra(cpus))
-    spark.sparkContext.setLogLevel("ERROR")
-    one_pass = make_pass(spark, *ensure(spark, n_docs, corpus_base))
+def job_pass(spark, job, docs_path: str, pages_path: str):
+    """The one bench pass: ``job`` (``run_job`` or ``run_extraction_job``)
+    with its default config over the corpus at ``docs_path`` /
+    ``pages_path``, writing to fresh out/ckpt dirs that are made before and
+    removed after the timed wall. The returned callable runs one pass and
+    gives ``(wall_sec, job_stats)``; it raises if the job ran no wave (a
+    pass that found a finished checkpoint would time a no-op)."""
+    def one_pass() -> tuple[float, dict]:
+        base = tempfile.mkdtemp(prefix="orx_bench_pass_")
+        try:
+            t0 = time.time()
+            stats = job(spark, docs_path, pages_path, f"{base}/out",
+                        f"{base}/ckpt")
+            wall = time.time() - t0
+        finally:
+            shutil.rmtree(base, ignore_errors=True)
+        if stats["waves"] <= 0:
+            raise RuntimeError(f"bench pass ran no wave: {stats}")
+        return wall, stats
+    return one_pass
 
-    def timed():
-        t0 = time.time()
-        one_pass()
-        return time.time() - t0
+
+def _leg(cpus: int, n_docs: int, single: bool, corpus_base: str | None,
+         ensure, job) -> dict:
+    """One fresh-JVM throughput leg: ``ensure(spark, n_docs, corpus_base)``
+    materializes the corpus, and the leg reports the min-of-N
+    :func:`job_pass` wall of ``job`` next to the host probes taken just
+    before it."""
+    spark = get_spark(f"bench-{cpus}", cpus)
+    spark.sparkContext.setLogLevel("ERROR")
+    one_pass = job_pass(spark, job, *ensure(spark, n_docs, corpus_base))
 
     # Warm passes (untimed): spawn+import the Python Arrow workers, C2-JIT the
     # codegen'd operators, fault in the page cache. On a long-lived cluster
@@ -305,7 +277,7 @@ def _leg(cpus: int, n_docs: int, single: bool, corpus_base: str | None,
     probe = host_probe()
     pprobe = parallel_host_probe(cpus)
     sprobe = parallel_stream_probe(cpus)
-    walls = sorted(timed() for _ in range(n_timed))
+    walls = sorted(one_pass()[0] for _ in range(n_timed))
     spark.stop()
     return {"cpus": cpus, "n_docs": n_docs, "wall_sec": round(walls[0], 3),
             "walls": [round(w, 3) for w in walls],
@@ -315,59 +287,20 @@ def _leg(cpus: int, n_docs: int, single: bool, corpus_base: str | None,
             "docs_per_sec": round(n_docs / walls[0], 2)}
 
 
-def _pipeline_pass(spark, docs_path: str, pages_path: str):
-    import threading
-
-    from ocr_redaction_engine_spark.operators.validate import (PROBE_DDL,
-                                                               split_valid)
-    from ocr_redaction_engine_spark.pipeline import run_pipeline
-
-    documents = spark.read.parquet(docs_path)
-    media_pages = spark.read.parquet(pages_path)
-    # validity probe reads the pruned view; no explicit repartition: the
-    # tokenize join's hash partitioning on media_ref already feeds the Arrow
-    # stage evenly
-    slim_docs = spark.read.schema(PROBE_DDL).parquet(docs_path)
-
-    def one_pass():
-        # the two sinks are independent jobs: force them CONCURRENTLY so the
-        # JVM-only spans branch fills cores while the Arrow stage's JVM
-        # threads block on the Python workers, and the two jobs' driver
-        # planning gaps overlap (r5; same results, better schedule — the
-        # production run_job writes its per-wave sinks the same way)
-        valid, _ = split_valid(documents, media_pages,
-                               probe_documents=slim_docs)
-        outs = run_pipeline(valid, media_pages)
-        ts = [threading.Thread(target=_force, args=(outs[k],))
-              for k in ("spans", "redactions")]
-        for t in ts:
-            t.start()
-        for t in ts:
-            t.join()
-    return one_pass
-
-
-def _extraction_pass(spark, docs_path: str, pages_path: str):
-    from ocr_redaction_engine_spark.extraction_pipeline import extract_spans
-
-    documents = spark.read.parquet(docs_path)
-    media_pages = spark.read.parquet(pages_path)
-    return lambda: _force(extract_spans(documents, media_pages))
-
-
 def run_pipeline_once(cpus: int, n_docs: int, single: bool = False,
                       corpus_base: str | None = None) -> dict:
-    return _leg(cpus, n_docs, single, corpus_base, ensure_corpus,
-                _pipeline_pass)
+    """One fresh-JVM throughput leg of the redaction job, ``run_job``."""
+    return _leg(cpus, n_docs, single, corpus_base, ensure_corpus, run_job)
 
 
 def run_extraction_once(cpus: int, n_docs: int, single: bool = False,
                         corpus_base: str | None = None) -> dict:
-    """One fresh-JVM throughput pass of the main-content extraction pipeline
-    (extraction_pipeline.extract_spans forced via a noop sink — engine cost,
-    not parquet-write cost)."""
+    """One fresh-JVM throughput leg of the main-content extraction job,
+    ``run_extraction_job``."""
     return _leg(cpus, n_docs, single, corpus_base, ensure_web_corpus,
-                _extraction_pass)
+                run_extraction_job)
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--pipeline-only", action="store_true")
@@ -428,9 +361,8 @@ def main():
 
     import __spark_entry__ as entry_mod
 
-    spark = get_spark(f"bench-{args.cpus}", args.cpus, shuffle_extra(args.cpus))
+    spark = get_spark(f"bench-{args.cpus}", args.cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    ensure_corpus(spark, args.ndocs)
     qtimes = {}
     qs = entry_mod.queries()
     for name in HEADLINE:
@@ -457,10 +389,9 @@ def main():
         # itself was never slow). The warm pass above rebuilds each
         # query's own cache, so timed passes still measure steady state.
         spark.catalog.clearCache()
-    stages = stage_profile(spark, f"{CORPUS_DIR}/documents", f"{CORPUS_DIR}/media_pages")
     spark.stop()
 
-    # pipeline throughput at N / 4N / 16N parallelism, fresh JVM each
+    # job throughput at N/16, N/4 and N cores, fresh JVM each
     # (north_rule scaling evidence: same input, two cluster sizes; the
     # sandbox stand-in for N vs 4N executors is local[N] vs local[4N]).
     # Legs are INTERLEAVED round-robin (2, 8, 32, 2, 8, 32, ...): the host
@@ -553,7 +484,6 @@ def main():
         "docs_per_sec": hi["docs_per_sec"],
         "n_docs": hi["n_docs"],
         "cpus": args.cpus,
-        "stages": stages,
     }
     if not args.no_scaling:
         result["scaling"] = {
@@ -581,7 +511,7 @@ def main():
             },
             "efficiency_detail": norm_efficiency(xruns),
         }
-    # Full payload (per-pass walls, host probes, stage cuts) goes to a file;
+    # Full payload (per-pass walls, host probes) goes to a file;
     # stdout's FINAL line is a compact summary so the driver's tail capture
     # never truncates it (VERDICT r2 #1: BENCH_r02.json landed parsed:null).
     full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),

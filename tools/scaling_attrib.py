@@ -1,7 +1,8 @@
-"""Per-component attribution of the 8→32-lane scaling step (VERDICT r4 #1).
+"""Per-component attribution of an N→4N-lane scaling step (VERDICT r4 #1).
 
-For each pipeline (redaction / extraction) at each parallelism level, run
-one warmed, timed pass with the Spark event log enabled and decompose the
+For each batch job (redaction ``run_job`` / extraction
+``run_extraction_job``) at each parallelism level, run one warmed, timed
+``bench.job_pass`` with the Spark event log enabled and decompose the
 wall-clock into:
 
   * task-busy time (sum of executor run time across tasks) → the share of
@@ -13,20 +14,23 @@ wall-clock into:
   * straggler shape per stage: max vs median task duration.
 
 Alongside, measure what the HOST offers at each level with three
-Spark-free probes (multiprocessing, fresh interpreters):
-  * ``alu``    — the existing tight integer loop (L1-resident);
-  * ``stream`` — numpy array sum/copy over ~64 MB per worker
-                 (memory-bandwidth-bound, like parquet decode + scans);
+Spark-free probes (one process per lane):
+  * ``alu``    — ``bench.parallel_host_probe``'s tight loop, Miters/s;
+  * ``stream`` — ``bench.parallel_stream_probe``'s numpy copy+sum over
+                 64 MB per worker (memory-bandwidth-bound, like parquet
+                 decode + scans), GB/s;
   * ``regex``  — Python ``re`` over generated strings (branchy
-                 string-scan, the closest analog of the narrow pass).
+                 string-scan, the closest analog of the narrow pass),
+                 matches/s.
 
 The point: the ALU probe is the ceiling for compute; the stream/regex
 probes are the ceiling for what the pipelines actually do. Engine
 efficiency ÷ matching-probe efficiency isolates Spark's own contribution
-from the box running out of memory bandwidth at 32 lanes.
+from the box running out of memory bandwidth at the wider level.
 
-Usage: python tools/scaling_attrib.py [--cpus 8 32] [--ndocs 360000]
-Writes SCALING_ATTRIB.json at the repo root and prints a summary table.
+Usage: python tools/scaling_attrib.py [--cpus N/4 N] [--ndocs 360000]
+(default levels from the host's cores, as bench.py). Writes
+SCALING_ATTRIB.json at the repo root (or ``--out``) and prints a summary.
 """
 
 from __future__ import annotations
@@ -42,6 +46,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402  (repo-root bench.py)
+from ocr_redaction_engine_spark.session import get_spark  # noqa: E402
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -49,53 +56,29 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # host probes (run in subprocesses so the JVM never shares the window)
 # ---------------------------------------------------------------------------
 
-_PROBE_SRC = r"""
+_REGEX_SRC = r"""
 import json, re, sys, time
-import numpy as np
 
-kind, seconds = sys.argv[1], float(sys.argv[2])
-
-def burn_alu(seconds):
-    t0 = time.perf_counter(); n = 0; x = 0
-    while time.perf_counter() - t0 < seconds:
-        for _ in range(10000):
-            x = (x * 1103515245 + 12345) & 0x7FFFFFFF
-        n += 10000
-    return n
-
-def burn_stream(seconds):
-    a = np.arange(8_000_000, dtype=np.int64)   # 64 MB, far beyond L2
-    b = np.empty_like(a)
-    np.copyto(b, a); int(b.sum())              # fault pages in, untimed
-    t0 = time.perf_counter(); n = 0
-    while time.perf_counter() - t0 < seconds:
-        np.copyto(b, a); s = int(b.sum())
-        n += a.nbytes * 2                      # bytes moved (copy+sum read)
-    return n
-
-def burn_regex(seconds):
-    pat = re.compile(r"[A-Z]{5}[0-9]{4}[A-Z]|\d{4}\s\d{4}\s\d{4}")
-    rows = [f"line {i} PQRST{i%10000:04d}Z tail 1234 5678 9012 x" * 3
-            for i in range(2000)]
-    t0 = time.perf_counter(); n = 0
-    while time.perf_counter() - t0 < seconds:
-        for r in rows:
-            if pat.search(r):
-                n += 1
-    return n
-
-print(json.dumps({"count": {"alu": burn_alu, "stream": burn_stream,
-                            "regex": burn_regex}[kind](seconds)}))
+seconds = float(sys.argv[1])
+pat = re.compile(r"[A-Z]{5}[0-9]{4}[A-Z]|\d{4}\s\d{4}\s\d{4}")
+rows = [f"line {i} PQRST{i%10000:04d}Z tail 1234 5678 9012 x" * 3
+        for i in range(2000)]
+t0 = time.perf_counter(); n = 0
+while time.perf_counter() - t0 < seconds:
+    for r in rows:
+        if pat.search(r):
+            n += 1
+print(json.dumps({"count": n}))
 """
 
 
-def host_probe(kind: str, procs: int, seconds: float = 2.0) -> float:
-    """Aggregate rate across ``procs`` fresh python processes (work/sec)."""
+def regex_probe(procs: int, seconds: float = 2.0) -> float:
+    """Aggregate regex matches/s across ``procs`` fresh python processes."""
     with tempfile.NamedTemporaryFile("w", suffix=".py", delete=False) as f:
-        f.write(_PROBE_SRC)
+        f.write(_REGEX_SRC)
         path = f.name
     try:
-        ps = [subprocess.Popen([sys.executable, path, kind, str(seconds)],
+        ps = [subprocess.Popen([sys.executable, path, str(seconds)],
                                stdout=subprocess.PIPE, text=True)
               for _ in range(procs)]
         total = 0
@@ -105,6 +88,11 @@ def host_probe(kind: str, procs: int, seconds: float = 2.0) -> float:
         return total / seconds
     finally:
         os.unlink(path)
+
+
+PROBES = {"alu": bench.parallel_host_probe,
+          "stream": bench.parallel_stream_probe,
+          "regex": regex_probe}
 
 
 # ---------------------------------------------------------------------------
@@ -169,10 +157,7 @@ def parse_eventlog(path: str, t0_ms: float, t1_ms: float, cores: int) -> dict:
 
 
 def run_leg(which: str, cpus: int, n_docs: int) -> dict:
-    """One warmed+timed pass with event logging, decomposed."""
-    import bench  # repo-root bench.py
-    from ocr_redaction_engine_spark.session import get_spark
-
+    """One warmed+timed ``bench.job_pass`` with event logging, decomposed."""
     elog = tempfile.mkdtemp(prefix=f"elog_{which}_{cpus}_")
     spark = get_spark(f"attrib-{which}-{cpus}", cpus, {
         "spark.eventLog.enabled": "true",
@@ -181,34 +166,10 @@ def run_leg(which: str, cpus: int, n_docs: int) -> dict:
         "spark.eventLog.dir": f"file://{elog}",
     })
     spark.sparkContext.setLogLevel("ERROR")
-
-    if which == "extraction":
-        from ocr_redaction_engine_spark.extraction_pipeline import extract_spans
-        docs_path, pages_path = bench.ensure_web_corpus(spark, n_docs)
-        documents = spark.read.parquet(docs_path)
-        media_pages = spark.read.parquet(pages_path)
-
-        def one_pass():
-            t0 = time.time()
-            bench._force(extract_spans(documents, media_pages))
-            return time.time() - t0
-    else:
-        from ocr_redaction_engine_spark.operators.validate import (
-            PROBE_DDL, split_valid)
-        from ocr_redaction_engine_spark.pipeline import run_pipeline
-        docs_path, pages_path = bench.ensure_corpus(spark, n_docs)
-        documents = spark.read.parquet(docs_path)
-        media_pages = spark.read.parquet(pages_path)
-        slim_docs = spark.read.schema(PROBE_DDL).parquet(docs_path)
-
-        def one_pass():
-            t0 = time.time()
-            valid, _ = split_valid(documents, media_pages,
-                                   probe_documents=slim_docs)
-            outs = run_pipeline(valid, media_pages)
-            bench._force(outs["spans"])
-            bench._force(outs["redactions"])
-            return time.time() - t0
+    ensure, job = ((bench.ensure_web_corpus, bench.run_extraction_job)
+                   if which == "extraction" else
+                   (bench.ensure_corpus, bench.run_job))
+    one_pass = bench.job_pass(spark, job, *ensure(spark, n_docs))
 
     def _host_busy_sec():
         # whole-VM busy CPU (user+nice+sys+irq+softirq) from /proc/stat —
@@ -224,7 +185,7 @@ def run_leg(which: str, cpus: int, n_docs: int) -> dict:
     one_pass()                                   # warm (untimed)
     busy0 = _host_busy_sec()
     t0_ms = time.time() * 1000
-    wall = one_pass()
+    wall, _ = one_pass()
     t1_ms = time.time() * 1000
     host_cpu_sec = _host_busy_sec() - busy0
     # flush the event log
@@ -256,7 +217,8 @@ def run_leg(which: str, cpus: int, n_docs: int) -> dict:
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--cpus", type=int, nargs="+", default=[8, 32])
+    ap.add_argument("--cpus", type=int, nargs="+",
+                    default=[max(bench.CPUS // 4, 1), bench.CPUS])
     ap.add_argument("--ndocs", type=int, default=360_000)
     ap.add_argument("--probe-seconds", type=float, default=2.0)
     ap.add_argument("--skip-probes", action="store_true")
@@ -273,7 +235,7 @@ def main():
                              indent=None), flush=True)
     if not args.skip_probes:
         for kind in ("alu", "stream", "regex"):
-            rates = {str(c): host_probe(kind, c, args.probe_seconds)
+            rates = {str(c): PROBES[kind](c, args.probe_seconds)
                      for c in args.cpus}
             result["probes"][kind] = rates
             cs = args.cpus
