@@ -15,8 +15,8 @@ Pipeline shape (SURVEY.md §3.4):
     scan -> resume anti-join -> posexplode(spans)
          -> text spans:  JVM-side PII regexp redaction        (no Python)
          -> media spans: tokenize (fixture join / mapInPandas OCR)
-                         -> classify (JVM rlike bank, first-match priority)
-                         -> extract fields (Arrow-batched kernel)
+                         -> classify + extract fields (Arrow-batched kernel,
+                            first-match bank priority)
                          -> redaction boxes + values sinks
          -> reassemble span sequence ordered by original offset
          -> checkpoint MERGE (partition-granular lineage + metrics)

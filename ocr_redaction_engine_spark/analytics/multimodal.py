@@ -294,15 +294,6 @@ def detect_qr(media: DataFrame) -> DataFrame:
     return media.select("media_id", "content").mapInPandas(run, schema=QR_SCHEMA)
 
 
-def sample_frames(media: DataFrame, every_n: int = 30) -> DataFrame:
-    """Video frame sampling. Needs a demuxer (av/ffmpeg) in the executor
-    image; sample_frames_bytes exercises the same 1→N Arrow batch shape over
-    fixed-stride payloads."""
-    raise NotImplementedError(
-        "video frame sampling requires a codec; sample_frames_bytes "
-        "exercises the identical 1-to-N mapInPandas shape")
-
-
 def twin_payload(seed: int, i: int) -> bytes:
     """Near-duplicate of ``_payload(seed, i)``: identical bytes except the
     first byte is zeroed — the 'same image, one pixel retouched' case a

@@ -335,9 +335,7 @@ def ivf_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
              n_clusters: int = 16, nprobe: int = 4) -> DataFrame:
     """IVF ANN: coarse-quantize candidates into inverted lists; each query
     scores only the ``nprobe`` nearest lists (exact-cosine scores within
-    them). Same output shape as cosine_topk. At warehouse scale the cluster
-    assignment is a write-time partition column, so a probe is a
-    partition-pruned scan."""
+    them). Same output shape as cosine_topk."""
     import numpy as np
 
     C = kmeans_centroids(embeddings, n_clusters)
@@ -361,60 +359,6 @@ def ivf_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
     q = embeddings.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"))
 
-    scored = (
-        F.broadcast(probes.join(q, "q_id")).join(cands, "cluster")
-        .withColumn("sim", F.round(_dot("q_emb", "c_emb") / (_norm("q_emb") * _norm("c_emb")), 6))
-        .select("q_id", "c_id", "sim")
-    )
-    # per-query rank via the two-stage salted top-k: q_id cardinality is
-    # tiny and the scored candidate set scales with the corpus, so a bare
-    # q_id window would sort one query's candidates in ONE task
-    return salted_topk(
-        scored, ["q_id"], [F.col("sim").desc(), F.col("c_id").asc()],
-        k, salt_on="c_id")
-
-
-def write_ivf_partitioned(embeddings: DataFrame, path: str,
-                          n_clusters: int = 16) -> "np.ndarray":
-    """Materialize the IVF layout: embeddings written partitioned by their
-    coarse-quantizer cluster id (the write-time layout that turns an ANN
-    probe into a partition-pruned scan at warehouse scale). Returns the
-    centroid matrix the reader needs."""
-    C = kmeans_centroids(embeddings, n_clusters)
-    assigned = embeddings.join(assign_clusters(embeddings, C), "vec_id")
-    assigned.write.mode("overwrite").partitionBy("cluster").parquet(path)
-    return C
-
-
-def ivf_topk_pruned(spark, path: str, centroids, queries: DataFrame,
-                    k: int = 10, nprobe: int = 4) -> DataFrame:
-    """IVF probe over the partitioned layout: each query reads ONLY its
-    ``nprobe`` nearest cluster partitions — the ``cluster IN (...)`` filter
-    prunes at the parquet-partition level (assert via PartitionFilters in
-    the scan plan), so a probe touches nprobe/n_clusters of the data at
-    rest. Queries are (q_id, q_emb) rows."""
-    import numpy as np
-
-    C = np.asarray(centroids, dtype=np.int64)
-    q_rows = queries.collect()
-    probe_rows = []
-    for r in q_rows:
-        qv = _fixed_point(np.asarray(r.q_emb, dtype=np.float64)[None, :])[0]
-        d2 = ((C - qv[None, :]) ** 2).sum(axis=1)
-        for cl in np.argsort(d2, kind="stable")[:nprobe]:
-            probe_rows.append((int(r.q_id), int(cl)))
-    wanted = sorted({cl for _, cl in probe_rows})
-
-    q_ids = [int(r.q_id) for r in q_rows]
-    cands = (
-        spark.read.parquet(path)
-        .filter(F.col("cluster").isin(wanted))     # partition pruning
-        .filter(~F.col("vec_id").isin(q_ids))      # a query is not its own hit
-        .select(F.col("vec_id").alias("c_id"),
-                F.col("embedding").alias("c_emb"), "cluster")
-    )
-    probes = queries.sparkSession.createDataFrame(probe_rows, "q_id long, cluster int")
-    q = queries.select(F.col("q_id"), F.col("q_emb"))
     scored = (
         F.broadcast(probes.join(q, "q_id")).join(cands, "cluster")
         .withColumn("sim", F.round(_dot("q_emb", "c_emb") / (_norm("q_emb") * _norm("c_emb")), 6))

@@ -10,8 +10,7 @@ ours.
 Patterns are written in the common subset of Python ``re`` and Java
 ``java.util.regex`` so the same string can be compiled driver-side (oracle),
 executor-side (pandas kernel) and JVM-side (``rlike``). Case-insensitivity is
-requested per call site (Python ``re.IGNORECASE`` / Java ``(?i)`` prefix via
-:func:`java_ci`).
+requested per call site (``re.IGNORECASE``).
 """
 
 from __future__ import annotations
@@ -226,9 +225,3 @@ PII_BANK: list[tuple[str, str, str]] = [
     ("DATE", r"\b\d{2}/\d{2}/\d{4}\b|\b\d{2}-\d{2}-\d{4}\b|\b\d{2}\.\d{2}\.\d{4}\b", "[DATE]"),
     ("PIN6", r"\b\d{6}\b", "[PIN]"),
 ]
-
-
-def java_ci(pattern: str) -> str:
-    """Prefix a bank pattern for case-insensitive matching under Java regex
-    (``rlike``). Python callers pass ``re.IGNORECASE`` instead."""
-    return "(?i)" + pattern

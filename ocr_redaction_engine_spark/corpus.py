@@ -462,6 +462,9 @@ def write_corpus(spark, out_dir: str, n_docs: int, seed: int = 42, partitions: i
                 "spans": [[(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]] for r in rows],
             })
 
+    page_cols = ["media_ref", "document_name", "width", "height", "doc_type",
+                 "words", "lines", "qr_boxes"]
+
     def gen_pages(iterator):
         for pdf in iterator:
             out = []
@@ -473,12 +476,9 @@ def write_corpus(spark, out_dir: str, n_docs: int, seed: int = 42, partitions: i
                         p["lines"],
                         [(q["x1"], q["y1"], q["x2"], q["y2"]) for q in p["qr_boxes"]],
                     ))
-            yield pd.DataFrame(out, columns=[
-                "media_ref", "document_name", "width", "height", "doc_type",
-                "words", "lines", "qr_boxes",
-            ]) if out else pd.DataFrame(
-                {c: [] for c in ["media_ref", "document_name", "width", "height",
-                                 "doc_type", "words", "lines", "qr_boxes"]})
+            # built from the (maybe empty) row list, so a batch without
+            # pages has object columns, which Arrow converts to any type
+            yield pd.DataFrame(out, columns=page_cols)
 
     ids = spark.range(n_docs).repartition(partitions)
     ids.mapInPandas(gen_docs, schema=DOCUMENTS_DDL).write.mode("overwrite").parquet(f"{out_dir}/documents")

@@ -381,14 +381,12 @@ def _compile_places_union(places_t: tuple) -> re.Pattern:
 
 
 def _places_union(places=None) -> re.Pattern:
-    """Combined alternation over the whole places list — the broadcast
-    Aho-Corasick-automaton idea (north_star): one pass rejects the ~95 % of
-    tokens that match no place; only hits pay the per-place loop (which must
-    stay, because the reference appends a token once PER matching place).
+    """Escaped, case-insensitive alternation over the whole places list:
+    the per-token reference the property test checks ``_place_candidates``
+    (the production prefilter) against. A token is a candidate iff this
+    pattern searches it.
 
-    ``places`` is injectable (module default: places.PLACES_LIST); pass the
-    full reference 1,391-entry list (helper/places.py) at run time in
-    production — PipelineConfig.places threads it end-to-end."""
+    ``places`` defaults to places.PLACES_LIST."""
     return _compile_places_union(tuple(places if places is not None else PLACES_LIST))
 
 

@@ -1,36 +1,29 @@
-"""Optional lakehouse (Delta Lake / Apache Iceberg) integration — VERDICT r2
-missing #3 / next-round #9.
+"""Optional lakehouse (Delta Lake / Apache Iceberg) backend for the bucket
+claims table — VERDICT r2 missing #3 / next-round #9.
 
 Everything in this repo runs on plain parquet by design (the sandbox ships
-no lakehouse jars), but a production adopter's first question is "can the
-checkpoint table and MERGE run against a real table format?" This module is
-that thin seam: the SAME operators (storage.merge_upsert's full-outer-join
-engine shape, checkpoint.py's append-only lineage) with ACID table-format
-backends when the runtime has them:
+no lakehouse jars), but a raw parquet append leaves a visibility window
+between two drivers' claim appends. ``checkpoint.claim_buckets(...,
+backend=)`` routes its append and read-back through this seam, so on an
+ACID table format the claim append is a serialized commit:
 
 * **Delta Lake** — detected by importing ``delta`` (``pip install
   delta-spark`` plus the matching jars; the public
   ``configure_spark_with_delta_pip`` builder hook wires the SQL extension).
 * **Apache Iceberg** — detected from the session's catalog config (any
   ``spark.sql.catalog.*`` set to ``org.apache.iceberg.spark.SparkCatalog``
-  — the public spark-runtime jar registers it); MERGE goes through Spark
-  SQL ``MERGE INTO``, which Iceberg implements natively.
+  — the public spark-runtime jar registers it); tables are written with
+  ``DataFrameWriterV2``.
 
 Dispatch is explicit, never silent: ``backend="auto"`` picks
 delta → iceberg → parquet and *reports* the choice; asking for an absent
-backend raises with the install hint. The parquet fallback is the
-engine-shape emulation already oracled in storage.py/checkpoint.py, so
-behavior is identical minus table-format ACID guarantees — exactly the
-delta a user upgrades for.
-
-At 10^12 documents the lineage table stays O(bucket-count) rows and MERGE
-targets are bucketed on the merge key, so both paths keep the one-shuffle
-plans the parquet emulation pins in tests.
+backend raises with the install hint. The parquet fallback is the plain
+append-and-read the claims table uses without a backend, so behavior is
+identical minus table-format ACID guarantees — exactly the delta a user
+upgrades for.
 """
 
 from __future__ import annotations
-
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -115,68 +108,3 @@ def read_table(spark: SparkSession, target: str,
     if b == "iceberg":
         return spark.table(target)
     return spark.read.parquet(target)
-
-
-def merge_upsert_table(spark: SparkSession, target: str, updates: DataFrame,
-                       key: str = "doc_id", backend: str = "auto") -> str:
-    """MERGE ``updates`` into ``target`` on ``key``: matched rows update,
-    unmatched insert — the ACID form of storage.merge_upsert's full-outer
-    engine shape (same one-shuffle plan under the hood; Delta/Iceberg add
-    snapshot isolation + file-level conflict detection).
-
-    parquet backend: NOT transactional — rewrites the table from the merge
-    result (fine for tests/bootstraps, documented as such)."""
-    b = pick_backend(spark, backend)
-    if b == "delta":
-        from delta.tables import DeltaTable
-        (DeltaTable.forPath(spark, target).alias("t")
-         .merge(updates.alias("u"), f"t.{key} = u.{key}")
-         .whenMatchedUpdateAll()
-         .whenNotMatchedInsertAll()
-         .execute())
-        return b
-    if b == "iceberg":
-        cols = updates.columns
-        non_key = [c for c in cols if c != key]
-        if not non_key:
-            raise ValueError(
-                "merge_upsert_table: updates must carry at least one "
-                f"non-key column (got only {key!r}) — an empty UPDATE SET "
-                "is not valid MERGE SQL")
-        # per-call view name: a shared name would let two concurrent merges
-        # in one session clobber each other's source mid-flight
-        view = f"__merge_updates_{uuid.uuid4().hex}"
-        updates.createOrReplaceTempView(view)
-        try:
-            sets = ", ".join(f"t.{c} = u.{c}" for c in non_key)
-            names = ", ".join(cols)
-            vals = ", ".join(f"u.{c}" for c in cols)
-            spark.sql(
-                f"MERGE INTO {target} t USING {view} u "
-                f"ON t.{key} = u.{key} "
-                f"WHEN MATCHED THEN UPDATE SET {sets} "
-                f"WHEN NOT MATCHED THEN INSERT ({names}) VALUES ({vals})")
-        finally:
-            spark.catalog.dropTempView(view)
-        return b
-    # parquet emulation: same semantics via the oracled full-outer shape
-    from .storage import merge_upsert
-    current = spark.read.parquet(target)
-    merged = merge_upsert(current, updates).select(*current.columns)
-    # two-phase: stage then swap-by-overwrite (non-atomic, documented)
-    staged = merged.localCheckpoint(eager=True)
-    staged.write.mode("overwrite").parquet(target)
-    return b
-
-
-def append_checkpoint_table(spark: SparkSession, target: str,
-                            rows: list[dict], backend: str = "auto") -> str:
-    """Lineage append through the chosen table format: with delta/iceberg
-    the append is an ACID commit (concurrent writers serialize instead of
-    clobbering files); parquet keeps checkpoint.append_checkpoint's
-    append-mode directory semantics."""
-    from .checkpoint import checkpoint_frame
-    if not rows:
-        return pick_backend(spark, backend)
-    return write_table(checkpoint_frame(spark, rows), target, backend=backend,
-                       mode="append")

@@ -107,7 +107,7 @@ def tokenize_payload(media_with_content: DataFrame) -> DataFrame:
                     [q[0] for q in qr], [q[1] for q in qr],
                     [q[2] for q in qr], [q[3] for q in qr],
                 ))
-            yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame({c: [] for c in cols})
+            yield pd.DataFrame(out, columns=cols)
 
     return media_with_content.mapInPandas(decode, schema=PAGE_SCHEMA_DDL)
 
@@ -184,6 +184,6 @@ def tokenize_tesseract(media_with_content: DataFrame, lang: str = "eng") -> Data
                     [w[4] for w in words], lines,
                     [], [], [], [],   # QR detection is a separate operator
                 ))
-            yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame({c: [] for c in cols})
+            yield pd.DataFrame(out, columns=cols)
 
     return media_with_content.mapInPandas(decode, schema=PAGE_SCHEMA_DDL)

@@ -76,9 +76,7 @@ def run_pipeline(documents: DataFrame, media_pages: DataFrame,
     cfg = config or PipelineConfig()
     media_spans = route_spans(explode_spans(documents))[1]
     pages = tokenize_fixture(media_spans, media_pages)
-    # identify + extract fused in ONE Arrow stage (kernel-side bank);
-    # classify_pages (operators/classify.py) remains the JVM-side variant for
-    # SQL-expressible classification workloads
+    # identify + extract fused in ONE Arrow stage (kernel-side bank)
     extracted = extract_page_rows(pages, cfg.level, counters, places=cfg.places)
 
     # the spans output explodes its own copy of the documents, so an

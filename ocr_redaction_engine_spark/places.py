@@ -68,40 +68,6 @@ def load_places(path: str, column: str = "place") -> list[str]:
     return out
 
 
-def load_places_df(places_df, column: str = "place",
-                   order_col: str | None = None) -> list[str]:
-    """:func:`load_places` from a Spark DataFrame / lakehouse table
-    (``spark.table('dims.places')``): collects the single dictionary column
-    to the driver — correct by design, the dictionary is broadcast-scale
-    metadata, never corpus-scale.
-
-    ORDERING CAVEAT (observable semantics): the kernel appends a token once
-    PER matching place in dictionary order, so entry order shows up in the
-    assembled address text. A file preserves its line order; a DataFrame
-    has none — collect order is NOT stable across shuffles — so by default
-    this sorts case-insensitively, which is deterministic but NOT the same
-    order :func:`load_places` reads from a file. For exact parity with a
-    file-ordered dictionary, store an explicit position column and pass it
-    as ``order_col``."""
-    cols = [column] if order_col is None else [column, order_col]
-    rows = places_df.select(*cols).collect()
-    if order_col is not None:
-        vals = [str(r[0]).strip() for r in sorted(rows, key=lambda r: r[1])
-                if r[0] is not None]
-    else:
-        vals = sorted((str(r[0]).strip() for r in rows if r[0] is not None),
-                      key=str.casefold)
-    out, seen = [], set()
-    for entry in vals:
-        if not entry or entry.casefold() in seen:
-            continue
-        seen.add(entry.casefold())
-        out.append(entry)
-    if not out:
-        raise ValueError("places table yielded an empty dictionary")
-    return out
-
-
 # Indian cities / districts (public knowledge). Matching semantics mirror the
 # reference: ``re.search(place, token, IGNORECASE)`` — substring containment.
 PLACES_LIST: list[str] = [

@@ -1,19 +1,14 @@
-"""Storage-layout writers — the at-rest layouts that delete shuffles at
-read time (the cheapest optimization 100 TB allows: pay one shuffle at
-ingest, never again).
+"""Storage-layout writers and planners — the at-rest layouts that delete
+shuffles and file reads at query time (the cheapest optimization 100 TB
+allows: pay one shuffle at ingest, never again).
 
-* ``write_bucketed`` — hash-bucketed + sorted table (Hive-bucketing
-  layout): every equi-join or aggregation on the bucket key then plans
-  with ZERO Exchange (pinned in tests/test_bucketed_join.py). This is the
-  production fix for the pipeline's single shuffle (the media_ref resolve
-  join, BENCH.md): store ``documents``-derived spans and ``media_pages``
-  co-bucketed on media_ref at ingest.
-* ``write_sorted`` — range-partitioned, partition-sorted parquet export
-  (the "globally ordered output" sink): repartitionByRange samples the key
-  distribution so output files hold disjoint key ranges — readers that
-  need key-ordered data (merges, binary-searchable exports, downstream
-  as-of joins) get it without a global sort on their side. Skewed keys are
-  handled by the range sampler, not a hash mod.
+* ``write_zordered`` — Z-order-clustered parquet export: each output file
+  covers a compact rectangle of two key columns, so per-file min/max stats
+  prune reads on either column (Delta's ``OPTIMIZE ZORDER BY``).
+* ``compaction_plan`` / ``partition_stats`` / ``clustering_depth`` — the
+  metadata-scale planners a table-maintenance pass runs before rewriting
+  files.
+* ``merge_upsert`` — MERGE INTO as one full-outer equi-join.
 
 On Iceberg-enabled clusters the same intents are expressed as table
 properties (``bucket(N, key)`` partition transforms / ``WRITE ORDERED
@@ -24,28 +19,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def write_bucketed(df: DataFrame, table: str, key: str, n_buckets: int = 64,
-                   sort: bool = True, mode: str = "overwrite") -> None:
-    """Persist ``df`` as a bucketed (and per-bucket sorted) table on
-    ``key``. Joins/aggs between tables co-bucketed on the same key with the
-    same ``n_buckets`` plan Exchange-free (bucketed SortMergeJoin)."""
-    w = df.write.bucketBy(n_buckets, key)
-    if sort:
-        w = w.sortBy(key)
-    w.mode(mode).saveAsTable(table)
-
-
-def write_sorted(df: DataFrame, path: str, cols: list[str],
-                 n_partitions: int | None = None,
-                 mode: str = "overwrite") -> None:
-    """Range-partitioned, partition-sorted parquet export: file k holds
-    keys strictly below file k+1 (disjoint ranges via sampled range
-    bounds), rows sorted within each file."""
-    parts = n_partitions or df.sparkSession.sparkContext.defaultParallelism
-    out = df.repartitionByRange(parts, *cols).sortWithinPartitions(*cols)
-    out.write.mode(mode).parquet(path)
 
 
 def zorder_key(x: str, y: str, bits: int = 10):
@@ -154,9 +127,9 @@ def merge_upsert(target: DataFrame, updates: "DataFrame") -> "DataFrame":
     targets, unmatched updates insert, untouched targets carry forward —
     each output row tagged with its action for CDC auditability.
 
-    One shuffle on the merge key; at rest this pairs with the bucketed
-    writer (write_bucketed) so repeated merge cycles co-locate both sides
-    and the join plans Exchange-free. Returns (doc_id, action, text).
+    One shuffle on the merge key; targets stored bucketed on the key
+    (``bucketBy``) co-locate both sides, so repeated merge cycles plan the
+    join Exchange-free. Returns (doc_id, action, text).
     """
     from pyspark.sql import functions as F
     t = target.select("doc_id", F.col("text").alias("t_text"))

@@ -16,10 +16,10 @@ batch job returns on the same documents. The extraction stream
 (``stream_extraction``) is stateless end to end and runs as a *native*
 streaming query.
 
-``windowed_event_rollup`` adds the late-data story the reference never had:
-watermarked tumbling-window aggregation (append mode emits a window only
-once its watermark passes — late events inside the allowance still count,
-older ones are dropped).
+``session_windows`` and ``stream_interval_join`` add the late-data story the
+reference never had: watermarked event-time operators whose state the
+engine drops once the watermark passes (late events inside the allowance
+still count, older ones are dropped).
 """
 
 from __future__ import annotations
@@ -126,30 +126,13 @@ def stream_extraction(spark: SparkSession, documents_path: str,
     return q
 
 
-def windowed_event_rollup(events: DataFrame, window: str = "1 hour",
-                          watermark: str = "2 hours") -> DataFrame:
-    """Watermarked tumbling-window rollup (works on a streaming OR batch
-    DataFrame — in batch the watermark is a no-op, which is exactly how the
-    differential test checks the closed-window counts)."""
-    # parquet NTZ timestamps → LTZ (session tz is pinned UTC in get_spark);
-    # watermarks require TIMESTAMP, not TIMESTAMP_NTZ
-    events = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "event_type")
-        .agg(F.count("*").alias("n"),
-             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"))
-        .select(F.col("win.start").alias("win_start"),
-                F.col("win.end").alias("win_end"),
-                "event_type", "n", "total_value")
-    )
-
-
 def session_windows(events: DataFrame, gap: str = "30 minutes",
                     watermark: str = "2 hours") -> DataFrame:
     """Session-window aggregation (gap-based): the built-in
     ``session_window`` operator; works on streaming (append after watermark
     close) and batch (differential twin) alike."""
+    # parquet NTZ timestamps → LTZ (session tz is pinned UTC in get_spark);
+    # watermarks require TIMESTAMP, not TIMESTAMP_NTZ
     events = events.withColumn("ts", F.col("ts").cast("timestamp"))
     return (
         events.withWatermark("ts", watermark)
@@ -161,136 +144,6 @@ def session_windows(events: DataFrame, gap: str = "30 minutes",
                 F.col("win.end").alias("session_end"),
                 "n_events", "total_value")
     )
-
-
-FIRST_SEEN_SCHEMA = "user_id long, event_id long, event_type string"
-_FIRST_SEEN_STATE = "seen int"
-
-
-def stateful_first_seen(events: DataFrame) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: emit each
-    user's FIRST event (by arrival order across micro-batches), suppress the
-    rest — the streaming twin of the q08 first-match window
-    (SURVEY.md §2.5 F19/F32 first-match-only semantics), and the shape any
-    cross-batch dedupe/claim-check state machine takes."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def fn(key, pdfs, state):
-        chunks = [pdf for pdf in pdfs if len(pdf)]  # drain fully (required)
-        if state.exists or not chunks:
-            return iter(())
-        allrows = pd.concat(chunks).sort_values(["ts", "event_id"])
-        first = allrows.iloc[0]
-        state.update((1,))
-        return iter([pd.DataFrame({
-            "user_id": [int(key[0])],
-            "event_id": [int(first["event_id"])],
-            "event_type": [str(first["event_type"])],
-        })])
-
-    return (
-        events.groupBy("user_id")
-        .applyInPandasWithState(
-            fn, outputStructType=FIRST_SEEN_SCHEMA, stateStructType=_FIRST_SEEN_STATE,
-            outputMode="append", timeoutConf=GroupStateTimeout.NoTimeout)
-    )
-
-
-def streaming_exact_dedup(docs: DataFrame, watermark_col: str | None = None,
-                          watermark: str = "1 hour") -> DataFrame:
-    """Streaming twin of analytics.dedup.exact_dupes' suppression side:
-    keep the FIRST document per md5 text fingerprint across micro-batches
-    (``dropDuplicates`` keeps cross-batch state; with an event-time
-    watermark the state is bounded — ``dropDuplicatesWithinWatermark``
-    semantics for the unbounded-corpus regime). Works identically in batch,
-    where it is a plain fingerprint-distinct."""
-    fp = docs.withColumn(
-        "fp", F.md5(F.concat_ws(" ", F.split(F.trim("text"), r"\s+"))))
-    if watermark_col is not None:
-        return fp.withWatermark(watermark_col, watermark) \
-            .dropDuplicatesWithinWatermark(["fp"])
-    return fp.dropDuplicates(["fp"])
-
-
-NEAR_DUP_SCHEMA = "a long, b long, band int"
-_ANCHOR_STATE = "anchor long"
-N_STREAM_BANDS = 4
-
-
-def minhash_band_sigs(docs: DataFrame, n_bands: int = N_STREAM_BANDS) -> DataFrame:
-    """Per-row MinHash band signatures as pure codegen (no shuffle, no
-    Python): min over distinct tokens of md5(band || ':' || token) — the
-    same signature analytics.dedup.minhash_signatures computes with a
-    hash-agg, expressed as a higher-order function so it runs stateless
-    inside a streaming micro-batch. Output: (doc_id, band, sig) melted."""
-    toks = F.array_distinct(F.split(F.trim("text"), r"\s+"))
-    sigs = F.array(*[
-        F.array_min(F.transform(toks, lambda t, b=b: F.md5(F.concat(F.lit(f"{b}:"), t))))
-        for b in range(n_bands)
-    ])
-    return docs.select(
-        "doc_id", F.posexplode(sigs).alias("band", "sig"))
-
-
-def streaming_near_dup_candidates(docs: DataFrame) -> DataFrame:
-    """Streaming LSH near-dup candidates via ``applyInPandasWithState``:
-    state per (band, sig) bucket remembers the FIRST document that claimed
-    the bucket (the anchor); every later arrival — same micro-batch or any
-    later one — emits a candidate pair (anchor, doc, band). The streaming
-    twin of analytics.dedup.candidate_pairs with star-shaped output: a
-    bucket of n docs emits n−1 anchor pairs instead of C(n,2), which is
-    exactly what an online dedupe wants (compare the newcomer against one
-    representative, O(n) state and output per bucket at 10^12-doc scale).
-
-    Deterministic: within a batch, arrivals are ordered by doc_id."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def fn(key, pdfs, state):
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return iter(())
-        ids = sorted(int(i) for c in chunks for i in c["doc_id"])
-        if state.exists:
-            (anchor,) = state.get
-        else:
-            anchor, ids = ids[0], ids[1:]
-            state.update((anchor,))
-        if not ids:
-            return iter(())
-        return iter([pd.DataFrame({
-            "a": [anchor] * len(ids), "b": ids,
-            "band": [int(key[0])] * len(ids),
-        })])
-
-    return (
-        minhash_band_sigs(docs)
-        .groupBy("band", "sig")
-        .applyInPandasWithState(
-            fn, outputStructType=NEAR_DUP_SCHEMA, stateStructType=_ANCHOR_STATE,
-            outputMode="append", timeoutConf=GroupStateTimeout.NoTimeout)
-    )
-
-
-def run_windowed_stream(spark: SparkSession, events_path: str, ckpt_dir: str,
-                        queryName: str = "event_rollup") -> None:
-    """Drain the events table through the watermarked rollup into a memory
-    sink (append mode: only watermark-closed windows are emitted)."""
-    from pyspark.sql.types import StructType
-
-    schema = spark.read.parquet(events_path).schema
-    stream = spark.readStream.schema(schema).parquet(events_path)
-    q = (
-        windowed_event_rollup(stream).writeStream
-        .format("memory")
-        .queryName(queryName)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def stream_interval_join(clicks: DataFrame, errors: DataFrame,

@@ -1,9 +1,6 @@
-"""Optional lakehouse seam (VERDICT r2 #9): backend detection, loud errors
-for absent backends, and the parquet-emulation path's MERGE/lineage
-semantics. The delta/iceberg integration bodies run only when the runtime
-actually ships them (pytest.skip otherwise) — in this sandbox the parquet
-path is the live one and its semantics are pinned against storage.py's
-oracled merge shape."""
+"""Optional lakehouse seam (VERDICT r2 #9): backend detection and loud
+errors for absent backends. The claims append and read-back that go
+through the seam are pinned in test_resume.py."""
 
 from __future__ import annotations
 
@@ -15,8 +12,8 @@ from ocr_redaction_engine_spark import lakehouse as lh
 def test_backend_detection_and_errors(spark):
     # sandbox truth: no delta package, no iceberg catalog
     if lh.delta_available() or lh.iceberg_catalogs(spark):
-        pytest.skip("a real lakehouse backend is present; detection paths "
-                    "covered by the integration tests below")
+        pytest.skip("a real lakehouse backend is present; test_resume's "
+                    "claims-backend tests cover it")
     assert lh.pick_backend(spark, "auto") == "parquet"
     assert lh.pick_backend(spark, "parquet") == "parquet"
     with pytest.raises(RuntimeError, match="delta-spark"):
@@ -25,68 +22,3 @@ def test_backend_detection_and_errors(spark):
         lh.pick_backend(spark, "iceberg")
     with pytest.raises(ValueError, match="unknown lakehouse backend"):
         lh.pick_backend(spark, "hudi")
-
-
-def test_parquet_merge_upsert_roundtrip(spark, tmp_path):
-    """The fallback MERGE must implement upsert semantics exactly: matched
-    keys take the update's text, unmatched updates insert, untouched rows
-    carry forward — differentially vs a dict-based reference."""
-    target = str(tmp_path / "docs")
-    base = spark.createDataFrame(
-        [("d1", "one"), ("d2", "two"), ("d3", "three")], "doc_id string, text string")
-    assert lh.write_table(base, target, mode="overwrite") == "parquet"
-
-    updates = spark.createDataFrame(
-        [("d2", "two-v2"), ("d9", "nine")], "doc_id string, text string")
-    assert lh.merge_upsert_table(spark, target, updates) == "parquet"
-
-    got = {r.doc_id: r.text for r in lh.read_table(spark, target).collect()}
-    ref = {"d1": "one", "d2": "two", "d3": "three"}
-    ref.update({"d2": "two-v2", "d9": "nine"})
-    assert got == ref
-
-    # idempotent re-merge: same updates, same table
-    lh.merge_upsert_table(spark, target, updates)
-    got2 = {r.doc_id: r.text for r in lh.read_table(spark, target).collect()}
-    assert got2 == ref
-
-
-def test_iceberg_merge_key_only_updates_rejected(spark, monkeypatch):
-    """A key-only updates frame would render an empty UPDATE SET clause —
-    malformed MERGE SQL; the seam must refuse it with a clear error before
-    any SQL runs (round-3 review finding)."""
-    import pytest
-    monkeypatch.setattr(lh, "pick_backend", lambda *a, **k: "iceberg")
-    updates = spark.createDataFrame([("d1",)], "doc_id string")
-    with pytest.raises(ValueError, match="non-key column"):
-        lh.merge_upsert_table(spark, "any.target", updates)
-
-
-def test_checkpoint_append_through_seam(spark, tmp_path):
-    """Lineage rows appended through the lakehouse seam must be readable by
-    checkpoint.completed_buckets — the resume path is backend-agnostic."""
-    from ocr_redaction_engine_spark.checkpoint import completed_buckets
-    ckpt = str(tmp_path / "ckpt")
-    lh.append_checkpoint_table(spark, ckpt, [
-        {"bucket": 0, "n_docs": 10}, {"bucket": 3, "n_docs": 7}])
-    lh.append_checkpoint_table(spark, ckpt, [
-        {"bucket": 5, "status": "failed", "attempt": 1}])
-    assert completed_buckets(spark, ckpt) == {0, 3}
-    # empty append is a no-op, not a write of zero rows
-    lh.append_checkpoint_table(spark, ckpt, [])
-    assert completed_buckets(spark, ckpt) == {0, 3}
-
-
-@pytest.mark.skipif(not lh.delta_available(),
-                    reason="delta-spark not installed in this image")
-def test_delta_merge_integration(spark, tmp_path):
-    """Runs only where delta-spark + jars exist: real ACID MERGE."""
-    target = str(tmp_path / "delta_docs")
-    base = spark.createDataFrame([("d1", "one")], "doc_id string, text string")
-    assert lh.write_table(base, target, backend="delta", mode="overwrite") == "delta"
-    updates = spark.createDataFrame(
-        [("d1", "one-v2"), ("d2", "two")], "doc_id string, text string")
-    assert lh.merge_upsert_table(spark, target, updates, backend="delta") == "delta"
-    got = {r.doc_id: r.text
-           for r in lh.read_table(spark, target, backend="delta").collect()}
-    assert got == {"d1": "one-v2", "d2": "two"}

@@ -93,19 +93,3 @@ def test_swapped_places_dictionary_end_to_end(spark, corpus_dfs, local_corpus):
     # ...whereas the default dictionary does produce addresses
     _, default_vals = oracle.expected_page_outputs(docs, pages, level=1)
     assert any(f in dict_fields and v for _, _, f, v in default_vals)
-
-
-def test_jvm_classifier_matches_kernel(spark, corpus_dfs):
-    """Differential: the JVM when-chain classifier (operators/classify.py)
-    must agree with kernel.identify_page on every fixture page (ADVICE r1 —
-    the JVM variant stays honest even though the product path classifies
-    inside the Arrow stage)."""
-    from ocr_redaction_engine_spark.operators.classify import classify_pages
-    from ocr_redaction_engine_spark.operators.tokenize import _pages_soa
-
-    _, pages_df = corpus_dfs
-    soa = _pages_soa(pages_df)
-    got = {r.media_ref: r.doc_type
-           for r in classify_pages(soa).select("media_ref", "doc_type").collect()}
-    for r in soa.select("media_ref", "wtext").collect():
-        assert got[r.media_ref] == kernel.identify_page(list(r.wtext)), r.media_ref

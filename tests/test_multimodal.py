@@ -94,11 +94,9 @@ def test_window_energy_matches_oracle(media, payloads):
 
 
 def test_codec_stubs_raise(media):
-    from ocr_redaction_engine_spark.analytics.multimodal import decode_image, sample_frames
+    from ocr_redaction_engine_spark.analytics.multimodal import decode_image
     with pytest.raises(NotImplementedError):
         decode_image(media)
-    with pytest.raises(NotImplementedError):
-        sample_frames(media)
 
 
 def test_resample_bytes_matches_numpy(media, payloads):

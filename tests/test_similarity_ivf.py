@@ -50,36 +50,6 @@ def test_ivf_is_subset_scored_identically(spark, embeddings):
         assert exact.get((r.q_id, r.c_id)) == pytest.approx(r.sim, abs=1e-6)
 
 
-def test_ivf_partitioned_probe_prunes_and_matches(spark, embeddings, tmp_path_factory):
-    """The write-time IVF layout: probing must (a) return exactly what the
-    in-memory IVF path returns and (b) show partition pruning in the scan
-    plan (cluster IN (...) as a PartitionFilter, not a data filter)."""
-    from pyspark.sql import functions as F
-    from ocr_redaction_engine_spark.analytics.similarity import (
-        ivf_topk, ivf_topk_pruned, write_ivf_partitioned)
-
-    path = str(tmp_path_factory.mktemp("ivf") / "embeddings_ivf")
-    C = write_ivf_partitioned(embeddings, path, n_clusters=8)
-
-    queries = embeddings.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"))
-    pruned = ivf_topk_pruned(spark, path, C, queries, k=10, nprobe=4)
-    baseline = ivf_topk(embeddings, n_queries=5, k=10, n_clusters=8, nprobe=4)
-
-    got = {(r.q_id, r.c_id, r.sim, r.rank) for r in pruned.collect()}
-    exp = {(r.q_id, r.c_id, r.sim, r.rank) for r in baseline.collect()}
-    assert got == exp
-
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    import re
-    # the queries-source scan legitimately has no partition filters; the
-    # IVF-layout scan must carry the cluster filter as a PARTITION filter
-    pfs = re.findall(r"PartitionFilters: \[(.*?)[\]\n]", plan)
-    assert any("cluster" in pf for pf in pfs), pfs
-    # bonus: Spark adds dynamic partition pruning from the probe join
-    assert any("dynamicpruning" in pf for pf in pfs), pfs
-
-
 def test_semantic_dedup_matches_within_cluster_bruteforce(spark, embeddings):
     """Differential: drop set == {b : exists a<b, same cluster, cos>=tau}
     computed independently via assignments + the brute-force pair scorer."""

@@ -1,53 +1,8 @@
-"""Storage-layout writers: range-sorted export produces disjoint,
-internally-sorted files; bucketed writer is exercised (plan shape for
-bucketed joins is pinned in test_bucketed_join.py)."""
+"""Storage-layout writers and planners: the Z-order export clusters both
+key dimensions, the compaction / partition / clustering planners match
+pure-Python replans, and MERGE keeps the full-outer action semantics."""
 
 from __future__ import annotations
-
-import pyspark.sql.functions as F
-
-from ocr_redaction_engine_spark.storage import write_bucketed, write_sorted
-
-
-def test_write_sorted_disjoint_ordered_files(spark, tmp_path):
-    df = spark.range(0, 10_000).select(
-        (F.col("id") * 2654435761 % 10_000).alias("k"),
-        F.col("id").alias("v"))
-    out = str(tmp_path / "sorted")
-    write_sorted(df, out, ["k"], n_partitions=8)
-
-    back = (spark.read.parquet(out)
-            .withColumn("f", F.input_file_name())
-            .select("f", "k").collect())
-    by_file: dict[str, list[int]] = {}
-    for r in back:
-        by_file.setdefault(r["f"], []).append(r["k"])
-    assert len(by_file) > 1
-    # each file internally sorted (parquet preserves row order per file)
-    for ks in by_file.values():
-        assert ks == sorted(ks)
-    # files hold disjoint ranges
-    spans = sorted((min(ks), max(ks)) for ks in by_file.values())
-    for (_, hi), (lo, _) in zip(spans, spans[1:]):
-        assert hi <= lo
-    # nothing lost
-    assert sum(len(ks) for ks in by_file.values()) == 10_000
-
-
-def test_write_bucketed_roundtrip(spark):
-    df = spark.range(0, 1000).select(
-        F.concat(F.lit("m"), (F.col("id") % 97).cast("string")).alias("media_ref"),
-        F.col("id").alias("v"))
-    spark.sql("DROP TABLE IF EXISTS t_storage_bkt")
-    try:
-        write_bucketed(df, "t_storage_bkt", "media_ref", n_buckets=8)
-        assert spark.table("t_storage_bkt").count() == 1000
-        # bucketed agg on the bucket key: no Exchange before the final agg
-        plan = (spark.table("t_storage_bkt").groupBy("media_ref").count()
-                ._jdf.queryExecution().executedPlan().toString())
-        assert "Exchange" not in plan, plan
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_storage_bkt")
 
 
 def test_zorder_key_reference_and_file_bounding_boxes(spark, tmp_path):
@@ -55,8 +10,7 @@ def test_zorder_key_reference_and_file_bounding_boxes(spark, tmp_path):
     must cover compact (x, y) rectangles — both dimensions prunable —
     while an x-sorted layout leaves y unpruned (full-range stripes)."""
     import pyspark.sql.functions as F
-    from ocr_redaction_engine_spark.storage import (
-        write_sorted, write_zordered, zorder_key)
+    from ocr_redaction_engine_spark.storage import write_zordered, zorder_key
 
     rows = [(i, i % 64, i // 64) for i in range(4096)]  # full 64x64 grid
     df = spark.createDataFrame(rows, "doc_id long, x long, y long")
@@ -72,7 +26,8 @@ def test_zorder_key_reference_and_file_bounding_boxes(spark, tmp_path):
 
     zpath, spath = str(tmp_path / "zord"), str(tmp_path / "xsort")
     write_zordered(df, zpath, "x", "y", n_partitions=16, bits=6)
-    write_sorted(df, spath, ["x"], n_partitions=16)
+    (df.repartitionByRange(16, "x").sortWithinPartitions("x")
+     .write.mode("overwrite").parquet(spath))
 
     def spans(path):
         per_file = (spark.read.parquet(path)

@@ -5,8 +5,8 @@
 2. Incremental drain: new files appearing after a first drain are picked up
    by a second drain without reprocessing the old ones (S1 poll semantics
    with exactly-once checkpointing).
-3. The watermarked rollup's closed windows must agree with the batch
-   aggregation.
+3. The watermarked session-window and stream-stream interval join agree
+   with their batch twins.
 """
 
 from __future__ import annotations
@@ -92,56 +92,6 @@ def test_incremental_drain_no_duplicates(spark, stream_dirs):
     assert spans.groupBy("doc_id", "order").count().filter("count > 1").count() == 0
 
 
-def test_stateful_first_seen_across_batches(spark, tmp_path):
-    """applyInPandasWithState first-match: state must persist across
-    micro-batches (maxFilesPerTrigger=1 over ts-range-ordered files) and the
-    result must equal the batch q08 first-event-per-user window."""
-    events_path = str(tmp_path / "events")
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet") \
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    # stage 4 time-slices as sequential appends: file modification order (what
-    # the file source sorts by) == event-time order, so "first arrival"
-    # equals the global (ts, event_id) minimum per user
-    import time as _time
-    ev = ev.withColumn("ts_long", F.col("ts").cast("long"))
-    bounds = ev.approxQuantile("ts_long", [0.25, 0.5, 0.75], 0.0)
-    lo = None
-    for hi in [*bounds, None]:
-        part = ev
-        if lo is not None:
-            part = part.filter(F.col("ts_long") > lo)
-        if hi is not None:
-            part = part.filter(F.col("ts_long") <= hi)
-        part.drop("ts_long").orderBy("ts", "event_id").coalesce(1) \
-            .write.mode("append").parquet(events_path)
-        _time.sleep(1.1)
-        lo = hi
-    ev = ev.drop("ts_long")
-
-    from ocr_redaction_engine_spark.streaming import stateful_first_seen
-    schema = spark.read.parquet(events_path).schema
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(events_path))
-    q = (
-        stateful_first_seen(stream).writeStream
-        .format("memory").queryName("first_seen").outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    assert q.lastProgress["batchId"] >= 3  # state really crossed batches
-
-    got = sorted(tuple(r) for r in
-                 spark.sql("SELECT user_id, event_id, event_type FROM first_seen").collect())
-    from pyspark.sql import Window
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    exp = sorted(tuple(r) for r in
-                 ev.withColumn("rn", F.row_number().over(w)).filter("rn = 1")
-                 .select("user_id", "event_id", "event_type").collect())
-    assert got == exp
-
-
 def test_session_windows_batch(spark):
     """session_window gap semantics (batch differential): sessions split
     exactly where consecutive gaps exceed 30 min."""
@@ -174,106 +124,6 @@ def test_session_windows_batch(spark):
     exp_rows = sorted(((r["user_id"], r["session_start"], r["session_end"],
                         r["n_events"], r["total_value"]) for r in sessions.collect()))
     assert got_rows == exp_rows
-
-
-def test_watermark_rollup_closed_windows(spark, tmp_path):
-    ckpt = str(tmp_path / "ckpt")
-    # file-stream sources need a directory; stage the single-file table
-    events_path = str(tmp_path / "events")
-    spark.read.parquet("/root/testdata/sf0.001/events.parquet") \
-        .write.mode("overwrite").parquet(events_path)
-    streaming.run_windowed_stream(spark, events_path, ckpt, queryName="wm_rollup")
-    got = spark.sql("SELECT * FROM wm_rollup")
-
-    batch = streaming.windowed_event_rollup(spark.read.parquet(events_path))
-    # append mode emits only windows whose end <= final watermark
-    # (max ts - 2 h); compare exactly on that closed set
-    max_ts = (spark.read.parquet(events_path)
-              .agg(F.max(F.col("ts").cast("timestamp"))).collect()[0][0])
-    closed = batch.filter(
-        F.col("win_end") <= F.lit(max_ts) - F.expr("INTERVAL 2 HOURS"))
-    key = ("win_start", "event_type")
-    got_rows = sorted(tuple(r[c] for c in key) + (r["n"], r["total_value"]) for r in got.collect())
-    exp_rows = sorted(tuple(r[c] for c in key) + (r["n"], r["total_value"]) for r in closed.collect())
-    assert got_rows == exp_rows
-
-
-def test_streaming_exact_dedup_across_batches(spark, tmp_path):
-    """Cross-batch exact dedup: duplicated documents staged over multiple
-    micro-batches must emit exactly one row per text fingerprint."""
-    docs_path = str(tmp_path / "docs")
-    base = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(60)
-    # write the same 60 docs twice (two files = two micro-batches)
-    for _ in range(2):
-        base.coalesce(1).write.mode("append").parquet(docs_path)
-
-    from ocr_redaction_engine_spark.streaming import streaming_exact_dedup
-    schema = spark.read.parquet(docs_path).schema
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(docs_path))
-    q = (
-        streaming_exact_dedup(stream).writeStream
-        .format("memory").queryName("dedup_stream").outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    got = spark.sql("SELECT fp FROM dedup_stream").collect()
-    fps = [r.fp for r in got]
-    assert len(fps) == len(set(fps))  # no fingerprint emitted twice
-    exp_fps = {r.fp for r in streaming_exact_dedup(base).select("fp").collect()}
-    assert set(fps) == exp_fps        # and every distinct fingerprint once
-
-def test_streaming_near_dup_candidates_across_batches(spark, tmp_path):
-    """Stateful LSH anchors: a doc arriving in a LATER micro-batch that
-    band-matches an earlier doc pairs with the stored anchor; every streamed
-    pair is a true band collision (validated against the batch
-    candidate_pairs twin) and every batch-side collision bucket is covered."""
-    import time as _time
-    docs_path = str(tmp_path / "docs")
-    batch1 = [
-        (1, "alpha beta gamma delta epsilon"),
-        (2, "alpha beta gamma delta epsilon"),      # dup of 1, same batch
-        (3, "completely different tokens here now"),
-    ]
-    batch2 = [
-        (4, "alpha beta gamma delta epsilon"),      # dup arriving later
-        (5, "unrelated fresh content entirely new"),
-    ]
-    schema = "doc_id long, text string"
-    spark.createDataFrame(batch1, schema).coalesce(1).write.mode("append").parquet(docs_path)
-    _time.sleep(1.1)
-    spark.createDataFrame(batch2, schema).coalesce(1).write.mode("append").parquet(docs_path)
-
-    from ocr_redaction_engine_spark.streaming import streaming_near_dup_candidates
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(docs_path))
-    q = (
-        streaming_near_dup_candidates(stream).writeStream
-        .format("memory").queryName("near_dup").outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    assert q.lastProgress["batchId"] >= 1       # state crossed batches
-
-    got = {(r["a"], r["b"]) for r in
-           spark.sql("SELECT a, b FROM near_dup").collect()}
-    # doc 2 (same batch) and doc 4 (later batch) both anchor to doc 1
-    assert (1, 2) in got and (1, 4) in got
-    # streamed pairs are exactly the star of each collision bucket: all are
-    # true band collisions per the batch twin
-    from ocr_redaction_engine_spark.analytics.dedup import candidate_pairs
-    all_docs = spark.createDataFrame(batch1 + batch2, schema) \
-        .withColumn("n_chars", F.length("text"))
-    batch_pairs = {(r["a"], r["b"]) for r in candidate_pairs(all_docs).collect()}
-    assert got <= batch_pairs
-    # every doc that collides at all is reachable through its anchor
-    covered = {d for p in got for d in p}
-    assert {d for p in batch_pairs for d in p} == covered
 
 
 def test_stream_extraction_equals_batch(spark, tmp_path):
