@@ -14,10 +14,15 @@ their own oracle in tests/ (the pure-Python reference oracle).
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+
+#: The golden parquets the pipeline / BPE oracles read, in this checkout.
+_GOLDEN = os.path.join(os.path.dirname(os.path.abspath(__file__)), "tests", "golden")
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1335,16 +1340,7 @@ def sketch_cm_heavy_hitters(spark, sf_dir):
 def _synthetic_corpus_dfs(spark, n_docs=150):
     from ocr_redaction_engine_spark import corpus
     docs, pages = corpus.build_corpus_local(42, n_docs)
-    docs_df = spark.createDataFrame(
-        [(d["doc_id"], [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in d["spans"]])
-         for d in docs], schema=corpus.DOCUMENTS_DDL)
-    pages_df = spark.createDataFrame(
-        [(p["media_ref"], p["document_name"], p["width"], p["height"], p["doc_type"],
-          [(w["x1"], w["y1"], w["x2"], w["y2"], w["text"]) for w in p["words"]],
-          p["lines"],
-          [(q["x1"], q["y1"], q["x2"], q["y2"]) for q in p["qr_boxes"]])
-         for p in pages], schema=corpus.MEDIA_PAGES_DDL)
-    return docs_df, pages_df
+    return corpus.local_frames(spark, docs, pages)
 
 
 def pipeline_spans(spark, sf_dir):
@@ -1375,15 +1371,7 @@ def pipeline_invalid_route(spark, sf_dir):
     from ocr_redaction_engine_spark.operators.validate import invalid_documents
     docs, pages = corpus.build_corpus_local(42, 150)
     docs, pages, _ = corpus.corrupt_corpus_local(docs, pages, every=13)
-    docs_df = spark.createDataFrame(
-        [(d["doc_id"], [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in d["spans"]])
-         for d in docs], schema=corpus.DOCUMENTS_DDL)
-    pages_df = spark.createDataFrame(
-        [(p["media_ref"], p["document_name"], p["width"], p["height"], p["doc_type"],
-          [(w["x1"], w["y1"], w["x2"], w["y2"], w["text"]) for w in p["words"]],
-          p["lines"],
-          [(q["x1"], q["y1"], q["x2"], q["y2"]) for q in p["qr_boxes"]])
-         for p in pages], schema=corpus.MEDIA_PAGES_DDL)
+    docs_df, pages_df = corpus.local_frames(spark, docs, pages)
     return invalid_documents(docs_df, pages_df)
 
 
@@ -1396,15 +1384,7 @@ def extract_pipeline_spans(spark, sf_dir):
     from ocr_redaction_engine_spark import corpus
     from ocr_redaction_engine_spark.extraction_pipeline import extract_spans
     docs, pages = corpus.build_web_corpus_local(42, 150)
-    docs_df = spark.createDataFrame(
-        [(d["doc_id"], [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in d["spans"]])
-         for d in docs], schema=corpus.DOCUMENTS_DDL)
-    pages_df = spark.createDataFrame(
-        [(p["media_ref"], p["document_name"], p["width"], p["height"], p["doc_type"],
-          [(w["x1"], w["y1"], w["x2"], w["y2"], w["text"]) for w in p["words"]],
-          p["lines"],
-          [(q["x1"], q["y1"], q["x2"], q["y2"]) for q in p["qr_boxes"]])
-         for p in pages], schema=corpus.MEDIA_PAGES_DDL)
+    docs_df, pages_df = corpus.local_frames(spark, docs, pages)
     return extract_spans(docs_df, pages_df)
 
 
@@ -5002,13 +4982,13 @@ def oracle_sql() -> dict[str, str]:
         # Golden parquet from the independent pure-Python BPE reference
         # (tools/write_bpe_golden.py) — valid for the sf0.01 gate corpus,
         # like the pipeline goldens above.
-        "bpe_encode_pieces": """
+        "bpe_encode_pieces": f"""
             SELECT doc_id, word_pos, piece_pos, piece
-            FROM read_parquet('/root/repo/tests/golden/bpe_pieces.parquet')
+            FROM read_parquet('{_GOLDEN}/bpe_pieces.parquet')
         """,
         # Fertility over the same golden piece stream, joined to documents
         # for the language column; HUGEINT mirrors Spark's DECIMAL(38,0).
-        "text_tokenizer_fertility": """
+        "text_tokenizer_fertility": f"""
             SELECT d.lang AS lang,
                    CAST(SUM(CASE WHEN g.piece_pos = 0 THEN 1 ELSE 0 END)
                         AS BIGINT) AS n_words,
@@ -5022,7 +5002,7 @@ def oracle_sql() -> dict[str, str]:
                         * 10000 // COUNT(*) AS BIGINT) AS continuation_bp,
                    CAST(CAST(SUM(LENGTH(g.piece)) AS HUGEINT) * 1000000
                         // COUNT(*) AS BIGINT) AS chars_per_piece_e6
-            FROM read_parquet('/root/repo/tests/golden/bpe_pieces.parquet') g
+            FROM read_parquet('{_GOLDEN}/bpe_pieces.parquet') g
             JOIN documents d ON d.doc_id = g.doc_id
             GROUP BY d.lang
             ORDER BY lang
@@ -5512,22 +5492,22 @@ def oracle_sql() -> dict[str, str]:
         # (ocr_redaction_engine_spark/oracle.py over the seed-42 150-doc
         # corpus) materialized by tools/write_pipeline_golden.py — computed
         # independently of the Spark pipeline under test.
-        "pipeline_spans": """
+        "pipeline_spans": f"""
             SELECT doc_id, "order", kind, text, media_ref
-            FROM read_parquet('/root/repo/tests/golden/pipeline_spans.parquet/*.parquet')
+            FROM read_parquet('{_GOLDEN}/pipeline_spans.parquet/*.parquet')
         """,
-        "pipeline_redactions": """
+        "pipeline_redactions": f"""
             SELECT doc_id, media_ref, status, field, seq, x1, y1, x2, y2,
                    frame_id, document_id
-            FROM read_parquet('/root/repo/tests/golden/pipeline_redactions.parquet/*.parquet')
+            FROM read_parquet('{_GOLDEN}/pipeline_redactions.parquet/*.parquet')
         """,
-        "pipeline_invalid_route": """
+        "pipeline_invalid_route": f"""
             SELECT doc_id, status, task_result, reason
-            FROM read_parquet('/root/repo/tests/golden/pipeline_invalid.parquet/*.parquet')
+            FROM read_parquet('{_GOLDEN}/pipeline_invalid.parquet/*.parquet')
         """,
-        "extract_pipeline_spans": """
+        "extract_pipeline_spans": f"""
             SELECT doc_id, "order", kind, text, media_ref
-            FROM read_parquet('/root/repo/tests/golden/extract_spans.parquet/*.parquet')
+            FROM read_parquet('{_GOLDEN}/extract_spans.parquet/*.parquet')
         """,
         "dedup_components": f"""
             WITH RECURSIVE toks AS (

@@ -8,10 +8,18 @@ Default run:
      ``extraction_pipeline.run_extraction_job`` (main-content extraction),
      each with its default config, on a deterministic synthetic corpus
      (seed 42) at THREE parallelism levels — N/16, N/4 and N cores (the
-     distinct ones), fresh JVM each (subprocess) — and reports the step
-     scaling efficiency (docs_s_b / docs_s_a) / (b / a) between adjacent
-     levels (BASELINE.json north_rule; sandbox stand-in for N vs 4N
-     executors).
+     distinct ones) — and reports the step scaling efficiency
+     (docs_s_b / docs_s_a) / (b / a) between adjacent levels
+     (BASELINE.json north_rule; sandbox stand-in for N vs 4N executors).
+
+Every throughput number comes from one kind of leg (:func:`run_leg`): a
+fresh ``python bench.py --pipeline-only|--extraction-only --cpus K
+--ndocs N`` process that warms the job once, takes the three host probes
+(:func:`host_probes`) and times one :func:`job_pass` with the Spark event
+log on; its record carries the wall, the probes and the event-log
+attribution of that pass (:func:`event_log_attribution`). The default run
+and ``--data-scaling`` interleave such legs over their (cores, docs)
+pairs (:func:`interleave`); min-of-rounds is each pair's wall.
 
 Every session, query and leg alike, is ``session.get_spark(name, cpus)``:
 the conf the jobs and perfbench run under.
@@ -20,16 +28,17 @@ Prints ONE JSON line:
   {"metric": "end_to_end_redaction_wall_sec", "value": wall_sec_at_N,
    "unit": "sec", "docs_per_sec": docs_per_sec_at_N, ...,
    "queries": {name: sec}, "sf": 0.1, "scaling_efficiency": {...}}
-
-Subprocess mode (internal): ``python bench.py --pipeline-only --cpus K``
-(or ``--extraction-only``) prints a small JSON dict for one leg.
+and writes the full payload (every leg record) to BENCH_full.json.
 """
 from __future__ import annotations
 
 import argparse
 import json
+import multiprocessing as mp
 import os
+import re
 import shutil
+import statistics
 import subprocess
 import sys
 import tempfile
@@ -37,16 +46,23 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from ocr_redaction_engine_spark.corpus import write_corpus, write_web_corpus  # noqa: E402
 from ocr_redaction_engine_spark.extraction_pipeline import run_extraction_job  # noqa: E402
 from ocr_redaction_engine_spark.pipeline import run_job  # noqa: E402
 from ocr_redaction_engine_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
-BENCH_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "360000"))
-CORPUS_DIR = os.environ.get("SPARK_GRAFT_BENCH_CORPUS", "/tmp/orx_bench_corpus")
-WARM_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_WARM", "1"))   # untimed JIT/worker warm-up
-TIMED_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_TIMED", "2"))  # min-of-N timed passes
+BENCH_DOCS = 360_000              # default --ndocs
+CORPUS_DIR = "/tmp/orx_bench_corpus"
+#: Interleaved rounds per (cores, docs) pair, core and data scaling alike
+#: (the extraction job is cheaper and steadier).
+ROUNDS = {"redaction": 4, "extraction": 2}
+#: job -> (corpus writer, production job, leg flag)
+JOBS = {
+    "redaction": (write_corpus, run_job, "--pipeline-only"),
+    "extraction": (write_web_corpus, run_extraction_job, "--extraction-only"),
+}
 
 # headline subset: one per operator family (full set is exercised by the
 # driver's correctness gate; bench keeps wall-clock bounded)
@@ -134,44 +150,28 @@ def _force(df):
     df.write.format("noop").mode("overwrite").save()
 
 
-def ensure_corpus(spark, n_docs: int, base: str | None = None) -> tuple[str, str]:
-    """Materialize the bench corpus once; reuse across runs (deterministic)."""
-    from ocr_redaction_engine_spark.corpus import write_corpus
-    base = base or CORPUS_DIR
-    marker = os.path.join(base, f".ok_{n_docs}")
-    docs = f"{base}/documents"
-    pages = f"{base}/media_pages"
-    if not os.path.exists(marker):
+def ensure_corpus(spark, job: str, n_docs: int) -> tuple[str, str]:
+    """Materialize ``job``'s corpus flavor at ``n_docs`` once, in its own
+    dir, and reuse it across legs (deterministic: seed 42)."""
+    base = f"{CORPUS_DIR}_{job}_{n_docs}"
+    if not os.path.exists(f"{base}/.ok"):
         shutil.rmtree(base, ignore_errors=True)
-        write_corpus(spark, base, n_docs, seed=42, partitions=64)
-        open(marker, "w").close()
-    return docs, pages
-
-
-def ensure_web_corpus(spark, n_docs: int, base: str | None = None) -> tuple[str, str]:
-    """Web-corpus flavor (html/pdf/text/media spans) for the extraction
-    pipeline's legs."""
-    from ocr_redaction_engine_spark.corpus import write_web_corpus
-    base = base or (CORPUS_DIR + "_web")
-    marker = os.path.join(base, f".ok_{n_docs}")
-    if not os.path.exists(marker):
-        shutil.rmtree(base, ignore_errors=True)
-        write_web_corpus(spark, base, n_docs, seed=42, partitions=64)
-        open(marker, "w").close()
+        JOBS[job][0](spark, base, n_docs, seed=42, partitions=64)
+        open(f"{base}/.ok", "w").close()
     return f"{base}/documents", f"{base}/media_pages"
 
 
-def host_probe(seconds: float = 1.0) -> float:
-    """Single-thread busy-loop rate (Miters/s) — a Spark-free contention
-    probe recorded alongside every scaling pass, so the JSON itself shows
-    whether a slow wall was the engine or the neighbors (this multi-tenant
-    VM swings between ~5 % and ~80 % steal on a minutes scale)."""
-    t0 = time.time()
-    i = _burn(seconds)
-    return round(i / (time.time() - t0) / 1e6, 1)
-
+# ---------------------------------------------------------------------------
+# Host probes: Spark-free rates of what the host grants at a width right now,
+# one forked process per lane (GIL-free). The ratio of a probe between two
+# parallelism levels is the HOST's scaling ceiling for that kind of work; the
+# engine's raw efficiency divided by it is the probe-normalized efficiency.
+# This multi-tenant VM swings between ~5 % and ~80 % steal on a minutes
+# scale, so every leg records its probes next to its wall.
+# ---------------------------------------------------------------------------
 
 def _burn(seconds: float) -> int:
+    """ALU: a tight busy loop, iterations."""
     t0 = time.time()
     i = 0
     while time.time() - t0 < seconds:
@@ -181,14 +181,12 @@ def _burn(seconds: float) -> int:
 
 
 def _burn_stream(seconds: float) -> int:
-    """Bytes moved by numpy copy+sum over a 64 MB working set (far beyond
-    L2): a memory-BANDWIDTH burn, the ceiling that matters for parquet
-    decode + wide string scans (r5 attribution — the ALU probe alone
-    overstates what the host offers this workload class).
-
-    The allocation, numpy import (in the forked worker), and first-touch
-    page faults all happen BEFORE t0 — measured inside a 1 s window at 32
-    procs they dominated and read 4 GB/s on a ~120 GB/s box."""
+    """Memory BANDWIDTH: bytes moved by numpy copy+sum over a 64 MB working
+    set (far beyond L2), the ceiling that matters for parquet decode + wide
+    string scans (measured r5: 8→32 step efficiency ~0.49 on a 32-vCPU box
+    vs ~0.83-0.93 ALU). The allocation, numpy import (in the forked worker)
+    and first-touch page faults all happen BEFORE t0 — inside a 1 s window
+    at 32 procs they dominated and read 4 GB/s on a ~120 GB/s box."""
     import numpy as np
     a = np.arange(8_000_000, dtype=np.int64)
     b = np.empty_like(a)
@@ -203,31 +201,117 @@ def _burn_stream(seconds: float) -> int:
     return n
 
 
-def parallel_stream_probe(procs: int, seconds: float = 2.0) -> float:
-    """Aggregate memory-stream rate (GB/s) across ``procs`` processes —
-    the host's BANDWIDTH scaling ceiling between two parallelism levels
-    (measured r5: 8→32 step efficiency ~0.49 on this box vs ~0.83-0.93
-    ALU — bandwidth saturates long before the lanes do)."""
-    import multiprocessing as mp
-    ctx = mp.get_context("fork")
-    with ctx.Pool(procs) as pool:
-        counts = pool.map(_burn_stream, [seconds] * procs)
-    return round(sum(counts) / seconds / 1e9, 2)
+_PROBE_RE = re.compile(r"[A-Z]{5}[0-9]{4}[A-Z]|\d{4}\s\d{4}\s\d{4}")
 
 
-def parallel_host_probe(procs: int, seconds: float = 1.0) -> float:
-    """Aggregate busy-loop rate (Miters/s) across ``procs`` PROCESSES — the
-    Spark-free measurement of how much parallel ALU the host actually grants
-    at this width right now (GIL-free, unlike threads). The ratio of this
-    probe between two parallelism levels is the HOST's scaling ceiling; the
-    engine's raw efficiency divided by it is the probe-normalized
-    efficiency the scaling tables publish (VERDICT r3 #4)."""
-    import multiprocessing as mp
-    ctx = mp.get_context("fork")
-    with ctx.Pool(procs) as pool:
-        counts = pool.map(_burn, [seconds] * procs)
-    return round(sum(counts) / seconds / 1e6, 1)
+def _burn_regex(seconds: float) -> int:
+    """Branchy string scan: Python ``re`` matches over PAN/Aadhaar-shaped
+    lines, the closest Spark-free analog of the PII regexp pass."""
+    rows = [f"line {i} PQRST{i % 10000:04d}Z tail 1234 5678 9012 x" * 3
+            for i in range(2000)]
+    t0 = time.perf_counter()
+    n = 0
+    while time.perf_counter() - t0 < seconds:
+        for r in rows:
+            if _PROBE_RE.search(r):
+                n += 1
+    return n
 
+
+#: probe -> (burn, seconds, unit divisor): ALU in Miters/s, stream in
+#: GB/s, regex in M matches/s
+PROBES = {
+    "alu": (_burn, 1.0, 1e6),
+    "stream": (_burn_stream, 2.0, 1e9),
+    "regex": (_burn_regex, 2.0, 1e6),
+}
+
+
+def host_probes(procs: int) -> dict:
+    """Each probe's aggregate rate across ``procs`` processes."""
+    with mp.get_context("fork").Pool(procs) as pool:
+        return {kind: round(sum(pool.map(burn, [sec] * procs)) / sec / unit, 2)
+                for kind, (burn, sec, unit) in PROBES.items()}
+
+
+def _host_busy_sec() -> float:
+    """Whole-VM busy CPU seconds (user+nice+sys+irq+softirq) from
+    /proc/stat: counts the JVM AND its Python workers, which the event
+    log's executor metrics cannot see."""
+    with open("/proc/stat") as f:
+        p = f.readline().split()
+    return (int(p[1]) + int(p[2]) + int(p[3]) + int(p[6]) + int(p[7])) \
+        / os.sysconf("SC_CLK_TCK")
+
+
+# ---------------------------------------------------------------------------
+# Event-log attribution: the timed pass split into engine work (task time)
+# and the time around it, the CIDR 2022 "Accelerating Python UDFs in
+# Vectorized Query Execution" cut.
+# ---------------------------------------------------------------------------
+
+def _event_lines(log_dir: str):
+    """Lines of every Spark event log under ``log_dir``: single-file logs
+    and the ``events_*`` parts of rolling (v2 directory) logs."""
+    for name in sorted(os.listdir(log_dir)):
+        path = os.path.join(log_dir, name)
+        parts = ([os.path.join(path, p) for p in sorted(os.listdir(path))
+                  if p.startswith("events_")] if os.path.isdir(path) else [path])
+        for part in parts:
+            with open(part) as f:
+                yield from f
+
+
+def event_log_attribution(log_dir: str, t0: float, t1: float, cpus: int) -> dict:
+    """Where the ``cpus`` lanes' time went in the window [t0, t1] (epoch s),
+    from the tasks that finished inside it:
+
+    * ``occupancy`` — summed executor run time / (window × cpus);
+    * ``cpu_share_of_run`` / ``gc_share_of_run`` — executor CPU and JVM GC
+      time as shares of that run time;
+    * ``out_of_task_sec`` — window − run time / cpus: driver planning,
+      stage scheduling gaps, commit coordination;
+    * ``stages`` — per stage: tasks, median and max task run time and their
+      ratio (``skew``; None when the median is 0).
+
+    Lines that are not JSON (a torn last line) are skipped."""
+    runs: dict[int, list] = {}
+    cpu_ms = gc_ms = 0.0
+    for line in _event_lines(log_dir):
+        try:
+            ev = json.loads(line)
+        except json.JSONDecodeError:
+            continue
+        if ev.get("Event") != "SparkListenerTaskEnd":
+            continue
+        if not t0 * 1e3 <= (ev.get("Task Info") or {}).get("Finish Time", 0) <= t1 * 1e3:
+            continue
+        m = ev.get("Task Metrics") or {}
+        runs.setdefault(ev.get("Stage ID"), []).append(m.get("Executor Run Time", 0))
+        cpu_ms += m.get("Executor CPU Time", 0) / 1e6
+        gc_ms += m.get("JVM GC Time", 0)
+    run_ms = sum(sum(r) for r in runs.values())
+    wall = t1 - t0
+    stages = {}
+    for sid, r in sorted(runs.items()):
+        med = statistics.median(r)
+        stages[str(sid)] = {"tasks": len(r), "median_ms": round(med, 1),
+                            "max_ms": round(max(r), 1),
+                            "skew": round(max(r) / med, 2) if med > 0 else None}
+    return {
+        "tasks": sum(len(r) for r in runs.values()),
+        "task_run_sec": round(run_ms / 1e3, 3),
+        "occupancy": round(run_ms / (wall * 1e3 * cpus), 3),
+        "cpu_share_of_run": round(cpu_ms / max(run_ms, 1), 3),
+        "gc_share_of_run": round(gc_ms / max(run_ms, 1), 3),
+        "out_of_task_sec": round(wall - run_ms / 1e3 / cpus, 3),
+        "stages": stages,
+    }
+
+
+# ---------------------------------------------------------------------------
+# The leg
+# ---------------------------------------------------------------------------
 
 def job_pass(spark, job, docs_path: str, pages_path: str):
     """The one bench pass: ``job`` (``run_job`` or ``run_extraction_job``)
@@ -251,112 +335,149 @@ def job_pass(spark, job, docs_path: str, pages_path: str):
     return one_pass
 
 
-def _leg(cpus: int, n_docs: int, single: bool, corpus_base: str | None,
-         ensure, job) -> dict:
-    """One fresh-JVM throughput leg: ``ensure(spark, n_docs, corpus_base)``
-    materializes the corpus, and the leg reports the min-of-N
-    :func:`job_pass` wall of ``job`` next to the host probes taken just
-    before it."""
-    spark = get_spark(f"bench-{cpus}", cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-    one_pass = job_pass(spark, job, *ensure(spark, n_docs, corpus_base))
-
-    # Warm passes (untimed): spawn+import the Python Arrow workers, C2-JIT the
-    # codegen'd operators, fault in the page cache. On a long-lived cluster
-    # over 100 TB this cost amortizes to ~0; timing it would measure
-    # fork/exec+JIT, not the engine. Steady state is what the north_rule
-    # scaling gate compares.
-    for _ in range(WARM_RUNS):
-        one_pass()
-    # min-of-N: the host VM shows multi-second steal spikes (observed 18 s vs
-    # 79 s for the SAME 32-core pass back-to-back); the minimum is the
-    # closest observation to the engine's actual cost. High-parallelism legs
-    # are the most noise-sensitive AND the cheapest per pass — take extra
-    # passes there; low-cpu legs get one extra pass as steal shelter too.
-    n_timed = 1 if single else TIMED_RUNS + 2
-    probe = host_probe()
-    pprobe = parallel_host_probe(cpus)
-    sprobe = parallel_stream_probe(cpus)
-    walls = sorted(one_pass()[0] for _ in range(n_timed))
-    spark.stop()
-    return {"cpus": cpus, "n_docs": n_docs, "wall_sec": round(walls[0], 3),
-            "walls": [round(w, 3) for w in walls],
-            "host_probe_miters": probe,
-            "host_parallel_miters": pprobe,
-            "host_stream_gbs": sprobe,
-            "docs_per_sec": round(n_docs / walls[0], 2)}
-
-
-def run_pipeline_once(cpus: int, n_docs: int, single: bool = False,
-                      corpus_base: str | None = None) -> dict:
-    """One fresh-JVM throughput leg of the redaction job, ``run_job``."""
-    return _leg(cpus, n_docs, single, corpus_base, ensure_corpus, run_job)
+def _leg_here(job: str, cpus: int, n_docs: int) -> dict:
+    """The body of one leg, in this process: a session with the event log
+    on, one untimed warm pass (spawns the Python Arrow workers, C2-JITs the
+    codegen'd operators, faults in the page cache — on a long-lived cluster
+    that cost amortizes to ~0), the host probes, then one timed pass with
+    its attribution. Stops the session."""
+    elog = tempfile.mkdtemp(prefix="orx_bench_elog_")
+    try:
+        spark = get_spark(f"bench-{job}-{cpus}", cpus, {
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.compress": "false",
+            "spark.eventLog.dir": f"file://{elog}",
+        })
+        spark.sparkContext.setLogLevel("ERROR")
+        try:
+            one_pass = job_pass(spark, JOBS[job][1],
+                                *ensure_corpus(spark, job, n_docs))
+            one_pass()
+            probes = host_probes(cpus)
+            busy0, t0 = _host_busy_sec(), time.time()
+            wall, _ = one_pass()
+            t1, host_cpu_sec = time.time(), _host_busy_sec() - busy0
+        finally:
+            spark.stop()        # drains the listener bus into the log
+        attrib = event_log_attribution(elog, t0, t1, cpus)
+    finally:
+        shutil.rmtree(elog, ignore_errors=True)
+    # host cores busy during the pass (JVM + Python workers + driver): an
+    # Arrow stage lets local[N] borrow idle host cores for its Python side
+    attrib["host_cpu_sec"] = round(host_cpu_sec, 1)
+    attrib["effective_cores"] = round(host_cpu_sec / wall, 2)
+    return {"job": job, "cpus": cpus, "n_docs": n_docs, "pid": os.getpid(),
+            "wall_sec": round(wall, 3), "docs_per_sec": round(n_docs / wall, 2),
+            "probes": probes, "attribution": attrib}
 
 
-def run_extraction_once(cpus: int, n_docs: int, single: bool = False,
-                        corpus_base: str | None = None) -> dict:
-    """One fresh-JVM throughput leg of the main-content extraction job,
-    ``run_extraction_job``."""
-    return _leg(cpus, n_docs, single, corpus_base, ensure_web_corpus,
-                run_extraction_job)
+def run_leg(job: str, cpus: int, n_docs: int) -> dict:
+    """One leg of ``job`` at (``cpus``, ``n_docs``) in a fresh
+    ``bench.py`` process, so no leg runs on another leg's warm JVM."""
+    flag = JOBS[job][2]
+    t_leg = time.time()
+    out = subprocess.run(
+        [sys.executable, os.path.abspath(__file__), flag,
+         "--cpus", str(cpus), "--ndocs", str(n_docs)],
+        capture_output=True, text=True)
+    sys.stderr.write(f"[bench] {job} cpus={cpus} ndocs={n_docs} "
+                     f"done in {time.time() - t_leg:.0f}s\n")
+    if out.returncode != 0:
+        sys.stderr.write(f"subprocess ({flag} cpus={cpus}) failed:\n")
+        sys.stderr.write("\n".join(out.stderr.splitlines()[-30:]) + "\n")
+        raise SystemExit(1)
+    return json.loads(out.stdout.strip().splitlines()[-1])
+
+
+def interleave(job: str, pairs: list[tuple[int, int]], rounds: int) -> dict:
+    """``rounds`` round-robin passes over the (cpus, n_docs) ``pairs``, one
+    :func:`run_leg` each. The host VM's steal load varies on a minutes
+    scale, so running all legs of one pair back to back lets a quiet window
+    inflate one side of a ratio (observed 0.78-1.20 for the same code);
+    interleaving exposes every pair to the same noise, and min-of-rounds
+    converges on the engine's cost. Returns pair -> summary, with every
+    leg record under ``legs``."""
+    legs: dict = {p: [] for p in pairs}
+    for _ in range(rounds):
+        for p in pairs:
+            legs[p].append(run_leg(job, *p))
+    out = {}
+    for (cpus, n_docs), ls in legs.items():
+        wall = min(leg["wall_sec"] for leg in ls)
+        out[(cpus, n_docs)] = {
+            "cpus": cpus, "n_docs": n_docs, "wall_sec": wall,
+            "walls": sorted(leg["wall_sec"] for leg in ls),
+            "docs_per_sec": round(n_docs / wall, 2),
+            "probe_best": {k: max(leg["probes"][k] for leg in ls)
+                           for k in PROBES},
+            "legs": ls}
+    return out
+
+
+def scaling(job: str, levels: list[int], n_docs: int) -> dict:
+    """``job``'s throughput at each core level and the step efficiency
+    between adjacent levels: ``raw`` = (docs_s_b / docs_s_a) / (b / a),
+    and per probe the host's ceiling for the same step (what a perfectly
+    scaling Spark-free workload of that kind gets on this host, from the
+    best probe of each level's rounds) and raw / ceiling."""
+    runs = {cpus: r for (cpus, _), r in
+            interleave(job, [(c, n_docs) for c in levels], ROUNDS[job]).items()}
+    detail = {}
+    for a, b in zip(levels, levels[1:]):
+        raw = (runs[b]["docs_per_sec"] / runs[a]["docs_per_sec"]) / (b / a)
+        step = {"raw": round(raw, 3)}
+        for kind in PROBES:
+            pa, pb = runs[a]["probe_best"][kind], runs[b]["probe_best"][kind]
+            ceiling = (pb / pa) / (b / a) if pa and pb else None
+            step[f"{kind}_ceiling"] = round(ceiling, 3) if ceiling else None
+            step[f"{kind}_normalized"] = round(raw / ceiling, 3) if ceiling else None
+        detail[f"{a}->{b}"] = step
+    top = runs[levels[-1]]
+    return {"docs_per_sec": top["docs_per_sec"], "wall_sec": top["wall_sec"],
+            "n_docs": n_docs, "runs": [runs[c] for c in levels],
+            "efficiency": {k: v["raw"] for k, v in detail.items()},
+            "efficiency_detail": detail}
 
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--pipeline-only", action="store_true")
-    ap.add_argument("--extraction-only", action="store_true")
+    ap.add_argument("--pipeline-only", action="store_true",
+                    help="one redaction leg in this process (the leg mode)")
+    ap.add_argument("--extraction-only", action="store_true",
+                    help="one extraction leg in this process; with "
+                         "--data-scaling, scale the extraction job")
     ap.add_argument("--cpus", type=int, default=CPUS)
     ap.add_argument("--ndocs", type=int, default=BENCH_DOCS)
     ap.add_argument("--no-scaling", action="store_true")
-    ap.add_argument("--single-pass", action="store_true",
-                    help="with --pipeline-only: warm once, time once (the "
-                         "interleaved-rounds scaling mode)")
     ap.add_argument("--data-scaling", action="store_true",
-                    help="weak-scaling by DATA: run the pipeline at --ndocs "
-                         "and 4x --ndocs on the SAME core count; near-4x "
-                         "wall growth = no superlinear term (the 100 TB "
+                    help="weak-scaling by DATA: legs at --ndocs and 4x "
+                         "--ndocs on the SAME core count; near-4x wall "
+                         "growth = no superlinear term (the 100 TB "
                          "complement of the N-vs-4N core legs)")
     args = ap.parse_args()
+    job = "extraction" if args.extraction_only else "redaction"
 
     if args.data_scaling:
-        # Interleave the two sizes (small, big, small, big) so host-steal
-        # windows hit both; min-of-rounds per size is the engine signal.
-        if args.extraction_only:
-            runner, metric, big_dir = (run_extraction_once,
-                                       "extraction_data_weak_scaling",
-                                       CORPUS_DIR + "_web_4x")
-        else:
-            runner, metric, big_dir = (run_pipeline_once,
-                                       "pipeline_data_weak_scaling",
-                                       CORPUS_DIR + "_4x")
-        small, big = [], []
-        for _ in range(2):
-            small.append(runner(args.cpus, args.ndocs, single=True))
-            big.append(runner(args.cpus, 4 * args.ndocs,
-                              single=True, corpus_base=big_dir))
-        ws = min(r["wall_sec"] for r in small)
-        wb = min(r["wall_sec"] for r in big)
+        n1, n4 = args.ndocs, 4 * args.ndocs
+        runs = interleave(job, [(args.cpus, n1), (args.cpus, n4)], ROUNDS[job])
+        small, big = runs[(args.cpus, n1)], runs[(args.cpus, n4)]
         print(json.dumps({
-            "metric": metric,
+            "metric": ("extraction" if args.extraction_only else "pipeline")
+            + "_data_weak_scaling",
             "cpus": args.cpus,
-            "ndocs": {"1x": args.ndocs, "4x": 4 * args.ndocs},
-            "wall_sec": {"1x": ws, "4x": wb},
-            "docs_per_sec": {"1x": round(args.ndocs / ws, 2),
-                             "4x": round(4 * args.ndocs / wb, 2)},
+            "ndocs": {"1x": n1, "4x": n4},
+            "wall_sec": {"1x": small["wall_sec"], "4x": big["wall_sec"]},
+            "docs_per_sec": {"1x": small["docs_per_sec"],
+                             "4x": big["docs_per_sec"]},
             # throughput retained at 4x the data on the same cores
-            "data_scaling_efficiency": round((4 * args.ndocs / wb)
-                                             / (args.ndocs / ws), 3),
-            "runs": {"1x": small, "4x": big},
+            "data_scaling_efficiency": round(big["docs_per_sec"]
+                                             / small["docs_per_sec"], 3),
+            "runs": {"1x": small["legs"], "4x": big["legs"]},
         }))
         return
 
-    if args.pipeline_only:
-        print(json.dumps(run_pipeline_once(args.cpus, args.ndocs,
-                                           single=args.single_pass)))
-        return
-    if args.extraction_only:
-        print(json.dumps(run_extraction_once(args.cpus, args.ndocs,
-                                             single=args.single_pass)))
+    if args.pipeline_only or args.extraction_only:
+        print(json.dumps(_leg_here(job, args.cpus, args.ndocs)))
         return
 
     import __spark_entry__ as entry_mod
@@ -391,129 +512,31 @@ def main():
         spark.catalog.clearCache()
     spark.stop()
 
-    # job throughput at N/16, N/4 and N cores, fresh JVM each
-    # (north_rule scaling evidence: same input, two cluster sizes; the
-    # sandbox stand-in for N vs 4N executors is local[N] vs local[4N]).
-    # Legs are INTERLEAVED round-robin (2, 8, 32, 2, 8, 32, ...): the host
-    # VM's steal load varies on a minutes scale, so running all passes of
-    # one leg back-to-back lets a quiet window inflate one side of the
-    # efficiency ratio (observed 0.78-1.20 for the same code); interleaving
-    # exposes every leg to the same noise distribution and min-of-rounds
-    # converges on the engine's true cost at each level.
-    env = dict(os.environ, SPARK_GRAFT_BENCH_CORPUS=CORPUS_DIR)
+    # Job throughput at N/16, N/4 and N cores (north_rule scaling evidence:
+    # same input, two cluster sizes; the sandbox stand-in for N vs 4N
+    # executors is local[N] vs local[4N]). With --no-scaling: the redaction
+    # job at N cores only.
     levels = [args.cpus] if args.no_scaling else sorted(
         {max(args.cpus // 16, 1), max(args.cpus // 4, 1), args.cpus})
-
-    def interleaved_scaling(flag: str, rounds: int, ndocs: int) -> dict:
-        walls: dict[int, list] = {c: [] for c in levels}
-        probes: dict[int, list] = {c: [] for c in levels}
-        pprobes: dict[int, list] = {c: [] for c in levels}
-        sprobes: dict[int, list] = {c: [] for c in levels}
-        for r in range(rounds):
-            for cpus in levels:
-                t_leg = time.time()
-                sys.stderr.write(f"[bench] {flag} round {r} leg cpus={cpus} starting\n")
-                sys.stderr.flush()
-                out = subprocess.run(
-                    [sys.executable, os.path.abspath(__file__), flag,
-                     "--cpus", str(cpus), "--ndocs", str(ndocs),
-                     "--single-pass"],
-                    capture_output=True, text=True, env=env)
-                sys.stderr.write(
-                    f"[bench] {flag} round {r} leg cpus={cpus} done in {time.time()-t_leg:.0f}s\n")
-                sys.stderr.flush()
-                if out.returncode != 0:
-                    sys.stderr.write(f"subprocess ({flag} cpus={cpus}) failed:\n")
-                    sys.stderr.write("\n".join(out.stderr.splitlines()[-30:]) + "\n")
-                    raise SystemExit(1)
-                leg = json.loads(out.stdout.strip().splitlines()[-1])
-                walls[cpus].extend(leg["walls"])
-                probes[cpus].append(leg.get("host_probe_miters"))
-                pprobes[cpus].append(leg.get("host_parallel_miters"))
-                sprobes[cpus].append(leg.get("host_stream_gbs"))
-        runs = {}
-        for cpus in levels:
-            ws = sorted(walls[cpus])
-            pp = [x for x in pprobes[cpus] if x]
-            sp = [x for x in sprobes[cpus] if x]
-            runs[cpus] = {"cpus": cpus, "n_docs": ndocs,
-                          "wall_sec": round(ws[0], 3),
-                          "walls": [round(w, 3) for w in ws],
-                          "host_probes_miters": probes[cpus],
-                          "host_parallel_miters": pp,
-                          "host_parallel_best": max(pp) if pp else None,
-                          "host_stream_gbs": sp,
-                          "host_stream_best": max(sp) if sp else None,
-                          "docs_per_sec": round(ndocs / ws[0], 2)}
-        return runs
-
-    def norm_efficiency(runs: dict) -> dict:
-        """Raw and probe-normalized step efficiency. The host ceiling for a
-        step a->b is the best-case parallel probe ratio (pp_b/pp_a)/(b/a)
-        — what a perfectly-scaling Spark-free workload achieves on this
-        host; the normalized number is raw/ceiling, i.e. the ENGINE's
-        share of the scaling it could possibly have gotten."""
-        out = {}
-        for a, b in zip(levels, levels[1:]):
-            raw = (runs[b]["docs_per_sec"] / runs[a]["docs_per_sec"]) / (b / a)
-            pa, pb = runs[a]["host_parallel_best"], runs[b]["host_parallel_best"]
-            ceiling = ((pb / pa) / (b / a)) if pa and pb else None
-            sa, sb = runs[a].get("host_stream_best"), runs[b].get("host_stream_best")
-            s_ceiling = ((sb / sa) / (b / a)) if sa and sb else None
-            out[f"{a}->{b}"] = {
-                "raw": round(raw, 3),
-                "host_ceiling": round(ceiling, 3) if ceiling else None,
-                "probe_normalized": round(raw / ceiling, 3) if ceiling else None,
-                # bandwidth ceiling: what a perfectly-scaling memory-bound
-                # workload achieves on this host at the same step (r5)
-                "stream_ceiling": round(s_ceiling, 3) if s_ceiling else None,
-                "stream_normalized": round(raw / s_ceiling, 3) if s_ceiling else None,
-            }
-        return out
-
-    rounds = int(os.environ.get("SPARK_GRAFT_BENCH_ROUNDS", "4"))
-    runs = interleaved_scaling("--pipeline-only", rounds, args.ndocs)
-
-    hi = runs[args.cpus]
+    jobs = {j: scaling(j, levels, args.ndocs)
+            for j in (["redaction"] if args.no_scaling else JOBS)}
+    red = jobs["redaction"]
     result = {
         "metric": "end_to_end_redaction_wall_sec",
-        "value": round(hi["wall_sec"], 3),
+        "value": red["wall_sec"],
         "unit": "sec",
         "queries": qtimes,
         "sf": float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in SF_DIR else None,
-        "docs_per_sec": hi["docs_per_sec"],
-        "n_docs": hi["n_docs"],
+        "docs_per_sec": red["docs_per_sec"],
+        "n_docs": red["n_docs"],
         "cpus": args.cpus,
     }
     if not args.no_scaling:
-        result["scaling"] = {
-            "runs": [runs[c] for c in levels],
-            "efficiency": {
-                f"{a}->{b}": round((runs[b]["docs_per_sec"] / runs[a]["docs_per_sec"])
-                                   / (b / a), 3)
-                for a, b in zip(levels, levels[1:])
-            },
-            "efficiency_detail": norm_efficiency(runs),
-        }
-        # main-content extraction pipeline: same interleaved two-cluster-size
-        # evidence (fewer rounds — the UDF-free plan is cheap and stable)
-        xrounds = int(os.environ.get("SPARK_GRAFT_BENCH_XROUNDS", "2"))
-        xruns = interleaved_scaling("--extraction-only", xrounds, args.ndocs)
-        xhi = xruns[args.cpus]
-        result["extraction"] = {
-            "docs_per_sec": xhi["docs_per_sec"],
-            "wall_sec": xhi["wall_sec"],
-            "runs": [xruns[c] for c in levels],
-            "efficiency": {
-                f"{a}->{b}": round((xruns[b]["docs_per_sec"] / xruns[a]["docs_per_sec"])
-                                   / (b / a), 3)
-                for a, b in zip(levels, levels[1:])
-            },
-            "efficiency_detail": norm_efficiency(xruns),
-        }
-    # Full payload (per-pass walls, host probes) goes to a file;
-    # stdout's FINAL line is a compact summary so the driver's tail capture
-    # never truncates it (VERDICT r2 #1: BENCH_r02.json landed parsed:null).
+        result["scaling"] = red
+        result["extraction"] = jobs["extraction"]
+    # Full payload (every leg record) goes to a file; stdout's FINAL line
+    # is a compact summary so the driver's tail capture never truncates it
+    # (VERDICT r2 #1: BENCH_r02.json landed parsed:null).
     full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                              "BENCH_full.json")
     with open(full_path, "w") as fh:
@@ -537,15 +560,14 @@ def main():
         "full_payload": "BENCH_full.json",
     }
     if not args.no_scaling:
-        compact["scaling_efficiency"] = result["scaling"]["efficiency"]
+        detail = red["efficiency_detail"]
+        compact["scaling_efficiency"] = red["efficiency"]
         compact["scaling_probe_normalized"] = {
-            k: v["probe_normalized"]
-            for k, v in result["scaling"]["efficiency_detail"].items()}
+            k: v["alu_normalized"] for k, v in detail.items()}
         compact["host_scaling_ceiling"] = {
-            k: v["host_ceiling"]
-            for k, v in result["scaling"]["efficiency_detail"].items()}
+            k: v["alu_ceiling"] for k, v in detail.items()}
         compact["scaling_docs_per_sec"] = {
-            str(c): runs[c]["docs_per_sec"] for c in levels}
+            str(r["cpus"]): r["docs_per_sec"] for r in red["runs"]}
         compact["extraction_docs_per_sec"] = result["extraction"]["docs_per_sec"]
         compact["extraction_efficiency"] = result["extraction"]["efficiency"]
     print(json.dumps(compact, separators=(",", ":")))

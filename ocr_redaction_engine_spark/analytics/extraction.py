@@ -21,13 +21,40 @@ oracle can rebuild byte-identical input.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 # closing tags that end a DOM block (block-level segmentation points)
 BLOCK_SPLIT = r"</p>|</div>|</nav>|</footer>"
 # anchors: capture the link text for link-density scoring
 ANCHOR_TEXT = r"<a [^>]*>([^<]*)</a>"
+
+
+# The DOM-block expressions, as Column builders shared by these grouped
+# operators and the extraction job's per-span strip
+# (extraction_pipeline._narrow_kind_spans). Each side keeps its own keep
+# predicate: here on the rounded ``link_density`` column, there on the
+# unrounded ratio.
+
+def strip_script_style(html) -> Column:
+    """``html`` with <script>/<style> elements dropped *with their contents*
+    (their text is never content)."""
+    return F.regexp_replace(
+        F.regexp_replace(html, r"(?s)<script[^>]*>.*?</script>", " "),
+        r"(?s)<style[^>]*>.*?</style>", " ")
+
+
+def block_text(block) -> Column:
+    """A block's visible text: tags stripped, whitespace collapsed."""
+    return F.trim(F.regexp_replace(F.regexp_replace(block, r"<[^>]*>", " "),
+                                   r"\s+", " "))
+
+
+def anchor_chars(block) -> Column:
+    """Characters of anchor text in a block (link-density numerator)."""
+    return F.aggregate(
+        F.regexp_extract_all(block, F.lit(ANCHOR_TEXT), F.lit(1)),
+        F.lit(0).cast("long"), lambda a, x: a + F.length(x))
 
 
 def as_html(docs: DataFrame) -> DataFrame:
@@ -56,8 +83,8 @@ def as_html(docs: DataFrame) -> DataFrame:
     )
 
 
-def html_blocks(pages: DataFrame, keys: tuple[str, ...] = ("doc_id",)) -> DataFrame:
-    """Segment ``(*keys, html)`` into DOM blocks and score each one.
+def html_blocks(pages: DataFrame) -> DataFrame:
+    """Segment ``(doc_id, html)`` into DOM blocks and score each one.
 
     1. drop <script>/<style> *with their contents* (their text is never
        content);
@@ -67,34 +94,19 @@ def html_blocks(pages: DataFrame, keys: tuple[str, ...] = ("doc_id",)) -> DataFr
        anchor-text mass, link density = anchor chars / text chars.
 
     One narrow projection + one generate — no shuffle; block scoring is
-    embarrassingly parallel at any scale. ``keys`` defaults to per-document
-    pages; the extraction pipeline passes ("doc_id", "offset") to strip
-    per-span."""
-    keys = list(keys)
-    stripped = pages.select(
-        *keys,
-        F.regexp_replace(
-            F.regexp_replace("html", r"(?s)<script[^>]*>.*?</script>", " "),
-            r"(?s)<style[^>]*>.*?</style>", " ",
-        ).alias("clean"),
-    )
-    blocks = stripped.select(
-        *keys, F.posexplode(F.split("clean", BLOCK_SPLIT)).alias("pos", "block")
-    )
-    btext = F.trim(
-        F.regexp_replace(F.regexp_replace("block", r"<[^>]*>", " "), r"\s+", " ")
-    )
-    anchor_chars = F.expr(
-        f"aggregate(regexp_extract_all(block, '{ANCHOR_TEXT}', 1), "
-        "0L, (a, x) -> a + length(x))"
+    embarrassingly parallel at any scale."""
+    blocks = pages.select(
+        "doc_id",
+        F.posexplode(F.split(strip_script_style("html"), BLOCK_SPLIT))
+        .alias("pos", "block"),
     )
     n_links = F.expr("size(regexp_extract_all(block, '<a ', 0))")
     out = blocks.select(
-        *keys,
+        "doc_id",
         "pos",
-        btext.alias("btext"),
+        block_text("block").alias("btext"),
         n_links.alias("n_links"),
-        anchor_chars.alias("anchor_chars"),
+        anchor_chars("block").alias("anchor_chars"),
     )
     return out.withColumn(
         "text_len", F.length("btext")
@@ -106,7 +118,6 @@ def html_blocks(pages: DataFrame, keys: tuple[str, ...] = ("doc_id",)) -> DataFr
 
 def strip_boilerplate(
     pages: DataFrame, min_len: int = 40, max_link_density: float = 0.2,
-    keys: tuple[str, ...] = ("doc_id",),
 ) -> DataFrame:
     """Keep content blocks (long enough, link-sparse) and reassemble the
     main text in original DOM order — the boilerplate-strip operator.
@@ -116,11 +127,11 @@ def strip_boilerplate(
     survive. Per-doc reassembly is a single hash-agg with an in-memory
     ``sort_array`` over (pos, text) structs — the only shuffle, on the
     natural key."""
-    b = html_blocks(pages, keys=keys)
+    b = html_blocks(pages)
     kept = b.filter(
         (F.col("text_len") >= min_len) & (F.col("link_density") <= max_link_density)
     )
-    return kept.groupBy(*keys).agg(
+    return kept.groupBy("doc_id").agg(
         F.concat_ws(
             " ",
             F.transform(
@@ -155,8 +166,7 @@ def dom_main_block(pages: DataFrame) -> DataFrame:
 
 
 def classify_blocks(pages: DataFrame, short_len: int = 40,
-                    good_len: int = 80, max_link_density: float = 0.2,
-                    keys: tuple[str, ...] = ("doc_id",)) -> DataFrame:
+                    good_len: int = 80, max_link_density: float = 0.2) -> DataFrame:
     """jusText-style context-sensitive block classification (Pomikálek
     2011): a raw per-block label from length + link density, then a
     neighbor-smoothing pass — the step the plain ``strip_boilerplate``
@@ -175,18 +185,17 @@ def classify_blocks(pages: DataFrame, short_len: int = 40,
     One window per document ordered by block position — per-doc block
     counts are bounded by page size, so the partition key is skew-free
     at any corpus scale; everything else is the [[html_blocks]] map-only
-    scan. Returns (*keys, pos, text_len, link_density, label_raw,
+    scan. Returns (doc_id, pos, text_len, link_density, label_raw,
     label), content = rows with label in ('good',).
     """
-    keys = list(keys)
-    b = html_blocks(pages, keys=tuple(keys))
+    b = html_blocks(pages)
     raw = (
         F.when(F.col("link_density") > max_link_density, F.lit("bad"))
         .when(F.col("text_len") >= good_len, F.lit("good"))
         .when(F.col("text_len") >= short_len, F.lit("near"))
         .otherwise(F.lit("short"))
     )
-    w = Window.partitionBy(*keys).orderBy("pos")
+    w = Window.partitionBy("doc_id").orderBy("pos")
     labeled = b.withColumn("label_raw", raw).withColumn(
         "prev_good", F.lag("label_raw").over(w) == "good").withColumn(
         "next_good", F.lead("label_raw").over(w) == "good")
@@ -201,7 +210,7 @@ def classify_blocks(pages: DataFrame, short_len: int = 40,
         .otherwise(F.col("label_raw"))
     )
     return labeled.select(
-        *keys, "pos", "text_len", "link_density",
+        "doc_id", "pos", "text_len", "link_density",
         "label_raw", final.alias("label"))
 
 

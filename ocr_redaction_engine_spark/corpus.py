@@ -390,32 +390,40 @@ def invalid_plan(i: int, every: int) -> str | None:
     return "bad_extension" if (i // every) % 2 == 0 else "missing_media"
 
 
+def plant_invalid(i: int, doc_pages: list, every: int):
+    """``invalid_plan`` applied to doc index ``i`` whose media pages, in
+    span order, are ``doc_pages``: bad_extension rewrites the FIRST page's
+    document_name suffix to '.pdf' (on a copy); missing_media drops that
+    page (dangling media_ref). A doc without media pages is left alone
+    (the validity check is about the media file). Returns (pages, reason),
+    reason None when nothing was planted."""
+    mode = invalid_plan(i, every)
+    if mode is None or not doc_pages:
+        return doc_pages, None
+    if mode == "bad_extension":
+        p0 = dict(doc_pages[0])
+        p0["document_name"] = p0["document_name"].rsplit(".", 1)[0] + ".pdf"
+        return [p0] + doc_pages[1:], mode
+    return doc_pages[1:], mode
+
+
 def corrupt_corpus_local(docs: list, pages: list, every: int = 13):
-    """Apply ``invalid_plan`` to a locally-built corpus. Mutates copies:
-    bad_extension rewrites the FIRST media page's document_name suffix to
-    '.pdf'; missing_media drops that page row (dangling media_ref). Docs
-    without media spans are skipped (nothing to invalidate — the validity
-    check is about the media file). Returns (docs, pages, expected) where
-    expected maps doc_id -> reason for docs actually corrupted."""
+    """Apply :func:`plant_invalid` to every document of a locally-built
+    corpus, without mutating its inputs. Returns (docs, pages, expected)
+    where expected maps doc_id -> reason for docs actually corrupted."""
     by_ref = {p["media_ref"]: p for p in pages}
-    expected, drop_refs = {}, set()
+    expected, planted = {}, {}
     for i, d in enumerate(docs):
-        mode = invalid_plan(i, every)
-        if mode is None:
+        if invalid_plan(i, every) is None:
             continue
-        media_refs = [s["media_ref"] for s in d["spans"] if s["kind"] == "media"]
-        if not media_refs:
-            continue
-        ref = media_refs[0]
-        if mode == "bad_extension":
-            page = by_ref[ref]
-            stem = page["document_name"].rsplit(".", 1)[0]
-            page["document_name"] = f"{stem}.pdf"
-        else:
-            drop_refs.add(ref)
-        expected[d["doc_id"]] = mode
-    if drop_refs:
-        pages = [p for p in pages if p["media_ref"] not in drop_refs]
+        refs = [s["media_ref"] for s in d["spans"] if s["kind"] == "media"]
+        kept, mode = plant_invalid(i, [by_ref[r] for r in refs], every)
+        if mode:
+            expected[d["doc_id"]] = mode
+            planted.update(dict.fromkeys(refs))          # None: dropped
+            planted.update((p["media_ref"], p) for p in kept)
+    pages = [q for q in (planted.get(p["media_ref"], p) for p in pages)
+             if q is not None]
     return docs, pages, expected
 
 
@@ -434,6 +442,25 @@ MEDIA_PAGES_DDL = (
 )
 
 
+def _doc_row(d: dict) -> tuple:
+    return (d["doc_id"],
+            [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in d["spans"]])
+
+
+def _page_row(p: dict) -> tuple:
+    return (p["media_ref"], p["document_name"], p["width"], p["height"], p["doc_type"],
+            [(w["x1"], w["y1"], w["x2"], w["y2"], w["text"]) for w in p["words"]],
+            p["lines"],
+            [(q["x1"], q["y1"], q["x2"], q["y2"]) for q in p["qr_boxes"]])
+
+
+def local_frames(spark, docs: list, pages: list):
+    """A locally-built corpus (``build_corpus_local`` dicts) as the
+    (documents, media_pages) DataFrames ``write_corpus`` would write."""
+    return (spark.createDataFrame([_doc_row(d) for d in docs], DOCUMENTS_DDL),
+            spark.createDataFrame([_page_row(p) for p in pages], MEDIA_PAGES_DDL))
+
+
 def write_corpus(spark, out_dir: str, n_docs: int, seed: int = 42, partitions: int = 32,
                  gen=gen_document, invalid_every: int = 0):
     """Distributed, deterministic corpus materialization: documents +
@@ -444,38 +471,19 @@ def write_corpus(spark, out_dir: str, n_docs: int, seed: int = 42, partitions: i
     golden corpora stay byte-identical)."""
     import pandas as pd
 
-    def _corrupt_pages(i, pages_i):
-        mode = invalid_plan(int(i), invalid_every)
-        if mode is None or not pages_i:
-            return pages_i
-        if mode == "bad_extension":
-            p0 = dict(pages_i[0])
-            p0["document_name"] = p0["document_name"].rsplit(".", 1)[0] + ".pdf"
-            return [p0] + pages_i[1:]
-        return pages_i[1:]   # missing_media: drop the first page row
-
     def gen_docs(iterator):
         for pdf in iterator:
-            rows = [gen(seed, int(i))[0] for i in pdf["id"]]
-            yield pd.DataFrame({
-                "doc_id": [r["doc_id"] for r in rows],
-                "spans": [[(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]] for r in rows],
-            })
+            yield pd.DataFrame([_doc_row(gen(seed, int(i))[0]) for i in pdf["id"]],
+                               columns=["doc_id", "spans"])
 
     page_cols = ["media_ref", "document_name", "width", "height", "doc_type",
                  "words", "lines", "qr_boxes"]
 
     def gen_pages(iterator):
         for pdf in iterator:
-            out = []
-            for i in pdf["id"]:
-                for p in _corrupt_pages(i, gen(seed, int(i))[1]):
-                    out.append((
-                        p["media_ref"], p["document_name"], p["width"], p["height"], p["doc_type"],
-                        [(w["x1"], w["y1"], w["x2"], w["y2"], w["text"]) for w in p["words"]],
-                        p["lines"],
-                        [(q["x1"], q["y1"], q["x2"], q["y2"]) for q in p["qr_boxes"]],
-                    ))
+            out = [_page_row(p) for i in pdf["id"]
+                   for p in plant_invalid(int(i), gen(seed, int(i))[1],
+                                          invalid_every)[0]]
             # built from the (maybe empty) row list, so a batch without
             # pages has object columns, which Arrow converts to any type
             yield pd.DataFrame(out, columns=page_cols)

@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import checkpoint as ckpt
+from .analytics.extraction import (BLOCK_SPLIT, anchor_chars, block_text,
+                                   strip_script_style)
 from .operators.explode import explode_spans
 
 
@@ -77,28 +79,17 @@ def _narrow_kind_spans(spans: DataFrame, cfg: ExtractionConfig) -> DataFrame:
 
     html: boilerplate strip per span — one span is one row, so DOM-block
     segmentation, scoring, keep-filter and ordered reassembly are array
-    higher-order functions on that row (semantics of the grouped
-    analytics/extraction.strip_boilerplate); a span whose every block is
-    dropped yields no row, like the oracle. pdf: two-column reading order —
-    the text is the naive y-then-x scan (token 2r = column 0 row r, token
-    2r+1 = column 1 row r), so even-index tokens come first, then odd.
+    higher-order functions on that row, built from the same DOM-block
+    expressions as the grouped analytics/extraction.strip_boilerplate; a
+    span whose every block is dropped yields no row, like the oracle.
+    pdf: two-column reading order — the text is the naive y-then-x scan
+    (token 2r = column 0 row r, token 2r+1 = column 1 row r), so
+    even-index tokens come first, then odd.
     text: already main content, passed through."""
-    clean = F.regexp_replace(
-        F.regexp_replace("text", r"(?s)<script[^>]*>.*?</script>", " "),
-        r"(?s)<style[^>]*>.*?</style>", " ")
-
-    def btext(b):
-        return F.trim(F.regexp_replace(F.regexp_replace(b, r"<[^>]*>", " "), r"\s+", " "))
-
-    def anchor_chars(b):
-        return F.aggregate(
-            F.regexp_extract_all(b, F.lit(r"<a [^>]*>([^<]*)</a>"), F.lit(1)),
-            F.lit(0).cast("long"), lambda a, x: a + F.length(x))
-
     kept = F.filter(
         F.transform(
-            F.split(clean, r"</p>|</div>|</nav>|</footer>"),
-            lambda b: F.struct(btext(b).alias("btext"),
+            F.split(strip_script_style("text"), BLOCK_SPLIT),
+            lambda b: F.struct(block_text(b).alias("btext"),
                                anchor_chars(b).alias("anchor_chars"))),
         lambda s: (F.length(s["btext"]) >= cfg.min_len)
         & ((s["anchor_chars"] / F.greatest(F.length(s["btext"]), F.lit(1)))

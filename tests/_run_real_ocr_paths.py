@@ -10,9 +10,10 @@ Run in its OWN process + SparkSession so the shared pytest session never
 sees the fakes (test_codec_stubs_raise must keep raising)."""
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ocr_redaction_engine_spark.session import get_spark  # noqa: E402
 

@@ -1,11 +1,10 @@
 """The bench pass times the production batch jobs.
 
-``bench.job_pass`` is the one pass every bench leg (and
-``tools/scaling_attrib.py``) times: one ``run_job`` / ``run_extraction_job``
-call with the job's default config on fresh out/ckpt dirs. Each call must
-run the job from scratch (a pass that resumed an earlier pass's checkpoint
-would time a no-op), write the same rows every time, and leave no output
-behind.
+``bench.job_pass`` is the one pass every bench leg times: one ``run_job``
+/ ``run_extraction_job`` call with the job's default config on fresh
+out/ckpt dirs. Each call must run the job from scratch (a pass that resumed
+an earlier pass's checkpoint would time a no-op), write the same rows every
+time, and leave no output behind.
 """
 
 from __future__ import annotations

@@ -9,15 +9,14 @@ from __future__ import annotations
 
 import pytest
 
+from ocr_redaction_engine_spark.corpus import local_frames
 from ocr_redaction_engine_spark.operators.explode import explode_spans, route_spans
-from tests.conftest import docs_to_df, pages_to_df
 
 
 @pytest.fixture(scope="module")
 def bucketed_tables(spark, local_corpus):
     docs, pages = local_corpus
-    docs_df = docs_to_df(spark, docs)
-    pages_df = pages_to_df(spark, pages)
+    docs_df, pages_df = local_frames(spark, docs, pages)
     _, media_spans = route_spans(explode_spans(docs_df))
     spark.sql("DROP TABLE IF EXISTS bkt_spans")
     spark.sql("DROP TABLE IF EXISTS bkt_pages")
@@ -48,8 +47,7 @@ def test_bucketed_join_plans_zero_exchange(spark, bucketed_tables):
 def test_bucketed_join_same_result_as_unbucketed(spark, bucketed_tables, local_corpus):
     t_spans, t_pages = bucketed_tables
     docs, pages = local_corpus
-    docs_df = docs_to_df(spark, docs)
-    pages_df = pages_to_df(spark, pages)
+    docs_df, pages_df = local_frames(spark, docs, pages)
     _, media_spans = route_spans(explode_spans(docs_df))
     expected = media_spans.join(pages_df, "media_ref").count()
     got = spark.table(t_spans).join(spark.table(t_pages), "media_ref").count()

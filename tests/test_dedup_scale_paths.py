@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import hashlib
 import re
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -51,7 +52,7 @@ def test_bucketed_cosine_equals_brute_force(spark):
     """The scale path (multi-table LSH candidates + exact verify) must return
     the same pairs as the O(N²) brute force on the near-dup corpus."""
     import sys
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
     from __spark_entry__ import _embeddings_with_rerawl
     from ocr_redaction_engine_spark.analytics.similarity import (
         cosine_pairs, cosine_pairs_bucketed)

@@ -14,8 +14,6 @@ from ocr_redaction_engine_spark.extraction_pipeline import (
     run_extraction_job,
 )
 
-from tests.conftest import docs_to_df, pages_to_df
-
 SEED, N_DOCS = 42, 160
 CFG = dict(n_buckets=8, bucket_group=2)
 
@@ -28,7 +26,7 @@ def web_corpus():
 @pytest.fixture(scope="module")
 def web_dfs(spark, web_corpus):
     docs, pages = web_corpus
-    return docs_to_df(spark, docs), pages_to_df(spark, pages)
+    return corpus.local_frames(spark, docs, pages)
 
 
 def test_span_sequence_equality_vs_oracle(spark, web_corpus, web_dfs):

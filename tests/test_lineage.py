@@ -27,7 +27,6 @@ from ocr_redaction_engine_spark import checkpoint, corpus, oracle
 from ocr_redaction_engine_spark.extraction_pipeline import (ExtractionConfig,
                                                             run_extraction_job)
 from ocr_redaction_engine_spark.pipeline import PipelineConfig, run_job
-from tests.conftest import docs_to_df, pages_to_df
 
 N_BUCKETS = 4
 REDACT_CFG = dict(n_buckets=N_BUCKETS, bucket_group=4, claimant="t",
@@ -46,8 +45,9 @@ MAX_JOBS_EXTRACTION_JOB = 8
 
 
 def _write(spark, base, docs, pages):
-    docs_to_df(spark, docs).write.parquet(f"{base}/documents")
-    pages_to_df(spark, pages).write.parquet(f"{base}/media_pages")
+    docs_df, pages_df = corpus.local_frames(spark, docs, pages)
+    docs_df.write.parquet(f"{base}/documents")
+    pages_df.write.parquet(f"{base}/media_pages")
     return f"{base}/documents", f"{base}/media_pages"
 
 

@@ -10,6 +10,8 @@
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -90,7 +92,7 @@ def test_no_query_plans_cartesian_or_bnl_join(spark):
     driver query plan — every join in the repo must be hash- or
     sort-merge-based (the shapes that survive 100x)."""
     import sys
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
     import __spark_entry__ as entry_mod
 
     sf_dir = "/root/testdata/sf0.001"

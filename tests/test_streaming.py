@@ -71,16 +71,13 @@ def test_incremental_drain_no_duplicates(spark, stream_dirs):
     # only the delta is processed. Their media pages land in the static
     # table first — without them the documents are INVALID (P1 missing_media)
     from ocr_redaction_engine_spark.corpus import gen_document
-    from tests.conftest import pages_to_df
+    from ocr_redaction_engine_spark.corpus import local_frames
     new_docs, new_pages = zip(*[gen_document(42, i)
                                 for i in range(200000, 200010)])
-    pages_to_df(spark, [p for ps in new_pages for p in ps]) \
-        .write.mode("append").parquet(f"{base}/input/media_pages")
-    from ocr_redaction_engine_spark.corpus import DOCUMENTS_DDL
-    spark.createDataFrame(
-        [(d["doc_id"], [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in d["spans"]])
-         for d in new_docs], schema=DOCUMENTS_DDL,
-    ).write.mode("append").parquet(f"{base}/input/documents")
+    docs_df, pages_df = local_frames(spark, new_docs,
+                                     [p for ps in new_pages for p in ps])
+    pages_df.write.mode("append").parquet(f"{base}/input/media_pages")
+    docs_df.write.mode("append").parquet(f"{base}/input/documents")
 
     streaming.stream_pipeline(
         spark, f"{base}/input/documents", f"{base}/input/media_pages",
@@ -263,16 +260,16 @@ def test_stream_extraction_matches_batch_and_resumes(spark, tmp_path):
     and a third drain (no new files) a no-op."""
     from ocr_redaction_engine_spark import corpus, oracle
     from ocr_redaction_engine_spark.streaming import stream_extraction
-    from tests.conftest import docs_to_df, pages_to_df
 
     base = str(tmp_path)
     docs, pages = corpus.build_web_corpus_local(7, 60)
     first, second = docs[:40], docs[40:]
     # media pages for BOTH halves are in the static table upfront (the
     # backing OCR store exists before documents referencing it arrive)
-    pages_to_df(spark, pages).write.parquet(f"{base}/in/media_pages")
+    first_df, pages_df = corpus.local_frames(spark, first, pages)
+    pages_df.write.parquet(f"{base}/in/media_pages")
 
-    docs_to_df(spark, first).write.mode("append").parquet(f"{base}/in/documents")
+    first_df.write.mode("append").parquet(f"{base}/in/documents")
     stream_extraction(spark, f"{base}/in/documents", f"{base}/in/media_pages",
                       f"{base}/out", f"{base}/ckpt")
     got1 = {(r["doc_id"], r["order"], r["kind"], r["text"], r["media_ref"])
@@ -280,7 +277,8 @@ def test_stream_extraction_matches_batch_and_resumes(spark, tmp_path):
     assert got1 == set(oracle.expected_extracted_spans(first, pages))
 
     # incremental arrival: new files appear, a rerun drains ONLY them
-    docs_to_df(spark, second).write.mode("append").parquet(f"{base}/in/documents")
+    corpus.local_frames(spark, second, [])[0] \
+        .write.mode("append").parquet(f"{base}/in/documents")
     stream_extraction(spark, f"{base}/in/documents", f"{base}/in/media_pages",
                       f"{base}/out", f"{base}/ckpt")
     got2 = {(r["doc_id"], r["order"], r["kind"], r["text"], r["media_ref"])
@@ -301,12 +299,12 @@ def test_stream_extraction_honours_config(spark, tmp_path):
     where streams started before the config argument existed keep theirs."""
     from ocr_redaction_engine_spark import corpus, oracle
     from ocr_redaction_engine_spark.extraction_pipeline import ExtractionConfig
-    from tests.conftest import docs_to_df, pages_to_df
 
     base = str(tmp_path)
     docs, pages = corpus.build_web_corpus_local(7, 40)
-    docs_to_df(spark, docs).write.parquet(f"{base}/in/documents")
-    pages_to_df(spark, pages).write.parquet(f"{base}/in/media_pages")
+    docs_df, pages_df = corpus.local_frames(spark, docs, pages)
+    docs_df.write.parquet(f"{base}/in/documents")
+    pages_df.write.parquet(f"{base}/in/media_pages")
     streaming.stream_extraction(spark, f"{base}/in/documents",
                                 f"{base}/in/media_pages", f"{base}/out",
                                 f"{base}/ckpt", config=ExtractionConfig(min_len=60))

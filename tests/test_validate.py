@@ -11,21 +11,6 @@ from ocr_redaction_engine_spark.operators.validate import (
 from ocr_redaction_engine_spark.pipeline import PipelineConfig, run_pipeline
 
 
-def _dfs(spark, docs, pages):
-    docs_df = spark.createDataFrame(
-        [(d["doc_id"], [(s["kind"], s["text"], s["media_ref"], s["offset"])
-                        for s in d["spans"]]) for d in docs],
-        schema=corpus.DOCUMENTS_DDL)
-    pages_df = spark.createDataFrame(
-        [(p["media_ref"], p["document_name"], p["width"], p["height"],
-          p["doc_type"],
-          [(w["x1"], w["y1"], w["x2"], w["y2"], w["text"]) for w in p["words"]],
-          p["lines"],
-          [(q["x1"], q["y1"], q["x2"], q["y2"]) for q in p["qr_boxes"]])
-         for p in pages], schema=corpus.MEDIA_PAGES_DDL)
-    return docs_df, pages_df
-
-
 def _corrupted(n=120, every=13):
     docs, pages = corpus.build_corpus_local(42, n)
     return corpus.corrupt_corpus_local(docs, pages, every=every)
@@ -34,7 +19,7 @@ def _corrupted(n=120, every=13):
 def test_invalid_documents_matches_oracle(spark):
     docs, pages, expected = _corrupted()
     assert expected, "planting rule must hit at this corpus size"
-    docs_df, pages_df = _dfs(spark, docs, pages)
+    docs_df, pages_df = corpus.local_frames(spark, docs, pages)
     got = {r["doc_id"]: (r["status"], r["task_result"], r["reason"])
            for r in invalid_documents(docs_df, pages_df).collect()}
     want = {doc_id: (st, tr, reason) for doc_id, st, tr, reason
@@ -49,7 +34,7 @@ def test_invalid_documents_matches_oracle(spark):
 
 def test_invalid_docs_excluded_from_every_sink(spark):
     docs, pages, expected = _corrupted()
-    docs_df, pages_df = _dfs(spark, docs, pages)
+    docs_df, pages_df = corpus.local_frames(spark, docs, pages)
     valid, invalid = split_valid(docs_df, pages_df)
     outs = run_pipeline(valid, pages_df)
     bad = set(expected)
@@ -64,7 +49,7 @@ def test_valid_docs_unaffected_by_routing(spark):
     """Span-sequence equality for the surviving documents: the run over the
     corrupted corpus must equal the oracle over the valid subset."""
     docs, pages, expected = _corrupted()
-    docs_df, pages_df = _dfs(spark, docs, pages)
+    docs_df, pages_df = corpus.local_frames(spark, docs, pages)
     outs = run_pipeline(split_valid(docs_df, pages_df)[0], pages_df)
     got = {(r["doc_id"], r["order"], r["kind"], r["text"], r["media_ref"])
            for r in outs["spans"].collect()}
@@ -99,7 +84,7 @@ def test_invalid_webhook_payloads(spark):
     from ocr_redaction_engine_spark.operators.notify import notify_results
 
     docs, pages, expected = _corrupted()
-    docs_df, pages_df = _dfs(spark, docs, pages)
+    docs_df, pages_df = corpus.local_frames(spark, docs, pages)
     _, invalid = validity_route(docs_df, pages_df)
 
     sent = spark.sparkContext.accumulator(0)
@@ -141,3 +126,17 @@ def test_run_job_writes_invalid_sink(spark, tmp_path):
     for t in ("spans", "redactions", "values"):
         df = spark.read.parquet(f"{base}/out/{t}")
         assert df.where(F.col("doc_id").isin(*bad)).count() == 0
+
+
+def test_write_corpus_plants_pages_like_the_local_rule(spark, tmp_path):
+    """write_corpus and corrupt_corpus_local plant invalid documents through
+    one per-document rule: their media_pages rows agree on (media_ref,
+    document_name), both failure modes included."""
+    base = str(tmp_path)
+    corpus.write_corpus(spark, base, n_docs=120, seed=42, partitions=4,
+                        invalid_every=13)
+    got = sorted((r["media_ref"], r["document_name"]) for r in
+                 spark.read.parquet(f"{base}/media_pages").collect())
+    _, pages, expected = _corrupted(120, 13)
+    assert set(expected.values()) == {"bad_extension", "missing_media"}
+    assert got == sorted((p["media_ref"], p["document_name"]) for p in pages)

@@ -10,6 +10,7 @@ the same bytes and file names for every page.
 from __future__ import annotations
 
 import xml.etree.ElementTree as ET
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -104,7 +105,7 @@ def test_render_masks_smoke(tmp_path):
     """Debug renderer (ocrr_testing parity): a synthetic page renders to a
     valid P6 PPM with at least one black redaction fill."""
     import sys
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
     import render_masks
     from ocr_redaction_engine_spark import corpus
 

@@ -12,9 +12,11 @@ Usage: python tools/plan_audit.py [sf_dir]
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
@@ -72,7 +74,7 @@ summary = {
     "max_exchanges": max((r.get("exchanges", 0) for r in report.values()),
                          default=0),
 }
-with open("/root/repo/PLAN_AUDIT.json", "w") as f:
+with open(os.path.join(ROOT, "PLAN_AUDIT.json"), "w") as f:
     json.dump({"summary": summary, "plans": report}, f, indent=1, sort_keys=True)
 print(json.dumps(summary))
 spark.stop()

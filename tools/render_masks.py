@@ -16,9 +16,10 @@ Usage:
 """
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ocr_redaction_engine_spark import corpus, kernel
 

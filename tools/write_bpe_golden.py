@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 from collections import Counter
 
 import duckdb
@@ -24,7 +25,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 SF = "/root/testdata/sf0.01/documents.parquet"
-OUT = "/root/repo/tests/golden/bpe_pieces.parquet"
+OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                   "tests", "golden", "bpe_pieces.parquet")
 N_MERGES = 20
 
 

@@ -9,15 +9,17 @@ pipeline under test. Rerun after any intentional semantics change:
 
     python tools/write_pipeline_golden.py
 """
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from ocr_redaction_engine_spark import corpus, kernel, oracle
 from ocr_redaction_engine_spark.session import get_spark
 
 SEED, N_DOCS = 42, 150
-OUT = "/root/repo/tests/golden"
+OUT = os.path.join(ROOT, "tests", "golden")
 
 SPANS_DDL = "doc_id string, order int, kind string, text string, media_ref string"
 INVALID_DDL = "doc_id string, status string, task_result string, reason string"
