@@ -15,7 +15,8 @@ an append-only parquet/Iceberg lineage table keyed by a stable hash bucket of
                       given a claim step, buckets another driver won (S2).
 * Completion        = one appended row per bucket after its output commit
                       (write order: data first, lineage second → a crash
-                      re-processes at most the in-flight bucket group, and the
+                      re-processes at most the in-flight bucket groups: two
+                      when unclaimed, one with a claim step — and the
                       bucket-partitioned dynamic overwrite makes reruns
                       idempotent).
 * Metrics           = per-bucket aggregates (A8) — queryable lineage instead
@@ -36,9 +37,11 @@ at 10^12 documents.
 from __future__ import annotations
 
 import logging
+import queue
 import time
 from typing import Callable
 
+from pyspark import InheritableThread
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -170,36 +173,75 @@ def run_waves(spark: SparkSession, documents: DataFrame, ckpt_dir: str,
     dropping any it lost meanwhile. The rest go in waves of
     ``bucket_group``: ``write_wave(group, wave_docs)`` writes the wave's
     sinks (:func:`write_buckets`) and returns the :class:`BucketMetrics`
-    observed on them; the lineage rows are appended only after it returns,
-    so a crash re-processes at most that wave."""
+    observed on them.
+
+    Each wave runs on its own thread, which inherits the caller's Spark
+    local properties (job group, description, scheduler pool). Without a
+    claim step two waves are in flight: while one wave's jobs run, the next
+    wave plans and queues its own, and the caller's thread appends a wave's
+    lineage rows as soon as its ``write_wave`` returns (completion order),
+    so a crash re-processes at most the two in-flight waves. ``wall_sec``
+    is each wave's own wall, so summed over waves it can exceed the run's.
+    With a claim step one wave is in flight, so each lease renewal comes
+    right before its wave. After the first failure no wave starts and no
+    lineage row is appended; the in-flight wave is waited for, so no Spark
+    job outlives the call, and the first error is re-raised."""
     done = completed_buckets(spark, ckpt_dir)
     remaining = sorted(set(range(n_buckets)) - done)
     stats = {"buckets_done_before": len(done), "waves": 0,
              "buckets_skipped_claimed": 0}
-    while remaining:
-        if claim is not None:
-            # the first call claims; each later one renews the lease (a
-            # fresh claim row keeps it live for another TTL)
-            won = claim(remaining)
-            if newly_lost := [b for b in remaining if b not in won]:
-                _log.warning(
-                    "skipping %d bucket(s) claimed by other drivers and not "
-                    "yet done: %s — if the claimant crashed, rerun with "
-                    "claim_ttl_sec set to reap the stale leases",
-                    len(newly_lost), newly_lost)
-                stats["buckets_skipped_claimed"] += len(newly_lost)
-            remaining = [b for b in remaining if b in won]
-            if not remaining:
-                break
-        group, remaining = remaining[:bucket_group], remaining[bucket_group:]
+    finished = queue.SimpleQueue()
+
+    def wave(group):
         t0 = time.time()
-        observed = write_wave(
-            group, documents.filter(bucket_col(n_buckets).isin(group)))
-        # a module-global lookup: a patched checkpoint.append_checkpoint
-        # (how the kill/resume tests crash a run) takes effect
-        append_checkpoint(spark, ckpt_dir, lineage_rows(
-            group, time.time() - t0, *observed))
-        stats["waves"] += 1
+        try:
+            observed = write_wave(
+                group, documents.filter(bucket_col(n_buckets).isin(group)))
+        except BaseException as e:   # re-raised on the caller's thread
+            finished.put((group, 0.0, (), e))
+        else:
+            finished.put((group, time.time() - t0, observed, None))
+
+    depth = 2 if claim is None else 1
+    in_flight, error = 0, None
+    while remaining or in_flight:
+        if remaining and in_flight < depth:
+            if claim is not None:
+                # the first call claims; each later one renews the lease (a
+                # fresh claim row keeps it live for another TTL)
+                won = claim(remaining)
+                if newly_lost := [b for b in remaining if b not in won]:
+                    _log.warning(
+                        "skipping %d bucket(s) claimed by other drivers and "
+                        "not yet done: %s — if the claimant crashed, rerun "
+                        "with claim_ttl_sec set to reap the stale leases",
+                        len(newly_lost), newly_lost)
+                    stats["buckets_skipped_claimed"] += len(newly_lost)
+                remaining = [b for b in remaining if b in won]
+                if not remaining:
+                    continue
+            group, remaining = remaining[:bucket_group], remaining[bucket_group:]
+            InheritableThread(wave, args=(group,), session=spark).start()
+            in_flight += 1
+            continue
+        group, wall, observed, wave_error = finished.get()
+        in_flight -= 1
+        if error is not None:
+            continue   # draining after a failure: record nothing
+        if wave_error is None:
+            try:
+                # a module-global lookup: a patched
+                # checkpoint.append_checkpoint (how the kill/resume tests
+                # crash a run) takes effect
+                append_checkpoint(spark, ckpt_dir,
+                                  lineage_rows(group, wall, *observed))
+                stats["waves"] += 1
+            except BaseException as e:   # re-raised once no wave is left
+                wave_error = e
+        if wave_error is not None:
+            error, remaining = wave_error, []   # start no further wave
+    if error is not None:
+        raise error
     stats["buckets_total"] = n_buckets
     return stats
 

@@ -21,10 +21,10 @@ the P1 validity split (INVALID_DOCUMENT) is ``validate.split_valid``, which
 
 from __future__ import annotations
 
-import threading
 from dataclasses import dataclass
 from typing import Callable
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -145,10 +145,11 @@ def run_job(spark: SparkSession, documents_path: str, media_pages_path: str,
             try:
                 ckpt.write_buckets(outs["spans"], cfg.n_buckets,
                                    f"{out_dir}/spans", spans_m)
-            except BaseException as e:   # re-raised on the main thread
+            except BaseException as e:   # re-raised after the join below
                 spans_err.append(e)
 
-        spans_t = threading.Thread(target=_write_spans)
+        # the caller's job group, description and pool carry to its jobs
+        spans_t = InheritableThread(_write_spans, session=spark)
         spans_t.start()
         try:
             ckpt.write_buckets(outs["redactions"], cfg.n_buckets,

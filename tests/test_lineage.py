@@ -140,8 +140,8 @@ def test_extraction_lineage_matches_outputs(spark, extract_input, tmp_path):
 
 def _jobs(spark, run) -> int:
     """Spark jobs submitted while ``run()`` runs, on any driver thread (the
-    spans sink's thread included: it carries no job group, like the
-    caller)."""
+    wave and spans sink threads included: they carry the caller's job
+    group, which is none)."""
     sc = spark.sparkContext
     bus = sc._jsc.sc().listenerBus()
     bus.waitUntilEmpty()
@@ -166,6 +166,30 @@ def test_jobs_leave_session_overwrite_mode_alone(spark, redact_input,
         assert spark.conf.get(key) == "STATIC"
     finally:
         spark.conf.set(key, before)
+
+
+def test_jobs_run_in_the_callers_job_group(spark, redact_input,
+                                           extract_input, tmp_path):
+    """Every Spark job both batch jobs submit runs in the caller's job group,
+    the jobs of the wave threads and of the spans sink thread included:
+    two waves each, and run_job without a claimant (two waves in flight)."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup())
+    sc.setJobGroup("caller", "jobs run on the caller's behalf")
+    try:
+        run_job(spark, *redact_input, str(tmp_path / "out_r"),
+                str(tmp_path / "ckpt_r"),
+                PipelineConfig(n_buckets=N_BUCKETS, bucket_group=2))
+        run_extraction_job(spark, *extract_input, str(tmp_path / "out_x"),
+                           str(tmp_path / "ckpt_x"),
+                           ExtractionConfig(**EXTRACT_CFG))
+    finally:
+        sc._jsc.clearJobGroup()
+    bus.waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup("caller")
+    assert set(sc.statusTracker().getJobIdsForGroup()) - ungrouped == set()
 
 
 def test_warm_run_job_spark_jobs(spark, redact_input, tmp_path):
