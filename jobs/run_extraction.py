@@ -36,12 +36,15 @@ def main():
     ap.add_argument("--media-pages", required=True, help="media pages (OCR backing) table path")
     ap.add_argument("--out", required=True, help="output root (main_spans/)")
     ap.add_argument("--checkpoint", required=True, help="checkpoint/lineage table path")
-    ap.add_argument("--min-len", type=int, default=15,
+    ap.add_argument("--min-len", type=int, default=ExtractionConfig.min_len,
                     help="content-block keep threshold (chars)")
-    ap.add_argument("--max-link-density", type=float, default=0.2,
+    ap.add_argument("--max-link-density", type=float,
+                    default=ExtractionConfig.max_link_density,
                     help="boilerplate threshold (anchor chars / text chars)")
-    ap.add_argument("--buckets", type=int, default=32, help="resume granularity")
-    ap.add_argument("--bucket-group", type=int, default=8, help="buckets per commit wave")
+    ap.add_argument("--buckets", type=int, default=ExtractionConfig.n_buckets,
+                    help="resume granularity")
+    ap.add_argument("--bucket-group", type=int, default=ExtractionConfig.bucket_group,
+                    help="buckets per commit wave")
     args = ap.parse_args()
 
     spark = get_spark("main-content-extraction")

@@ -35,10 +35,12 @@ def main():
     ap.add_argument("--media-pages", required=True, help="media pages (OCR backing) table path")
     ap.add_argument("--out", required=True, help="output root (spans/ redactions/ values/)")
     ap.add_argument("--checkpoint", required=True, help="checkpoint/lineage table path")
-    ap.add_argument("--level", type=int, default=1, choices=(0, 1),
+    ap.add_argument("--level", type=int, default=PipelineConfig.level, choices=(0, 1),
                     help="redaction level (settings/configuration.ini:10-13 analog)")
-    ap.add_argument("--buckets", type=int, default=32, help="resume granularity")
-    ap.add_argument("--bucket-group", type=int, default=8, help="buckets per commit wave")
+    ap.add_argument("--buckets", type=int, default=PipelineConfig.n_buckets,
+                    help="resume granularity")
+    ap.add_argument("--bucket-group", type=int, default=PipelineConfig.bucket_group,
+                    help="buckets per commit wave")
     ap.add_argument("--places-file", default=None,
                     help="newline-separated address dictionary (e.g. the "
                          "reference's full 1,391-entry helper/places.py list "

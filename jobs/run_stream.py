@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import argparse
 
+from ocr_redaction_engine_spark.pipeline import PipelineConfig
 from ocr_redaction_engine_spark.session import get_spark
 from ocr_redaction_engine_spark.streaming import stream_pipeline
 
@@ -34,7 +35,7 @@ def main():
     ap.add_argument("--media-pages", required=True)
     ap.add_argument("--out", required=True)
     ap.add_argument("--checkpoint", required=True)
-    ap.add_argument("--level", type=int, default=1, choices=(0, 1))
+    ap.add_argument("--level", type=int, default=PipelineConfig.level, choices=(0, 1))
     args = ap.parse_args()
 
     spark = get_spark("ocrr-redaction-stream")

@@ -25,6 +25,10 @@ from pyspark.sql import functions as F
 from .text import gram_fp64_expr, md5_long, normalize_ccnet, with_tokens
 
 N_BANDS = 4
+#: SimHash signature width (fits a signed long) and the width of each of
+#: the 4 bands its near-dup candidates join on.
+SIMHASH_BITS = 60
+SIMHASH_BAND_BITS = 15
 
 
 def exact_dupes(docs: DataFrame) -> DataFrame:
@@ -149,14 +153,13 @@ def jaccard_pairs(docs: DataFrame, threshold: float = 0.5,
 SIMHASH_SCHEMA = "doc_id long, simhash long"
 
 
-def simhash(docs: DataFrame, bits: int = 60,
-            min_partitions: int | None = None) -> DataFrame:
+def simhash(docs: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """SimHash signatures via an Arrow-batched numpy kernel. 60 bits keeps
     the value in a signed long; near-dup candidates then join on bit-band
     substrings of the signature.
 
     Per-token hash = little-endian int64 of md5(token)[:8] shifted down to
-    ``bits`` bits — exactly DuckDB's ``md5_number_upper(token) >> 4``, so the
+    60 bits — exactly DuckDB's ``md5_number_upper(token) >> 4``, so the
     signature is reproducible in the SQL oracle. Votes are a (tokens × bits)
     numpy matrix summed per document — no per-bit Python loop.
     """
@@ -165,7 +168,7 @@ def simhash(docs: DataFrame, bits: int = 60,
     import numpy as np
     import pandas as pd
 
-    shifts = np.arange(bits, dtype=np.uint64)
+    shifts = np.arange(SIMHASH_BITS, dtype=np.uint64)
     weights = (np.uint64(1) << shifts).astype(np.uint64)
 
     # spread the Python hashing across cores when the scan arrives narrow
@@ -189,14 +192,15 @@ def simhash(docs: DataFrame, bits: int = 60,
             all_digs = b"".join(
                 hashlib.md5(t.encode()).digest()[:8]
                 for toks in tok_sets for t in toks)
-            hashes = np.frombuffer(all_digs, dtype="<u8") >> np.uint64(64 - bits)
-            # (n_tokens, bits) sign matrix: +1 for a set bit, -1 otherwise
+            hashes = (np.frombuffer(all_digs, dtype="<u8")
+                      >> np.uint64(64 - SIMHASH_BITS))
+            # (n_tokens, 60) sign matrix: +1 for a set bit, -1 otherwise
             signs = (((hashes[:, None] >> shifts[None, :]) & np.uint64(1))
                      .astype(np.int32) * 2 - 1)
             sigs, off = [], 0
             for toks in tok_sets:
                 votes = signs[off:off + len(toks)].sum(axis=0) if toks else \
-                    np.zeros(bits, dtype=np.int64)
+                    np.zeros(SIMHASH_BITS, dtype=np.int64)
                 off += len(toks)
                 sigs.append(int(weights[votes > 0].sum()))
             yield pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"),
@@ -205,18 +209,17 @@ def simhash(docs: DataFrame, bits: int = 60,
     return docs.mapInPandas(run, schema=SIMHASH_SCHEMA)
 
 
-def simhash_pairs(docs: DataFrame, max_hamming: int = 6,
-                  band_bits: int = 15) -> DataFrame:
+def simhash_pairs(docs: DataFrame, max_hamming: int = 6) -> DataFrame:
     """SimHash near-dup pairs: band candidates VERIFIED by exact Hamming
     distance ``bit_count(sig_a XOR sig_b) <= max_hamming`` — the JVM
     bit_count runs only on band collisions, completing the
     candidates→verify shape of the MinHash/Jaccard family."""
     sigs = simhash(docs)
-    mask = (1 << band_bits) - 1
+    mask = (1 << SIMHASH_BAND_BITS) - 1
     melted = sigs.select(
         "doc_id",
         F.posexplode(F.array(*[
-            F.shiftright(F.col("simhash"), b * band_bits).bitwiseAND(F.lit(mask))
+            F.shiftright(F.col("simhash"), b * SIMHASH_BAND_BITS).bitwiseAND(F.lit(mask))
             for b in range(4)
         ])).alias("band", "band_val"),
     )
@@ -497,8 +500,7 @@ def bloom_bitmap(docs: DataFrame, n_hashes: int = BLOOM_K,
     )
 
 
-def bloom_probe(base_docs: DataFrame, probe_docs: DataFrame,
-                n_hashes: int = BLOOM_K, m_bits: int = BLOOM_M) -> DataFrame:
+def bloom_probe(base_docs: DataFrame, probe_docs: DataFrame) -> DataFrame:
     """Probe a new document batch against the Bloom bitmap of an existing
     corpus: (doc_id, hits, maybe_seen). ``maybe_seen`` has Bloom semantics —
     no false negatives (an exact duplicate of a base doc is ALWAYS flagged),
@@ -508,13 +510,13 @@ def bloom_probe(base_docs: DataFrame, probe_docs: DataFrame,
     against the ≤m/64-row bitmap, then a per-doc bool_and — map-only from
     the probe side's perspective, so a 100 TB daily crawl probes at scan
     speed."""
-    bitmap = bloom_bitmap(base_docs, n_hashes, m_bits)
+    bitmap = bloom_bitmap(base_docs)
     fp = with_tokens(probe_docs).select(
         "doc_id", F.md5(F.concat_ws(" ", "tokens")).alias("fp"))
     pos = fp.select(
         "doc_id",
-        F.explode(F.array(*[_bloom_pos(F.col("fp"), i, m_bits)
-                            for i in range(n_hashes)])).alias("pos"))
+        F.explode(F.array(*[_bloom_pos(F.col("fp"), i, BLOOM_M)
+                            for i in range(BLOOM_K)])).alias("pos"))
     probed = (
         pos.withColumn("word", (F.col("pos") / 64).cast("long"))
         .withColumn("bit", (F.col("pos") % 64).cast("int"))
@@ -530,16 +532,16 @@ def bloom_probe(base_docs: DataFrame, probe_docs: DataFrame,
     )
 
 
-def simhash_candidates(docs: DataFrame, band_bits: int = 15) -> DataFrame:
+def simhash_candidates(docs: DataFrame) -> DataFrame:
     """Hamming-neighbour candidates: equal value in any of the 4 15-bit bands
     (detects signatures within small Hamming distance). Bands melt to rows →
     ONE self-equi-join on (band, band_val), same shape as candidate_pairs."""
     sigs = simhash(docs)
-    mask = (1 << band_bits) - 1
+    mask = (1 << SIMHASH_BAND_BITS) - 1
     melted = sigs.select(
         "doc_id",
         F.posexplode(F.array(*[
-            F.shiftright(F.col("simhash"), b * band_bits).bitwiseAND(F.lit(mask))
+            F.shiftright(F.col("simhash"), b * SIMHASH_BAND_BITS).bitwiseAND(F.lit(mask))
             for b in range(4)
         ])).alias("band", "band_val"),
     )
@@ -676,7 +678,6 @@ def host_boilerplate_strip(docs: DataFrame, min_docs: int = 2,
 
 
 def minhash_decontaminate(train: DataFrame, eval_docs: DataFrame,
-                          n_bands: int = N_BANDS,
                           threshold: float = 0.5,
                           shingle_n: int | None = None) -> DataFrame:
     """Fuzzy train-vs-eval decontamination: MinHash band signatures computed
@@ -699,9 +700,9 @@ def minhash_decontaminate(train: DataFrame, eval_docs: DataFrame,
     collision envelope — see [[doc_tokens_distinct]]).
     """
     def melted(docs: DataFrame, alias: str) -> DataFrame:
-        sigs = minhash_signatures(docs, n_bands, shingle_n)
+        sigs = minhash_signatures(docs, N_BANDS, shingle_n)
         return _melt_bands(sigs.withColumnRenamed("doc_id", alias),
-                           alias, n_bands)
+                           alias, N_BANDS)
 
     cand = (
         melted(train, "t").join(F.broadcast(melted(eval_docs, "e")),
@@ -873,15 +874,13 @@ def prefix_jaccard_join(docs: DataFrame, t_num: int = 4, t_den: int = 5) -> Data
     )
 
 
-def incremental_dedup(old_docs: DataFrame, new_docs: DataFrame,
-                      n_bands: int = N_BANDS,
-                      threshold: float = 0.5, n: int = 3) -> DataFrame:
+def incremental_dedup(old_docs: DataFrame, new_docs: DataFrame) -> DataFrame:
     """Cross-snapshot incremental near-dedup: decide keep/drop for every doc
     of a NEW crawl batch against an already-deduped corpus — the production
     shape for recurring crawls, where you never re-dedup the accumulated
     100 TB, only the delta.
 
-    Similarity is over n-gram SHINGLE sets (RefinedWeb/GPT-3 dedup
+    Similarity is over 3-gram SHINGLE sets (RefinedWeb/GPT-3 dedup
     practice), not unigram tokens: template-correlated corpora share enough
     individual words that single-hash unigram bands collide for nearly
     every cross pair (measured on the sf0.1 test corpus: unigram banding
@@ -905,13 +904,13 @@ def incremental_dedup(old_docs: DataFrame, new_docs: DataFrame,
         signature/shingle tables are persisted across batches and even
         those two passes amortize away.
       * new-vs-new: the batch-sized banded self-join.
-    Candidates verify with exact shingle-set Jaccard >= threshold (rounded
+    Candidates verify with exact shingle-set Jaccard >= 0.5 (rounded
     to 6dp first, the cross-engine rule). A new doc is dropped if it
     near-duplicates ANY old doc or any LOWER-id verified new doc (the
     first-occurrence rule — pairwise, not transitive; the cluster-exact
     variant is [[apply_dedup]], which this deliberately avoids because an
     iterative CC over the delta is not needed to keep a batch idempotent).
-    Docs shorter than n tokens have no shingles and trivially keep.
+    Docs shorter than 3 tokens have no shingles and trivially keep.
 
     Returns one row per new doc:
     (doc_id, n_old_dups, first_new_dup, keep) — zero/NULL-filled so the
@@ -921,7 +920,7 @@ def incremental_dedup(old_docs: DataFrame, new_docs: DataFrame,
         return (
             with_tokens(docs)
             .select(F.col("doc_id").alias(alias),
-                    F.explode(F.array_distinct(gram_fp64_expr(n))).alias("gram"))
+                    F.explode(F.array_distinct(gram_fp64_expr(3))).alias("gram"))
         )
 
     def sized_sigs(sh: DataFrame, alias: str, sz_alias: str) -> DataFrame:
@@ -932,7 +931,7 @@ def incremental_dedup(old_docs: DataFrame, new_docs: DataFrame,
         # doc_tokens_distinct's shingle path and the DuckDB oracle.
         units = sh.select(alias, F.col("gram").cast("string").alias("token"))
         return units.groupBy(alias).agg(
-            *_band_sig_aggs(n_bands), F.count("*").alias(sz_alias))
+            *_band_sig_aggs(N_BANDS), F.count("*").alias(sz_alias))
 
     t_old = shingles(old_docs, "o")
     # The batch side feeds both candidate lanes and both verifies; persist it
@@ -959,12 +958,12 @@ def incremental_dedup(old_docs: DataFrame, new_docs: DataFrame,
             .withColumn("jaccard", F.round(
                 F.col("inter") /
                 (F.col(szl.columns[1]) + F.col(szr.columns[1]) - F.col("inter")), 6))
-            .filter(F.col("jaccard") >= threshold)
+            .filter(F.col("jaccard") >= 0.5)
         )
 
-    new_m = _melt_bands(sig_new, "n", n_bands).persist()
+    new_m = _melt_bands(sig_new, "n", N_BANDS).persist()
     cand_old = (
-        _melt_bands(sig_old, "o", n_bands)
+        _melt_bands(sig_old, "o", N_BANDS)
         .join(F.broadcast(new_m), ["band", "sig"])
         .select("n", "o").distinct()
     )
@@ -1175,7 +1174,6 @@ def banding_eval(docs: DataFrame, threshold: float = 0.8,
 
 
 def onion_funnel(docs: DataFrame, jaccard_t: float = 0.8,
-                 n_bands: int = N_BANDS,
                  shingle_n: int | None = 3) -> DataFrame:
     """Layered ("onion") dedup rejection funnel — the removed-per-layer
     table published pipelines report for their dedup stack (cheap layers
@@ -1225,7 +1223,7 @@ def onion_funnel(docs: DataFrame, jaccard_t: float = 0.8,
     s2 = (flagged.where(F.col("stage").isNull())
           .select("doc_id", "text").persist())
     try:
-        pairs = jaccard_pairs(s2, threshold=jaccard_t, n_bands=n_bands,
+        pairs = jaccard_pairs(s2, threshold=jaccard_t, n_bands=N_BANDS,
                               shingle_n=shingle_n)
         r3_n = pairs.select(F.col("b").alias("doc_id")).distinct().count()
 

@@ -116,9 +116,7 @@ def html_blocks(pages: DataFrame) -> DataFrame:
     )
 
 
-def strip_boilerplate(
-    pages: DataFrame, min_len: int = 40, max_link_density: float = 0.2,
-) -> DataFrame:
+def strip_boilerplate(pages: DataFrame) -> DataFrame:
     """Keep content blocks (long enough, link-sparse) and reassemble the
     main text in original DOM order — the boilerplate-strip operator.
 
@@ -129,7 +127,7 @@ def strip_boilerplate(
     natural key."""
     b = html_blocks(pages)
     kept = b.filter(
-        (F.col("text_len") >= min_len) & (F.col("link_density") <= max_link_density)
+        (F.col("text_len") >= 40) & (F.col("link_density") <= 0.2)
     )
     return kept.groupBy("doc_id").agg(
         F.concat_ws(
@@ -165,8 +163,7 @@ def dom_main_block(pages: DataFrame) -> DataFrame:
     )
 
 
-def classify_blocks(pages: DataFrame, short_len: int = 40,
-                    good_len: int = 80, max_link_density: float = 0.2) -> DataFrame:
+def classify_blocks(pages: DataFrame) -> DataFrame:
     """jusText-style context-sensitive block classification (Pomikálek
     2011): a raw per-block label from length + link density, then a
     neighbor-smoothing pass — the step the plain ``strip_boilerplate``
@@ -174,13 +171,12 @@ def classify_blocks(pages: DataFrame, short_len: int = 40,
     company it keeps (a short caption inside an article is content; the
     same block between two nav bars is chrome).
 
-    Raw labels: ``bad`` (link_density > ``max_link_density``), ``good``
-    (text_len ≥ ``good_len``), ``near`` (≥ ``short_len``), else
-    ``short``. Smoothing, deliberately simplified to ADJACENT blocks so
-    the rule is engine-portable and O(1) per block: ``near`` is promoted
-    to good when either neighbor is raw-good; ``short`` only when BOTH
-    neighbors are (a bare fragment needs stronger evidence than a
-    near-paragraph); ``bad`` is never promoted.
+    Raw labels: ``bad`` (link_density > 0.2), ``good`` (text_len ≥ 80),
+    ``near`` (≥ 40), else ``short``. Smoothing, deliberately simplified
+    to ADJACENT blocks so the rule is engine-portable and O(1) per block:
+    ``near`` is promoted to good when either neighbor is raw-good;
+    ``short`` only when BOTH neighbors are (a bare fragment needs stronger
+    evidence than a near-paragraph); ``bad`` is never promoted.
 
     One window per document ordered by block position — per-doc block
     counts are bounded by page size, so the partition key is skew-free
@@ -190,9 +186,9 @@ def classify_blocks(pages: DataFrame, short_len: int = 40,
     """
     b = html_blocks(pages)
     raw = (
-        F.when(F.col("link_density") > max_link_density, F.lit("bad"))
-        .when(F.col("text_len") >= good_len, F.lit("good"))
-        .when(F.col("text_len") >= short_len, F.lit("near"))
+        F.when(F.col("link_density") > 0.2, F.lit("bad"))
+        .when(F.col("text_len") >= 80, F.lit("good"))
+        .when(F.col("text_len") >= 40, F.lit("near"))
         .otherwise(F.lit("short"))
     )
     w = Window.partitionBy("doc_id").orderBy("pos")
@@ -214,16 +210,14 @@ def classify_blocks(pages: DataFrame, short_len: int = 40,
         "label_raw", final.alias("label"))
 
 
-def extraction_eval(pages: DataFrame, truth_pos: tuple[int, ...] = (1, 2),
-                    short_len: int = 40, good_len: int = 80,
-                    max_link_density: float = 0.2) -> DataFrame:
+def extraction_eval(pages: DataFrame) -> DataFrame:
     """Extraction-quality evaluation: block-level confusion of the
     [[classify_blocks]] content classifier against constructed ground
     truth, reduced to corpus micro precision/recall/F1.
 
     The evaluation corpus is self-labeling: [[as_html]] builds each page
-    deterministically, so the blocks at ``truth_pos`` (the two <p> halves
-    of ``documents.text``; positions 1 and 2 after the block split) are
+    deterministically, so the blocks at positions 1 and 2 after the block
+    split (the two <p> halves of ``documents.text``) are
     content BY CONSTRUCTION and everything else (head junk, nav, sidebar,
     footer) is boilerplate — the cleaneval-style labeled-page setup
     (Pomikálek 2011 evaluates jusText exactly this way), with labels
@@ -249,10 +243,7 @@ def extraction_eval(pages: DataFrame, truth_pos: tuple[int, ...] = (1, 2),
     # detail: one truth/pred definition lives in extraction_confusion, and
     # these tp/fp/fn/tn are sums over its <=16 bounded cells — the summary
     # cannot de-sync from its own detail view.
-    cells = extraction_confusion(
-        pages, truth_pos=truth_pos, short_len=short_len, good_len=good_len,
-        max_link_density=max_link_density,
-    )
+    cells = extraction_confusion(pages)
     pred = F.col("label") == "good"
     truth = F.col("is_content")
 
@@ -280,9 +271,7 @@ def extraction_eval(pages: DataFrame, truth_pos: tuple[int, ...] = (1, 2),
     )
 
 
-def extraction_confusion(pages: DataFrame, truth_pos: tuple[int, ...] = (1, 2),
-                         short_len: int = 40, good_len: int = 80,
-                         max_link_density: float = 0.2) -> DataFrame:
+def extraction_confusion(pages: DataFrame) -> DataFrame:
     """Confusion DETAIL for the extraction evaluator: block counts by
     (label_raw, label, is_content) — the long-form view behind
     [[extraction_eval]]'s scalar summary, which is what you read to see
@@ -294,11 +283,8 @@ def extraction_confusion(pages: DataFrame, truth_pos: tuple[int, ...] = (1, 2),
     final × 2 truth), so the hash agg combines map-side and the exchange
     carries at most 16 rows per task at any corpus size — no skew surface.
     """
-    labeled = classify_blocks(
-        pages, short_len=short_len, good_len=good_len,
-        max_link_density=max_link_density,
-    )
-    truth = (F.col("pos").isin(list(truth_pos)) & (F.col("text_len") > 0))
+    labeled = classify_blocks(pages)
+    truth = (F.col("pos").isin([1, 2]) & (F.col("text_len") > 0))
     return (
         labeled.withColumn("is_content", truth)
         .groupBy("label_raw", "label", "is_content")
@@ -306,7 +292,7 @@ def extraction_confusion(pages: DataFrame, truth_pos: tuple[int, ...] = (1, 2),
     )
 
 
-def reading_order(docs: DataFrame, max_tokens: int = 24) -> DataFrame:
+def reading_order(docs: DataFrame) -> DataFrame:
     """PDF/layout reading-order recovery for a two-column page.
 
     Real PDF parsing is environment-gated here (no pdf libs in the
@@ -324,7 +310,7 @@ def reading_order(docs: DataFrame, max_tokens: int = 24) -> DataFrame:
     toks = docs.select(
         "doc_id",
         F.posexplode(
-            F.slice(F.split(F.trim("text"), r"\s+"), 1, max_tokens)
+            F.slice(F.split(F.trim("text"), r"\s+"), 1, 24)
         ).alias("pos0", "token"),
     ).select(
         "doc_id",
@@ -382,11 +368,10 @@ def page_metadata(pages: DataFrame) -> DataFrame:
     )
 
 
-def synth_table_boxes(docs: DataFrame, max_tokens: int = 24,
-                      n_cols: int = 3) -> DataFrame:
+def synth_table_boxes(docs: DataFrame) -> DataFrame:
     """Deterministic table-page word boxes (real PDF decode is
     environment-gated, cf. :func:`reading_order`): token i of each document
-    is cell (row i÷C, col i%C) of an R×C table, with md5 jitter of ±3 px on
+    is cell (row i÷3, col i%3) of an R×3 table, with md5 jitter of ±3 px on
     y and ±5 px on x — the noisy boxes a real PDF/OCR table emits. Pure
     expressions; any engine rebuilds identical input."""
     jy = (F.conv(F.substring(F.md5(F.concat_ws(
@@ -397,20 +382,19 @@ def synth_table_boxes(docs: DataFrame, max_tokens: int = 24,
         16, 10).cast("long") % 11) - 5
     return (docs.select(
         "doc_id",
-        F.posexplode(F.slice(F.split(F.trim("text"), r"\s+"), 1, max_tokens))
+        F.posexplode(F.slice(F.split(F.trim("text"), r"\s+"), 1, 24))
          .alias("pos0", "token"))
         .select(
             "doc_id", "token",
-            (F.expr(f"pos0 DIV {n_cols}") * 20 + 10 + jy).cast("long").alias("y"),
-            ((F.col("pos0") % n_cols) * 100 + 10 + jx).cast("long").alias("x")))
+            (F.expr("pos0 DIV 3") * 20 + 10 + jy).cast("long").alias("y"),
+            ((F.col("pos0") % 3) * 100 + 10 + jx).cast("long").alias("x")))
 
 
-def recover_table(boxes: DataFrame, row_gap: int = 8,
-                  col_gap: int = 20) -> DataFrame:
+def recover_table(boxes: DataFrame) -> DataFrame:
     """Table-structure recovery from word boxes — the layout-parse step
     between OCR and a structured row/column extraction: cluster boxes into
-    ROWS by y-gap (a new row starts where the y jump exceeds ``row_gap``)
-    and into COLUMNS by x-gap, both as per-page lag-window + running-sum
+    ROWS by y-gap (a new row starts where the y jump exceeds 8 px) and into
+    COLUMNS by x-gap (over 20 px), both as per-page lag-window + running-sum
     cluster ids. No grid parameters are assumed; the structure is read off
     the gaps, so ragged jitter and variable column widths survive.
 
@@ -424,7 +408,7 @@ def recover_table(boxes: DataFrame, row_gap: int = 8,
         boxes
         .withColumn(
             "row_brk",
-            (F.col("y") - F.lag("y").over(wy) > row_gap).cast("long"))
+            (F.col("y") - F.lag("y").over(wy) > 8).cast("long"))
         .withColumn(
             "row_id",
             F.coalesce(
@@ -433,7 +417,7 @@ def recover_table(boxes: DataFrame, row_gap: int = 8,
                 F.lit(0)))
         .withColumn(
             "col_brk",
-            (F.col("x") - F.lag("x").over(wx) > col_gap).cast("long"))
+            (F.col("x") - F.lag("x").over(wx) > 20).cast("long"))
         .withColumn(
             "col_id",
             F.coalesce(

@@ -32,13 +32,13 @@ def synth_corrupt_props(events: DataFrame) -> DataFrame:
     return events.select("event_id", props.alias("props"))
 
 
-def quarantine_events(events: DataFrame, k_min: int = 0, k_max: int = 100) -> DataFrame:
+def quarantine_events(events: DataFrame) -> DataFrame:
     """Classify every row in ONE map-only pass: parse props once with
     ``from_json`` and route to (reason, valid) —
 
         malformed      unparseable JSON (NULL struct)
         missing_field  parsed, but the expected key is absent
-        out_of_range   parsed, key present, value outside [k_min, k_max]
+        out_of_range   parsed, key present, value outside [0, 100]
         ok             the valid lane
 
     Returns (event_id, reason, valid, k). Downstream, the valid and
@@ -54,7 +54,7 @@ def quarantine_events(events: DataFrame, k_min: int = 0, k_max: int = 100) -> Da
     reason = (
         F.when(F.col("p").isNull() | F.col("p._bad").isNotNull(), "malformed")
         .when(F.col("p.k").isNull(), "missing_field")
-        .when(~F.col("p.k").between(k_min, k_max), "out_of_range")
+        .when(~F.col("p.k").between(0, 100), "out_of_range")
         .otherwise("ok")
     )
     return d.select(

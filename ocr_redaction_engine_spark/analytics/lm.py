@@ -120,8 +120,7 @@ def nb_train(docs: DataFrame, label_col: str = "label",
     return weights, prior
 
 
-def nb_classify(docs: DataFrame, label_col: str = "label",
-                min_df: int = 1) -> DataFrame:
+def nb_classify(docs: DataFrame, label_col: str = "label") -> DataFrame:
     """Train Naive Bayes on the hash-75% fold of ``docs`` (teacher labels in
     ``label_col``), score EVERY document: the quality-classifier pipeline
     stage. Out-of-vocabulary tokens contribute 0 (standard vocab-restricted
@@ -131,7 +130,7 @@ def nb_classify(docs: DataFrame, label_col: str = "label",
     row per document, ordered consumers sort themselves.
     """
     folded = _with_fold(docs)
-    weights, prior = nb_train(folded.filter("is_train"), label_col, min_df)
+    weights, prior = nb_train(folded.filter("is_train"), label_col, 1)
     scored = (
         _postings(folded)
         .join(F.broadcast(weights), "token")          # vocab-sized right side
@@ -254,8 +253,7 @@ def lm_cross_entropy(docs: DataFrame, reference: DataFrame,
 
 
 def ccnet_buckets(docs: DataFrame, reference: DataFrame,
-                  group: str = "source", bins: int = 32,
-                  qs: tuple = (33, 67)) -> DataFrame:
+                  group: str = "source") -> DataFrame:
     """CCNet head/middle/tail corpus split (Wenzek et al. 2020 §4.4): score
     every document by LM cross-entropy under the reference corpus, then band
     each GROUP (source/domain/snapshot) into perplexity terciles — "head" is
@@ -271,7 +269,7 @@ def ccnet_buckets(docs: DataFrame, reference: DataFrame,
         never sort globally (a corpus ntile() would funnel 10^12 rows
         through |groups| sorted partitions).
 
-    Assignment is map-only: the |groups|×|qs| boundary rows collapse to one
+    Assignment is map-only: the |groups|×2 boundary rows collapse to one
     sorted array per group, broadcast, and each doc's bucket is the count of
     boundaries strictly below its score (monotone in xent by construction).
     Unlike [[quantile_bucket_assign]]'s groupBy re-agg, no second doc-keyed
@@ -279,7 +277,7 @@ def ccnet_buckets(docs: DataFrame, reference: DataFrame,
     lm_cross_entropy contract).
 
     Returns (doc_id, group, xent_micro, bucket, band) with bucket in
-    0..len(qs) and band head/middle/tail for the default terciles.
+    0..2 and band head/middle/tail.
     """
     from .sampling import hist_quantile_sketch
 
@@ -299,17 +297,14 @@ def ccnet_buckets(docs: DataFrame, reference: DataFrame,
         .persist()
     )
     bounds = (
-        hist_quantile_sketch(scored, group, "xent_micro", bins, qs)
+        hist_quantile_sketch(scored, group, "xent_micro", 32, (33, 67))
         .groupBy(group)
         .agg(F.sort_array(F.collect_list(F.struct("q", "est"))).alias("bs"))
         .select(group, F.transform("bs", lambda s: s["est"]).alias("bounds"))
     )
-    if len(qs) == 2:
-        band = F.element_at(
-            F.array(F.lit("head"), F.lit("middle"), F.lit("tail")),
-            F.col("bucket").cast("int") + 1)
-    else:
-        band = F.concat(F.lit("q"), F.col("bucket"))
+    band = F.element_at(
+        F.array(F.lit("head"), F.lit("middle"), F.lit("tail")),
+        F.col("bucket").cast("int") + 1)
     return (
         scored.join(F.broadcast(bounds), group)
         .select(
@@ -324,12 +319,12 @@ def ccnet_buckets(docs: DataFrame, reference: DataFrame,
     )
 
 
-def pr_curve(scored: DataFrame, n_bins: int = 32,
-             label_col: str = "label", score_col: str = "score") -> DataFrame:
-    """Precision/recall/F1 sweep for a scored+labeled table — the eval
-    harness behind every filter-threshold decision (which NB/fastText/LM
-    cutoff keeps X% of the good docs): one row per occupied score bin,
-    metrics for the rule "predict positive at score ≥ bin edge".
+def pr_curve(scored: DataFrame, n_bins: int = 32) -> DataFrame:
+    """Precision/recall/F1 sweep for a table with ``score`` and ``label``
+    columns — the eval harness behind every filter-threshold decision
+    (which NB/fastText/LM cutoff keeps X% of the good docs): one row per
+    occupied score bin, metrics for the rule "predict positive at score ≥
+    bin edge".
 
     Scale shape: NO global sort of the score column (the textbook
     rank-based sweep is a total order over 10^12 rows). Scores are
@@ -346,8 +341,8 @@ def pr_curve(scored: DataFrame, n_bins: int = 32,
     from pyspark.sql import Window
 
     d = scored.select(
-        F.expr(f"CAST(round({score_col} * 1000000) AS BIGINT)").alias("s"),
-        F.col(label_col).cast("boolean").alias("y"))
+        F.expr("CAST(round(score * 1000000) AS BIGINT)").alias("s"),
+        F.col("label").cast("boolean").alias("y"))
     mn, mx = d.agg(F.min("s"), F.max("s")).first()
     if mn is None:
         return d.sparkSession.createDataFrame(

@@ -66,11 +66,12 @@ def synthesize_binary(spark, n: int, seed: int = 42, partitions: int = 8) -> Dat
         gen, schema="media_id long, content binary, mime string")
 
 
-def byte_features(media: DataFrame, bins: int = 16) -> DataFrame:
+def byte_features(media: DataFrame) -> DataFrame:
     """Feature extraction over binary columns, one row per (media, bin):
     (media_id, n_bytes, mean_b1e6, bin, bin_count). mean_b1e6 is the
-    fixed-point mean byte value ``sum*10^6 // n``; all ``bins`` rows are
-    emitted (zero counts included). numpy-vectorized per Arrow batch."""
+    fixed-point mean byte value ``sum*10^6 // n``; all 16 rows (one per
+    high nibble) are emitted (zero counts included). numpy-vectorized per
+    Arrow batch."""
     import numpy as np
     import pandas as pd
 
@@ -81,10 +82,10 @@ def byte_features(media: DataFrame, bins: int = 16) -> DataFrame:
             out = []
             for mid, content in zip(pdf["media_id"], pdf["content"]):
                 arr = np.frombuffer(bytes(content), dtype=np.uint8)
-                hist = np.bincount(arr >> 4, minlength=bins)
+                hist = np.bincount(arr >> 4, minlength=16)
                 n = int(arr.size)
                 mean = int(arr.sum(dtype=np.int64)) * 1_000_000 // n
-                out.extend((int(mid), n, mean, b, int(hist[b])) for b in range(bins))
+                out.extend((int(mid), n, mean, b, int(hist[b])) for b in range(16))
             yield pd.DataFrame(out, columns=cols) if out else \
                 pd.DataFrame({c: pd.Series(dtype="int64") for c in cols})
 
@@ -327,12 +328,16 @@ def synthesize_binary_with_twins(spark, n: int, twins: int, seed: int = 42,
 
 
 PHASH_SCHEMA = "media_id long, phash long"
+#: phash_near_dup_pairs splits the 60-bit hash into this many bands of
+#: this many bits each.
+PHASH_BANDS = 4
+PHASH_BAND_BITS = 15
 
 
-def phash_signatures(media: DataFrame, cells: int = 60) -> DataFrame:
+def phash_signatures(media: DataFrame) -> DataFrame:
     """Perceptual average-hash (aHash) over opaque payloads: map byte ``i``
-    of an ``n``-byte payload to grid cell ``i*cells//n`` (the byte-stream
-    analog of resizing an image to a fixed cells-pixel grid), take the
+    of an ``n``-byte payload to grid cell ``i*60//n`` (the byte-stream
+    analog of resizing an image to a fixed 60-pixel grid), take the
     fixed-point mean per cell, and set bit ``j`` iff cell ``j``'s mean
     exceeds the whole-payload mean. 60 bits so the hash stays a positive
     int64 (same budget as the SimHash kernel). Integer-exact: means are
@@ -349,13 +354,13 @@ def phash_signatures(media: DataFrame, cells: int = 60) -> DataFrame:
             for mid, content in zip(pdf["media_id"], pdf["content"]):
                 arr = np.frombuffer(bytes(content), dtype=np.uint8).astype(np.int64)
                 n = arr.size
-                idx = (np.arange(n, dtype=np.int64) * cells) // n
-                sums = np.bincount(idx, weights=arr, minlength=cells).astype(np.int64)
-                cnts = np.bincount(idx, minlength=cells).astype(np.int64)
+                idx = (np.arange(n, dtype=np.int64) * 60) // n
+                sums = np.bincount(idx, weights=arr, minlength=60).astype(np.int64)
+                cnts = np.bincount(idx, minlength=60).astype(np.int64)
                 cell_fp = sums * 1_000_000 // cnts
                 g_fp = int(arr.sum()) * 1_000_000 // n
                 bits = (cell_fp > g_fp).astype(np.int64)
-                ph = int((bits << np.arange(cells, dtype=np.int64)).sum())
+                ph = int((bits << np.arange(60, dtype=np.int64)).sum())
                 mids.append(int(mid))
                 hashes.append(ph)
             yield pd.DataFrame({"media_id": pd.Series(mids, dtype="int64"),
@@ -364,25 +369,24 @@ def phash_signatures(media: DataFrame, cells: int = 60) -> DataFrame:
     return media.select("media_id", "content").mapInPandas(run, schema=PHASH_SCHEMA)
 
 
-def phash_near_dup_pairs(sigs: DataFrame, bands: int = 4, band_bits: int = 15,
-                         max_hamming: int | None = None,
+def phash_near_dup_pairs(sigs: DataFrame, max_hamming: int | None = None,
                          allow_partial_recall: bool = False) -> DataFrame:
     """LSH-banded perceptual near-dup pairs: split each 60-bit hash into
-    ``bands`` contiguous ``band_bits``-bit bands, equi-join on
+    PHASH_BANDS contiguous PHASH_BAND_BITS-bit bands, equi-join on
     (band_idx, band_val) — candidates are hash-bucket collisions, never
     all-pairs — then verify with exact Hamming distance
     ``bit_count(phash_a ^ phash_b) <= max_hamming``.
 
     Recall envelope (pigeonhole): a pair at Hamming distance h is
-    GUARANTEED a band collision only when ``h <= bands - 1`` — h differing
-    bits can dirty at most h bands, leaving one intact. Beyond that a pair
+    GUARANTEED a band collision only when ``h <= PHASH_BANDS - 1`` — h
+    differing bits can dirty at most h bands, leaving one intact. Beyond that a pair
     is found only if its differing bits happen to spare some band, so
     recall degrades silently toward 0 as h grows. ``max_hamming`` therefore
-    defaults to ``bands - 1`` (complete recall); asking for a larger verify
-    threshold without widening ``bands`` requires
-    ``allow_partial_recall=True`` so the gap is an explicit contract, never
-    a surprise (ADVICE r2). To keep full recall at a higher threshold,
-    raise ``bands`` instead (e.g. 15 bands × 4 bits guarantees h ≤ 14 — at
+    defaults to ``PHASH_BANDS - 1`` (complete recall); asking for a larger
+    verify threshold requires ``allow_partial_recall=True`` so the gap is
+    an explicit contract, never a surprise (ADVICE r2). Full recall at a
+    higher threshold needs more bands (e.g. 15 bands × 4 bits guarantees
+    h ≤ 14 — at
     the cost of 16-value band buckets, which at corpus scale collide nearly
     all-pairs; the envelope/bucket-size trade-off is fundamental to LSH).
 
@@ -394,23 +398,23 @@ def phash_near_dup_pairs(sigs: DataFrame, bands: int = 4, band_bits: int = 15,
     from pyspark.sql import functions as F
 
     if max_hamming is None:
-        max_hamming = bands - 1
-    elif max_hamming > bands - 1 and not allow_partial_recall:
+        max_hamming = PHASH_BANDS - 1
+    elif max_hamming > PHASH_BANDS - 1 and not allow_partial_recall:
         raise ValueError(
             f"phash_near_dup_pairs: max_hamming={max_hamming} exceeds the "
-            f"guaranteed-recall envelope of bands-1={bands - 1}; pairs with "
-            f"{bands}..{max_hamming} differing bits spread across all bands "
-            f"would be silently missed. Raise bands, lower max_hamming, or "
-            f"pass allow_partial_recall=True to accept partial recall "
-            f"explicitly.")
+            f"guaranteed-recall envelope of bands-1={PHASH_BANDS - 1}; pairs "
+            f"with {PHASH_BANDS}..{max_hamming} differing bits spread across "
+            f"all bands would be silently missed. Lower max_hamming, or pass "
+            f"allow_partial_recall=True to accept partial recall explicitly.")
 
     band_rows = sigs.select(
         "media_id", "phash",
         F.explode(F.array(*[
             F.struct(F.lit(b).alias("band_idx"),
-                     F.shiftright("phash", b * band_bits)
-                      .bitwiseAND(F.lit((1 << band_bits) - 1)).alias("band_val"))
-            for b in range(bands)])).alias("band"),
+                     F.shiftright("phash", b * PHASH_BAND_BITS)
+                      .bitwiseAND(F.lit((1 << PHASH_BAND_BITS) - 1))
+                      .alias("band_val"))
+            for b in range(PHASH_BANDS)])).alias("band"),
     ).select("media_id", "phash", "band.band_idx", "band.band_val")
 
     x, y = band_rows.alias("x"), band_rows.alias("y")

@@ -15,12 +15,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: The quasi-identifier columns both audits group customers by.
+QI = ("c_nationkey", "c_mktsegment")
 
-def k_anonymity_audit(customers: DataFrame,
-                      qi: tuple = ("c_nationkey", "c_mktsegment"),
-                      sensitive: str = "c_acctbal",
-                      k: int = 5, l: int = 3,
-                      sens_bucket: int = 1000) -> DataFrame:
+
+def k_anonymity_audit(customers: DataFrame, k: int = 5, l: int = 3) -> DataFrame:
     """k-anonymity / l-diversity audit over quasi-identifier groups.
 
     A release is k-anonymous when every QI combination covers ≥ k rows, and
@@ -33,15 +32,15 @@ def k_anonymity_audit(customers: DataFrame,
     scale the result is |QI-domain| rows, so the audit is free relative to
     the scan.
     """
-    sens = (F.col(sensitive).cast("double") / F.lit(sens_bucket)).cast("long")
+    sens = (F.col("c_acctbal").cast("double") / F.lit(1000)).cast("long")
     return (
-        customers.groupBy(*qi)
+        customers.groupBy(*QI)
         .agg(
             F.count("*").alias("group_n"),
             F.countDistinct(sens).alias("l_distinct"),
         )
         .select(
-            *qi, "group_n", "l_distinct",
+            *QI, "group_n", "l_distinct",
             (F.col("group_n") < k).alias("k_risk"),
             (F.col("l_distinct") < l).alias("l_risk"),
         )
@@ -118,10 +117,7 @@ def pseudonymize(docs: DataFrame, min_digits: int = 6) -> DataFrame:
     )
 
 
-def t_closeness_audit(customers: DataFrame,
-                      qi: tuple = ("c_nationkey", "c_mktsegment"),
-                      sensitive: str = "c_acctbal",
-                      sens_bucket: int = 2000,
+def t_closeness_audit(customers: DataFrame, sens_bucket: int = 2000,
                       t_e6: int = 250000) -> DataFrame:
     """t-closeness audit (Li, Li, Venkatasubramanian, ICDE 2007): a QI
     group leaks when the Earth Mover's Distance between its sensitive-value
@@ -147,11 +143,11 @@ def t_closeness_audit(customers: DataFrame,
     """
     from pyspark.sql import Window
 
-    b = (F.col(sensitive).cast("double") / F.lit(sens_bucket)).cast("long")
-    base = customers.select(*qi, b.alias("b"))
+    b = (F.col("c_acctbal").cast("double") / F.lit(sens_bucket)).cast("long")
+    base = customers.select(*QI, b.alias("b"))
 
-    cell = base.groupBy(*qi, "b").agg(F.count("*").alias("c"))
-    grp = base.groupBy(*qi).agg(F.count("*").alias("group_n"))
+    cell = base.groupBy(*QI, "b").agg(F.count("*").alias("c"))
+    grp = base.groupBy(*QI).agg(F.count("*").alias("group_n"))
     gd = sorted(
         base.groupBy("b").agg(F.count("*").alias("g")).collect(),
         key=lambda r: r.b)
@@ -165,7 +161,7 @@ def t_closeness_audit(customers: DataFrame,
     n_total = sum(r.g for r in gd)
     if not gd:   # empty input: an empty literal array has no element type
         return (grp.select(
-            *qi, "group_n",
+            *QI, "group_n",
             F.lit(0).cast("long").alias("emd_e6"),
             F.lit(False).alias("t_risk")))
     cum, cums = 0, []
@@ -177,23 +173,23 @@ def t_closeness_audit(customers: DataFrame,
                  F.lit(cg).cast("long").alias("cum_glob"))
         for bb, cg in cums])
 
-    spine = grp.select(*qi, "group_n", F.explode(garr).alias("gb")).select(
-        *qi, "group_n", F.col("gb.b").alias("b"),
+    spine = grp.select(*QI, "group_n", F.explode(garr).alias("gb")).select(
+        *QI, "group_n", F.col("gb.b").alias("b"),
         F.col("gb.cum_glob").alias("cum_glob"))
-    joined = spine.join(cell, [*qi, "b"], "left").fillna({"c": 0})
-    w = (Window.partitionBy(*qi).orderBy("b")
+    joined = spine.join(cell, [*QI, "b"], "left").fillna({"c": 0})
+    w = (Window.partitionBy(*QI).orderBy("b")
          .rowsBetween(Window.unboundedPreceding, 0))
     terms = joined.select(
-        *qi, "group_n",
+        *QI, "group_n",
         F.sum("c").over(w).alias("cum_grp"), "cum_glob")
     dec = "DECIMAL(38,0)"
     return (
-        terms.groupBy(*qi, "group_n")
+        terms.groupBy(*QI, "group_n")
         .agg(F.sum(F.expr(
             f"abs(CAST(cum_grp AS {dec}) * {n_total}"
             f" - CAST(cum_glob AS {dec}) * group_n)")).alias("s"))
         .select(
-            *qi, "group_n",
+            *QI, "group_n",
             F.expr(
                 f"CAST(CAST(s AS {dec}) * 1000000"
                 f" DIV (CAST(group_n AS {dec}) * {n_total}"

@@ -26,18 +26,18 @@ def _hash_frac(col) -> F.Column:
     return md5_long(col)
 
 
-def bernoulli_sample(docs: DataFrame, pct: int, key: str = "doc_id") -> DataFrame:
-    """Keep ~pct% of rows by hash threshold: md5(key) mod 100 < pct.
+def bernoulli_sample(docs: DataFrame, pct: int) -> DataFrame:
+    """Keep ~pct% of rows by hash threshold: md5(doc_id) mod 100 < pct.
     Deterministic, rerun-stable, and pushes down as a plain filter."""
-    return docs.filter((_hash_frac(F.col(key).cast("string")) % 100) < pct)
+    return docs.filter((_hash_frac(F.col("doc_id").cast("string")) % 100) < pct)
 
 
 def stratified_sample(docs: DataFrame, strata: list[str], n_per_stratum: int,
-                      key: str = "doc_id", salts: int = 8) -> DataFrame:
+                      salts: int = 8) -> DataFrame:
     """Per-stratum deterministic top-n by hash rank — the data-mixing
     primitive (equal-size draws per (lang, source) cell regardless of cell
     skew). Rank ties are impossible because the order key includes the
-    unique ``key`` column.
+    unique ``doc_id`` column.
 
     Strata cells are few and can be huge (one (lang, source) cell may own
     half the corpus), so a single window over the strata key would funnel
@@ -48,17 +48,17 @@ def stratified_sample(docs: DataFrame, strata: list[str], n_per_stratum: int,
     per-salt top-n is a superset of the global top-n, so the result is
     EXACTLY the single-window answer while no task ever sorts more than
     one salt's share of a cell (the shared [[salted_topk]] primitive)."""
-    h = _hash_frac(F.col(key).cast("string"))
+    h = _hash_frac(F.col("doc_id").cast("string"))
     base = docs.withColumn("__h", h)
     return salted_topk(
-        base, list(strata), [F.col("__h").asc(), F.col(key).asc()],
-        n_per_stratum, salt_on=key, rank_name="rank", salts=salts,
-    ).select(key, *strata, "rank")
+        base, list(strata), [F.col("__h").asc(), F.col("doc_id").asc()],
+        n_per_stratum, salt_on="doc_id", rank_name="rank", salts=salts,
+    ).select("doc_id", *strata, "rank")
 
 
 def char_budget_mix(docs: DataFrame, budget_chars: int,
-                    boosted: tuple[str, ...] = (), boost: float = 2.0,
-                    key: str = "doc_id") -> DataFrame:
+                    boosted: tuple[str, ...] = (),
+                    boost: float = 2.0) -> DataFrame:
     """Data-mixing under a corpus budget: split ``budget_chars`` across
     sources proportionally to per-source weights (``boost`` for sources in
     ``boosted``, 1.0 otherwise), then within each source keep documents in
@@ -76,7 +76,7 @@ def char_budget_mix(docs: DataFrame, budget_chars: int,
     huge, so ``Window.partitionBy("source")`` would drag a source's whole
     slice of a 100 TB corpus through one sorted task. Instead the cumsum
     runs as the two-pass distributed prefix sum [[pack_sequences]] uses:
-    range-partition on (source, hash, key) — partition ranges are disjoint
+    range-partition on (source, hash, doc_id) — partition ranges are disjoint
     and ordered in that tuple order, so a source's rows in earlier
     partitions all precede its rows here — take per-(partition, source)
     totals (≤ parallelism × |sources| rows to the driver), prefix them per
@@ -84,7 +84,7 @@ def char_budget_mix(docs: DataFrame, budget_chars: int,
     window partitions by (physical partition, source), so every partition
     cumsums in parallel. Offsets + local cumsum reconstruct the exact
     global per-source running total for ANY partition boundaries — the
-    order key (h, key) is total, so the result is bit-identical to the
+    order key (h, doc_id) is total, so the result is bit-identical to the
     single-window formulation. Output: (doc_id, source, n_chars,
     cum_chars)."""
     w_col = F.when(F.col("source").isin(*boosted) if boosted else F.lit(False),
@@ -93,13 +93,13 @@ def char_budget_mix(docs: DataFrame, budget_chars: int,
         docs.select("source").distinct().agg(F.sum(w_col)).collect()[0][0]
     )
     sc = docs.sparkSession.sparkContext
-    h = _hash_frac(F.col(key).cast("string"))
-    d = docs.select(key, "source", "n_chars").withColumn("__h", h)
+    h = _hash_frac(F.col("doc_id").cast("string"))
+    d = docs.select("doc_id", "source", "n_chars").withColumn("__h", h)
     # localCheckpoint pins ONE materialization of the range exchange (the
     # totals agg and the cumsum window must see identical boundaries;
     # RangePartitioner's sample seed is per-RDD-instance — same discipline
     # as webgraph._doc_nodes)
-    d = (d.repartitionByRange(sc.defaultParallelism, "source", "__h", key)
+    d = (d.repartitionByRange(sc.defaultParallelism, "source", "__h", "doc_id")
          .withColumn("pid", F.spark_partition_id())
          .localCheckpoint(eager=False))
     totals = d.groupBy("pid", "source").agg(F.sum("n_chars").alias("tot")).collect()
@@ -122,7 +122,7 @@ def char_budget_mix(docs: DataFrame, budget_chars: int,
         if entries else F.create_map()
     win = (
         Window.partitionBy("pid", "source")
-        .orderBy(F.col("__h").asc(), F.col(key).asc())
+        .orderBy(F.col("__h").asc(), F.col("doc_id").asc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     off = omap[F.concat_ws(":", F.col("pid").cast("string"),
@@ -130,7 +130,7 @@ def char_budget_mix(docs: DataFrame, budget_chars: int,
     return (
         d.withColumn("cum_chars", off + F.sum("n_chars").over(win))
         .filter(F.col("cum_chars") <= F.lit(float(budget_chars)) * w_col / F.lit(total_w))
-        .select(key, "source", "n_chars", "cum_chars")
+        .select("doc_id", "source", "n_chars", "cum_chars")
     )
 
 
@@ -188,8 +188,7 @@ def kmv_distinct(docs: DataFrame, group: str, k: int = 64) -> DataFrame:
     return per_group.select(group, est.alias("est_distinct"))
 
 
-def weighted_sample(docs: DataFrame, k: int = 50, weight: str = "n_chars",
-                    key: str = "doc_id") -> DataFrame:
+def weighted_sample(docs: DataFrame, k: int = 50) -> DataFrame:
     """Weighted sampling WITHOUT replacement (Efraimidis–Spirakis A-ES,
     2006): every row draws u = md5-uniform in (0, 1] and scores
     ln(u) / w — the top-k scores are exactly a weight-proportional sample
@@ -202,13 +201,14 @@ def weighted_sample(docs: DataFrame, k: int = 50, weight: str = "n_chars",
     merge), so 10^12 rows cost one map pass. The score is one ln and one
     division per row, all codegen.
 
-    Output: (key, source, weight, round(score, 6)) for the k sampled rows.
+    Output: (doc_id, source, n_chars, round(score, 6)) for the k sampled
+    rows, weighted by ``n_chars``.
     """
-    u = (_hash_frac(F.col(key).cast("string")) + 1) / F.lit(float(_HEX15))
-    score = F.log(u) / F.col(weight)
+    u = (_hash_frac(F.col("doc_id").cast("string")) + 1) / F.lit(float(_HEX15))
+    score = F.log(u) / F.col("n_chars")
     return (
-        docs.select(key, "source", weight, score.alias("score"))
-        .orderBy(F.col("score").desc(), F.col(key).asc())
+        docs.select("doc_id", "source", "n_chars", score.alias("score"))
+        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
         .limit(k)
         .withColumn("score", F.round("score", 6))
     )
@@ -277,8 +277,7 @@ def hll_distinct(docs: DataFrame, group: str, p: int = 8,
     )
 
 
-def temperature_rebalance(docs: DataFrame, group: str = "lang",
-                          key: str = "doc_id") -> DataFrame:
+def temperature_rebalance(docs: DataFrame, group: str = "lang") -> DataFrame:
     """Temperature-based corpus rebalancing (the multilingual-LM sampling
     rule q_g ∝ p_g^α at α = 0.5): per-group keep rate
     ``sqrt(n_min / n_g)`` — the rarest group keeps everything, a group 100x
@@ -296,10 +295,10 @@ def temperature_rebalance(docs: DataFrame, group: str = "lang",
     n_min = sizes.agg(F.min("n_g")).collect()[0][0]
     rate = F.sqrt(F.lit(float(n_min)) / F.col("n_g"))
     rated = docs.join(F.broadcast(sizes), group).withColumn("keep_rate", rate)
-    u = _hash_frac(F.col(key).cast("string")) / F.lit(float(_HEX15))
+    u = _hash_frac(F.col("doc_id").cast("string")) / F.lit(float(_HEX15))
     return (
         rated.filter(u < F.col("keep_rate"))
-        .select(key, group, F.round("keep_rate", 9).alias("keep_rate"))
+        .select("doc_id", group, F.round("keep_rate", 9).alias("keep_rate"))
     )
 
 
@@ -421,8 +420,7 @@ def dsir_scores(raw: DataFrame, target: DataFrame, k: int = 100) -> DataFrame:
     )
 
 
-def leakage_safe_split(docs: DataFrame,
-                       train_mod: int = 8, val_mod: int = 9) -> DataFrame:
+def leakage_safe_split(docs: DataFrame) -> DataFrame:
     """Cluster-aware train/validation/test split: the split key is the
     near-dup CLUSTER (connected components over MinHash-LSH candidate
     pairs), not the document — so near-duplicates can never straddle splits
@@ -430,7 +428,7 @@ def leakage_safe_split(docs: DataFrame,
     are their own group.
 
     Assignment is a deterministic md5 hash draw on the group id
-    (train < ``train_mod`` ≤ validation < ``val_mod`` ≤ test out of 10) —
+    (train < 8 ≤ validation < 9 ≤ test out of 10) —
     engine- and partitioning-independent, reproducible on any cluster size.
 
     Scale shape: candidate pairs + O(log diameter) component rounds are the
@@ -454,8 +452,8 @@ def leakage_safe_split(docs: DataFrame,
         grouped.join(sizes, "group_id")
         .withColumn(
             "split",
-            F.when(draw < train_mod, "train")
-            .when(draw < val_mod, "validation")
+            F.when(draw < 8, "train")
+            .when(draw < 9, "validation")
             .otherwise("test"),
         )
         .select("doc_id", "group_id", "group_size", "split")
@@ -512,27 +510,27 @@ def hist_quantile_sketch(docs: DataFrame, group: str = "source",
     )
 
 
-def quantile_bucket_assign(docs: DataFrame, group: str = "source",
-                           value: str = "n_chars", bins: int = 32,
-                           qs: tuple = (50, 90, 99)) -> DataFrame:
+def quantile_bucket_assign(docs: DataFrame, bins: int = 32) -> DataFrame:
     """Curriculum bucketing without a global sort: the histogram sketch's
     interpolated quantile estimates become per-group broadcast boundaries,
     and each document's bucket is simply the count of boundaries strictly
-    below its value (0..len(qs)). This is how you rank 10^12 docs into
+    below its ``n_chars`` (0..3, boundaries at the per-``source`` p50,
+    p90 and p99). This is how you rank 10^12 docs into
     quantile bands at scale — a global ntile() would funnel the corpus
     through one sorted partition; here the only full-data pass is the
     sketch's (group, bin) hash-agg, and assignment is a broadcast join of
-    |groups|×|qs| boundary rows + a map-side conditional sum.
+    |groups|×3 boundary rows + a map-side conditional sum.
 
     Integer-exact end to end (inherits the sketch's integer read-out), so
     Spark and the oracle agree bit-for-bit. Returns
-    (doc_id, group, value, bucket).
+    (doc_id, source, n_chars, bucket).
     """
-    est = hist_quantile_sketch(docs, group, value, bins, qs).select(group, "est")
+    est = (hist_quantile_sketch(docs, "source", "n_chars", bins, (50, 90, 99))
+           .select("source", "est"))
     return (
-        docs.join(F.broadcast(est), group)
-        .groupBy("doc_id", group, value)
-        .agg(F.sum(F.when(F.col("est") < F.col(value), 1).otherwise(0))
+        docs.join(F.broadcast(est), "source")
+        .groupBy("doc_id", "source", "n_chars")
+        .agg(F.sum(F.when(F.col("est") < F.col("n_chars"), 1).otherwise(0))
              .cast("long").alias("bucket"))
     )
 
@@ -725,8 +723,7 @@ def unimax_mixture(docs: DataFrame, budget_tokens: int,
 POISSON1_CDF_E6 = (367879, 735759, 919699, 981012, 996340, 999406)
 
 
-def poisson_bootstrap(docs: DataFrame, n_reps: int = 20,
-                      value: str = "n_chars") -> DataFrame:
+def poisson_bootstrap(docs: DataFrame, n_reps: int = 20) -> DataFrame:
     """Distributed confidence intervals via the POISSON BOOTSTRAP (the
     big-data bootstrap: per replicate, each row's resample multiplicity is
     an independent Poisson(1) draw — no global N needed, so the resample
@@ -736,7 +733,7 @@ def poisson_bootstrap(docs: DataFrame, n_reps: int = 20,
     comparisons only, engine-exact and rerun-stable.
 
     Output: one row per replicate with the weighted count, sum and mean
-    (×1e6, truncating DIV) of ``value`` — the replicate spread IS the
+    (×1e6, truncating DIV) of ``n_chars`` — the replicate spread IS the
     sampling distribution of the corpus mean; downstream takes p2.5/p97.5
     of these B rows for the interval. Scale shape: one explode by
     ``n_reps`` (the only fan-out; B=20-50 is the published sweet spot)
@@ -750,7 +747,7 @@ def poisson_bootstrap(docs: DataFrame, n_reps: int = 20,
     wgt = (F.when(u < cdf[0], 0).when(u < cdf[1], 1).when(u < cdf[2], 2)
            .when(u < cdf[3], 3).when(u < cdf[4], 4).when(u < cdf[5], 5)
            .otherwise(6).cast("long"))
-    reps = (docs.select("doc_id", F.col(value).cast("long").alias("v"))
+    reps = (docs.select("doc_id", F.col("n_chars").cast("long").alias("v"))
             .select("doc_id", "v",
                     F.explode(F.sequence(F.lit(0), F.lit(n_reps - 1)))
                      .alias("rep"))

@@ -51,9 +51,10 @@ def postings(docs: DataFrame) -> DataFrame:
 
 
 def bm25_topk(docs: DataFrame, queries: list[str] | None = None,
-              k: int = 10, k1: float = 1.2, b: float = 0.75) -> DataFrame:
+              k: int = 10) -> DataFrame:
     """Top-k documents per query under BM25 (Robertson/Sparck Jones;
-    idf = ln(1 + (N - df + 0.5)/(df + 0.5)), the Lucene non-negative form).
+    idf = ln(1 + (N - df + 0.5)/(df + 0.5)), the Lucene non-negative form;
+    k1 = 1.2, b = 0.75).
 
     Per-term contributions are rounded to 6 decimals before the per-doc sum
     (and the sum rounded again) so the score is reproducible across engines
@@ -90,8 +91,8 @@ def bm25_topk(docs: DataFrame, queries: list[str] | None = None,
     )
     idf = F.log(F.lit(1.0) + (F.col("n_docs") - F.col("df") + 0.5) /
                 (F.col("df") + 0.5))
-    tf_part = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl")))
+    tf_part = (F.col("tf") * (1.2 + 1.0)) / (
+        F.col("tf") + 1.2 * (1.0 - 0.75 + 0.75 * F.col("dl") / F.col("avgdl")))
     scored = (
         post.join(F.broadcast(qterms), "term")
         .join(F.broadcast(dfreq), "term")
@@ -105,14 +106,13 @@ def bm25_topk(docs: DataFrame, queries: list[str] | None = None,
     ).select("query_id", "doc_id", "score", "rank")
 
 
-def mlt_topk(docs: DataFrame, n_queries: int = 5, k: int = 10,
-             max_q_tokens: int = 16) -> DataFrame:
+def mlt_topk(docs: DataFrame, n_queries: int = 5, k: int = 10) -> DataFrame:
     """More-like-this lexical retrieval: for each query document
     (doc_id < ``n_queries``) rank the rest of the corpus by rare-term
     overlap — the query-by-document form of sparse retrieval every RAG
     candidate generator needs next to [[bm25_topk]]'s string queries.
 
-    Query terms are the DISTINCT first ``max_q_tokens`` tokens of the
+    Query terms are the DISTINCT first 16 tokens of the
     query doc (capping bounds the fan-out per query regardless of doc
     length). Scoring is integer-exact on purpose: each matched term
     contributes ``tf · (10^6 DIV df)`` — rare terms weigh more, exactly
@@ -121,7 +121,7 @@ def mlt_topk(docs: DataFrame, n_queries: int = 5, k: int = 10,
     discipline). Ties break on candidate id ascending.
 
     Shape at 100 TB: the [[postings]] build is the one corpus shuffle;
-    the query-term table is n_queries × max_q_tokens rows (broadcast),
+    the query-term table is n_queries × 16 rows (broadcast),
     document frequencies are computed only for those terms via a
     broadcast semi-join, and the per-query rank goes through
     [[salted_topk]] because a hot term matches a corpus-scale candidate
@@ -132,7 +132,7 @@ def mlt_topk(docs: DataFrame, n_queries: int = 5, k: int = 10,
         .select(
             F.col("doc_id").alias("q_id"),
             F.explode(F.array_distinct(F.slice(
-                F.split(F.trim("text"), TOKEN_SPLIT), 1, max_q_tokens)))
+                F.split(F.trim("text"), TOKEN_SPLIT), 1, 16)))
             .alias("term"),
         )
         .filter(F.col("term") != "")

@@ -110,7 +110,7 @@ def _fixed_point(M: "np.ndarray") -> "np.ndarray":
     return np.floor(M * 1_000_000.0).astype(np.int64)
 
 
-def lsh_buckets(embeddings: DataFrame, n_planes: int = 12, seed: int = 7) -> DataFrame:
+def lsh_buckets(embeddings: DataFrame, n_planes: int = 12) -> DataFrame:
     """Random-hyperplane bucket id per vector: sign bits of integer dot
     products between the fixed-point vector and md5-derived integer
     hyperplanes. Deterministic AND engine-exact (see _plane_matrix)."""
@@ -126,7 +126,7 @@ def lsh_buckets(embeddings: DataFrame, n_planes: int = 12, seed: int = 7) -> Dat
                 continue
             M = np.array([np.asarray(e, dtype=np.float64) for e in pdf["embedding"]])
             if H is None:
-                H = _plane_matrix(n_planes, M.shape[1], seed)
+                H = _plane_matrix(n_planes, M.shape[1], 7)
             dots = _fixed_point(M) @ H.T            # exact int64
             bucket = (dots > 0).dot(1 << np.arange(n_planes, dtype=np.int64))
             yield pd.DataFrame({"vec_id": pdf["vec_id"].astype("int64"),
@@ -139,7 +139,7 @@ TABLE_BUCKET_SCHEMA = "vec_id long, tbl int, bucket long"
 
 
 def lsh_table_buckets(embeddings: DataFrame, n_tables: int = 8,
-                      n_planes: int = 16, seed: int = 7) -> DataFrame:
+                      n_planes: int = 16) -> DataFrame:
     """Multi-table LSH (OR-construction): ``n_tables`` independent bucket ids
     per vector in ONE Arrow pass, emitted as (vec_id, tbl, bucket) rows.
     Candidate generation is then a single self-equi-join on (tbl, bucket) —
@@ -160,7 +160,7 @@ def lsh_table_buckets(embeddings: DataFrame, n_tables: int = 8,
             M = np.array([np.asarray(e, dtype=np.float64) for e in pdf["embedding"]])
             if H is None:
                 # one stacked matrix: table t uses plane rows [t*P, (t+1)*P)
-                H = _plane_matrix(n_tables * n_planes, M.shape[1], seed)
+                H = _plane_matrix(n_tables * n_planes, M.shape[1], 7)
             dots = _fixed_point(M) @ H.T                       # (n, T*P)
             bits = (dots > 0).reshape(len(M), n_tables, n_planes)
             w = 1 << np.arange(n_planes, dtype=np.int64)
@@ -177,8 +177,7 @@ def lsh_table_buckets(embeddings: DataFrame, n_tables: int = 8,
 
 
 def cosine_pairs_bucketed(embeddings: DataFrame, threshold: float = 0.99,
-                          n_tables: int = 8, n_planes: int = 16,
-                          seed: int = 7) -> DataFrame:
+                          n_tables: int = 8, n_planes: int = 16) -> DataFrame:
     """Near-duplicate pairs at scale: multi-table LSH candidates + exact
     cosine verify. Precision is exact (every candidate is re-scored with the
     true cosine); recall is the LSH collision probability, tunable via
@@ -187,7 +186,7 @@ def cosine_pairs_bucketed(embeddings: DataFrame, threshold: float = 0.99,
     The plan is: one Arrow bucketing pass → one self-equi-join on
     (tbl, bucket) → distinct pairs → one join back to fetch vectors → exact
     filter. No cross join, no full-table broadcast."""
-    b = lsh_table_buckets(embeddings, n_tables, n_planes, seed)
+    b = lsh_table_buckets(embeddings, n_tables, n_planes)
     left = b.select(F.col("vec_id").alias("a"), "tbl", "bucket")
     right = b.select(F.col("vec_id").alias("b"), "tbl", "bucket")
     cand = (
@@ -372,11 +371,11 @@ def ivf_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
         k, salt_on="c_id")
 
 
-def lsh_bucketed_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
-                      n_planes: int = 8) -> DataFrame:
-    """ANN: score only same-bucket pairs. Same output shape as cosine_topk
-    (rank within retrieved candidates)."""
-    b = lsh_buckets(embeddings, n_planes)
+def lsh_bucketed_topk(embeddings: DataFrame, n_queries: int = 5,
+                      k: int = 10) -> DataFrame:
+    """ANN: score only same-bucket pairs (8-plane buckets). Same output
+    shape as cosine_topk (rank within retrieved candidates)."""
+    b = lsh_buckets(embeddings, 8)
     e = embeddings.join(b, "vec_id")
     q = e.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"), "bucket")
@@ -629,8 +628,7 @@ def pq_adc_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
         k, salt_on="c_id").select("q_id", "c_id", "adist", "rank")
 
 
-def ann_recall(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
-               n_planes: int = 8) -> DataFrame:
+def ann_recall(embeddings: DataFrame, n_queries: int = 5, k: int = 10) -> DataFrame:
     """Recall@k evaluation harness for the LSH index: per query, the
     fraction of the exact cosine top-k that the bucketed ANN retrieves —
     the metric every index deployment must publish before brute force is
@@ -645,7 +643,7 @@ def ann_recall(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
     truth neighbours still emit a row (recall 0).
     """
     truth = cosine_topk(embeddings, n_queries, k).select("q_id", "c_id")
-    approx = lsh_bucketed_topk(embeddings, n_queries, k, n_planes).select("q_id", "c_id")
+    approx = lsh_bucketed_topk(embeddings, n_queries, k).select("q_id", "c_id")
     hits = (
         truth.join(approx, ["q_id", "c_id"])
         .groupBy("q_id").agg(F.count("*").alias("n_hit"))

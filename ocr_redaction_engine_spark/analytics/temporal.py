@@ -14,10 +14,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def asof_last_event(events: DataFrame, probe_type: str = "click",
-                    ref_type: str = "error") -> DataFrame:
-    """As-of join of ``events`` against itself: for every ``probe_type``
-    event, the most recent ``ref_type`` event of the same user at or before
+def asof_last_event(events: DataFrame) -> DataFrame:
+    """As-of join of ``events`` against itself: for every ``click``
+    event, the most recent ``error`` event of the same user at or before
     it (ties on ts broken by event_id: a same-timestamp reference event
     counts only if its event_id is lower — deterministic, documented).
 
@@ -36,11 +35,11 @@ def asof_last_event(events: DataFrame, probe_type: str = "click",
     carried = events.select(
         "event_id", "user_id", "ts", "event_type",
         F.last(
-            F.when(F.col("event_type") == ref_type, F.col("event_id")),
+            F.when(F.col("event_type") == "error", F.col("event_id")),
             ignorenulls=True,
         ).over(w).alias("last_ref_id"),
     )
-    return carried.filter(F.col("event_type") == probe_type).select(
+    return carried.filter(F.col("event_type") == "click").select(
         "event_id", "user_id",
         F.col("ts").cast("string").alias("ts"),
         "last_ref_id",
@@ -89,11 +88,12 @@ def range_join_count(events: DataFrame, minutes: int = 5) -> DataFrame:
     )
 
 
-def funnel(events: DataFrame, steps: tuple = ("signup", "click", "purchase")) -> DataFrame:
-    """Ordered-funnel analysis: for each user, the earliest time of step 1,
-    the earliest step-2 event strictly AFTER it, the earliest step-3 event
-    strictly after that — the classic conversion funnel with strict temporal
-    ordering (a purchase before the signup does not count).
+def funnel(events: DataFrame) -> DataFrame:
+    """Ordered-funnel analysis: for each user, the earliest time of step 1
+    (signup), the earliest step-2 event (click) strictly AFTER it, the
+    earliest step-3 event (purchase) strictly after that — the classic
+    conversion funnel with strict temporal ordering (a purchase before the
+    signup does not count).
 
     Shape: one filtered min-agg per step plus an equi-join on user_id between
     steps — every agg is map-side partial, every join keys on user_id, so the
@@ -106,13 +106,13 @@ def funnel(events: DataFrame, steps: tuple = ("signup", "click", "purchase")) ->
     # parquet timestamps arrive as TIMESTAMP_NTZ (no direct long cast);
     # session tz is pinned UTC so the two-step cast is exact epoch seconds
     ep = F.col("ts").cast("timestamp").cast("long")
-    s1 = (events.filter(F.col("event_type") == steps[0])
+    s1 = (events.filter(F.col("event_type") == "signup")
           .groupBy("user_id").agg(F.min(ep).alias("t1")))
-    s2 = (events.filter(F.col("event_type") == steps[1])
+    s2 = (events.filter(F.col("event_type") == "click")
           .join(s1, "user_id")
           .filter(ep > F.col("t1"))
           .groupBy("user_id").agg(F.min(ep).alias("t2")))
-    s3 = (events.filter(F.col("event_type") == steps[2])
+    s3 = (events.filter(F.col("event_type") == "purchase")
           .join(s2, "user_id")
           .filter(ep > F.col("t2"))
           .groupBy("user_id").agg(F.min(ep).alias("t3")))
@@ -218,16 +218,16 @@ def hourly_anomalies(events: DataFrame, trailing: int = 24, k: int = 3) -> DataF
     )
 
 
-def value_trend(events: DataFrame, epoch0: int = 1704067200) -> DataFrame:
+def value_trend(events: DataFrame) -> DataFrame:
     """Per-group least-squares trend (is this metric drifting?): OLS slope
     of ``value`` against time for each event_type, computed from the five
     classic sufficient statistics in ONE hash-agg:
 
         slope = (n·Σxy − Σx·Σy) / (n·Σx² − (Σx)²)
 
-    Exactness discipline: x (seconds since ``epoch0``) stays integral and y
-    rides as integer CENTS (value cast DECIMAL(18,2) ×100), so every Σ is
-    an exact integer DECIMAL and the release is computed with **no floating
+    Exactness discipline: x (seconds since 2024-01-01 UTC) stays integral
+    and y rides as integer CENTS (value cast DECIMAL(18,2) ×100), so every
+    Σ is an exact integer DECIMAL and the release is computed with **no floating
     point at all**: slope_e9 is the half-away-from-zero rounding of the
     exact rational num_cc·10⁹ / (100·den), done as a single truncating
     integer division — `(2a + sign(a)·b) DIV (2b)` — which Spark's `DIV`
@@ -248,7 +248,8 @@ def value_trend(events: DataFrame, epoch0: int = 1704067200) -> DataFrame:
     Returns (event_type, n, slope_e9, intercept_e9) with slope/intercept
     scaled ×1e9, exact-integer-rounded for engine-portable hashing.
     """
-    x = (F.col("ts").cast("timestamp").cast("long") - F.lit(epoch0)).cast("decimal(17,0)")
+    x = (F.col("ts").cast("timestamp").cast("long")
+         - F.lit(1704067200)).cast("decimal(17,0)")
     y_cc = F.expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS DECIMAL(18,0))")
     s = events.groupBy("event_type").agg(
         F.count("*").cast("decimal(13,0)").alias("n"),
@@ -340,20 +341,24 @@ def type_correlation(events: DataFrame) -> DataFrame:
     )
 
 
-def user_type_pivot(events: DataFrame,
-                    types: tuple = ("click", "error", "purchase", "signup", "view")) -> DataFrame:
+#: The event types user_type_pivot counts, one column each.
+EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
+
+
+def user_type_pivot(events: DataFrame) -> DataFrame:
     """Wide activity matrix: one row per user, one count column per event
     type plus the total — the ``pivot`` reshaping family. The type list is
-    passed explicitly (Spark's pivot without values would scan once just to
-    discover columns; at warehouse scale the schema is a contract, not a
-    discovery). Compiles to a single hash-agg with conditional counts —
+    the fixed ``EVENT_TYPES`` (Spark's pivot without values would scan
+    once just to discover columns; at warehouse scale the schema is a
+    contract, not a discovery). Compiles to a single hash-agg with conditional counts —
     no joins, no explode, map-side partials carry all five counters.
     """
-    agg = [F.coalesce(F.col(f"`{t}`"), F.lit(0)).cast("long").alias(t) for t in types]
-    wide = events.groupBy("user_id").pivot("event_type", list(types)).count()
+    agg = [F.coalesce(F.col(f"`{t}`"), F.lit(0)).cast("long").alias(t)
+           for t in EVENT_TYPES]
+    wide = events.groupBy("user_id").pivot("event_type", list(EVENT_TYPES)).count()
     out = wide.select("user_id", *agg)
     total = None
-    for t in types:
+    for t in EVENT_TYPES:
         total = F.col(t) if total is None else total + F.col(t)
     return out.withColumn("total", total.cast("long"))
 

@@ -717,10 +717,9 @@ def bpe_encode(docs: DataFrame, merges: list) -> DataFrame:
     )
 
 
-def tokenizer_fertility(docs: DataFrame, merges: list,
-                        by: str = "lang") -> DataFrame:
+def tokenizer_fertility(docs: DataFrame, merges: list) -> DataFrame:
     """Tokenizer fertility audit: mean subword pieces per whitespace word,
-    grouped by ``by`` (default language) — THE standard multilingual
+    grouped by ``lang`` — THE standard multilingual
     tokenizer-quality table (XLM-R, BLOOM report it per language): a merge
     table trained on a skewed language mix shows fertility blow-up on the
     underrepresented languages, directly inflating their effective sequence
@@ -735,7 +734,7 @@ def tokenizer_fertility(docs: DataFrame, merges: list,
     so they are engine-exact and overflow-proof at 10^14 pieces (a BIGINT
     ``n_pieces·1e6`` would wrap past ~9.2e12 words).
 
-    Returns (``by``, n_words, n_pieces, n_chars, fertility_e6,
+    Returns (lang, n_words, n_pieces, n_chars, fertility_e6,
     continuation_bp, chars_per_piece_e6), one row per group, ordered.
     """
     ranks = {tuple(m): i for i, m in enumerate(merges)}
@@ -749,7 +748,7 @@ def tokenizer_fertility(docs: DataFrame, merges: list,
             })
 
     gw = (
-        docs.select(F.col(by).alias("grp"),
+        docs.select(F.col("lang").alias("grp"),
                     F.explode(F.split(F.trim("text"), TOKEN_SPLIT)).alias("w"))
         .filter(F.col("w") != "")
         .groupBy("grp", "w").agg(F.count("*").cast("long").alias("wcount"))
@@ -764,7 +763,7 @@ def tokenizer_fertility(docs: DataFrame, merges: list,
              F.sum(F.col("wcount") * F.length("w")).alias("n_chars"))
     )
     return out.select(
-        F.col("grp").alias(by),
+        F.col("grp").alias("lang"),
         "n_words", "n_pieces", "n_chars",
         F.expr("CAST(CAST(n_pieces AS DECIMAL(38,0)) * 1000000"
                " DIV n_words AS BIGINT)").alias("fertility_e6"),
@@ -772,7 +771,7 @@ def tokenizer_fertility(docs: DataFrame, merges: list,
                " DIV n_pieces AS BIGINT)").alias("continuation_bp"),
         F.expr("CAST(CAST(n_chars AS DECIMAL(38,0)) * 1000000"
                " DIV n_pieces AS BIGINT)").alias("chars_per_piece_e6"),
-    ).orderBy(by)
+    ).orderBy("lang")
 
 
 def pmi_collocations(docs: DataFrame, min_count: int = 5,
@@ -902,7 +901,7 @@ def encoding_quality(docs: DataFrame) -> DataFrame:
     )
 
 
-def profile_table(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
+def profile_table(df: DataFrame) -> DataFrame:
     """One-pass data profiler: per column, row count, null count, exact
     distinct count, and min/max (stringified) — the ingest-validation step
     every corpus refresh runs before anything downstream trusts the data.
@@ -913,7 +912,7 @@ def profile_table(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     doesn't matter at 100 TB), then an explode-of-structs unpivot that
     never touches the data again. Output: (column, n_rows, n_nulls,
     n_distinct, min_value, max_value)."""
-    cols = cols or df.columns
+    cols = df.columns
     aggs = [F.count(F.lit(1)).alias("__n")]
     for c in cols:
         aggs += [
@@ -935,8 +934,7 @@ def profile_table(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     return one.select(F.explode(packed).alias("p")).select("p.*")
 
 
-def length_outliers(docs: DataFrame, group: str = "source",
-                    k: float = 3.0) -> DataFrame:
+def length_outliers(docs: DataFrame) -> DataFrame:
     """Robust per-group outlier flags on document length: median + MAD
     (median absolute deviation) — the corpus-QA step that catches truncated
     or concatenated documents without a distribution assumption (unlike
@@ -948,17 +946,18 @@ def length_outliers(docs: DataFrame, group: str = "source",
     on halves, so med/MAD/threshold are binary-exact doubles and the flag
     can never drift cross-engine.
 
-    Output: (doc_id, group, n_chars, med, mad, is_outlier)."""
-    med = docs.groupBy(group).agg(
+    Output: (doc_id, source, n_chars, med, mad, is_outlier); outliers lie
+    more than 3 MADs from their source's median."""
+    med = docs.groupBy("source").agg(
         F.expr("percentile(n_chars, 0.5)").alias("med"))
-    dev = (docs.join(F.broadcast(med), group)
+    dev = (docs.join(F.broadcast(med), "source")
            .withColumn("adev", F.abs(F.col("n_chars") - F.col("med"))))
-    mad = dev.groupBy(group).agg(
+    mad = dev.groupBy("source").agg(
         F.expr("percentile(adev, 0.5)").alias("mad"))
-    return (dev.join(F.broadcast(mad), group)
-            .select("doc_id", group, "n_chars", "med", "mad",
+    return (dev.join(F.broadcast(mad), "source")
+            .select("doc_id", "source", "n_chars", "med", "mad",
                     (F.abs(F.col("n_chars") - F.col("med"))
-                     > F.lit(k) * F.col("mad")).alias("is_outlier")))
+                     > F.lit(3.0) * F.col("mad")).alias("is_outlier")))
 
 
 def source_kl_divergence(docs: DataFrame) -> DataFrame:
@@ -1030,9 +1029,9 @@ def char_entropy(docs: DataFrame) -> DataFrame:
     )
 
 
-def decorated_lines(docs: DataFrame, per_line: int = 8) -> DataFrame:
+def decorated_lines(docs: DataFrame) -> DataFrame:
     """Deterministic 'web-shaped' line view of the token corpus: chunk each
-    document's tokens into ``per_line``-token lines, then decorate line i
+    document's tokens into 8-token lines, then decorate line i
     from the first hex digit d of md5(doc_id:ln:i) — bullet prefix ``- ``
     for d<3, trailing ``...`` for d in 3..4, terminal ``.`` for d in 5..10,
     bare otherwise. Pure Catalyst HOFs, mirrored 1:1 by the DuckDB oracle
@@ -1042,13 +1041,13 @@ def decorated_lines(docs: DataFrame, per_line: int = 8) -> DataFrame:
     product."""
     return docs.withColumn(
         "lines",
-        F.expr(f"""
+        F.expr("""
           transform(
-            sequence(0, CAST(ceil(size(split(text, ' ')) / {per_line}) AS INT) - 1),
+            sequence(0, CAST(ceil(size(split(text, ' ')) / 8) AS INT) - 1),
             i -> concat(
               CASE WHEN conv(substring(md5(concat(doc_id, ':ln:', CAST(i AS STRING))), 1, 1), 16, 10) < 3
                    THEN '- ' ELSE '' END,
-              array_join(slice(split(text, ' '), i*{per_line} + 1, {per_line}), ' '),
+              array_join(slice(split(text, ' '), i*8 + 1, 8), ' '),
               CASE WHEN conv(substring(md5(concat(doc_id, ':ln:', CAST(i AS STRING))), 1, 1), 16, 10) BETWEEN 3 AND 4
                    THEN '...'
                    WHEN conv(substring(md5(concat(doc_id, ':ln:', CAST(i AS STRING))), 1, 1), 16, 10) BETWEEN 5 AND 10
@@ -1056,9 +1055,7 @@ def decorated_lines(docs: DataFrame, per_line: int = 8) -> DataFrame:
         """))
 
 
-def gopher_line_stats(docs: DataFrame,
-                      max_bullet_frac: float = 0.9,
-                      max_ellipsis_frac: float = 0.3) -> DataFrame:
+def gopher_line_stats(docs: DataFrame) -> DataFrame:
     """Gopher-style line-shape quality rules (Rae et al. 2021 §A1.1): the
     fraction of lines that are bullets, that trail off in an ellipsis, that
     end in terminal punctuation, and the duplicate-line fraction — plus the
@@ -1079,7 +1076,7 @@ def gopher_line_stats(docs: DataFrame,
         F.round(ellipses / n, 6).alias("ellipsis_frac"),
         F.round(punctend / n, 6).alias("punct_end_frac"),
         F.round(F.lit(1.0) - distinct / n, 6).alias("dup_line_frac"),
-        ((bullets / n <= max_bullet_frac) & (ellipses / n <= max_ellipsis_frac))
+        ((bullets / n <= 0.9) & (ellipses / n <= 0.3))
         .alias("keep"),
     )
 
@@ -1298,8 +1295,7 @@ CODE_KEYWORDS = ("def", "return", "import", "class", "void", "int",
                  "function", "var", "const", "if", "else", "for", "while")
 
 
-def code_detection(docs: DataFrame,
-                   keywords: tuple = CODE_KEYWORDS) -> DataFrame:
+def code_detection(docs: DataFrame) -> DataFrame:
     """Code-vs-prose heuristic — the filter that keeps (or routes) source
     code in a web corpus, stacked next to [[text_langid]] in every
     pretraining pipeline: per doc, symbol density (``{}();=[]<>`` chars
@@ -1315,7 +1311,7 @@ def code_detection(docs: DataFrame,
     n_chars = F.greatest(F.lit(1), F.length("text")).cast("long")
     symbols = (F.length("text")
                - F.length(F.translate("text", "{}();=[]<>", ""))).cast("long")
-    kw = "|".join(keywords)
+    kw = "|".join(CODE_KEYWORDS)
     kw_hits = F.size(F.expr(
         f"filter(split(trim(text), '\\\\s+'), t -> t RLIKE '^({kw})$')"
     )).cast("long")

@@ -56,6 +56,7 @@ def anchor_stats(docs: DataFrame) -> DataFrame:
 
 
 SCALE = 10**12  # integer micro-rank units
+DAMPING_PCT = 85  # pagerank / trustrank damping d, in percent
 
 
 def _doc_nodes(docs: DataFrame, wide_threshold: int | None = None) -> DataFrame:
@@ -127,7 +128,7 @@ def synth_edges(docs: DataFrame, n_nodes: int) -> DataFrame:
     return ks.select(F.col("node").alias("src"), "outdeg", dst)
 
 
-def pagerank(docs: DataFrame, iters: int = 3, damping_pct: int = 85) -> DataFrame:
+def pagerank(docs: DataFrame, iters: int = 3) -> DataFrame:
     """PageRank over the synthetic outlink graph, ``iters`` unrolled
     join+agg rounds in integer micro-rank units:
 
@@ -140,7 +141,7 @@ def pagerank(docs: DataFrame, iters: int = 3, damping_pct: int = 85) -> DataFram
     n_nodes = docs.select("doc_id").distinct().count()  # metadata-scale scalar
     nodes = _doc_nodes(docs)
     edges = synth_edges(docs, n_nodes).persist()
-    base = SCALE * (100 - damping_pct) // 100 // n_nodes
+    base = SCALE * (100 - DAMPING_PCT) // 100 // n_nodes
 
     ranks = nodes.select("node", F.lit(SCALE // n_nodes).cast("long").alias("rank"))
     for _ in range(iters):
@@ -153,7 +154,7 @@ def pagerank(docs: DataFrame, iters: int = 3, damping_pct: int = 85) -> DataFram
             nodes.join(contribs, nodes.node == contribs.dst, "left")
             .select(
                 "node",
-                F.expr(f"CAST({base} + (coalesce(inflow, 0) * {damping_pct}) div 100 AS BIGINT)")
+                F.expr(f"CAST({base} + (coalesce(inflow, 0) * {DAMPING_PCT}) div 100 AS BIGINT)")
                 .alias("rank"),
             )
         )
@@ -209,10 +210,9 @@ def normalize_urls(urls: DataFrame) -> DataFrame:
     return urls.select("doc_id", "url", canon.alias("canonical_url"))
 
 
-def snapshot_delta(old: DataFrame, new: DataFrame,
-                   key: str = "doc_id") -> DataFrame:
+def snapshot_delta(old: DataFrame, new: DataFrame) -> DataFrame:
     """Incremental-crawl snapshot diff (the monthly-refresh CDC step): full
-    outer join of two crawl snapshots on the document key, change class from
+    outer join of two crawl snapshots on ``doc_id``, change class from
     null-side + content-fingerprint comparison. At refresh time only
     'added' + 'changed' documents re-enter the pipeline — the whole point of
     incremental processing at 10^12 documents.
@@ -221,15 +221,15 @@ def snapshot_delta(old: DataFrame, new: DataFrame,
     cf. storage.py); the md5 fingerprints are computed map-side before the
     join so the join carries 32-byte digests, not document bodies.
 
-    Returns (key, change) with change ∈ added | removed | changed |
+    Returns (doc_id, change) with change ∈ added | removed | changed |
     unchanged.
     """
-    o = old.select(F.col(key), F.md5("text").alias("old_fp"))
-    n = new.select(F.col(key), F.md5("text").alias("new_fp"))
+    o = old.select(F.col("doc_id"), F.md5("text").alias("old_fp"))
+    n = new.select(F.col("doc_id"), F.md5("text").alias("new_fp"))
     return (
-        o.join(n, key, "full")
+        o.join(n, "doc_id", "full")
         .select(
-            key,
+            "doc_id",
             F.when(F.col("old_fp").isNull(), "added")
             .when(F.col("new_fp").isNull(), "removed")
             .when(F.col("old_fp") != F.col("new_fp"), "changed")
@@ -892,8 +892,7 @@ def url_param_profile(urls: DataFrame) -> DataFrame:
          .otherwise("low_cardinality").alias("class"))
 
 
-def trustrank(docs: DataFrame, iters: int = 3, damping_pct: int = 85,
-              seed_mod: int = 10) -> DataFrame:
+def trustrank(docs: DataFrame, iters: int = 3, seed_mod: int = 10) -> DataFrame:
     """TrustRank (Gyöngyi, Garcia-Molina, Pedersen, VLDB 2004): PageRank
     with the teleport vector concentrated on a trusted seed set instead of
     uniform — rank can only flow OUT of seeds along links, so link-spam
@@ -915,7 +914,7 @@ def trustrank(docs: DataFrame, iters: int = 3, damping_pct: int = 85,
     nodes = nodes.withColumn("is_seed", seed_flag)
     n_seeds = nodes.where("is_seed").count()  # metadata-scale scalar
     edges = synth_edges(docs, n_nodes).persist()
-    base = SCALE * (100 - damping_pct) // 100 // max(n_seeds, 1)
+    base = SCALE * (100 - DAMPING_PCT) // 100 // max(n_seeds, 1)
 
     ranks = nodes.select(
         "node",
@@ -932,7 +931,7 @@ def trustrank(docs: DataFrame, iters: int = 3, damping_pct: int = 85,
                 "node",
                 F.expr(
                     f"CAST((CASE WHEN is_seed THEN {base} ELSE 0 END)"
-                    f" + (coalesce(inflow, 0) * {damping_pct}) div 100"
+                    f" + (coalesce(inflow, 0) * {DAMPING_PCT}) div 100"
                     " AS BIGINT)").alias("rank")))
     out = (nodes.join(ranks, "node")
            .select("doc_id", F.col("rank").alias("trust_micro"), "is_seed"))

@@ -55,8 +55,8 @@ CHECKPOINT_SCHEMA = (
 )
 
 
-def bucket_col(n_buckets: int, doc_id_col: str = "doc_id"):
-    return F.pmod(F.xxhash64(F.col(doc_id_col)), F.lit(n_buckets)).cast("int")
+def bucket_col(n_buckets: int):
+    return F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_buckets)).cast("int")
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:

@@ -199,7 +199,7 @@ def identify_page(tokens) -> str:
 # PANCARD — documents/pancard/document_coordinates.py + pattern1/pattern2
 # ---------------------------------------------------------------------------
 
-def _pan_number(words, key="Pancard Number", length=(7, 9, 10), factor=0.65):
+def _pan_number(words, key="Pancard Number", length=(7, 9, 10)):
     value, found = "", []
     for x1, y1, x2, y2, t in words:
         if len(t) in length and t.isupper() and _has_digit_and_alpha(t):
@@ -207,7 +207,7 @@ def _pan_number(words, key="Pancard Number", length=(7, 9, 10), factor=0.65):
             found.append([x1, y1, x2, y2])
     if not value:
         return _field(key)
-    return _field(key, value, [_trim(b, factor) for b in found])
+    return _field(key, value, [_trim(b, 0.65) for b in found])
 
 
 def _pan_dob(words):
@@ -277,7 +277,7 @@ def _pan_names(words, tdl):
     return _field("Pancard Names", name, [_trim(b, 0.50) for b in coords])
 
 
-def _extract_pancard(words, lines, qr_boxes, level, places=None):
+def _extract_pancard(words, lines, qr_boxes, level, places):
     tdl = _text_lines(lines)
     if level != 1:
         # Aggressive path bug: undefined `_extract_pancard_client_name`
@@ -496,7 +496,7 @@ def _aadhaar_mobile(words, key="Aadhaar Mobile"):
     return _field(key, value, [_trim(b, 0.54) for b in found])
 
 
-def _extract_aadhaar(words, lines, qr_boxes, level, places=None):
+def _extract_aadhaar(words, lines, qr_boxes, level, places):
     number = _aadhaar_number(words)
     name = _aadhaar_name(words, lines)
     dob = _aadhaar_dob(words, lines)
@@ -592,7 +592,7 @@ def _eaadhaar_gender(words, lines):
     return _field("E-Aadhaar Gender", gender, coords)
 
 
-def _extract_eaadhaar(words, lines, qr_boxes, level, places=None):
+def _extract_eaadhaar(words, lines, qr_boxes, level, places):
     name = _eaadhaar_name(words, lines)
     number = _aadhaar_number(words, key="E-Aadhaar Number")
     dob = _eaadhaar_dob(words)
@@ -723,7 +723,7 @@ def _epan_father_name(words, lines):
         return _field("E-Pancard Client Father Name")
 
 
-def _extract_epancard(words, lines, qr_boxes, level, places=None):
+def _extract_epancard(words, lines, qr_boxes, level, places):
     number = _pan_number(words, key="E-Pancard Number", length=(10,))
     dob = _epan_dates(words)
     gender = _epan_gender(words)
@@ -850,7 +850,7 @@ def _passport_arrow(words):
     return _field("Passport Arrow", value, coords)
 
 
-def _extract_passport(words, lines, qr_boxes, level, places=None):
+def _extract_passport(words, lines, qr_boxes, level, places):
     number = _passport_number(words)
     names = _passport_names(words, lines)
     dates = _passport_dates(words)
@@ -929,7 +929,7 @@ def _dl_names(words, lines):
     return _field("Driving License Names", names, coords)
 
 
-def _extract_dl(words, lines, qr_boxes, level, places=None):
+def _extract_dl(words, lines, qr_boxes, level, places):
     number = _dl_number(words)
     dates = _dl_dates(words)
     names = _dl_names(words, lines)
@@ -991,7 +991,7 @@ def _cdsl_client_name(words):
     return _field("CDSL Client Name", name, [merged])
 
 
-def _extract_cdsl(words, lines, qr_boxes, level, places=None):
+def _extract_cdsl(words, lines, qr_boxes, level, places):
     pan = _cdsl_pan(words)
     client = _cdsl_client_name(words)
     if level == 1:

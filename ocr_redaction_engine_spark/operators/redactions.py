@@ -21,20 +21,20 @@ from pyspark.sql import functions as F
 _NAME_RE = "^[0-9]+F[0-9a-fA-Z_-]+"
 
 
-def with_frame_doc_ids(df: DataFrame, name_col: str = "document_name") -> DataFrame:
+def with_frame_doc_ids(df: DataFrame) -> DataFrame:
     """Frame/doc id parse (A6) — prepare_xml/redacted.py:11-30 as Catalyst
     expressions; twin of kernel.parse_document_name."""
-    first_seg = F.split(F.col(name_col), "_").getItem(0)
+    first_seg = F.split(F.col("document_name"), "_").getItem(0)
     frame_str = F.split(first_seg, "-").getItem(0)
-    matched = F.col(name_col).rlike(_NAME_RE)
+    matched = F.col("document_name").rlike(_NAME_RE)
     frame_id = F.when(
         matched, F.split(frame_str, "F").getItem(0).cast("int") - F.lit(1)
     ).otherwise(F.lit(0))
     document_id = F.when(
-        matched, F.expr(f"substring(split(split({name_col}, '_')[0], '-')[1], 1, "
-                        f"length(split(split({name_col}, '_')[0], '-')[1]) - 1)")
-    ).otherwise(F.expr(f"substring(split({name_col}, '_')[0], 1, "
-                       f"length(split({name_col}, '_')[0]) - 1)"))
+        matched, F.expr("substring(split(split(document_name, '_')[0], '-')[1], 1, "
+                        "length(split(split(document_name, '_')[0], '-')[1]) - 1)")
+    ).otherwise(F.expr("substring(split(document_name, '_')[0], 1, "
+                       "length(split(document_name, '_')[0]) - 1)"))
     return df.withColumn("frame_id", frame_id).withColumn("document_id", document_id)
 
 

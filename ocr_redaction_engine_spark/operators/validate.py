@@ -108,15 +108,15 @@ COLLECT_CAP = 100_000
 
 
 def collect_invalid(documents: DataFrame, media_pages: DataFrame,
-                    whitelist: tuple = VALID_EXTENSIONS,
-                    cap: int = COLLECT_CAP):
+                    whitelist: tuple = VALID_EXTENSIONS):
     """Run the probe ONCE and return its rows as a list (None if the
-    invalid set exceeds ``cap`` — pathological corpus, use the lazy route).
+    invalid set exceeds COLLECT_CAP — pathological corpus, use the lazy
+    route).
     The list is what split_valid threads into every sink plan as a
     map-side filter, so forcing N sinks costs one probe job, not N."""
     rows = (invalid_documents(documents, media_pages, whitelist)
-            .limit(cap + 1).collect())
-    if len(rows) > cap:
+            .limit(COLLECT_CAP + 1).collect())
+    if len(rows) > COLLECT_CAP:
         return None
     return rows
 

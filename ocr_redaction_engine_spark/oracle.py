@@ -122,12 +122,11 @@ def expected_page_outputs(docs, pages, level: int = 1, places=None):
     return redactions, values
 
 
-def expected_invalid_docs(docs, pages,
-                          whitelist=("jpg", "jpeg", "tiff")) -> list[tuple]:
+def expected_invalid_docs(docs, pages) -> list[tuple]:
     """P1 validity oracle: (doc_id, status, task_result, reason) rows for
     documents whose media fails the reference's promotion check — media_ref
     unresolvable (missing_media ≅ os.path.exists False) or resolved
-    document_name extension outside the whitelist (bad_extension), doc-level
+    document_name extension outside jpg/jpeg/tiff (bad_extension), doc-level
     reason = min(reasons) mirroring operators/validate.py."""
     by_ref = {p["media_ref"]: p for p in pages}
     out = []
@@ -139,7 +138,8 @@ def expected_invalid_docs(docs, pages,
             p = by_ref.get(s["media_ref"])
             if p is None:
                 reasons.append("missing_media")
-            elif p["document_name"].rsplit(".", 1)[-1].lower() not in whitelist:
+            elif (p["document_name"].rsplit(".", 1)[-1].lower()
+                  not in ("jpg", "jpeg", "tiff")):
                 reasons.append("bad_extension")
         if reasons:
             out.append((d["doc_id"], "INVALID_DOCUMENT", "Invalid Document",

@@ -143,11 +143,11 @@ def ac_scan(text: str, ac: dict) -> dict:
     return {idx: rec[:2] for idx, rec in hits.items()}
 
 
-def dict_match(docs, terms: list[str], text_col: str = "text",
-               id_col: str = "doc_id"):
+def dict_match(docs, terms: list[str], id_col: str = "doc_id"):
     """Corpus-scale dictionary matching: one broadcast automaton, one
-    Arrow-batched map stage, zero shuffles. Returns (id_col, term,
-    n_matches, first_pos) — one row per (doc, matched term).
+    Arrow-batched map stage, zero shuffles, over the ``text`` column.
+    Returns (id_col, term, n_matches, first_pos) — one row per (doc,
+    matched term).
 
     100 TB posture: the automaton is O(total term chars) driver-side state
     broadcast once; each input split is scanned independently in a single
@@ -179,7 +179,7 @@ def dict_match(docs, terms: list[str], text_col: str = "text",
         tlist = a["terms"]
         for pdf in batches:
             ids, out_terms, counts, firsts = [], [], [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
+            for did, text in zip(pdf[id_col], pdf["text"]):
                 if text is None:
                     continue
                 for idx, (n, first) in ac_scan(text, a).items():
@@ -195,4 +195,4 @@ def dict_match(docs, terms: list[str], text_col: str = "text",
                  "n_matches": pd.Series(counts, dtype="int64"),
                  "first_pos": pd.Series(firsts, dtype="int64")})
 
-    return docs.select(id_col, text_col).mapInPandas(scan, schema=out_schema)
+    return docs.select(id_col, "text").mapInPandas(scan, schema=out_schema)

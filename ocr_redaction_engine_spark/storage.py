@@ -42,8 +42,7 @@ def zorder_key(x: str, y: str, bits: int = 10):
 
 
 def write_zordered(df: DataFrame, path: str, x: str, y: str,
-                   n_partitions: int = 16, bits: int = 10,
-                   mode: str = "overwrite") -> None:
+                   n_partitions: int = 16, bits: int = 10) -> None:
     """Z-order-clustered parquet export: range-partition + sort by the
     Morton key of (x, y), then drop the key. Each output file covers a
     compact rectangle of the (x, y) plane instead of a full-width stripe,
@@ -53,7 +52,7 @@ def write_zordered(df: DataFrame, path: str, x: str, y: str,
     (keyed.repartitionByRange(n_partitions, "__z")
      .sortWithinPartitions("__z")
      .drop("__z")
-     .write.mode(mode).parquet(path))
+     .write.mode("overwrite").parquet(path))
 
 
 def synth_file_inventory(docs: DataFrame, files_per_source: int = 40) -> DataFrame:
@@ -73,11 +72,9 @@ def synth_file_inventory(docs: DataFrame, files_per_source: int = 40) -> DataFra
     )
 
 
-def compaction_plan(files: DataFrame, target_bytes: int = 60_000,
-                    part: str = "source", key: str = "file_id",
-                    size: str = "file_bytes") -> DataFrame:
+def compaction_plan(files: DataFrame, target_bytes: int = 60_000) -> DataFrame:
     """Small-file compaction planner (Iceberg ``rewrite_data_files`` /
-    bin-packing analog): within each table partition, order files by key and
+    bin-packing analog): within each source, order files by file_id and
     assign file f to output bin ``floor(running_offset(f) / target_bytes)``
     — the same running-offset packing Spark's own FilePartition planner
     uses. Every bin's payload is < target_bytes + one file (the classic
@@ -86,21 +83,23 @@ def compaction_plan(files: DataFrame, target_bytes: int = 60_000,
     over metadata-scale rows: the planner never touches data bytes, so it
     costs the same at 100 TB as at 100 MB. Integer-exact and deterministic.
 
-    Returns (part, key, size, bin, bin_seq) — bin_seq is the file's position
-    inside its output bin (what a rewrite task iterates over).
+    Returns (source, file_id, file_bytes, bin, bin_seq) — bin_seq is the
+    file's position inside its output bin (what a rewrite task iterates
+    over).
     """
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    w = Window.partitionBy(part).orderBy(key)
-    offset = (F.sum(size).over(w) - F.col(size)).cast("long")
+    w = Window.partitionBy("source").orderBy("file_id")
+    offset = (F.sum("file_bytes").over(w) - F.col("file_bytes")).cast("long")
     # integer DIV, not floor(double /): running offsets are exact longs, and
     # a multi-PB partition's offset exceeds the 2^53 exact-double range long
     # before it overflows int64 (same discipline as pack_offsets)
-    planned = (files.select(part, key, size, offset.alias("__off"))
-               .selectExpr(part, key, size,
+    planned = (files.select("source", "file_id", "file_bytes",
+                            offset.alias("__off"))
+               .selectExpr("source", "file_id", "file_bytes",
                            f"__off DIV {int(target_bytes)} AS bin"))
-    wb = Window.partitionBy(part, "bin").orderBy(key)
+    wb = Window.partitionBy("source", "bin").orderBy("file_id")
     return planned.withColumn("bin_seq", F.row_number().over(wb).cast("long"))
 
 
@@ -183,9 +182,7 @@ def partition_stats(docs: DataFrame, keys: tuple = ("source", "lang"),
         .withColumn("hot", F.col("skew_x10") >= 30))
 
 
-def clustering_depth(docs: DataFrame, files_per_source: int = 40,
-                     key_space: int = 100_000,
-                     bucket_w: int = 12_500) -> DataFrame:
+def clustering_depth(docs: DataFrame, files_per_source: int = 40) -> DataFrame:
     """Clustering-depth audit (the Snowflake `clustering_information` /
     Iceberg sort-order health metric): for each file, how many OTHER files
     of the same (source, layout) its key range [kmin, kmax] overlaps —
@@ -194,12 +191,13 @@ def clustering_depth(docs: DataFrame, files_per_source: int = 40,
     partition. Measured on two deterministic layouts of the SAME inventory
     so the table shows what clustering buys:
 
-      ``clustered``  file i owns the contiguous slice i·W..(i+1)·W−1
+      ``clustered``  file i owns the contiguous slice i·W..(i+1)·W−1 of
+                     the 100,000-key space (W = 100,000 ÷ files)
       ``scattered``  md5 start, same width — ranges strewn at random
 
     The pairwise overlap test is the repo's bucketed interval-join idiom
-    ([[q33_range_join]]): ranges explode over coarse key buckets, pairs
-    come from an EQUI-join on (source, layout, bucket) — never a
+    ([[q33_range_join]]): ranges explode over coarse 12,500-key buckets,
+    pairs come from an EQUI-join on (source, layout, bucket) — never a
     nested-loop join — and the exact overlap predicate filters candidates.
     Output: one row per (source, layout) with files, avg_depth_e6 (self
     counted, so perfectly clustered = 1.0), max_depth.
@@ -207,7 +205,7 @@ def clustering_depth(docs: DataFrame, files_per_source: int = 40,
     from pyspark.sql import functions as F
 
     inv = synth_file_inventory(docs, files_per_source)
-    width = key_space // files_per_source
+    width = 100_000 // files_per_source
     h = F.conv(F.substring(F.md5(F.concat_ws(
         ":", "source", F.col("file_id").cast("string"), F.lit("kr"))),
         1, 8), 16, 10).cast("long")
@@ -219,12 +217,12 @@ def clustering_depth(docs: DataFrame, files_per_source: int = 40,
         "source", "file_id", "layout",
         F.when(F.col("layout") == "clustered",
                F.col("file_id") * width)
-         .otherwise(h % (key_space - width)).alias("kmin"),
+         .otherwise(h % (100_000 - width)).alias("kmin"),
     ).withColumn("kmax", F.col("kmin") + width - 1)
     spans = ranges.select(
         "source", "file_id", "layout", "kmin", "kmax",
-        F.explode(F.sequence(F.expr(f"kmin DIV {bucket_w}"),
-                             F.expr(f"kmax DIV {bucket_w}"))).alias("bk"))
+        F.explode(F.sequence(F.expr("kmin DIV 12500"),
+                             F.expr("kmax DIV 12500"))).alias("bk"))
     a = spans.alias("a")
     b = spans.select(
         F.col("source").alias("source"), F.col("layout").alias("layout"),

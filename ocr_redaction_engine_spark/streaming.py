@@ -32,20 +32,16 @@ from .operators.validate import split_valid
 from .pipeline import PipelineConfig, run_pipeline
 
 
-def read_documents_stream(spark: SparkSession, documents_path: str,
-                          max_files_per_trigger: int | None = None) -> DataFrame:
+def read_documents_stream(spark: SparkSession, documents_path: str) -> DataFrame:
     """File-source stream over the documents table directory. New parquet
     files appearing under the path become micro-batches (the S1 poll loop,
     minus the poll)."""
-    reader = spark.readStream.schema(DOCUMENTS_DDL)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(documents_path)
+    return spark.readStream.schema(DOCUMENTS_DDL).parquet(documents_path)
 
 
 def stream_pipeline(spark: SparkSession, documents_path: str,
                     media_pages_path: str, out_dir: str, ckpt_dir: str,
-                    level: int = 1, await_termination: bool = True):
+                    level: int = 1):
     """Streaming redaction job: the batch pipeline including the P1
     INVALID_DOCUMENT route, via ``foreachBatch``: each micro-batch runs the
     batch wiring (``split_valid`` → routed spans/redactions/values +
@@ -63,7 +59,8 @@ def stream_pipeline(spark: SparkSession, documents_path: str,
     production shape for a continuously fed corpus: the reference's 5 s
     IN_PROGRESS poll loop (in_progress/process_in_progress_status.py:57-67)
     becomes the file source trigger, and its per-document status writes
-    become the invalid sink's rows."""
+    become the invalid sink's rows. Returns once the trigger has drained
+    what had arrived."""
     docs = read_documents_stream(spark, documents_path)
     media_pages = spark.read.parquet(media_pages_path)  # static side
     cfg = PipelineConfig(level=level)
@@ -83,20 +80,17 @@ def stream_pipeline(spark: SparkSession, documents_path: str,
         finally:
             page_rows.unpersist()
 
-    q = (docs.writeStream
-         .foreachBatch(process)
-         .option("checkpointLocation", f"{ckpt_dir}/validated")
-         .trigger(availableNow=True)
-         .start())
-    if await_termination:
-        q.awaitTermination()
-    return q
+    (docs.writeStream
+     .foreachBatch(process)
+     .option("checkpointLocation", f"{ckpt_dir}/validated")
+     .trigger(availableNow=True)
+     .start()
+     .awaitTermination())
 
 
 def stream_extraction(spark: SparkSession, documents_path: str,
                       media_pages_path: str, out_dir: str, ckpt_dir: str,
-                      config=None, await_termination: bool = True,
-                      max_files_per_trigger: int | None = None):
+                      config=None):
     """Streaming twin of the main-content extraction pipeline
     (extraction_pipeline.extract_spans) — the north-rule job for a
     continuously arriving crawl.
@@ -109,34 +103,32 @@ def stream_extraction(spark: SparkSession, documents_path: str,
     through the sink directory see each batch once. ``availableNow`` drains
     the backlog and stops; rerunning later picks up only new files (the
     reference's 5 s re-poll, checkpointed) from ``{ckpt_dir}/main_spans``;
-    reprocessing = delete that checkpoint."""
+    reprocessing = delete that checkpoint. Returns once the trigger has
+    drained what had arrived."""
     from .extraction_pipeline import ExtractionConfig, extract_spans
 
     cfg = config or ExtractionConfig()
-    docs = read_documents_stream(spark, documents_path, max_files_per_trigger)
+    docs = read_documents_stream(spark, documents_path)
     media_pages = spark.read.parquet(media_pages_path)  # static side
-    q = (extract_spans(docs, media_pages, cfg).writeStream
-         .format("parquet")
-         .option("path", f"{out_dir}/main_spans")
-         .option("checkpointLocation", f"{ckpt_dir}/main_spans")
-         .trigger(availableNow=True)
-         .start())
-    if await_termination:
-        q.awaitTermination()
-    return q
+    (extract_spans(docs, media_pages, cfg).writeStream
+     .format("parquet")
+     .option("path", f"{out_dir}/main_spans")
+     .option("checkpointLocation", f"{ckpt_dir}/main_spans")
+     .trigger(availableNow=True)
+     .start()
+     .awaitTermination())
 
 
-def session_windows(events: DataFrame, gap: str = "30 minutes",
-                    watermark: str = "2 hours") -> DataFrame:
-    """Session-window aggregation (gap-based): the built-in
-    ``session_window`` operator; works on streaming (append after watermark
-    close) and batch (differential twin) alike."""
+def session_windows(events: DataFrame) -> DataFrame:
+    """Session-window aggregation (30-minute gap, 2-hour watermark): the
+    built-in ``session_window`` operator; works on streaming (append after
+    watermark close) and batch (differential twin) alike."""
     # parquet NTZ timestamps → LTZ (session tz is pinned UTC in get_spark);
     # watermarks require TIMESTAMP, not TIMESTAMP_NTZ
     events = events.withColumn("ts", F.col("ts").cast("timestamp"))
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("win"), "user_id")
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.session_window("ts", "30 minutes").alias("win"), "user_id")
         .agg(F.count("*").alias("n_events"),
              F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"))
         .select("user_id",
@@ -147,12 +139,12 @@ def session_windows(events: DataFrame, gap: str = "30 minutes",
 
 
 def stream_interval_join(clicks: DataFrame, errors: DataFrame,
-                         minutes: int = 5,
-                         watermark: str = "10 minutes") -> DataFrame:
+                         minutes: int = 5) -> DataFrame:
     """Stream-stream interval join: each click pairs with same-user errors
     from the preceding ``minutes`` (half-open ``[click-5m, click)``), both
-    sides watermarked so the join state is bounded — the engine can discard
-    an error row once no future click can reach back to it. This is the
+    sides watermarked (10 minutes) so the join state is bounded — the
+    engine can discard an error row once no future click can reach back
+    to it. This is the
     one Structured Streaming join class the stateless pipeline doesn't
     exercise (stream-static covers the media resolve; this covers
     bounded-state event correlation).
@@ -163,11 +155,11 @@ def stream_interval_join(clicks: DataFrame, errors: DataFrame,
     Spark's symmetric hash join handles with per-key state eviction.
     """
     c = (clicks.withColumn("ts", F.col("ts").cast("timestamp"))
-         .withWatermark("ts", watermark)
+         .withWatermark("ts", "10 minutes")
          .select(F.col("event_id").alias("click_id"), "user_id",
                  F.col("ts").alias("click_ts")))
     e = (errors.withColumn("ts", F.col("ts").cast("timestamp"))
-         .withWatermark("ts", watermark)
+         .withWatermark("ts", "10 minutes")
          .select(F.col("event_id").alias("error_id"),
                  F.col("user_id").alias("e_user"),
                  F.col("ts").alias("error_ts")))

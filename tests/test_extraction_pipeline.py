@@ -1,8 +1,11 @@
 """Main-content extraction pipeline (north rule): span-sequence equality vs
 the pure-Python oracle, partition-granular kill/resume, no-op rerun, and a
-UDF-free plan gate (every branch must stay in Catalyst)."""
+UDF-free plan gate (every branch must stay in Catalyst), and a failure
+inside the second of two in-flight waves."""
 
 from __future__ import annotations
+
+import threading
 
 import pytest
 
@@ -139,3 +142,60 @@ def test_extraction_kill_resume_and_noop(spark, web_input, monkeypatch):
     n_docs = sum(r.n_docs for r in lineage.collect())
     assert n_docs == spark.read.parquet(f"{base}/out/main_spans") \
         .select("doc_id").distinct().count()
+
+
+def test_failure_inside_the_second_wave_with_two_in_flight(spark, web_input,
+                                                           monkeypatch):
+    """A real job fails inside its second wave while two waves are in
+    flight (no claim step). The job's own ``write_wave`` is wrapped so the
+    wave holding bucket 2 raises once the first wave's lineage row is in,
+    by when the loop has started the third wave, which writes only after
+    that failure (events, no sleeps). The first error is re-raised, the
+    failed and the drained group get no lineage row, and a rerun on the
+    same checkpoint finishes all 8 buckets with ``main_spans`` identical
+    to a clean run's."""
+    base = web_input
+    docs, pages = f"{base}/input/documents", f"{base}/input/media_pages"
+    run_extraction_job(spark, docs, pages, f"{base}/out_clean_w2",
+                       f"{base}/ckpt_clean_w2", ExtractionConfig(**CFG))
+    expected = _main_spans(spark, f"{base}/out_clean_w2")
+
+    boom = _Boom("simulated failure inside wave 2")
+    first_lineage, failed = threading.Event(), threading.Event()
+    appended = []
+    real_append, real_run_waves = (checkpoint.append_checkpoint,
+                                   checkpoint.run_waves)
+
+    def recording_append(spark_, ckpt_dir, rows):
+        real_append(spark_, ckpt_dir, rows)
+        appended.append(sorted(r["bucket"] for r in rows))
+        first_lineage.set()
+
+    def run_waves(spark_, documents, ckpt_dir, n_buckets, bucket_group,
+                  write_wave, claim=None):
+        def failing_wave(group, wave_docs):
+            if 2 in group:
+                first_lineage.wait(60)
+                failed.set()
+                raise boom
+            if 4 in group:
+                failed.wait(60)
+            return write_wave(group, wave_docs)
+        return real_run_waves(spark_, documents, ckpt_dir, n_buckets,
+                              bucket_group, failing_wave, claim)
+
+    monkeypatch.setattr(checkpoint, "append_checkpoint", recording_append)
+    monkeypatch.setattr(checkpoint, "run_waves", run_waves)
+    with pytest.raises(_Boom) as raised:
+        run_extraction_job(spark, docs, pages, f"{base}/out_w2",
+                           f"{base}/ckpt_w2", ExtractionConfig(**CFG))
+    monkeypatch.undo()
+    assert raised.value is boom
+    assert appended == [[0, 1]]
+    assert checkpoint.completed_buckets(spark, f"{base}/ckpt_w2") == {0, 1}
+
+    stats = run_extraction_job(spark, docs, pages, f"{base}/out_w2",
+                               f"{base}/ckpt_w2", ExtractionConfig(**CFG))
+    assert stats["buckets_done_before"] == 2 and stats["waves"] == 3
+    assert checkpoint.completed_buckets(spark, f"{base}/ckpt_w2") == set(range(8))
+    assert _main_spans(spark, f"{base}/out_w2") == expected

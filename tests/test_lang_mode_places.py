@@ -67,7 +67,7 @@ def test_cdsl_default_mode_changes_output():
     # force the sparse view through the raw extractor: the watermark leaks —
     # i.e. the mode genuinely changes CDSL output
     eng_w, eng_l = kernel.mode_view(words, lines, "eng")
-    res_eng = kernel._extract_cdsl(eng_w, eng_l, [], level=1)
+    res_eng = kernel._extract_cdsl(eng_w, eng_l, [], level=1, places=None)
     name_eng = next(f for f in res_eng["fields"] if f["field"] == "CDSL Client Name")
     assert "CVLKRA" in name_eng["value"]
 

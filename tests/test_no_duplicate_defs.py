@@ -1,13 +1,16 @@
 """No module of the package defines the same top-level name twice, every
 top-level package name is used somewhere, every one has a caller outside
-the tests unless an allow-list says why not, and only
+the tests unless an allow-list says why not, every defaulted parameter is
+passed by some call unless an allow-list says why not, and only
 ``session.get_spark`` builds a SparkSession.
 
 A second ``def``/``class`` with an earlier one's name silently replaces
 it at import, so the first definition is dead code that still reads as
 live (pyflakes F811). A def whose name no code mentions is dead too, and
-one that only tests call is a second path the jobs never run. No linter
-ships with this project, so stdlib ``ast`` does the scans.
+one that only tests call is a second path the jobs never run. A default
+that no call overrides is a setting nobody sets: one more value to read,
+document and trust, so it is folded into the code. No linter ships with
+this project, so stdlib ``ast`` does the scans.
 """
 
 from __future__ import annotations
@@ -201,3 +204,154 @@ def test_only_get_spark_builds_a_session():
     found = {str(f.relative_to(ROOT)): sites for f in _files(USERS)
              if (sites := builder_sites(f.read_text()))}
     assert found == {"ocr_redaction_engine_spark/session.py": ["get_spark"]}
+
+
+#: Defaulted package parameters (``module.def(param)``) and config
+#: dataclass fields (``module.Class.field``) that no call passes, kept on
+#: purpose → why. Every other default is passed by some call in USERS
+#: (tests included: a test forcing a size-selected branch is a seam).
+ALLOWED_DEFAULT_ONLY = dict.fromkeys(
+    ("pipeline.PipelineConfig.ext_whitelist",
+     "pipeline.PipelineConfig.claims_backend",
+     "pipeline.PipelineConfig.claims_target"),
+    "perfbench/layers.py reads it in its per-layer replay; it goes when a "
+    "benchmark change drops that replay (ROADMAP D1)")
+
+
+def defaulted_options(module: str, source: str) -> list[tuple]:
+    """``(key, names, param, position)`` for every defaulted parameter of
+    every def in ``source`` and every defaulted ``@dataclass`` field.
+    ``names`` are the callee names a call reaches it through (a def's own
+    name; an ``__init__`` also its class's; a field its class's);
+    ``position`` is the positional index a call's arguments fill (after
+    ``self`` for methods), None for keyword-only parameters."""
+    out = []
+
+    def visit(node, prefix, cls):
+        for ch in ast.iter_child_nodes(node):
+            if isinstance(ch, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a, key = ch.args, f"{module}.{prefix}{ch.name}"
+                names = (ch.name, cls) if ch.name == "__init__" else (ch.name,)
+                skip = cls is not None and "staticmethod" not in [
+                    getattr(d, "id", None) for d in ch.decorator_list]
+                pos = a.posonlyargs + a.args
+                for i in range(len(pos) - len(a.defaults), len(pos)):
+                    out.append((f"{key}({pos[i].arg})", names, pos[i].arg,
+                                i - skip))
+                out.extend((f"{key}({p.arg})", names, p.arg, None)
+                           for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                           if d is not None)
+                visit(ch, f"{prefix}{ch.name}.", None)
+            elif isinstance(ch, ast.ClassDef):
+                if any("dataclass" in ast.unparse(d) for d in ch.decorator_list):
+                    fields = [s for s in ch.body if isinstance(s, ast.AnnAssign)
+                              and isinstance(s.target, ast.Name)]
+                    out.extend((f"{module}.{prefix}{ch.name}.{s.target.id}",
+                                (ch.name,), s.target.id, i)
+                               for i, s in enumerate(fields)
+                               if s.value is not None)
+                visit(ch, f"{prefix}{ch.name}.", ch.name)
+            else:
+                visit(ch, prefix, cls)
+
+    visit(ast.parse(source), "", None)
+    return out
+
+
+def call_shapes(source: str) -> list[tuple]:
+    """``(callee name, positional count, keyword names, passes all)`` for
+    every call in ``source`` whose callee is a name or an attribute.
+    ``*args`` or ``**kwargs`` forwarding passes everything, except
+    ``**NAME`` of a module-level ``dict(...)``/``{...}`` literal with
+    constant keys, which passes exactly those keys."""
+    tree = ast.parse(source)
+    literal = {}
+    for s in tree.body:
+        if isinstance(s, ast.Assign) and isinstance(s.targets[0], ast.Name):
+            v = s.value
+            if isinstance(v, ast.Dict) and all(
+                    isinstance(k, ast.Constant) for k in v.keys):
+                literal[s.targets[0].id] = {k.value for k in v.keys}
+            elif (isinstance(v, ast.Call) and getattr(v.func, "id", "") == "dict"
+                  and not v.args and all(k.arg for k in v.keywords)):
+                literal[s.targets[0].id] = {k.arg for k in v.keywords}
+    out = []
+    for n in ast.walk(tree):
+        if not isinstance(n, ast.Call):
+            continue
+        name = getattr(n.func, "id", getattr(n.func, "attr", None))
+        if name is None:
+            continue
+        every = any(isinstance(a, ast.Starred) for a in n.args)
+        kws = set()
+        for k in n.keywords:
+            if k.arg:
+                kws.add(k.arg)
+            elif getattr(k.value, "id", None) in literal:
+                kws |= literal[k.value.id]
+            else:
+                every = True
+        out.append((name, len(n.args), kws, every))
+    return out
+
+
+def never_passed(modules: list[tuple[str, str]], users: list[str]) -> list[str]:
+    """Key of every defaulted option in ``modules`` ((module name, source)
+    pairs) that no call in ``users`` (sources) passes, by position or by
+    keyword. Calls match by callee name, so a shared name is conservative:
+    a call to any def of that name counts."""
+    calls: dict[str, list] = {}
+    for src in users:
+        for shape in call_shapes(src):
+            calls.setdefault(shape[0], []).append(shape)
+    return sorted(
+        key for m, src in modules
+        for key, names, param, position in defaulted_options(m, src)
+        if not any(every or param in kws
+                   or (position is not None and position < npos)
+                   for name in names for _, npos, kws, every in calls.get(name, ())))
+
+
+def default_breaks(found: list[str], allowed: dict[str, str]) -> dict:
+    """Defaults no call passes that the allow-list does not name, and
+    allow-list entries that no longer hold (a call passes it now, or the
+    option is gone)."""
+    return {"never passed": sorted(set(found) - set(allowed)),
+            "stale allow-list entry": sorted(set(allowed) - set(found))}
+
+
+def test_scan_catches_a_never_passed_default():
+    pkg = [("m", "from dataclasses import dataclass\n\n"
+                 "def f(a, b=1, c=2, *, d=3, e=4):\n    return a\n\n"
+                 "def fwd(x=1, y=2):\n    return x\n\n"
+                 "class C:\n"
+                 "    def __init__(self, p=1, q=2):\n        self.p = p\n\n"
+                 "@dataclass\nclass Cfg:\n    n: int\n    u: int = 1\n"
+                 "    v: int = 2\n    w: int = 3\n")]
+    users = ["from m import C, Cfg, f, fwd\n"
+             "KW = dict(v=5)\n"
+             "f(0, 9, e=5)\n"          # b by position, e by keyword
+             "C(7)\n"                  # reaches __init__: p, after self
+             "Cfg(1, u=2)\n"           # n by position, u by keyword
+             "Cfg(0, **KW)\n"          # a literal dict passes its keys
+             "def wrap(*args, **kwargs):\n"
+             "    return fwd(*args, **kwargs)\n"]  # forwarding passes all
+    found = never_passed(pkg, users)
+    assert found == ["m.C.__init__(q)", "m.Cfg.w", "m.f(c)", "m.f(d)"]
+    assert default_breaks(found, {"m.Cfg.w": "kept", "m.f(b)": "kept",
+                                  "m.gone(z)": "kept"}) == {
+        "never passed": ["m.C.__init__(q)", "m.f(c)", "m.f(d)"],
+        "stale allow-list entry": ["m.f(b)", "m.gone(z)"]}
+    # a ** of anything but a module-level literal dict passes everything
+    assert never_passed(pkg, users + ["f(0, **opts)\nC(**o)\nCfg(**c)\n"]) == []
+
+
+def test_every_default_is_passed_by_some_call():
+    """A defaulted parameter (or config field) that no job, tool, bench
+    leg or test ever passes always takes its default: fold it into the
+    code, or keep it with an ALLOWED_DEFAULT_ONLY reason."""
+    modules = [(p.stem, p.read_text()) for p in sorted(PACKAGE.rglob("*.py"))]
+    users = [f.read_text() for f in _files(USERS)]
+    assert default_breaks(never_passed(modules, users),
+                          ALLOWED_DEFAULT_ONLY) == {
+        "never passed": [], "stale allow-list entry": []}

@@ -140,3 +140,45 @@ def test_write_corpus_plants_pages_like_the_local_rule(spark, tmp_path):
     _, pages, expected = _corrupted(120, 13)
     assert set(expected.values()) == {"bad_extension", "missing_media"}
     assert got == sorted((p["media_ref"], p["document_name"]) for p in pages)
+
+
+def _ids(df):
+    return {r["doc_id"] for r in df.select("doc_id").collect()}
+
+
+def test_over_1000_invalid_ids_route_through_an_anti_join(spark):
+    """Past 1,000 collected invalid ids ``route_with_collected`` drops the
+    literal ``isin`` filter for a broadcast left-anti join; the valid and
+    invalid sets still equal the oracle's."""
+    docs, pages = corpus.build_corpus_local(42, 40)
+    dangling = [{"doc_id": f"dangling-{i:05d}", "spans": [
+        {"kind": "media", "text": "", "media_ref": f"pg-gone-{i:05d}",
+         "offset": 0}]} for i in range(1001)]
+    docs += dangling
+    docs_df, pages_df = corpus.local_frames(spark, docs, pages)
+    valid, invalid = split_valid(docs_df, pages_df)
+    bad = {r[0] for r in oracle.expected_invalid_docs(docs, pages)}
+    assert len(bad) > 1000
+    assert _ids(valid) == {d["doc_id"] for d in docs} - bad
+    assert _ids(invalid) == bad
+    plan = valid._jdf.queryExecution().executedPlan().toString()
+    assert "LeftAnti" in plan
+
+
+def test_past_collect_cap_the_lazy_route_gives_the_same_split(spark,
+                                                              monkeypatch):
+    """Past ``COLLECT_CAP`` invalid documents ``split_valid`` falls back to
+    the lazy ``validity_route``; its valid and invalid outputs equal the
+    collected route's."""
+    from ocr_redaction_engine_spark.operators import validate
+
+    docs, pages, expected = _corrupted()
+    docs_df, pages_df = corpus.local_frames(spark, docs, pages)
+    collected = split_valid(docs_df, pages_df)
+    monkeypatch.setattr(validate, "COLLECT_CAP", 2)
+    assert len(expected) > 2
+    assert validate.collect_invalid(docs_df, pages_df) is None
+    lazy = split_valid(docs_df, pages_df)
+    for got, want in zip(lazy, collected):
+        assert sorted(got.collect()) == sorted(want.collect())
+    assert _ids(lazy[1]) == set(expected)
