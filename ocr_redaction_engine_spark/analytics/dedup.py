@@ -209,12 +209,10 @@ def simhash(docs: DataFrame, min_partitions: int | None = None) -> DataFrame:
     return docs.mapInPandas(run, schema=SIMHASH_SCHEMA)
 
 
-def simhash_pairs(docs: DataFrame, max_hamming: int = 6) -> DataFrame:
-    """SimHash near-dup pairs: band candidates VERIFIED by exact Hamming
-    distance ``bit_count(sig_a XOR sig_b) <= max_hamming`` — the JVM
-    bit_count runs only on band collisions, completing the
-    candidates→verify shape of the MinHash/Jaccard family."""
-    sigs = simhash(docs)
+def _simhash_band_pairs(sigs: DataFrame) -> DataFrame:
+    """(a, b) pairs, a < b, of ``simhash`` signatures equal in any of the 4
+    ``SIMHASH_BAND_BITS``-bit bands: bands melt to rows, then ONE
+    self-equi-join on (band, band_val)."""
     mask = (1 << SIMHASH_BAND_BITS) - 1
     melted = sigs.select(
         "doc_id",
@@ -225,11 +223,20 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 6) -> DataFrame:
     )
     left = melted.select(F.col("doc_id").alias("a"), "band", "band_val")
     right = melted.select(F.col("doc_id").alias("b"), "band", "band_val")
-    cands = (
+    return (
         left.join(right, ["band", "band_val"])
         .filter(F.col("a") < F.col("b"))
         .select("a", "b").distinct()
     )
+
+
+def simhash_pairs(docs: DataFrame, max_hamming: int = 6) -> DataFrame:
+    """SimHash near-dup pairs: band candidates VERIFIED by exact Hamming
+    distance ``bit_count(sig_a XOR sig_b) <= max_hamming`` — the JVM
+    bit_count runs only on band collisions, completing the
+    candidates→verify shape of the MinHash/Jaccard family."""
+    sigs = simhash(docs)
+    cands = _simhash_band_pairs(sigs)
     sa = sigs.select(F.col("doc_id").alias("a"), F.col("simhash").alias("sig_a"))
     sb = sigs.select(F.col("doc_id").alias("b"), F.col("simhash").alias("sig_b"))
     return (
@@ -396,7 +403,12 @@ def dedup_cluster_stats(docs: DataFrame,
     )
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
+#: connected_components' round cap: pointer doubling resolves a chain of
+#: diameter d in O(log d) rounds, so 25 covers chains of ~10^7 documents.
+CC_MAX_ROUNDS = 25
+
+
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Duplicate-group clustering: connected components over candidate pairs
     (columns ``a``, ``b``) by min-label propagation with POINTER DOUBLING.
 
@@ -418,7 +430,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
         .withColumn("label", F.col("u"))
     ).localCheckpoint(eager=True)
 
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ROUNDS):
         nb_min = (
             edges.join(labels.withColumnRenamed("u", "v"), "v")
             .groupBy("u").agg(F.min("label").alias("nb_label"))
@@ -453,13 +465,13 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
         if changed == 0:
             break
     else:
-        # a chain-shaped cluster with diameter > max_iter would silently get
-        # partial labels — refuse to return wrong components (ADVICE r1)
+        # a chain-shaped cluster too long for the round cap would silently
+        # get partial labels — refuse to return wrong components (ADVICE r1)
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing); with pointer doubling "
-            f"rounds grow O(log diameter), so raise max_iter (even a "
-            f"10^9-node chain needs only ~30)")
+            f"connected_components did not converge in {CC_MAX_ROUNDS} "
+            f"rounds ({changed} labels still changing); with pointer "
+            f"doubling rounds grow O(log diameter), so raise CC_MAX_ROUNDS "
+            f"(even a 10^9-node chain needs only ~30)")
     return labels.select(F.col("u").alias("node"), F.col("label").alias("component"))
 
 
@@ -536,21 +548,46 @@ def simhash_candidates(docs: DataFrame) -> DataFrame:
     """Hamming-neighbour candidates: equal value in any of the 4 15-bit bands
     (detects signatures within small Hamming distance). Bands melt to rows →
     ONE self-equi-join on (band, band_val), same shape as candidate_pairs."""
-    sigs = simhash(docs)
-    mask = (1 << SIMHASH_BAND_BITS) - 1
-    melted = sigs.select(
-        "doc_id",
-        F.posexplode(F.array(*[
-            F.shiftright(F.col("simhash"), b * SIMHASH_BAND_BITS).bitwiseAND(F.lit(mask))
-            for b in range(4)
-        ])).alias("band", "band_val"),
-    )
-    left = melted.select(F.col("doc_id").alias("a"), "band", "band_val")
-    right = melted.select(F.col("doc_id").alias("b"), "band", "band_val")
+    return _simhash_band_pairs(simhash(docs))
+
+
+def _sentences(docs: DataFrame, *keys: str) -> DataFrame:
+    """(doc_id, *keys, pos, sentence): RE2-compatible segmentation (no
+    lookbehind) — a sentence is a maximal dot-free run plus its closing
+    dot, trimmed — identical under Java regex (Spark) and RE2 (DuckDB
+    oracle). Empty sentences are dropped."""
+    return docs.select(
+        "doc_id", *keys,
+        F.posexplode(F.expr(r"regexp_extract_all(text, '[^.]+\\.?', 0)"))
+        .alias("pos", "raw"),
+    ).select(
+        "doc_id", *keys, "pos", F.trim("raw").alias("sentence")
+    ).filter(F.col("sentence") != "")
+
+
+def _reassemble(sents: DataFrame, kept: DataFrame) -> DataFrame:
+    """(doc_id, kept_text, n_sentences, n_kept): every document of
+    ``sents`` rebuilt from its ``kept`` sentences in original ``pos``
+    order — one hash-agg per side, empty text for a document that kept
+    none."""
     return (
-        left.join(right, ["band", "band_val"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b").distinct()
+        sents.groupBy("doc_id")
+        .agg(F.count("*").cast("long").alias("n_sentences"))
+        .join(
+            kept.groupBy("doc_id").agg(
+                F.concat_ws(
+                    " ",
+                    F.transform(
+                        F.sort_array(F.collect_list(F.struct("pos", "sentence"))),
+                        lambda s: s["sentence"],
+                    ),
+                ).alias("kept_text"),
+                F.count("*").cast("long").alias("n_kept"),
+            ),
+            "doc_id", "left")
+        .select("doc_id",
+                F.coalesce("kept_text", F.lit("")).alias("kept_text"),
+                "n_sentences", F.coalesce("n_kept", F.lit(0)).alias("n_kept"))
     )
 
 
@@ -574,41 +611,14 @@ def sentence_dedup(docs: DataFrame) -> DataFrame:
     Returns (doc_id, kept_text, n_sentences, n_kept).
     """
 
-    # RE2-compatible segmentation (no lookbehind): a sentence is a maximal
-    # dot-free run plus its closing dot, trimmed — identical under Java
-    # regex (Spark) and RE2 (DuckDB oracle)
-    sents = docs.select(
-        "doc_id",
-        F.posexplode(F.expr(r"regexp_extract_all(text, '[^.]+\\.?', 0)"))
-        .alias("pos", "raw"),
-    ).select(
-        "doc_id", "pos", F.trim("raw").alias("sentence")
-    ).filter(F.col("sentence") != "")
+    sents = _sentences(docs)
     kept = (
         sents.groupBy("sentence")
         .agg(F.min(F.struct("doc_id", "pos")).alias("first"))
         .select(F.col("first.doc_id").alias("doc_id"),
                 F.col("first.pos").alias("pos"), "sentence")
     )
-    return (
-        sents.groupBy("doc_id")
-        .agg(F.count("*").cast("long").alias("n_sentences"))
-        .join(
-            kept.groupBy("doc_id").agg(
-                F.concat_ws(
-                    " ",
-                    F.transform(
-                        F.sort_array(F.collect_list(F.struct("pos", "sentence"))),
-                        lambda s: s["sentence"],
-                    ),
-                ).alias("kept_text"),
-                F.count("*").cast("long").alias("n_kept"),
-            ),
-            "doc_id", "left")
-        .select("doc_id",
-                F.coalesce("kept_text", F.lit("")).alias("kept_text"),
-                "n_sentences", F.coalesce("n_kept", F.lit(0)).alias("n_kept"))
-    )
+    return _reassemble(sents, kept)
 
 def host_boilerplate_strip(docs: DataFrame, min_docs: int = 2,
                            pct: int = 50) -> DataFrame:
@@ -633,15 +643,7 @@ def host_boilerplate_strip(docs: DataFrame, min_docs: int = 2,
 
     Returns (doc_id, kept_text, n_sentences, n_kept).
     """
-    # Same RE2-compatible segmentation as sentence_dedup (identical under
-    # Java regex and the DuckDB oracle's RE2)
-    sents = docs.select(
-        "doc_id", "source",
-        F.posexplode(F.expr(r"regexp_extract_all(text, '[^.]+\\.?', 0)"))
-        .alias("pos", "raw"),
-    ).select(
-        "doc_id", "source", "pos", F.trim("raw").alias("sentence")
-    ).filter(F.col("sentence") != "")
+    sents = _sentences(docs, "source")
 
     sent_df = (
         sents.select("source", "sentence", "doc_id").distinct()
@@ -656,30 +658,11 @@ def host_boilerplate_strip(docs: DataFrame, min_docs: int = 2,
         .select("source", "sentence")
     )
     kept = sents.join(boiler, ["source", "sentence"], "left_anti")
-    return (
-        sents.groupBy("doc_id")
-        .agg(F.count("*").cast("long").alias("n_sentences"))
-        .join(
-            kept.groupBy("doc_id").agg(
-                F.concat_ws(
-                    " ",
-                    F.transform(
-                        F.sort_array(F.collect_list(F.struct("pos", "sentence"))),
-                        lambda s: s["sentence"],
-                    ),
-                ).alias("kept_text"),
-                F.count("*").cast("long").alias("n_kept"),
-            ),
-            "doc_id", "left")
-        .select("doc_id",
-                F.coalesce("kept_text", F.lit("")).alias("kept_text"),
-                "n_sentences", F.coalesce("n_kept", F.lit(0)).alias("n_kept"))
-    )
+    return _reassemble(sents, kept)
 
 
 def minhash_decontaminate(train: DataFrame, eval_docs: DataFrame,
-                          threshold: float = 0.5,
-                          shingle_n: int | None = None) -> DataFrame:
+                          threshold: float = 0.5) -> DataFrame:
     """Fuzzy train-vs-eval decontamination: MinHash band signatures computed
     per corpus, candidates generated by ONE cross-corpus equi-join on
     (band, sig) — never train×train or eval×eval pairs — then exact
@@ -693,14 +676,9 @@ def minhash_decontaminate(train: DataFrame, eval_docs: DataFrame,
 
     Returns one row per eval doc: (doc_id, n_candidates, n_contaminated,
     max_jaccard) — zero-filled for clean docs so coverage is auditable.
-
-    At corpus scale set ``shingle_n`` (3-5): with unigram banding a hot
-    band signature on the 100 TB train side pulls every matching train doc
-    into the candidate join for each colliding eval item (the measured 94 %
-    collision envelope — see [[doc_tokens_distinct]]).
     """
     def melted(docs: DataFrame, alias: str) -> DataFrame:
-        sigs = minhash_signatures(docs, N_BANDS, shingle_n)
+        sigs = minhash_signatures(docs, N_BANDS)
         return _melt_bands(sigs.withColumnRenamed("doc_id", alias),
                            alias, N_BANDS)
 
@@ -709,8 +687,8 @@ def minhash_decontaminate(train: DataFrame, eval_docs: DataFrame,
                                 ["band", "sig"])
         .select("e", "t").distinct()
     )
-    tt = doc_tokens_distinct(train, shingle_n).select(F.col("doc_id").alias("t"), "token")
-    te = doc_tokens_distinct(eval_docs, shingle_n).select(F.col("doc_id").alias("e"), "token")
+    tt = doc_tokens_distinct(train).select(F.col("doc_id").alias("t"), "token")
+    te = doc_tokens_distinct(eval_docs).select(F.col("doc_id").alias("e"), "token")
     sizes_t = tt.groupBy("t").agg(F.count("*").alias("nt"))
     sizes_e = te.groupBy("e").agg(F.count("*").alias("ne"))
     inter = (

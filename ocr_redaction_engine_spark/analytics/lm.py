@@ -183,8 +183,7 @@ def _bigrams(docs: DataFrame) -> DataFrame:
     )
 
 
-def lm_cross_entropy(docs: DataFrame, reference: DataFrame,
-                     min_count: int = 1) -> DataFrame:
+def lm_cross_entropy(docs: DataFrame, reference: DataFrame) -> DataFrame:
     """Bigram-LM cross-entropy of every document under a reference corpus
     (the CCNet perplexity filter; cross-entropy in nats is the same ranking
     without an exp() determinism surface).
@@ -202,22 +201,12 @@ def lm_cross_entropy(docs: DataFrame, reference: DataFrame,
     the per-doc sum (cross-engine determinism rule). Documents with zero
     tokens have no bigrams and emit no row.
 
-    ``min_count`` prunes reference bigrams seen fewer times (they fall back
-    to the unseen-bigram smoothed path, exactly as if never observed); the
-    history and vocab tables derive from the PRUNED bigram table so the
-    model stays self-consistent. At 100 TB the raw bigram/unigram tables
-    grow with unique garbage tokens rather than staying Zipf-bounded, so
-    production runs set min_count — the CCNet/KenLM pruning step — which is
-    what keeps ``hist_counts`` broadcastable.
-
     Returns (doc_id, n_bigrams, oov_bigrams, nll) — nll is the per-document
     total negative log-likelihood; cross-entropy = nll / n_bigrams.
     """
     ref_bg = _bigrams(reference)
     bg_counts = ref_bg.groupBy("prev", "cur").agg(
         F.count("*").cast("long").alias("cb"))
-    if min_count > 1:
-        bg_counts = bg_counts.filter(F.col("cb") >= min_count)
     hist_counts = bg_counts.groupBy("prev").agg(
         F.sum("cb").cast("long").alias("ch"))
     vocab = (
@@ -252,31 +241,30 @@ def lm_cross_entropy(docs: DataFrame, reference: DataFrame,
     )
 
 
-def ccnet_buckets(docs: DataFrame, reference: DataFrame,
-                  group: str = "source") -> DataFrame:
+def ccnet_buckets(docs: DataFrame, reference: DataFrame) -> DataFrame:
     """CCNet head/middle/tail corpus split (Wenzek et al. 2020 §4.4): score
     every document by LM cross-entropy under the reference corpus, then band
-    each GROUP (source/domain/snapshot) into perplexity terciles — "head" is
-    the third of the group's documents closest to the reference distribution,
-    the slice CCNet keeps for LM pretraining.
+    each ``source`` into perplexity terciles — "head" is the third of the
+    source's documents closest to the reference distribution, the slice
+    CCNet keeps for LM pretraining.
 
     Composition of two existing primitives, both integer-exact:
       * [[lm_cross_entropy]] gives (doc_id, n_bigrams, nll); the banding key
         is xent in integer micro-nats/bigram — ``round(nll·1e6) DIV
         n_bigrams`` — so no float ordering ever crosses an engine boundary.
       * the histogram-quantile sketch (sampling.hist_quantile_sketch) turns
-        one (group, bin) hash-agg into per-group tercile boundaries; docs
-        never sort globally (a corpus ntile() would funnel 10^12 rows
-        through |groups| sorted partitions).
+        one (source, bin) hash-agg into per-source tercile boundaries;
+        docs never sort globally (a corpus ntile() would funnel 10^12 rows
+        through |sources| sorted partitions).
 
-    Assignment is map-only: the |groups|×2 boundary rows collapse to one
-    sorted array per group, broadcast, and each doc's bucket is the count of
+    Assignment is map-only: the |sources|×2 boundary rows collapse to one
+    sorted array per source, broadcast, and each doc's bucket is the count of
     boundaries strictly below its score (monotone in xent by construction).
     Unlike [[quantile_bucket_assign]]'s groupBy re-agg, no second doc-keyed
     shuffle. Docs with zero bigrams have no score and emit no row (the
     lm_cross_entropy contract).
 
-    Returns (doc_id, group, xent_micro, bucket, band) with bucket in
+    Returns (doc_id, source, xent_micro, bucket, band) with bucket in
     0..2 and band head/middle/tail.
     """
     from .sampling import hist_quantile_sketch
@@ -289,7 +277,7 @@ def ccnet_buckets(docs: DataFrame, reference: DataFrame,
     # broadcasts correctly downstream (see the prefix-jaccard bisect note in
     # COVERAGE.md); cache lifetime: clearCache between corpora.
     scored = (
-        docs.select("doc_id", group)
+        docs.select("doc_id", "source")
         .join(scores.select(
             "doc_id",
             F.expr("CAST(round(nll * 1000000) AS BIGINT) DIV n_bigrams")
@@ -297,18 +285,18 @@ def ccnet_buckets(docs: DataFrame, reference: DataFrame,
         .persist()
     )
     bounds = (
-        hist_quantile_sketch(scored, group, "xent_micro", 32, (33, 67))
-        .groupBy(group)
+        hist_quantile_sketch(scored, "source", "xent_micro", 32, (33, 67))
+        .groupBy("source")
         .agg(F.sort_array(F.collect_list(F.struct("q", "est"))).alias("bs"))
-        .select(group, F.transform("bs", lambda s: s["est"]).alias("bounds"))
+        .select("source", F.transform("bs", lambda s: s["est"]).alias("bounds"))
     )
     band = F.element_at(
         F.array(F.lit("head"), F.lit("middle"), F.lit("tail")),
         F.col("bucket").cast("int") + 1)
     return (
-        scored.join(F.broadcast(bounds), group)
+        scored.join(F.broadcast(bounds), "source")
         .select(
-            "doc_id", group, "xent_micro",
+            "doc_id", "source", "xent_micro",
             F.aggregate(
                 "bounds", F.lit(0).cast("long"),
                 lambda acc, b: acc

@@ -52,17 +52,17 @@ def _payload(seed: int, i: int) -> bytes:
     return bytes.fromhex(acc[: 2 * ln])
 
 
-def synthesize_binary(spark, n: int, seed: int = 42, partitions: int = 8) -> DataFrame:
+def synthesize_binary(spark, n: int) -> DataFrame:
     """Deterministic opaque payloads: media_id → pseudo-random bytes
-    (md5 hex chain), standing in for image/audio blobs."""
+    (md5 hex chain, seed 42), standing in for image/audio blobs."""
     import pandas as pd
 
     def gen(batches):
         for pdf in batches:
-            out = [(int(i), _payload(seed, int(i)), "image/fake") for i in pdf["id"]]
+            out = [(int(i), _payload(42, int(i)), "image/fake") for i in pdf["id"]]
             yield pd.DataFrame(out, columns=["media_id", "content", "mime"])
 
-    return spark.range(n).repartition(partitions).mapInPandas(
+    return spark.range(n).repartition(8).mapInPandas(
         gen, schema="media_id long, content binary, mime string")
 
 
@@ -305,10 +305,9 @@ def twin_payload(seed: int, i: int) -> bytes:
     return bytes(p)
 
 
-def synthesize_binary_with_twins(spark, n: int, twins: int, seed: int = 42,
-                                 partitions: int = 8) -> DataFrame:
+def synthesize_binary_with_twins(spark, n: int, twins: int) -> DataFrame:
     """``synthesize_binary`` plus ``twins`` planted near-duplicates: media_id
-    in [n, n+twins) carries ``twin_payload(seed, media_id - n)``. Gives the
+    in [n, n+twins) carries ``twin_payload(42, media_id - n)``. Gives the
     perceptual-hash dedup path real positives to find (pure md5-chain
     payloads are mutually random, so organic near-dups are vanishingly
     rare)."""
@@ -319,11 +318,11 @@ def synthesize_binary_with_twins(spark, n: int, twins: int, seed: int = 42,
             out = []
             for i in pdf["id"]:
                 i = int(i)
-                payload = twin_payload(seed, i - n) if i >= n else _payload(seed, i)
+                payload = twin_payload(42, i - n) if i >= n else _payload(42, i)
                 out.append((i, payload, "image/fake"))
             yield pd.DataFrame(out, columns=["media_id", "content", "mime"])
 
-    return spark.range(n + twins).repartition(partitions).mapInPandas(
+    return spark.range(n + twins).repartition(8).mapInPandas(
         gen, schema="media_id long, content binary, mime string")
 
 

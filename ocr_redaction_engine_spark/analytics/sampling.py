@@ -510,7 +510,7 @@ def hist_quantile_sketch(docs: DataFrame, group: str = "source",
     )
 
 
-def quantile_bucket_assign(docs: DataFrame, bins: int = 32) -> DataFrame:
+def quantile_bucket_assign(docs: DataFrame) -> DataFrame:
     """Curriculum bucketing without a global sort: the histogram sketch's
     interpolated quantile estimates become per-group broadcast boundaries,
     and each document's bucket is simply the count of boundaries strictly
@@ -525,8 +525,7 @@ def quantile_bucket_assign(docs: DataFrame, bins: int = 32) -> DataFrame:
     Spark and the oracle agree bit-for-bit. Returns
     (doc_id, source, n_chars, bucket).
     """
-    est = (hist_quantile_sketch(docs, "source", "n_chars", bins, (50, 90, 99))
-           .select("source", "est"))
+    est = hist_quantile_sketch(docs).select("source", "est")
     return (
         docs.join(F.broadcast(est), "source")
         .groupBy("doc_id", "source", "n_chars")

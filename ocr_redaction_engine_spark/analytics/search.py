@@ -155,8 +155,14 @@ def mlt_topk(docs: DataFrame, n_queries: int = 5, k: int = 10) -> DataFrame:
     ).select("q_id", "c_id", "score", "rank")
 
 
+#: hybrid_rrf: each ranker's list length, and the RRF rank offset
+#: (Cormack et al.'s k = 60)
+RRF_K_EACH = 20
+RRF_K = 60
+
+
 def hybrid_rrf(docs: DataFrame, embeddings: DataFrame, n_queries: int = 5,
-               k: int = 10, k_each: int = 20, k_rrf: int = 60) -> DataFrame:
+               k: int = 10) -> DataFrame:
     """Hybrid retrieval via reciprocal-rank fusion (Cormack et al. 2009):
     fuse the [[mlt_topk]] lexical ranking and the [[cosine_topk]] dense
     ranking of the same query set — the standard two-tower RAG retrieval
@@ -166,12 +172,12 @@ def hybrid_rrf(docs: DataFrame, embeddings: DataFrame, n_queries: int = 5,
     Query/candidate identification: vector ``vec_id`` i is document
     ``doc_id`` i (the embeddings table is the dense view of the corpus),
     so query ids < ``n_queries`` and candidate ids ≥ ``n_queries`` line
-    up across both rankers. Each ranker contributes its top ``k_each``;
-    RRF score = Σ 10^6 DIV (``k_rrf`` + rank) over the lists containing
+    up across both rankers. Each ranker contributes its top ``RRF_K_EACH``;
+    RRF score = Σ 10^6 DIV (``RRF_K`` + rank) over the lists containing
     the pair — integer micro-units, so fusion is engine-exact even
     though the dense ranker's sims are floats (only its RANKS enter).
 
-    Shape: both input rankings are ≤ n_queries·k_each rows BY
+    Shape: both input rankings are ≤ n_queries·RRF_K_EACH rows BY
     CONSTRUCTION (top-k output), so the full-outer alignment join and
     the final per-query re-rank window run on bounded metadata-scale
     data no matter the corpus size — the heavy lifting happened inside
@@ -181,21 +187,21 @@ def hybrid_rrf(docs: DataFrame, embeddings: DataFrame, n_queries: int = 5,
     """
     from .similarity import cosine_topk
 
-    lex = mlt_topk(docs, n_queries=n_queries, k=k_each).select(
+    lex = mlt_topk(docs, n_queries=n_queries, k=RRF_K_EACH).select(
         "q_id", "c_id", F.col("rank").alias("lex_rank"))
-    dense = cosine_topk(embeddings, n_queries=n_queries, k=k_each).select(
+    dense = cosine_topk(embeddings, n_queries=n_queries, k=RRF_K_EACH).select(
         "q_id", "c_id", F.col("rank").alias("dense_rank"))
     fused = (
         lex.join(dense, ["q_id", "c_id"], "full_outer")
         .withColumn(
             "rrf_e6",
-            F.expr(f"CAST(coalesce(1000000 DIV ({k_rrf} + lex_rank), 0)"
-                   f" + coalesce(1000000 DIV ({k_rrf} + dense_rank), 0)"
+            F.expr(f"CAST(coalesce(1000000 DIV ({RRF_K} + lex_rank), 0)"
+                   f" + coalesce(1000000 DIV ({RRF_K} + dense_rank), 0)"
                    " AS BIGINT)"),
         )
     )
-    # bounded group (≤ 2·k_each rows per query by construction): the plain
-    # window is skew-free here, unlike the corpus-scale ranker interiors
+    # bounded group (≤ 2·RRF_K_EACH rows per query by construction): the
+    # plain window is skew-free here, unlike the corpus-scale ranker interiors
     w = Window.partitionBy("q_id").orderBy(F.desc("rrf_e6"), F.asc("c_id"))
     return (
         fused.withColumn("rank", F.row_number().over(w))

@@ -214,9 +214,8 @@ def _fixed_point_col():
         "embedding", lambda x: F.floor(x.cast("double") * 1000000).cast("long"))
 
 
-def kmeans_centroids(embeddings: DataFrame, n_clusters: int = 16,
-                     n_iters: int = 2) -> "np.ndarray":
-    """Deterministic Lloyd iterations for the IVF coarse quantizer, in
+def kmeans_centroids(embeddings: DataFrame, n_clusters: int = 16) -> "np.ndarray":
+    """Two deterministic Lloyd iterations for the IVF coarse quantizer, in
     **exact int64 fixed-point** arithmetic so every engine (and every
     partitioning) produces identical centroids.
 
@@ -238,7 +237,7 @@ def kmeans_centroids(embeddings: DataFrame, n_clusters: int = 16,
     )
     centroids = np.array([r.fx for r in init], dtype=np.int64)
 
-    for _ in range(n_iters):
+    for _ in range(2):
         # assignment + per-partition partial sums FUSED in one numpy Arrow
         # stage (r4): the old plan joined the assignment back and
         # posexplode'd N×dim (vec, dim, q) rows through a shuffle per
@@ -330,14 +329,13 @@ def assign_clusters(embeddings: DataFrame, centroids) -> DataFrame:
     return embeddings.select("vec_id", "embedding").mapInPandas(run, schema=ASSIGN_SCHEMA)
 
 
-def ivf_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
-             n_clusters: int = 16, nprobe: int = 4) -> DataFrame:
-    """IVF ANN: coarse-quantize candidates into inverted lists; each query
-    scores only the ``nprobe`` nearest lists (exact-cosine scores within
+def ivf_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10) -> DataFrame:
+    """IVF ANN: coarse-quantize candidates into 16 inverted lists; each
+    query scores only the 4 nearest lists (exact-cosine scores within
     them). Same output shape as cosine_topk."""
     import numpy as np
 
-    C = kmeans_centroids(embeddings, n_clusters)
+    C = kmeans_centroids(embeddings)
 
     cand = embeddings.filter(F.col("vec_id") >= n_queries)
     cand_assign = assign_clusters(cand, C)
@@ -350,7 +348,7 @@ def ivf_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
     for r in q_rows:
         qv = _fixed_point(np.asarray(r.embedding, dtype=np.float64)[None, :])[0]
         d2 = ((C - qv[None, :]) ** 2).sum(axis=1)
-        order = np.argsort(d2, kind="stable")[:nprobe]  # ties → smallest id
+        order = np.argsort(d2, kind="stable")[:4]  # ties → smallest id
         for cl in order:
             probe_rows.append((int(r.vec_id), int(cl)))
     probes = embeddings.sparkSession.createDataFrame(
@@ -426,8 +424,7 @@ def quantize_int8(embeddings: DataFrame) -> DataFrame:
 
 def semantic_dedup(embeddings: DataFrame, n_clusters: int | None = None,
                    threshold: float = 0.92,
-                   target_cluster_size: int = 1000,
-                   max_cluster_size: int | None = None) -> DataFrame:
+                   max_cluster_size: int = 50_000) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): coarse k-means over the embedding space, then exact
     cosine **only within each cluster**; a vector is dropped when a
@@ -436,12 +433,12 @@ def semantic_dedup(embeddings: DataFrame, n_clusters: int | None = None,
 
     Scale shape: the quadratic part is confined to single clusters, so
     cluster sizes must stay bounded as N grows. With ``n_clusters=None``
-    (the default) k auto-scales as ``max(16, N // target_cluster_size)`` —
-    SemDeDup's own recipe (~100k clusters for LAION); a fixed small k at
-    100× the data would make the within-cluster self-join O((N/k)²)
-    (VERDICT r2 #4). After assignment the largest cluster is checked
-    against ``max_cluster_size`` (default ``50 × target_cluster_size``)
-    and the function RAISES rather than silently launching a quadratic
+    (the default) k auto-scales as ``max(16, N // 1000)`` — about 1000
+    vectors per cluster, SemDeDup's own recipe (~100k clusters for LAION);
+    a fixed small k at 100× the data would make the within-cluster
+    self-join O((N/k)²) (VERDICT r2 #4). After assignment the largest
+    cluster is checked against ``max_cluster_size`` (default 50× that
+    size) and the function RAISES rather than silently launching a quadratic
     stage — a skewed embedding space (mass at one point) must be visible,
     not a 10-hour stage. The within-cluster join itself is an equi-join on
     cluster id, never a cross join. The k-means reuses
@@ -451,10 +448,7 @@ def semantic_dedup(embeddings: DataFrame, n_clusters: int | None = None,
     Returns (vec_id, cluster, keep).
     """
     if n_clusters is None:
-        n = embeddings.count()
-        n_clusters = max(16, n // target_cluster_size)
-    if max_cluster_size is None:
-        max_cluster_size = 50 * target_cluster_size
+        n_clusters = max(16, embeddings.count() // 1000)
     C = kmeans_centroids(embeddings, n_clusters)
     # persist the (vec_id, cluster) assignment — two longs per row — so
     # the mega-cluster guard's eager action below materializes the SAME
@@ -477,8 +471,8 @@ def semantic_dedup(embeddings: DataFrame, n_clusters: int | None = None,
             f"semantic_dedup: largest k-means cluster has {biggest} vectors "
             f"(> max_cluster_size={max_cluster_size}); the within-cluster "
             f"exact-cosine pass would be quadratic in that size. Raise "
-            f"n_clusters (or lower target_cluster_size), or raise "
-            f"max_cluster_size explicitly if the blowup is acceptable.")
+            f"n_clusters, or raise max_cluster_size explicitly if the "
+            f"blowup is acceptable.")
 
     def side(prefix: str) -> DataFrame:
         return assigned.select(

@@ -698,6 +698,24 @@ def domain_gini(docs: DataFrame) -> DataFrame:
 # link-spam features).
 # ---------------------------------------------------------------------------
 
+def _symmetric_edges(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(nodes, sym): the ``_doc_nodes`` table and the undirected link graph
+    — ``synth_edges`` without self-loops, each edge in both directions as
+    distinct (src, dst) rows — eagerly ``localCheckpoint``ed so the
+    iterative graph ops start from a materialized edge set."""
+    n_nodes = docs.select("doc_id").distinct().count()  # metadata-scale
+    nodes = _doc_nodes(docs)
+    directed = synth_edges(docs, n_nodes).filter(F.col("src") != F.col("dst"))
+    sym = (
+        directed.select("src", "dst")
+        .union(directed.select(F.col("dst").alias("src"),
+                               F.col("src").alias("dst")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    return nodes, sym
+
+
 def kcore(docs: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
     """k-core peeling over the undirected link graph: repeatedly delete
     nodes of degree < ``k``; what survives is the k-core — the dense
@@ -720,16 +738,7 @@ def kcore(docs: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
     the graph surviving ``rounds`` peels (NULL once peeled or edgeless),
     in_core = survived with ≥ 1 edge.
     """
-    n_nodes = docs.select("doc_id").distinct().count()  # metadata-scale
-    nodes = _doc_nodes(docs)
-    directed = synth_edges(docs, n_nodes).filter(F.col("src") != F.col("dst"))
-    sym = (
-        directed.select("src", "dst")
-        .union(directed.select(F.col("dst").alias("src"),
-                               F.col("src").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    nodes, sym = _symmetric_edges(docs)
     for _ in range(rounds):
         alive = (
             sym.groupBy("src").agg(F.count("*").alias("dg"))
@@ -826,16 +835,7 @@ def label_propagation(docs: DataFrame, rounds: int = 3) -> DataFrame:
 
     Returns (doc_id, community, community_size).
     """
-    n_nodes = docs.select("doc_id").distinct().count()  # metadata-scale
-    nodes = _doc_nodes(docs)
-    directed = synth_edges(docs, n_nodes).filter(F.col("src") != F.col("dst"))
-    sym = (
-        directed.select("src", "dst")
-        .union(directed.select(F.col("dst").alias("src"),
-                               F.col("src").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    nodes, sym = _symmetric_edges(docs)
     labels = nodes.select("node", F.col("node").alias("label"))
     for _ in range(rounds):
         votes = (

@@ -372,56 +372,35 @@ def build_web_corpus_local(seed: int, n_docs: int):
 
 
 # ---------------------------------------------------------------------------
-# Invalid-document planting (P1 validity route). Default-off so the seed-42
-# golden corpora are byte-identical to every prior round; when enabled, a
-# deterministic rule (pure function of the doc index) marks documents
-# invalid the two ways the reference can reject them
-# (in_progress/process_in_progress_status.py:62-84): a non-whitelisted
-# file extension, or a file that does not exist (here: a media_ref with no
-# backing media_pages row).
+# Invalid-document planting (P1 validity route): a deterministic rule (pure
+# function of the doc index) marks documents invalid the two ways the
+# reference can reject them (in_progress/process_in_progress_status.py:62-84):
+# a non-whitelisted file extension, or a file that does not exist (here: a
+# media_ref with no backing media_pages row).
 # ---------------------------------------------------------------------------
 
-def invalid_plan(i: int, every: int) -> str | None:
-    """Deterministic planting rule: doc index i is invalid iff
-    ``every > 0 and i % every == 3``; alternates between the two failure
-    modes so both routes stay exercised at any corpus size."""
-    if every <= 0 or i % every != 3:
-        return None
-    return "bad_extension" if (i // every) % 2 == 0 else "missing_media"
-
-
-def plant_invalid(i: int, doc_pages: list, every: int):
-    """``invalid_plan`` applied to doc index ``i`` whose media pages, in
-    span order, are ``doc_pages``: bad_extension rewrites the FIRST page's
-    document_name suffix to '.pdf' (on a copy); missing_media drops that
-    page (dangling media_ref). A doc without media pages is left alone
-    (the validity check is about the media file). Returns (pages, reason),
-    reason None when nothing was planted."""
-    mode = invalid_plan(i, every)
-    if mode is None or not doc_pages:
-        return doc_pages, None
-    if mode == "bad_extension":
-        p0 = dict(doc_pages[0])
-        p0["document_name"] = p0["document_name"].rsplit(".", 1)[0] + ".pdf"
-        return [p0] + doc_pages[1:], mode
-    return doc_pages[1:], mode
-
-
 def corrupt_corpus_local(docs: list, pages: list, every: int = 13):
-    """Apply :func:`plant_invalid` to every document of a locally-built
-    corpus, without mutating its inputs. Returns (docs, pages, expected)
-    where expected maps doc_id -> reason for docs actually corrupted."""
+    """Plant invalid documents in a locally-built corpus, without mutating
+    its inputs. Doc index ``i`` is invalid iff ``i % every == 3`` and it has
+    media pages (the validity check is about the media file); the mode
+    alternates so both routes stay exercised at any corpus size:
+    bad_extension rewrites the FIRST page's document_name suffix to '.pdf'
+    (on a copy), missing_media drops that page (dangling media_ref).
+    Returns (docs, pages, expected) where expected maps doc_id -> reason
+    for docs actually corrupted."""
     by_ref = {p["media_ref"]: p for p in pages}
     expected, planted = {}, {}
     for i, d in enumerate(docs):
-        if invalid_plan(i, every) is None:
-            continue
         refs = [s["media_ref"] for s in d["spans"] if s["kind"] == "media"]
-        kept, mode = plant_invalid(i, [by_ref[r] for r in refs], every)
-        if mode:
-            expected[d["doc_id"]] = mode
-            planted.update(dict.fromkeys(refs))          # None: dropped
-            planted.update((p["media_ref"], p) for p in kept)
+        if i % every != 3 or not refs:
+            continue
+        mode = "bad_extension" if (i // every) % 2 == 0 else "missing_media"
+        expected[d["doc_id"]] = mode
+        p0 = None                                        # None: dropped
+        if mode == "bad_extension":
+            p0 = dict(by_ref[refs[0]])
+            p0["document_name"] = p0["document_name"].rsplit(".", 1)[0] + ".pdf"
+        planted[refs[0]] = p0
     pages = [q for q in (planted.get(p["media_ref"], p) for p in pages)
              if q is not None]
     return docs, pages, expected
@@ -462,13 +441,10 @@ def local_frames(spark, docs: list, pages: list):
 
 
 def write_corpus(spark, out_dir: str, n_docs: int, seed: int = 42, partitions: int = 32,
-                 gen=gen_document, invalid_every: int = 0):
+                 gen=gen_document):
     """Distributed, deterministic corpus materialization: documents +
     media_pages parquet under ``out_dir``. Pure function of (seed, id) per
-    row, so any partitioning/retry yields identical data.
-    ``invalid_every`` > 0 plants INVALID documents by the same
-    ``invalid_plan`` rule as ``corrupt_corpus_local`` (default off — the
-    golden corpora stay byte-identical)."""
+    row, so any partitioning/retry yields identical data."""
     import pandas as pd
 
     def gen_docs(iterator):
@@ -481,9 +457,7 @@ def write_corpus(spark, out_dir: str, n_docs: int, seed: int = 42, partitions: i
 
     def gen_pages(iterator):
         for pdf in iterator:
-            out = [_page_row(p) for i in pdf["id"]
-                   for p in plant_invalid(int(i), gen(seed, int(i))[1],
-                                          invalid_every)[0]]
+            out = [_page_row(p) for i in pdf["id"] for p in gen(seed, int(i))[1]]
             # built from the (maybe empty) row list, so a batch without
             # pages has object columns, which Arrow converts to any type
             yield pd.DataFrame(out, columns=page_cols)

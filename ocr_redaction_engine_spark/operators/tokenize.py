@@ -63,26 +63,15 @@ def tokenize_fixture(media_spans: DataFrame, media_pages: DataFrame) -> DataFram
         .join(_pages_soa(media_pages), "media_ref")
 
 
-def _layout_from_lines(lines):
-    # Mirrors corpus._layout_words: deterministic synthetic geometry.
-    words, y = [], 10
-    for line in lines:
-        x = 15
-        for tok in line.split():
-            w = 9 * len(tok) + 6
-            words.append((x, y, x + w, y + 24, tok))
-            x += w + 12
-        y += 40
-    width = max((w[2] for w in words), default=100) + 15
-    return words, width, y + 20
-
-
 def tokenize_payload(media_with_content: DataFrame) -> DataFrame:
     """Arrow-batched fake decoder: (doc_id, offset, media_ref, document_name,
     content binary) → page rows. This is the production code path shape —
     swap the JSON parse for an image decode + OCR call and nothing else
-    changes (same schema, same batching, same partitioning)."""
+    changes (same schema, same batching, same partitioning). Word boxes
+    come from the corpus generator's synthetic layout."""
     import pandas as pd
+
+    from ..corpus import _layout_words
 
     cols = ["doc_id", "offset", "media_ref", "document_name", "width", "height",
             "wx1", "wy1", "wx2", "wy2", "wtext", "lines",
@@ -97,7 +86,7 @@ def tokenize_payload(media_with_content: DataFrame) -> DataFrame:
             ):
                 payload = json.loads(bytes(content).decode("utf-8"))
                 lines = payload["lines"]
-                words, width, height = _layout_from_lines(lines)
+                words, width, height = _layout_words(lines)
                 qr = payload.get("qr", [])
                 out.append((
                     doc_id, int(offset), ref, name, width, height,

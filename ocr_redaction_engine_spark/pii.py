@@ -143,10 +143,10 @@ def ac_scan(text: str, ac: dict) -> dict:
     return {idx: rec[:2] for idx, rec in hits.items()}
 
 
-def dict_match(docs, terms: list[str], id_col: str = "doc_id"):
+def dict_match(docs, terms: list[str]):
     """Corpus-scale dictionary matching: one broadcast automaton, one
     Arrow-batched map stage, zero shuffles, over the ``text`` column.
-    Returns (id_col, term, n_matches, first_pos) — one row per (doc,
+    Returns (doc_id, term, n_matches, first_pos) — one row per (doc,
     matched term).
 
     100 TB posture: the automaton is O(total term chars) driver-side state
@@ -157,7 +157,7 @@ def dict_match(docs, terms: list[str], id_col: str = "doc_id"):
     enough to compile into one alternation, prefer :func:`redact_text_col`'s
     codegen path (differentially tested against this one).
 
-    ``id_col`` keeps its INPUT type (long, string, UUID, …): the output
+    ``doc_id`` keeps its INPUT type (long, string, UUID, …): the output
     schema's id field is copied from ``docs.schema``, not assumed integer.
     """
     from pyspark.sql.types import LongType, StringType, StructField, StructType
@@ -166,7 +166,7 @@ def dict_match(docs, terms: list[str], id_col: str = "doc_id"):
     sc = docs.sparkSession.sparkContext
     bc = sc.broadcast(ac)
     out_schema = StructType([
-        docs.schema[id_col],
+        docs.schema["doc_id"],
         StructField("term", StringType()),
         StructField("n_matches", LongType()),
         StructField("first_pos", LongType()),
@@ -179,7 +179,7 @@ def dict_match(docs, terms: list[str], id_col: str = "doc_id"):
         tlist = a["terms"]
         for pdf in batches:
             ids, out_terms, counts, firsts = [], [], [], []
-            for did, text in zip(pdf[id_col], pdf["text"]):
+            for did, text in zip(pdf["doc_id"], pdf["text"]):
                 if text is None:
                     continue
                 for idx, (n, first) in ac_scan(text, a).items():
@@ -190,9 +190,9 @@ def dict_match(docs, terms: list[str], id_col: str = "doc_id"):
             # object dtype lets Arrow cast to whatever type the id field
             # declares (int ids and string ids both round-trip exactly).
             yield pd.DataFrame(
-                {id_col: pd.Series(ids, dtype="object"),
+                {"doc_id": pd.Series(ids, dtype="object"),
                  "term": pd.Series(out_terms, dtype="object"),
                  "n_matches": pd.Series(counts, dtype="int64"),
                  "first_pos": pd.Series(firsts, dtype="int64")})
 
-    return docs.select(id_col, "text").mapInPandas(scan, schema=out_schema)
+    return docs.select("doc_id", "text").mapInPandas(scan, schema=out_schema)

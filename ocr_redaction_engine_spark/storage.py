@@ -72,12 +72,17 @@ def synth_file_inventory(docs: DataFrame, files_per_source: int = 40) -> DataFra
     )
 
 
-def compaction_plan(files: DataFrame, target_bytes: int = 60_000) -> DataFrame:
+#: compaction_plan's output bin payload target, in bytes
+COMPACTION_TARGET_BYTES = 60_000
+
+
+def compaction_plan(files: DataFrame) -> DataFrame:
     """Small-file compaction planner (Iceberg ``rewrite_data_files`` /
     bin-packing analog): within each source, order files by file_id and
-    assign file f to output bin ``floor(running_offset(f) / target_bytes)``
-    — the same running-offset packing Spark's own FilePartition planner
-    uses. Every bin's payload is < target_bytes + one file (the classic
+    assign file f to output bin
+    ``floor(running_offset(f) / COMPACTION_TARGET_BYTES)`` — the same
+    running-offset packing Spark's own FilePartition planner uses. Every
+    bin's payload is < COMPACTION_TARGET_BYTES + one file (the classic
     next-fit bound), bins are contiguous in key order (preserves any sort
     clustering the files already have), and the whole plan is one window
     over metadata-scale rows: the planner never touches data bytes, so it
@@ -98,7 +103,7 @@ def compaction_plan(files: DataFrame, target_bytes: int = 60_000) -> DataFrame:
     planned = (files.select("source", "file_id", "file_bytes",
                             offset.alias("__off"))
                .selectExpr("source", "file_id", "file_bytes",
-                           f"__off DIV {int(target_bytes)} AS bin"))
+                           f"__off DIV {COMPACTION_TARGET_BYTES} AS bin"))
     wb = Window.partitionBy("source", "bin").orderBy("file_id")
     return planned.withColumn("bin_seq", F.row_number().over(wb).cast("long"))
 

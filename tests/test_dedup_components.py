@@ -80,12 +80,12 @@ def test_notifier_delivers_all_rows_in_batches(spark):
 
 def test_chain_graph_converges_by_doubling(spark):
     """A 100-edge path has diameter 100: plain min-label propagation needs
-    100 rounds, the pointer-doubling variant O(log 100) — so max_iter=10
-    only succeeds if doubling works (it raises on non-convergence)."""
+    100 rounds, the pointer-doubling variant O(log 100) — so the 25-round
+    cap only succeeds if doubling works (it raises on non-convergence)."""
     n = 101
     chain = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "a long, b long")
     comp = {r.node: r.component
-            for r in connected_components(chain, max_iter=10).collect()}
+            for r in connected_components(chain).collect()}
     assert comp == {i: 0 for i in range(n)}
 
 

@@ -11,7 +11,6 @@ import re
 from pathlib import Path
 
 import pytest
-from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -304,7 +303,7 @@ def test_minhash_family_shingle_mode(spark):
     dups still pair at jaccard 1.0, while template-correlated non-dups that
     unigram banding pairs up produce no shingle candidates."""
     from ocr_redaction_engine_spark.analytics.dedup import (
-        candidate_pairs, jaccard_pairs, minhash_decontaminate)
+        candidate_pairs, jaccard_pairs)
 
     # all docs share the template words, differ in the payload slot -> no
     # shared 3-gram between different payloads
@@ -323,8 +322,3 @@ def test_minhash_family_shingle_mode(spark):
            for r in jaccard_pairs(docs, threshold=0.5, shingle_n=3).collect()}
     assert ver[("d0", "d99")] == 1.0
     assert all(p == ("d0", "d99") for p in ver)
-
-    dec = {r.doc_id: r for r in minhash_decontaminate(
-        docs.filter(F.col("doc_id") != "d99"),
-        docs.filter(F.col("doc_id") == "d99"), shingle_n=3).collect()}
-    assert dec["d99"].n_contaminated == 1 and dec["d99"].max_jaccard == 1.0

@@ -162,20 +162,6 @@ def test_nb_min_df_prunes_hapax(spark):
                                - math.log((cn[t] + 1) / (nneg + v)), 6)
 
 
-def test_lm_min_count_prunes_bigrams(spark):
-    # ref: ('a','b') seen twice, ('b','c') once; min_count=2 keeps only the
-    # repeated bigram, and ch / V recompute over the SURVIVING table.
-    ref = _df(spark, [("r1", "a b", True), ("r2", "a b c", True)])
-    docs = _df(spark, [("d1", "a b c", True)])
-    row = lm_cross_entropy(docs, ref, min_count=2).collect()[0]
-    # surviving model: cb={('<s>','a'):2,('a','b'):2}, ch={'<s>':2,'a':2}, v=2
-    lps = [round(math.log((2 + 1) / (2 + 2)), 6),   # <s> -> a (kept)
-           round(math.log((2 + 1) / (2 + 2)), 6),   # a -> b (kept)
-           round(math.log((0 + 1) / (0 + 2)), 6)]   # b -> c (pruned => OOV)
-    assert row["n_bigrams"] == 3 and row["oov_bigrams"] == 1
-    assert row["nll"] == round(-sum(lps), 6)
-
-
 def test_ccnet_buckets_monotone_and_exact(spark):
     """ccnet_buckets vs an independent pure-Python recomputation: score every
     doc with the already-tested lm_cross_entropy analog, rebuild the
@@ -193,7 +179,7 @@ def test_ccnet_buckets_monotone_and_exact(spark):
     docs = spark.createDataFrame(rows, "doc_id string, source string, text string")
     ref = docs.filter(F.col("source") == "s0")
 
-    out = ccnet_buckets(docs, ref, group="source").collect()
+    out = ccnet_buckets(docs, ref).collect()
     assert len(out) == 60  # every doc has bigrams
 
     # independent recomputation

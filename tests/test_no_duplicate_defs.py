@@ -1,14 +1,14 @@
 """No module of the package defines the same top-level name twice, every
 top-level package name is used somewhere, every one has a caller outside
 the tests unless an allow-list says why not, every defaulted parameter is
-passed by some call unless an allow-list says why not, and only
-``session.get_spark`` builds a SparkSession.
+passed by a call outside the tests unless an allow-list says why not, and
+only ``session.get_spark`` builds a SparkSession.
 
 A second ``def``/``class`` with an earlier one's name silently replaces
 it at import, so the first definition is dead code that still reads as
 live (pyflakes F811). A def whose name no code mentions is dead too, and
 one that only tests call is a second path the jobs never run. A default
-that no call overrides is a setting nobody sets: one more value to read,
+that only tests override is a setting no job sets: one more value to read,
 document and trust, so it is folded into the code. No linter ships with
 this project, so stdlib ``ast`` does the scans.
 """
@@ -207,15 +207,53 @@ def test_only_get_spark_builds_a_session():
 
 
 #: Defaulted package parameters (``module.def(param)``) and config
-#: dataclass fields (``module.Class.field``) that no call passes, kept on
-#: purpose → why. Every other default is passed by some call in USERS
-#: (tests included: a test forcing a size-selected branch is a seam).
-ALLOWED_DEFAULT_ONLY = dict.fromkeys(
-    ("pipeline.PipelineConfig.ext_whitelist",
-     "pipeline.PipelineConfig.claims_backend",
-     "pipeline.PipelineConfig.claims_target"),
-    "perfbench/layers.py reads it in its per-layer replay; it goes when a "
-    "benchmark change drops that replay (ROADMAP D1)")
+#: dataclass fields (``module.Class.field``) that no call outside the
+#: tests passes, kept on purpose → why: a test seam that reaches a branch
+#: or boundary the default cannot reach at test sizes, or the operator's
+#: data input, which a test supplies to compare against a hand-computed
+#: reference. Parameters of ALLOWED_TEST_ONLY defs are exempt: tests are
+#: those defs' only callers. Every other default is folded into the code.
+_WIDE = ("seam: 0 / 10**9 force the distributed or the single-window plan "
+         "at test sizes, which the equality test pins identical")
+_SALTS = ("seam: salts=1 is the plain one-window rank the salted two-stage "
+          "rank (default 8) is checked equal to")
+_CM = ("seam: a 2x2 sketch forces count-min collisions, which the default "
+       "4x256 sketch never has at test sizes")
+ALLOWED_DEFAULT_ONLY = {
+    **dict.fromkeys(
+        ("pipeline.PipelineConfig.ext_whitelist",
+         "pipeline.PipelineConfig.claims_backend",
+         "pipeline.PipelineConfig.claims_target"),
+        "perfbench/layers.py reads it in its per-layer replay; it goes when "
+        "a benchmark change drops that replay (ROADMAP D1)"),
+    "dedup.simhash(min_partitions)":
+        "seam: 0 skips the width probe and the rescue repartition that a "
+        "narrow test input otherwise always gets",
+    "packing.pack_offsets(num_partitions)":
+        "seam: 2 vs 13 range partitions pin the offsets partition-invariant",
+    "sampling.stratified_sample(salts)": _SALTS,
+    "sampling._kmv_sketch(salts)": _SALTS,
+    "sampling.heavy_hitters_cm(d)": _CM,
+    "sampling.heavy_hitters_cm(w)": _CM,
+    "similarity.semantic_dedup(max_cluster_size)":
+        "seam: a bound of 10 makes the mega-cluster guard raise at test "
+        "sizes (default 50,000 vectors)",
+    "webgraph._doc_nodes(wide_threshold)": _WIDE,
+    "webgraph._grouped_rank(wide_threshold)": _WIDE,
+    "dedup.dedup_cluster_stats(pairs)":
+        "data input: planted pairs with hand-counted cluster sizes",
+    "search.bm25_topk(queries)":
+        "data input: fixed queries scored against a pure-Python BM25",
+    "search.phrase_search(phrases)":
+        "data input: phrases with hand-located matches",
+    "search.fuzzy_dict_match(terms)":
+        "data input: a dictionary with hand-computed edit-distance hits",
+    "webgraph.robots_filter(rules)":
+        "data input: rules with hand-resolved longest-match verdicts",
+    "webgraph.hits(edges)":
+        "data input: a planted graph scored against a sequential Python "
+        "HITS",
+}
 
 
 def defaulted_options(module: str, source: str) -> list[tuple]:
@@ -260,15 +298,23 @@ def defaulted_options(module: str, source: str) -> list[tuple]:
 
 def call_shapes(source: str) -> list[tuple]:
     """``(callee name, positional count, keyword names, passes all)`` for
-    every call in ``source`` whose callee is a name or an attribute.
-    ``*args`` or ``**kwargs`` forwarding passes everything, except
-    ``**NAME`` of a module-level ``dict(...)``/``{...}`` literal with
-    constant keys, which passes exactly those keys."""
+    every call in ``source`` whose callee is a name (an import alias
+    resolved to the name it imports) or an attribute, and for every name a
+    module-level table literal holds when the callee is a subscript of
+    that table (``JOBS[job][0](...)``). ``*args`` or
+    ``**kwargs`` forwarding passes everything, except ``**NAME`` of a
+    module-level ``dict(...)``/``{...}`` literal with constant keys, which
+    passes exactly those keys."""
     tree = ast.parse(source)
-    literal = {}
+    aliases = {a.asname: a.name for n in ast.walk(tree)
+               if isinstance(n, ast.ImportFrom) for a in n.names if a.asname}
+    literal, tables = {}, {}
     for s in tree.body:
         if isinstance(s, ast.Assign) and isinstance(s.targets[0], ast.Name):
             v = s.value
+            if isinstance(v, (ast.Dict, ast.List, ast.Tuple, ast.Set)):
+                tables[s.targets[0].id] = {n.id for n in ast.walk(v)
+                                           if isinstance(n, ast.Name)}
             if isinstance(v, ast.Dict) and all(
                     isinstance(k, ast.Constant) for k in v.keys):
                 literal[s.targets[0].id] = {k.value for k in v.keys}
@@ -279,8 +325,16 @@ def call_shapes(source: str) -> list[tuple]:
     for n in ast.walk(tree):
         if not isinstance(n, ast.Call):
             continue
-        name = getattr(n.func, "id", getattr(n.func, "attr", None))
-        if name is None:
+        f = n.func
+        while isinstance(f, ast.Subscript):
+            f = f.value
+        if f is not n.func:
+            names = tables.get(getattr(f, "id", None), ())
+        elif isinstance(f, ast.Name):
+            names = (aliases.get(f.id, f.id),)
+        elif isinstance(f, ast.Attribute):
+            names = (f.attr,)
+        else:
             continue
         every = any(isinstance(a, ast.Starred) for a in n.args)
         kws = set()
@@ -291,7 +345,7 @@ def call_shapes(source: str) -> list[tuple]:
                 kws |= literal[k.value.id]
             else:
                 every = True
-        out.append((name, len(n.args), kws, every))
+        out.extend((name, len(n.args), kws, every) for name in names)
     return out
 
 
@@ -312,46 +366,64 @@ def never_passed(modules: list[tuple[str, str]], users: list[str]) -> list[str]:
                    for name in names for _, npos, kws, every in calls.get(name, ())))
 
 
-def default_breaks(found: list[str], allowed: dict[str, str]) -> dict:
+def default_breaks(found: list[str], allowed: dict[str, str],
+                   test_only=()) -> dict:
     """Defaults no call passes that the allow-list does not name, and
     allow-list entries that no longer hold (a call passes it now, or the
-    option is gone)."""
-    return {"never passed": sorted(set(found) - set(allowed)),
-            "stale allow-list entry": sorted(set(allowed) - set(found))}
+    option is gone). Parameters of a def named in ``test_only`` are exempt."""
+    found = {k for k in found if k.split("(")[0] not in test_only}
+    return {"never passed": sorted(found - set(allowed)),
+            "stale allow-list entry": sorted(set(allowed) - found)}
 
 
 def test_scan_catches_a_never_passed_default():
     pkg = [("m", "from dataclasses import dataclass\n\n"
                  "def f(a, b=1, c=2, *, d=3, e=4):\n    return a\n\n"
                  "def fwd(x=1, y=2):\n    return x\n\n"
+                 "def g(a, s=1, t=2):\n    return a\n\n"
+                 "def h(a, b, s=1, t=2):\n    return a\n\n"
                  "class C:\n"
                  "    def __init__(self, p=1, q=2):\n        self.p = p\n\n"
                  "@dataclass\nclass Cfg:\n    n: int\n    u: int = 1\n"
                  "    v: int = 2\n    w: int = 3\n")]
-    users = ["from m import C, Cfg, f, fwd\n"
+    users = ["from m import C, Cfg, f, fwd, g, h\n"
              "KW = dict(v=5)\n"
+             "JOBS = {'x': (g, 'flag'), 'y': [h]}\n"
              "f(0, 9, e=5)\n"          # b by position, e by keyword
              "C(7)\n"                  # reaches __init__: p, after self
              "Cfg(1, u=2)\n"           # n by position, u by keyword
              "Cfg(0, **KW)\n"          # a literal dict passes its keys
+             "JOBS[k][0](0, t=1)\n"    # a table subscript reaches g and h
              "def wrap(*args, **kwargs):\n"
              "    return fwd(*args, **kwargs)\n"]  # forwarding passes all
     found = never_passed(pkg, users)
-    assert found == ["m.C.__init__(q)", "m.Cfg.w", "m.f(c)", "m.f(d)"]
+    assert found == ["m.C.__init__(q)", "m.Cfg.w", "m.f(c)", "m.f(d)",
+                     "m.g(s)", "m.h(s)"]
     assert default_breaks(found, {"m.Cfg.w": "kept", "m.f(b)": "kept",
                                   "m.gone(z)": "kept"}) == {
-        "never passed": ["m.C.__init__(q)", "m.f(c)", "m.f(d)"],
+        "never passed": ["m.C.__init__(q)", "m.f(c)", "m.f(d)", "m.g(s)",
+                         "m.h(s)"],
         "stale allow-list entry": ["m.f(b)", "m.gone(z)"]}
+    # a test-only def's parameters need no entry, and an entry for one is stale
+    assert default_breaks(found, {"m.f(c)": "kept"}, {"m.f", "m.g"}) == {
+        "never passed": ["m.C.__init__(q)", "m.Cfg.w", "m.h(s)"],
+        "stale allow-list entry": ["m.f(c)"]}
+    # an import alias reaches the def it names
+    aliased = [("m", "def k(a, r=1):\n    return a\n")]
+    assert never_passed(aliased, ["def use():\n    from m import k as kk\n"
+                                  "    return kk(0, 2)\n"]) == []
+    assert never_passed(aliased, ["kk(0, 2)\n"]) == ["m.k(r)"]
     # a ** of anything but a module-level literal dict passes everything
-    assert never_passed(pkg, users + ["f(0, **opts)\nC(**o)\nCfg(**c)\n"]) == []
+    assert never_passed(pkg, users + [
+        "f(0, **opts)\nC(**o)\nCfg(**c)\ng(**o)\nh(**o)\n"]) == []
 
 
-def test_every_default_is_passed_by_some_call():
-    """A defaulted parameter (or config field) that no job, tool, bench
-    leg or test ever passes always takes its default: fold it into the
-    code, or keep it with an ALLOWED_DEFAULT_ONLY reason."""
+def test_every_default_is_passed_by_a_call_outside_tests():
+    """A defaulted parameter (or config field) that no job, tool or bench
+    leg ever passes is a setting only a test sets: fold it into the code,
+    or keep it with an ALLOWED_DEFAULT_ONLY reason."""
     modules = [(p.stem, p.read_text()) for p in sorted(PACKAGE.rglob("*.py"))]
-    users = [f.read_text() for f in _files(USERS)]
-    assert default_breaks(never_passed(modules, users),
-                          ALLOWED_DEFAULT_ONLY) == {
+    users = [f.read_text() for f in _files((PACKAGE,) + CALLERS)]
+    assert default_breaks(never_passed(modules, users), ALLOWED_DEFAULT_ONLY,
+                          ALLOWED_TEST_ONLY) == {
         "never passed": [], "stale allow-list entry": []}

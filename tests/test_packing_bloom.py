@@ -282,7 +282,7 @@ def test_countmin_overestimates_only_and_sketch_bounded(spark):
     docs = _docs(spark, ["apple banana " * 30, "cherry apple " * 20,
                          "durian " * 5, "elderberry fig grape"])
     out = {r["token"]: (r["exact_cnt"], r["cm_estimate"])
-           for r in heavy_hitters_cm(docs, k=5, d=4, w=256).collect()}
+           for r in heavy_hitters_cm(docs, k=5).collect()}
     assert len(out) == 5
     assert out["apple"][0] == 50
     for exact, est in out.values():

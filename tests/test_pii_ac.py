@@ -91,16 +91,16 @@ def test_dict_match_spark(spark):
 
 
 def test_dict_match_string_ids(spark):
-    # id_col keeps its input type: string/UUID ids must round-trip, not
+    # doc_id keeps its input type: string/UUID ids must round-trip, not
     # crash in the Arrow worker on an int64 assumption.
     rows = [
         ("url-a", "RAHUL met PRIYA"),
         ("url-b", "nothing"),
     ]
-    docs = spark.createDataFrame(rows, "url string, text string")
-    out = dict_match(docs, ["RAHUL", "PRIYA"], id_col="url")
-    assert dict(out.dtypes)["url"] == "string"
-    got = {(r.url, r.term): (r.n_matches, r.first_pos) for r in out.collect()}
+    docs = spark.createDataFrame(rows, "doc_id string, text string")
+    out = dict_match(docs, ["RAHUL", "PRIYA"])
+    assert dict(out.dtypes)["doc_id"] == "string"
+    got = {(r.doc_id, r.term): (r.n_matches, r.first_pos) for r in out.collect()}
     assert got == {
         ("url-a", "RAHUL"): (1, 0),
         ("url-a", "PRIYA"): (1, 10),

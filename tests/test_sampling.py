@@ -283,10 +283,10 @@ def test_quantile_bucket_assign_monotone_and_consistent(spark):
     rows = [("s%d" % (i % 2), "d%03d" % i, 100 + (i * 37) % 900) for i in range(120)]
     docs = spark.createDataFrame(rows, "source string, doc_id string, n_chars long")
     bounds = {}
-    for r in hist_quantile_sketch(docs, bins=16).collect():
+    for r in hist_quantile_sketch(docs).collect():
         bounds.setdefault(r.source, []).append(r.est)
     got = {r.doc_id: (r.source, r.n_chars, r.bucket)
-           for r in quantile_bucket_assign(docs, bins=16).collect()}
+           for r in quantile_bucket_assign(docs).collect()}
     assert len(got) == 120
     for doc_id, (src, v, bucket) in got.items():
         assert bucket == sum(1 for b in bounds[src] if b < v)

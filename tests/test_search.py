@@ -181,7 +181,7 @@ def test_mlt_matches_reference(spark):
 
 def test_hybrid_rrf_fuses_both_rankers(spark):
     from ocr_redaction_engine_spark.analytics.search import (
-        hybrid_rrf, mlt_topk)
+        RRF_K, RRF_K_EACH, hybrid_rrf, mlt_topk)
     from ocr_redaction_engine_spark.analytics.similarity import cosine_topk
 
     docs = spark.createDataFrame(MLT_DOCS, "doc_id long, text string")
@@ -196,7 +196,7 @@ def test_hybrid_rrf_fuses_both_rankers(spark):
         [(i, [float(x) for x in vecs[i]]) for i in range(7)],
         "vec_id long, embedding array<float>")
 
-    k_each, k_rrf = 4, 60
+    k_each, k_rrf = RRF_K_EACH, RRF_K
     lex = {(r["q_id"], r["c_id"]): r["rank"]
            for r in mlt_topk(docs, n_queries=2, k=k_each).collect()}
     den = {(r["q_id"], r["c_id"]): r["rank"]
@@ -210,8 +210,7 @@ def test_hybrid_rrf_fuses_both_rankers(spark):
             e6 += 1000000 // (k_rrf + den[key])
         expected[key] = (lex.get(key), den.get(key), e6)
 
-    rows = hybrid_rrf(docs, emb, n_queries=2, k=10,
-                      k_each=k_each, k_rrf=k_rrf).collect()
+    rows = hybrid_rrf(docs, emb, n_queries=2, k=10).collect()
     got = {(r["q_id"], r["c_id"]): (r["lex_rank"], r["dense_rank"], r["rrf_e6"])
            for r in rows}
     assert got == expected

@@ -52,12 +52,13 @@ def test_compaction_plan_next_fit_bound_and_python_parity(spark):
     the distributed plan equals a sequential pure-Python replan."""
     from collections import defaultdict
 
-    from ocr_redaction_engine_spark.storage import compaction_plan
+    from ocr_redaction_engine_spark.storage import (COMPACTION_TARGET_BYTES,
+                                                    compaction_plan)
 
     rows = [("s%d" % (i % 3), i, 1000 + (i * 7919) % 9000) for i in range(60)]
     files = spark.createDataFrame(rows, "source string, file_id long, file_bytes long")
-    target = 10_000
-    got = compaction_plan(files, target_bytes=target).collect()
+    target = COMPACTION_TARGET_BYTES
+    got = compaction_plan(files).collect()
 
     by_part = defaultdict(list)
     for r in sorted(rows, key=lambda t: (t[0], t[1])):

@@ -214,14 +214,15 @@ def test_stream_pipeline_validated_matches_batch(spark, tmp_path):
     from ocr_redaction_engine_spark import corpus, oracle
 
     base = str(tmp_path)
-    corpus.write_corpus(spark, f"{base}/in", n_docs=80, seed=42,
-                        partitions=3, invalid_every=13)
-    streaming.stream_pipeline(spark, f"{base}/in/documents",
-                              f"{base}/in/media_pages",
-                              f"{base}/out", f"{base}/ckpt")
     docs, pages = corpus.build_corpus_local(42, 80)
     docs, pages, expected = corpus.corrupt_corpus_local(docs, pages, every=13)
     assert expected
+    for name, df in zip(("documents", "media_pages"),
+                        corpus.local_frames(spark, docs, pages)):
+        df.write.parquet(f"{base}/in/{name}")
+    streaming.stream_pipeline(spark, f"{base}/in/documents",
+                              f"{base}/in/media_pages",
+                              f"{base}/out", f"{base}/ckpt")
     inv = {r["doc_id"]: r["reason"] for r in
            spark.read.parquet(f"{base}/out/invalid").collect()}
     assert inv == expected

@@ -11,9 +11,19 @@ from ocr_redaction_engine_spark.operators.validate import (
 from ocr_redaction_engine_spark.pipeline import PipelineConfig, run_pipeline
 
 
-def _corrupted(n=120, every=13):
+def _corrupted(n=120):
     docs, pages = corpus.build_corpus_local(42, n)
-    return corpus.corrupt_corpus_local(docs, pages, every=every)
+    return corpus.corrupt_corpus_local(docs, pages, every=13)
+
+
+def _write_corrupted(spark, out_dir, n):
+    """``_corrupted(n)`` as the job's parquet input tables under
+    ``out_dir``; returns the planted doc_id -> reason map."""
+    docs, pages, expected = _corrupted(n)
+    for name, df in zip(("documents", "media_pages"),
+                        corpus.local_frames(spark, docs, pages)):
+        df.write.parquet(f"{out_dir}/{name}")
+    return expected
 
 
 def test_invalid_documents_matches_oracle(spark):
@@ -63,8 +73,7 @@ def test_run_pipeline_submits_no_job(spark, tmp_path):
     invalid documents it returns without submitting a Spark job (the
     validity probe is split_valid's, run by the caller)."""
     base = str(tmp_path)
-    corpus.write_corpus(spark, f"{base}/in", n_docs=80, seed=42,
-                        partitions=3, invalid_every=13)
+    _write_corrupted(spark, f"{base}/in", 80)
     docs_df = spark.read.parquet(f"{base}/in/documents")
     pages_df = spark.read.parquet(f"{base}/in/media_pages")
     sc = spark.sparkContext
@@ -103,18 +112,15 @@ def test_invalid_webhook_payloads(spark):
 
 
 def test_run_job_writes_invalid_sink(spark, tmp_path):
-    """Distributed planting (write_corpus invalid_every) flows through
-    run_job into the invalid status sink, matching the local oracle."""
+    """Planted invalid documents in parquet input flow through run_job
+    into the invalid status sink, matching the local planting rule."""
     from ocr_redaction_engine_spark.pipeline import run_job
 
     base = str(tmp_path)
-    corpus.write_corpus(spark, f"{base}/in", n_docs=120, seed=42,
-                        partitions=4, invalid_every=13)
+    expected = _write_corrupted(spark, f"{base}/in", 120)
     stats = run_job(spark, f"{base}/in/documents", f"{base}/in/media_pages",
                     f"{base}/out", f"{base}/ckpt",
                     PipelineConfig(n_buckets=4, bucket_group=4))
-    docs, pages = corpus.build_corpus_local(42, 120)
-    _, _, expected = corpus.corrupt_corpus_local(docs, pages, every=13)
     assert stats["n_invalid"] == len(expected) > 0
     inv = spark.read.schema(
         "doc_id string, status string, task_result string, reason string, "
@@ -126,20 +132,6 @@ def test_run_job_writes_invalid_sink(spark, tmp_path):
     for t in ("spans", "redactions", "values"):
         df = spark.read.parquet(f"{base}/out/{t}")
         assert df.where(F.col("doc_id").isin(*bad)).count() == 0
-
-
-def test_write_corpus_plants_pages_like_the_local_rule(spark, tmp_path):
-    """write_corpus and corrupt_corpus_local plant invalid documents through
-    one per-document rule: their media_pages rows agree on (media_ref,
-    document_name), both failure modes included."""
-    base = str(tmp_path)
-    corpus.write_corpus(spark, base, n_docs=120, seed=42, partitions=4,
-                        invalid_every=13)
-    got = sorted((r["media_ref"], r["document_name"]) for r in
-                 spark.read.parquet(f"{base}/media_pages").collect())
-    _, pages, expected = _corrupted(120, 13)
-    assert set(expected.values()) == {"bad_extension", "missing_media"}
-    assert got == sorted((p["media_ref"], p["document_name"]) for p in pages)
 
 
 def _ids(df):
