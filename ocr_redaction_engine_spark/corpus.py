@@ -444,7 +444,9 @@ def write_corpus(spark, out_dir: str, n_docs: int, seed: int = 42, partitions: i
                  gen=gen_document):
     """Distributed, deterministic corpus materialization: documents +
     media_pages parquet under ``out_dir``. Pure function of (seed, id) per
-    row, so any partitioning/retry yields identical data."""
+    row, and each part file holds one contiguous id range in id order (a
+    sliced range, no shuffle), so a rewrite or retry yields the same bytes
+    per part file."""
     import pandas as pd
 
     def gen_docs(iterator):
@@ -462,7 +464,7 @@ def write_corpus(spark, out_dir: str, n_docs: int, seed: int = 42, partitions: i
             # pages has object columns, which Arrow converts to any type
             yield pd.DataFrame(out, columns=page_cols)
 
-    ids = spark.range(n_docs).repartition(partitions)
+    ids = spark.range(0, n_docs, 1, partitions)
     ids.mapInPandas(gen_docs, schema=DOCUMENTS_DDL).write.mode("overwrite").parquet(f"{out_dir}/documents")
     ids.mapInPandas(gen_pages, schema=MEDIA_PAGES_DDL).write.mode("overwrite").parquet(f"{out_dir}/media_pages")
     return f"{out_dir}/documents", f"{out_dir}/media_pages"

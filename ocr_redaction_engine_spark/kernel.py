@@ -59,8 +59,12 @@ def _search_any(patterns, text: str) -> bool:
     return _ci_union(tuple(patterns)).search(text) is not None
 
 
-def _has_digit_and_alpha(t: str) -> bool:
-    return any(c.isdigit() for c in t) and any(c.isalpha() for c in t)
+def _is_pan_token(t: str, lengths) -> bool:
+    """The PAN-token predicate: a length in ``lengths``, upper case, a digit
+    and a letter — the pancard number scan (pancard/document_coordinates.py:44)
+    and both CDSL scans (cdsl/document_coordinates.py:71) share it."""
+    return (len(t) in lengths and t.isupper() and any(c.isdigit() for c in t)
+            and any(c.isalpha() for c in t))
 
 
 def _trim(box, factor: float):
@@ -81,11 +85,57 @@ def _field(name: str, value: str = "", boxes=None):
     return {"field": name, "value": value, "boxes": [] if boxes is None else boxes}
 
 
-def _is_empty_field(f) -> bool:
-    """``all(not v for v in d.values())`` over the reference's result dicts
-    (e.g. pancard/document_coordinates.py:214). ``boxes=None`` (the E-Pancard
-    father-name quirk) is falsy, matching the reference's ``None``."""
-    return (not f["value"]) and (not f["boxes"])
+def _scan_field(words, key, hit, trim=None, last=False, dedupe=False, default=""):
+    """The reference's per-field token scan (e.g. the pancard number scan,
+    pancard/document_coordinates.py:44): every word whose text ``hit``s adds its box; the value is the hit tokens
+    each joined as ``" " + t``, or with ``last`` only the last hit token.
+    ``dedupe`` skips a box already found; ``trim`` width-trims the boxes
+    (:func:`_trim`). No hit gives ``key`` with value ``default``, no boxes."""
+    value, found = "", []
+    for x1, y1, x2, y2, t in words:
+        if hit(t):
+            value = t if last else value + " " + t
+            if not (dedupe and [x1, y1, x2, y2] in found):
+                found.append([x1, y1, x2, y2])
+    if not found:
+        return _field(key, default)
+    if trim is not None:
+        found = [_trim(b, trim) for b in found]
+    return _field(key, value, found)
+
+
+def _back_join(words, tokens, dedupe=False, stop=False, exclude=()):
+    """The reference's value → box back-join (e.g. e_aadhaar:80-90): the box
+    of every word whose text is in ``tokens``, in word order. ``dedupe``
+    skips a box already joined and ``exclude`` the boxes listed there;
+    ``stop`` ends the scan once there are as many boxes as tokens. The
+    reference checks that after each word; checking before each is the
+    same, as the count changes only on an append, and an empty ``tokens``
+    stops at once either way."""
+    out = []
+    for x1, y1, x2, y2, t in words:
+        if stop and len(out) == len(tokens):
+            break
+        if t in tokens:
+            box = [x1, y1, x2, y2]
+            if not (dedupe and box in out) and box not in exclude:
+                out.append(box)
+    return out
+
+
+def _rejected():
+    return {"status": REJECTED, "fields": []}
+
+
+def _redacted_unless_empty(fields):
+    """Level-1 (lenient) assembly: REJECTED iff every field is empty,
+    ``all(not v for v in d.values())`` over the reference's result dicts
+    (e.g. pancard/document_coordinates.py:214). ``boxes=None`` (the
+    E-Pancard father-name quirk) is falsy, matching the reference's
+    ``None``."""
+    if all(not f["value"] and not f["boxes"] for f in fields):
+        return _rejected()
+    return {"status": REDACTED, "fields": fields}
 
 
 def _dedupe_boxes(fields):
@@ -200,25 +250,13 @@ def identify_page(tokens) -> str:
 # ---------------------------------------------------------------------------
 
 def _pan_number(words, key="Pancard Number", length=(7, 9, 10)):
-    value, found = "", []
-    for x1, y1, x2, y2, t in words:
-        if len(t) in length and t.isupper() and _has_digit_and_alpha(t):
-            value = t                      # last match wins (:44)
-            found.append([x1, y1, x2, y2])
-    if not value:
-        return _field(key)
-    return _field(key, value, [_trim(b, 0.65) for b in found])
+    return _scan_field(words, key, lambda t: _is_pan_token(t, length),
+                       trim=0.65, last=True)        # last match wins (:44)
 
 
 def _pan_dob(words):
-    value, found = "", []
-    for x1, y1, x2, y2, t in words:
-        if _ci(banks.PAN_DOB_PATTERN).search(t):
-            value += " " + t
-            found.append([x1, y1, x2, y2])
-    if not value:
-        return _field("Pancard DOB")
-    return _field("Pancard DOB", value, [_trim(b, 0.80) for b in found])
+    return _scan_field(words, "Pancard DOB", _ci(banks.PAN_DOB_PATTERN).search,
+                       trim=0.80)
 
 
 def _pan_pattern1(words, tdl):
@@ -239,13 +277,8 @@ def _pan_pattern1(words, tdl):
             break
         if not _search_any(banks.PAN_P1_SKIP, t):
             name += " " + t
-    name_list = name.strip().split()
-    coords = []
-    for x1, y1, x2, y2, t in words:
-        if t in name_list and [x1, y1, x2, y2] not in coords:
-            coords.append([x1, y1, x2, y2])
-        if len(coords) == len(name_list):   # also fires when name_list == []
-            break
+    # early stop, which also fires when the name is empty
+    coords = _back_join(words, name.strip().split(), dedupe=True, stop=True)
     if not coords:
         return "", []
     return name.strip(), coords
@@ -283,16 +316,13 @@ def _extract_pancard(words, lines, qr_boxes, level, places):
         # Aggressive path bug: undefined `_extract_pancard_client_name`
         # raises, the handler returns REJECTED — always
         # (pancard/document_coordinates.py:237,250-252).
-        return {"status": REJECTED, "fields": []}
-    fields = [
+        return _rejected()
+    return _redacted_unless_empty([
         _pan_number(words),
         _pan_dob(words),
         _pan_names(words, tdl),
         _qr_field("Pancard QRCodes", qr_boxes),
-    ]
-    if all(_is_empty_field(f) for f in fields):
-        return {"status": REJECTED, "fields": []}
-    return {"status": REDACTED, "fields": fields}
+    ])
 
 
 # ---------------------------------------------------------------------------
@@ -300,14 +330,8 @@ def _extract_pancard(words, lines, qr_boxes, level, places):
 # ---------------------------------------------------------------------------
 
 def _aadhaar_number(words, key="Aadhaar Number"):
-    value, found = "", []
-    for x1, y1, x2, y2, t in words:
-        if (len(t) == 4 or len(t) == 14) and t.isdigit():
-            value += " " + t
-            found.append([x1, y1, x2, y2])
-    if not value:
-        return _field(key)
-    return _field(key, value, [_trim(b, 0.50) for b in found])
+    return _scan_field(words, key, lambda t: len(t) in (4, 14) and t.isdigit(),
+                       trim=0.50)
 
 
 def _aadhaar_name(words, lines):
@@ -337,26 +361,18 @@ def _aadhaar_name(words, lines):
             name += " " + t
     if not name:
         return _field("Aadhaar Name")
-    name_list = name.split()
-    coords = [[x1, y1, x2, y2] for x1, y1, x2, y2, t in words if t in name_list]
-    return _field("Aadhaar Name", name.strip(), coords)
+    return _field("Aadhaar Name", name.strip(), _back_join(words, name.split()))
 
 
 def _aadhaar_dob(words, lines):
-    dob, found = "", []
-    for x1, y1, x2, y2, t in words:
-        if _ci(banks.AADHAAR_DOB_PATTERN).match(t):
-            dob += " " + t
-            found.append([x1, y1, x2, y2])
-    if not dob:
-        for t in _text_lines(lines):
-            if _ci(banks.AADHAAR_DOB_LINE_KW).search(t):
-                dob += " " + t
-                break
-        dob_list = [x for x in dob.split() if x != "/"]
-        for x1, y1, x2, y2, t in words:
-            if t in dob_list and [x1, y1, x2, y2] not in found:
-                found.append([x1, y1, x2, y2])
+    f = _scan_field(words, "Aadhaar DOB", _ci(banks.AADHAAR_DOB_PATTERN).match,
+                    trim=0.80)
+    if f["value"]:
+        return f
+    # fallback: the first DOB-keyword line, back-joined without its "/"s
+    dob = next((" " + t for t in _text_lines(lines)
+                if _ci(banks.AADHAAR_DOB_LINE_KW).search(t)), "")
+    found = _back_join(words, [x for x in dob.split() if x != "/"], dedupe=True)
     return _field("Aadhaar DOB", dob, [_trim(b, 0.80) for b in found])
 
 
@@ -368,11 +384,7 @@ def _aadhaar_gender(words, lines):
     if not gender:
         return _field("Aadhaar Gender")
     glist = [x for x in gender.split() if x != "/"]
-    coords = []
-    for x1, y1, x2, y2, t in words:
-        if t in glist and [x1, y1, x2, y2] not in coords:
-            coords.append([x1, y1, x2, y2])
-    return _field("Aadhaar Gender", gender, coords)
+    return _field("Aadhaar Gender", gender, _back_join(words, glist, dedupe=True))
 
 
 @lru_cache(maxsize=8)
@@ -475,25 +487,13 @@ def _places_address(words, key, ignore_pattern=None, places=None):
 
 
 def _aadhaar_pincode(words, key="Aadhaar Pincode"):
-    value, found = "", []
-    for x1, y1, x2, y2, t in words:
-        if len(t) in (6, 7) and t[:6].isdigit():
-            value += " " + t
-            found.append([x1, y1, x2, y2])
-    if not value:
-        return _field(key)
-    return _field(key, value, [_trim(b, 0.30) for b in found])
+    return _scan_field(words, key, lambda t: len(t) in (6, 7) and t[:6].isdigit(),
+                       trim=0.30)
 
 
 def _aadhaar_mobile(words, key="Aadhaar Mobile"):
-    value, found = "", []
-    for x1, y1, x2, y2, t in words:
-        if len(t) in (10, 11) and t[:10].isdigit():
-            value = t                       # last match wins (:345)
-            found.append([x1, y1, x2, y2])
-    if not value:
-        return _field(key)
-    return _field(key, value, [_trim(b, 0.54) for b in found])
+    return _scan_field(words, key, lambda t: len(t) in (10, 11) and t[:10].isdigit(),
+                       trim=0.54, last=True)    # last match wins (:345)
 
 
 def _extract_aadhaar(words, lines, qr_boxes, level, places):
@@ -506,16 +506,13 @@ def _extract_aadhaar(words, lines, qr_boxes, level, places):
     mobile = _aadhaar_mobile(words)
     qr = _qr_field("Aadhaar QRCodes", qr_boxes)
     if level == 1:
-        fields = [number, name, dob, gender, address, pincode, mobile, qr]
-        if all(_is_empty_field(f) for f in fields):
-            return {"status": REJECTED, "fields": []}
-        return {"status": REDACTED, "fields": fields}
+        return _redacted_unless_empty(
+            [number, name, dob, gender, address, pincode, mobile, qr])
     # aggressive (aadhaar:452-510): number/name/dob/gender required,
     # the rest appended only when non-empty
-    for req in (number, name, dob, gender):
-        if not req["boxes"]:
-            return {"status": REJECTED, "fields": []}
     fields = [number, name, dob, gender]
+    if any(not f["boxes"] for f in fields):
+        return _rejected()
     fields += [f for f in (address, pincode, mobile, qr) if f["boxes"]]
     return {"status": REDACTED, "fields": fields}
 
@@ -532,12 +529,6 @@ def _kw_index(patterns, lst) -> int:
     return 0
 
 
-def _boxes_for_tokens(name_list, words):
-    """e_aadhaar:80-90 — all word boxes whose text is in the list; duplicates
-    allowed, no early stop."""
-    return [[x1, y1, x2, y2] for x1, y1, x2, y2, t in words if t in name_list]
-
-
 def _eaadhaar_window_name(anchor_patterns, lst, words):
     idx = _kw_index(anchor_patterns, lst)
     if idx == 0:
@@ -547,7 +538,7 @@ def _eaadhaar_window_name(anchor_patterns, lst, words):
         name += " " + t
     for skip in banks.EAADHAAR_NAME_SKIP:     # re.sub then strip, per skip (:140-142)
         name = _ci(skip).sub("", name).strip()
-    return name, _boxes_for_tokens(name.split(), words)
+    return name, _back_join(words, name.split())   # e_aadhaar:80-90
 
 
 def _eaadhaar_name(words, lines):
@@ -562,14 +553,8 @@ def _eaadhaar_name(words, lines):
 
 
 def _eaadhaar_dob(words):
-    dob, found = "", []
-    for x1, y1, x2, y2, t in words:
-        if _ci(banks.EAADHAAR_DOB_PATTERN).match(t):
-            dob += " " + t
-            found.append([x1, y1, x2, y2])
-    if not dob:
-        return _field("E-Aadhaar DOB")
-    return _field("E-Aadhaar DOB", dob, [_trim(b, 0.80) for b in found])
+    return _scan_field(words, "E-Aadhaar DOB",
+                       _ci(banks.EAADHAAR_DOB_PATTERN).match, trim=0.80)
 
 
 def _eaadhaar_gender(words, lines):
@@ -582,14 +567,10 @@ def _eaadhaar_gender(words, lines):
     glist = gender.split()
     if "/" in glist:
         glist.remove("/")                    # first occurrence only (:287-288)
-    coords = []
-    for x1, y1, x2, y2, t in words:
-        if t in glist:
-            if [x1, y1, x2, y2] not in coords:
-                coords.append([x1, y1, x2, y2])
-            if len(glist) == len(coords):    # early stop (:296-298)
-                break
-    return _field("E-Aadhaar Gender", gender, coords)
+    # early stop (:296-298): checked only after a matching word, which is
+    # the same stop, as only a matching word adds a box
+    return _field("E-Aadhaar Gender", gender,
+                  _back_join(words, glist, dedupe=True, stop=True))
 
 
 def _extract_eaadhaar(words, lines, qr_boxes, level, places):
@@ -601,16 +582,14 @@ def _extract_eaadhaar(words, lines, qr_boxes, level, places):
     mobile = _aadhaar_mobile(words, key="E-Aadhaar Mobile")
     pincode = _aadhaar_pincode(words, key="E-Aadhaar Pincode")
     qr = _qr_field("E-Aadhaar QRCodes", qr_boxes)
-    fields = [name, number, dob, gender, address, mobile, pincode, qr]
+    # deduping first cannot change which fields are empty
+    fields = _dedupe_boxes([name, number, dob, gender, address, mobile, pincode, qr])
     if level == 1:
-        if all(_is_empty_field(f) for f in fields):
-            return {"status": REJECTED, "fields": []}
-        return {"status": REDACTED, "fields": _dedupe_boxes(fields)}
+        return _redacted_unless_empty(fields)
     # aggressive (e_aadhaar:514-576): every field incl. QR is required
-    for f in fields:
-        if not f["boxes"]:
-            return {"status": REJECTED, "fields": []}
-    return {"status": REDACTED, "fields": _dedupe_boxes(fields)}
+    if any(not f["boxes"] for f in fields):
+        return _rejected()
+    return {"status": REDACTED, "fields": fields}
 
 
 # ---------------------------------------------------------------------------
@@ -618,14 +597,8 @@ def _extract_eaadhaar(words, lines, qr_boxes, level, places):
 # ---------------------------------------------------------------------------
 
 def _epan_dates(words):
-    dob, found = "", []
-    for x1, y1, x2, y2, t in words:
-        if _cs(banks.EPAN_DOB_PATTERN).match(t):   # case-sensitive match (:74)
-            dob += " " + t
-            found.append([x1, y1, x2, y2])
-    if not dob:
-        return _field("E-Pancard DOB")
-    return _field("E-Pancard DOB", dob, [_trim(b, 0.54) for b in found])
+    return _scan_field(words, "E-Pancard DOB", _cs(banks.EPAN_DOB_PATTERN).match,
+                       trim=0.54)           # case-sensitive match (:74)
 
 
 def _epan_gender(words):
@@ -635,6 +608,17 @@ def _epan_gender(words):
     return _field("E-Pancard Gender")
 
 
+def _epan_sides(words, top_line: str, bottom_line: str):
+    """Both E-Pancard name back-joins (client and father name): each side's
+    line drops its last token when it has several, then joins with an early
+    stop; the bottom side skips boxes the top side took."""
+    def tokens(line):
+        toks = line.split()
+        return toks[:-1] if len(toks) > 1 else toks
+    top = _back_join(words, tokens(top_line), stop=True)
+    return top, _back_join(words, tokens(bottom_line), stop=True, exclude=top)
+
+
 def _epan_client_name(words, lines):
     """e_pancard:131-211. Quirks: the LAST 'name'-anchor line wins (no outer
     break, :151-157); an anchor on the final line raises IndexError → default
@@ -642,39 +626,21 @@ def _epan_client_name(words, lines):
     the value keeps the full next line (the drop-last-token rule applies only
     to the box back-join)."""
     tdl = _text_lines(lines)
+    client_name = ""
     try:
-        client_name, top_list = "", []
         for i, t in enumerate(tdl):
             if _search_any(banks.EPAN_NAME_KW, t):
                 client_name = tdl[i + 1]
-                top_list = tdl[i + 1].split()
-        top_coords = []
-        if top_list:
-            if len(top_list) > 1:
-                top_list = top_list[:-1]
-            for x1, y1, x2, y2, t in words:
-                if t in top_list:
-                    top_coords.append([x1, y1, x2, y2])
-                if len(top_list) == len(top_coords):
-                    break
-        bottom_list = []
-        for t in tdl:
-            if _search_any(banks.EPAN_BOTTOM_NAME_KW, t):
-                bottom_list = t.split()
-        bottom_coords = []
-        if bottom_list:
-            if len(bottom_list) > 1:
-                bottom_list = bottom_list[:-1]
-            for x1, y1, x2, y2, t in words:
-                if t in bottom_list and [x1, y1, x2, y2] not in top_coords:
-                    bottom_coords.append([x1, y1, x2, y2])
-                if len(bottom_list) == len(bottom_coords):
-                    break
-        if not top_coords and not bottom_coords:
-            return _field("E-Pancard Client Name")
-        return _field("E-Pancard Client Name", client_name, top_coords + bottom_coords)
     except IndexError:
         return _field("E-Pancard Client Name")
+    bottom_line = ""
+    for t in tdl:
+        if _search_any(banks.EPAN_BOTTOM_NAME_KW, t):
+            bottom_line = t
+    top, bottom = _epan_sides(words, client_name, bottom_line)
+    if not top and not bottom:
+        return _field("E-Pancard Client Name")
+    return _field("E-Pancard Client Name", client_name, top + bottom)
 
 
 def _epan_father_name(words, lines):
@@ -684,43 +650,18 @@ def _epan_father_name(words, lines):
     iterates None). We surface that as boxes=None."""
     tdl = _text_lines(lines)
     try:
-        father_name, top_list = "", []
-        for i, t in enumerate(tdl):
-            if banks.EPAN_FATHER_TOP_LITERAL in t:
-                father_name = tdl[i + 1]
-                top_list = tdl[i + 1].split()
-                break
-        top_coords = []
-        if top_list:
-            if len(top_list) > 1:
-                top_list = top_list[:-1]
-            for x1, y1, x2, y2, t in words:
-                if t in top_list:
-                    top_coords.append([x1, y1, x2, y2])
-                if len(top_list) == len(top_coords):
-                    break
-        bottom_list = []
-        for i, t in enumerate(tdl):
-            if banks.EPAN_FATHER_BOTTOM_LITERAL in t:
-                if not father_name:
-                    father_name = tdl[i + 2]
-                bottom_list = tdl[i + 2].split()
-                break
-        bottom_coords = []
-        if bottom_list:
-            if len(bottom_list) > 1:
-                bottom_list = bottom_list[:-1]
-            for x1, y1, x2, y2, t in words:
-                if t in bottom_list and [x1, y1, x2, y2] not in top_coords:
-                    bottom_coords.append([x1, y1, x2, y2])
-                if len(bottom_list) == len(bottom_coords):
-                    break
-        if not top_coords and not bottom_coords:
-            return _field("E-Pancard Client Father Name")
-        boxes = top_coords + bottom_coords if (top_coords and bottom_coords) else None
-        return {"field": "E-Pancard Client Father Name", "value": father_name, "boxes": boxes}
+        top_line = next((tdl[i + 1] for i, t in enumerate(tdl)
+                         if banks.EPAN_FATHER_TOP_LITERAL in t), "")
+        bottom_line = next((tdl[i + 2] for i, t in enumerate(tdl)
+                            if banks.EPAN_FATHER_BOTTOM_LITERAL in t), "")
     except IndexError:
         return _field("E-Pancard Client Father Name")
+    top, bottom = _epan_sides(words, top_line, bottom_line)
+    if not top and not bottom:
+        return _field("E-Pancard Client Father Name")
+    boxes = top + bottom if (top and bottom) else None
+    return {"field": "E-Pancard Client Father Name",
+            "value": top_line or bottom_line, "boxes": boxes}
 
 
 def _extract_epancard(words, lines, qr_boxes, level, places):
@@ -731,17 +672,11 @@ def _extract_epancard(words, lines, qr_boxes, level, places):
     father = _epan_father_name(words, lines)
     qr = _qr_field("E-Pancard QRCodes", qr_boxes)
     if level == 1:
-        fields = [number, dob, gender, client, father, qr]
-        if all(_is_empty_field(f) for f in fields):
-            return {"status": REJECTED, "fields": []}
-        return {"status": REDACTED, "fields": fields}
-    # aggressive (e_pancard:362-395): all five checked, but only the number is
-    # ever appended to the output list
-    for req in (number, dob, gender, client):
-        if not req["boxes"]:
-            return {"status": REJECTED, "fields": []}
-    if not (father["boxes"] or []):
-        return {"status": REJECTED, "fields": []}
+        return _redacted_unless_empty([number, dob, gender, client, father, qr])
+    # aggressive (e_pancard:362-395): all five checked (the father's None
+    # boxes fail), but only the number is ever appended to the output list
+    if any(not f["boxes"] for f in (number, dob, gender, client, father)):
+        return _rejected()
     return {"status": REDACTED, "fields": [number]}
 
 
@@ -749,35 +684,19 @@ def _extract_epancard(words, lines, qr_boxes, level, places):
 # PASSPORT — documents/passport/document_coordinates.py
 # ---------------------------------------------------------------------------
 
-_DIGITS = set("0123456789")
-
-
 def _passport_number(words):
-    """passport:22-79 — six ordered predicates, first hit per token; boxes
-    deduped inline; value accumulates; NO width trim."""
-    value, coords = "", []
-    for x1, y1, x2, y2, t in words:
+    """passport:22-79 — six ordered predicates, a token hits on the first
+    that holds (the 4th and 5th only repeat the 2nd); boxes deduped inline;
+    value accumulates; NO width trim."""
+    exact = _cs(banks.PASSPORT_NUM_EXACT).match
+
+    def hit(t):
         digits_after = _DIGIT_RE.search(t, 1) is not None
-        hit = False
-        if _cs(banks.PASSPORT_NUM_EXACT).match(t):
-            hit = True
-        elif len(t) in (6, 7, 8) and t.isdigit():
-            hit = True
-        elif len(t) in (6, 9, 10) and t[:1].isalpha() and t[:1].isupper() and digits_after:
-            hit = True
-        elif len(t) in (6, 7, 8) and t.isupper() and t.isdigit():
-            hit = True
-        elif len(t) in (6, 7, 8) and t.isdigit():
-            hit = True
-        elif len(t) in (6, 7, 8) and digits_after:
-            hit = True
-        if hit:
-            value += " " + t
-            if [x1, y1, x2, y2] not in coords:
-                coords.append([x1, y1, x2, y2])
-    if not coords:
-        return _field("Passport Number")
-    return _field("Passport Number", value, coords)
+        return bool(exact(t)
+                    or (len(t) in (6, 7, 8) and (t.isdigit() or digits_after))
+                    or (len(t) in (6, 9, 10) and t[:1].isalpha()
+                        and t[:1].isupper() and digits_after))
+    return _scan_field(words, "Passport Number", hit, dedupe=True)
 
 
 def _passport_names(words, lines):
@@ -799,75 +718,52 @@ def _passport_names(words, lines):
             break
         if not _search_any(banks.PASSPORT_SKIP_KW, t) and not re.search(r"\d", t):
             names += " " + t
-    name_list = names.split()
-    coords = []
-    for x1, y1, x2, y2, t in words:
-        if t in name_list and [x1, y1, x2, y2] not in coords:
-            coords.append([x1, y1, x2, y2])
+    coords = _back_join(words, names.split(), dedupe=True)
     return _field("Passport Names", names, [_trim(b, 0.50) for b in coords])
 
 
 def _passport_dates(words):
-    value, found = "", []
-    for x1, y1, x2, y2, t in words:
-        if _ci(banks.PASSPORT_DATE_PATTERN).search(t):
-            value += " " + t
-            found.append([x1, y1, x2, y2])
-    if not found:
-        return _field("Passport Dates")
-    return _field("Passport Dates", value, [_trim(b, 0.50) for b in found])
+    return _scan_field(words, "Passport Dates",
+                       _ci(banks.PASSPORT_DATE_PATTERN).search, trim=0.50)
 
 
-def _passport_address(words, places=None):
-    """passport:207-243 — places pass (no dedupe) + 6-digit pincode pass
-    (deduped against the places boxes)."""
-    addr, coords = "", []
-    place_list = places if places is not None else PLACES_LIST
-    for idx in _place_candidates(words, place_list):
-        x1, y1, x2, y2, t = words[idx]
-        for place in place_list:
-            if _ci(place).search(t):
-                addr += " " + t
-                coords.append([x1, y1, x2, y2])
-    for x1, y1, x2, y2, t in words:
-        if len(t) == 6 and t.isdigit():
-            addr += " " + t
-            if [x1, y1, x2, y2] not in coords:
-                coords.append([x1, y1, x2, y2])
-    if not addr:
+def _passport_address(words, places):
+    """passport:207-243 — the places pass (no dedupe) + a 6-digit pincode
+    pass whose boxes skip those already found."""
+    addr = _places_address(words, "Passport Address", places=places)
+    pin = _scan_field(words, "Passport Address",
+                      lambda t: len(t) == 6 and t.isdigit(), dedupe=True)
+    value = addr["value"] + pin["value"]
+    if not value:
         return _field("Passport Address")
-    return _field("Passport Address", addr, coords)
+    return _field("Passport Address", value,
+                  addr["boxes"] + [b for b in pin["boxes"] if b not in addr["boxes"]])
 
 
 def _passport_arrow(words):
-    value, coords = "", []
-    for x1, y1, x2, y2, t in words:
-        if "<" in t and any(c != "<" for c in t):
-            value += " " + t
-            coords.append([x1, y1, x2, y2])
-    if not coords:
-        return _field("Passport Arrow", "<")     # default value is "<" (:252)
-    return _field("Passport Arrow", value, coords)
+    return _scan_field(words, "Passport Arrow",
+                       lambda t: "<" in t and any(c != "<" for c in t),
+                       default="<")         # default value is "<" (:252)
 
 
 def _extract_passport(words, lines, qr_boxes, level, places):
-    number = _passport_number(words)
-    names = _passport_names(words, lines)
-    dates = _passport_dates(words)
-    arrow = _passport_arrow(words)
-    address = _passport_address(words, places=places)
+    # deduping first cannot change which fields are empty
+    number, names, dates, arrow, address = _dedupe_boxes([
+        _passport_number(words),
+        _passport_names(words, lines),
+        _passport_dates(words),
+        _passport_arrow(words),
+        _passport_address(words, places=places),
+    ])
     if level == 1:
-        fields = [number, names, dates, arrow, address]
-        if all(_is_empty_field(f) for f in fields):
-            return {"status": REJECTED, "fields": []}
-        return {"status": REDACTED, "fields": _dedupe_boxes(fields)}
+        return _redacted_unless_empty([number, names, dates, arrow, address])
     # aggressive (passport:332-372): names are required but always empty →
     # level-0 passports are always REJECTED
     if not number["boxes"] or not names["boxes"]:
-        return {"status": REJECTED, "fields": []}
+        return _rejected()
     fields = [number, names]
     fields += [f for f in (dates, arrow, address) if f["boxes"]]
-    return {"status": REDACTED, "fields": _dedupe_boxes(fields)}
+    return {"status": REDACTED, "fields": fields}
 
 
 # ---------------------------------------------------------------------------
@@ -875,26 +771,13 @@ def _extract_passport(words, lines, qr_boxes, level, places):
 # ---------------------------------------------------------------------------
 
 def _dl_number(words):
-    value, coords = "", []
-    for x1, y1, x2, y2, t in words:
-        if len(t) == 11 and t.isdigit():
-            value += " " + t
-            if [x1, y1, x2, y2] not in coords:
-                coords.append([x1, y1, x2, y2])
-    if not value:
-        return _field("Driving License Number")
-    return _field("Driving License Number", value, coords)
+    return _scan_field(words, "Driving License Number",
+                       lambda t: len(t) == 11 and t.isdigit(), dedupe=True)
 
 
 def _dl_dates(words):
-    value, found = "", []
-    for x1, y1, x2, y2, t in words:
-        if _ci(banks.DL_DATES_PATTERN).match(t):
-            value += " " + t
-            found.append([x1, y1, x2, y2])
-    if not value:
-        return _field("Driving License Dates")
-    return _field("Driving License Dates", value, [_trim(b, 0.80) for b in found])
+    return _scan_field(words, "Driving License Dates",
+                       _ci(banks.DL_DATES_PATTERN).match, trim=0.80)
 
 
 def _dl_names(words, lines):
@@ -922,11 +805,8 @@ def _dl_names(words, lines):
                 token_list.append(t)
     if not names:
         return _field("Driving License Names")
-    coords = []
-    for x1, y1, x2, y2, t in words:
-        if t in token_list and [x1, y1, x2, y2] not in coords:
-            coords.append([x1, y1, x2, y2])
-    return _field("Driving License Names", names, coords)
+    return _field("Driving License Names", names,
+                  _back_join(words, token_list, dedupe=True))
 
 
 def _extract_dl(words, lines, qr_boxes, level, places):
@@ -936,15 +816,11 @@ def _extract_dl(words, lines, qr_boxes, level, places):
     address = _places_address(words, "Driving License Address", places=places)
     qr = _qr_field("Driving License QRCodes", qr_boxes)
     if level == 1:
-        fields = [number, dates, names, address, qr]
-        if all(_is_empty_field(f) for f in fields):
-            return {"status": REJECTED, "fields": []}
-        return {"status": REDACTED, "fields": fields}
+        return _redacted_unless_empty([number, dates, names, address, qr])
     # aggressive (driving_license:285-320): number/dates/names required,
     # address & QR appended unconditionally
-    for req in (number, dates, names):
-        if not req["boxes"]:
-            return {"status": REJECTED, "fields": []}
+    if any(not f["boxes"] for f in (number, dates, names)):
+        return _rejected()
     return {"status": REDACTED, "fields": [number, dates, names, address, qr]}
 
 
@@ -954,7 +830,7 @@ def _extract_dl(words, lines, qr_boxes, level, places):
 
 def _cdsl_pan(words):
     for x1, y1, x2, y2, t in words:
-        if len(t) == 10 and t.isupper() and _has_digit_and_alpha(t):
+        if _is_pan_token(t, (10,)):
             return _field("CDSL Pancard Number", t, [_trim([x1, y1, x2, y2], 0.65)])
     return _field("CDSL Pancard Number")
 
@@ -963,11 +839,8 @@ def _cdsl_client_name(words):
     """cdsl:47-118. Quirks: the scan starts AT the PAN token (:71); the
     Title-case branch appends ``[x1, y2, x2, y2]`` — y2 typo (:83); multi-box
     results are merged first→last into a single rectangle (:91-102)."""
-    pan_idx = None
-    for i, (x1, y1, x2, y2, t) in enumerate(words):
-        if len(t) == 10 and t.isupper() and _has_digit_and_alpha(t):
-            pan_idx = i
-            break
+    pan_idx = next((i for i, w in enumerate(words) if _is_pan_token(w[4], (10,))),
+                   None)
     if pan_idx is None:
         return _field("CDSL Client Name")
     name, coords = "", []
@@ -995,12 +868,9 @@ def _extract_cdsl(words, lines, qr_boxes, level, places):
     pan = _cdsl_pan(words)
     client = _cdsl_client_name(words)
     if level == 1:
-        fields = [pan, client]
-        if all(_is_empty_field(f) for f in fields):
-            return {"status": REJECTED, "fields": []}
-        return {"status": REDACTED, "fields": fields}
+        return _redacted_unless_empty([pan, client])
     if not pan["boxes"] or not client["boxes"]:
-        return {"status": REJECTED, "fields": []}
+        return _rejected()
     return {"status": REDACTED, "fields": [pan, client]}
 
 
@@ -1099,9 +969,20 @@ def extract_page(doc_type: str, words, lines, qr_boxes, level: int = 1,
     """
     fn = _EXTRACTORS.get(doc_type)
     if fn is None:
-        return {"status": REJECTED, "fields": []}
+        return _rejected()
     words, lines = mode_view(words, lines, DOC_LANG_MODES.get(doc_type, "eng"))
     return fn(words, lines, qr_boxes, level, places=places)
+
+
+def process_page(words, lines, qr_boxes, level, places):
+    """Identify, then extract, one page; returns ``(doc_type, result)``.
+    Identification sees the sparse "eng" token stream (the reference
+    identifies from the lang=None psm-11 pass); :func:`extract_page`
+    re-views per doc type (CDSL → "default", F34)."""
+    id_words, _ = mode_view(words, lines, "eng")
+    doc_type = identify_page([w[4] for w in id_words])
+    return doc_type, extract_page(doc_type, words, lines, qr_boxes, level,
+                                  places=places)
 
 
 def boxes_output_failed(fields) -> bool:

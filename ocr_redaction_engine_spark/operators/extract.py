@@ -37,9 +37,7 @@ PAGE_ROWS_SCHEMA_DDL = (
 # NO redactions XML at all, while a page whose boxes are merely empty still
 # gets a Count-0 document. The flat rows must carry the distinction.
 
-_COLS = ["doc_id", "offset", "media_ref", "document_name", "status", "row_kind",
-         "field_idx", "field", "value", "seq", "x1", "y1", "x2", "y2",
-         "boxes_failed"]
+_COLS = [c.split()[0] for c in PAGE_ROWS_SCHEMA_DDL.split(", ")]
 
 
 def _as_list(v):
@@ -88,17 +86,9 @@ def extract_page_rows(pages: DataFrame, level: int = 1,
             if c_pages is not None:
                 c_pages.add(len(pdf))
             for row in pdf.itertuples(index=False):
-                words = _word_tuples(row)
-                lines = _as_list(row.lines)
-                # identification sees the sparse "eng" stream (the reference
-                # identifies from the lang=None psm-11 pass); extract_page
-                # re-views per doc type (CDSL → "default", F34)
-                id_words, _ = kernel.mode_view(words, lines, "eng")
-                doc_type = kernel.identify_page([w[4] for w in id_words])
-                res = kernel.extract_page(
-                    doc_type, words, lines, _qr_tuples(row), level,
-                    places=places,
-                )
+                _, res = kernel.process_page(
+                    _word_tuples(row), _as_list(row.lines), _qr_tuples(row),
+                    level, places)
                 base = (row.doc_id, int(row.offset), row.media_ref, row.document_name,
                         res["status"])
                 if res["status"] == kernel.REJECTED:
@@ -115,11 +105,8 @@ def extract_page_rows(pages: DataFrame, level: int = 1,
                 for seq, (fi, field, x1, y1, x2, y2) in enumerate(
                         kernel.flatten_boxes(res["fields"]), start=1):
                     out.append(base + ("box", fi, field, "", seq, x1, y1, x2, y2, False))
-            if out:
-                # columnar construction: one C-speed transpose instead of
-                # pandas row-tuple inference
-                yield pd.DataFrame(dict(zip(_COLS, zip(*out))))
-            else:
-                yield pd.DataFrame({c: [] for c in _COLS})
+            # columnar construction: one C-speed transpose instead of pandas
+            # row-tuple inference; an empty batch keeps object columns
+            yield pd.DataFrame(dict(zip(_COLS, zip(*out))), columns=_COLS)
 
     return pages.mapInPandas(run, schema=PAGE_ROWS_SCHEMA_DDL)

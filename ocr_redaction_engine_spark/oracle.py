@@ -80,14 +80,10 @@ def _page_qr(page):
 
 
 def process_page(page, level: int = 1, places=None) -> dict:
-    """Identify + extract one media page; returns the full page result.
-    Identification runs on the sparse "eng" token stream; extraction
-    re-views per doc type (kernel.mode_view, CDSL → "default")."""
-    words = _page_words(page)
-    id_words, _ = kernel.mode_view(words, page["lines"], "eng")
-    doc_type = kernel.identify_page([w[4] for w in id_words])
-    result = kernel.extract_page(doc_type, words, page["lines"], _page_qr(page),
-                                 level, places=places)
+    """Identify + extract one media page (``kernel.process_page``);
+    returns the full page result with its doc type."""
+    doc_type, result = kernel.process_page(_page_words(page), page["lines"],
+                                           _page_qr(page), level, places)
     return {"doc_type": doc_type, **result}
 
 

@@ -10,6 +10,9 @@ No Spark session needed — the kernel is pure Python by design.
 
 from __future__ import annotations
 
+import itertools
+
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -169,3 +172,78 @@ def test_search_any_equals_sequential(tokens, pats):
     for t in tokens:
         want = any(kernel._ci(p).search(t) for p in pats)
         assert kernel._search_any(pats, t) == want
+
+
+# The shared token scan and back-join against loops written the way the
+# reference writes each copy: small alphabets so texts and boxes repeat.
+
+_text = st.sampled_from(["AB12", "1234", "12/03", "x<y", "<<", "Ram", "ram",
+                         "KUMAR", "9876543210", "/"])
+_box = st.sampled_from([[0, 0, 9, 9], [5, 0, 20, 9], [0, 10, 40, 19],
+                        [7, 7, 8, 8]])
+_words = st.lists(st.tuples(_box, _text).map(lambda bt: (*bt[0], bt[1])),
+                  max_size=12)
+_hits = st.sampled_from([
+    str.isdigit,
+    kernel._ci(r"\d{2}/\d{2}").search,
+    kernel._ci(r"[a-z]+").match,
+    lambda t: "<" in t and any(c != "<" for c in t),
+    lambda t: len(t) in (2, 4),
+])
+
+
+@pytest.mark.parametrize("trim,last,dedupe,default", list(itertools.product(
+    [None, 0.5], [False, True], [False, True], ["", "<"])))
+@settings(max_examples=60, deadline=None)
+@given(words=_words, hit=_hits)
+def test_scan_field_equals_reference_loop(words, hit, trim, last, dedupe, default):
+    value, found = "", []
+    for x1, y1, x2, y2, t in words:
+        if hit(t):
+            if last:
+                value = t
+            else:
+                value += " " + t
+            if not dedupe or [x1, y1, x2, y2] not in found:
+                found.append([x1, y1, x2, y2])
+    if not value:
+        want = {"field": "K", "value": default, "boxes": []}
+    else:
+        if trim is not None:
+            found = [kernel._trim(b, trim) for b in found]
+        want = {"field": "K", "value": value, "boxes": found}
+    assert kernel._scan_field(words, "K", hit, trim=trim, last=last,
+                              dedupe=dedupe, default=default) == want
+
+
+@pytest.mark.parametrize("dedupe,stop,excluding", list(itertools.product(
+    [False, True], repeat=3)))
+@settings(max_examples=100, deadline=None)
+@given(words=_words, tokens=st.lists(_text, max_size=5),
+       some=st.lists(_box, min_size=1, max_size=2))
+def test_back_join_equals_reference_loop(words, tokens, some, dedupe, stop,
+                                         excluding):
+    exclude = some if excluding else ()
+    # the box count is checked after each word (pattern1.py, e_pancard) ...
+    coords = []
+    for x1, y1, x2, y2, t in words:
+        if (t in tokens and (not dedupe or [x1, y1, x2, y2] not in coords)
+                and [x1, y1, x2, y2] not in exclude):
+            coords.append([x1, y1, x2, y2])
+        if stop and len(tokens) == len(coords):
+            break
+    got = kernel._back_join(words, tokens, dedupe=dedupe, stop=stop,
+                            exclude=exclude)
+    assert got == coords
+    if not stop:
+        return
+    # ... or only after a matching word (e_aadhaar gender, :296-298)
+    coords = []
+    for x1, y1, x2, y2, t in words:
+        if t in tokens:
+            if ((not dedupe or [x1, y1, x2, y2] not in coords)
+                    and [x1, y1, x2, y2] not in exclude):
+                coords.append([x1, y1, x2, y2])
+            if len(tokens) == len(coords):
+                break
+    assert got == coords

@@ -21,7 +21,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from ocr_redaction_engine_spark import corpus, kernel
+from ocr_redaction_engine_spark import corpus, kernel, oracle
 
 
 def render_page_ppm(page: dict, boxes: list, out_path: str) -> tuple:
@@ -50,12 +50,7 @@ def render_page_ppm(page: dict, boxes: list, out_path: str) -> tuple:
 
 def page_boxes(page: dict, level: int = 1) -> tuple:
     """Run the kernel on one synthetic page; returns (status, [boxes])."""
-    words = [(wb["x1"], wb["y1"], wb["x2"], wb["y2"], wb["text"])
-             for wb in page["words"]]
-    qr = [(q["x1"], q["y1"], q["x2"], q["y2"]) for q in page["qr_boxes"]]
-    id_words, _ = kernel.mode_view(words, page["lines"], "eng")
-    doc_type = kernel.identify_page([t[4] for t in id_words])
-    res = kernel.extract_page(doc_type, words, page["lines"], qr, level)
+    res = oracle.process_page(page, level)
     if res["status"] == kernel.REJECTED:
         return res["status"], [kernel.rejected_box(page["width"], page["height"])]
     if kernel.boxes_output_failed(res["fields"]):
