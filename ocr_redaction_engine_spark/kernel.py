@@ -87,16 +87,18 @@ def _field(name: str, value: str = "", boxes=None):
 
 def _scan_field(words, key, hit, trim=None, last=False, dedupe=False, default=""):
     """The reference's per-field token scan (e.g. the pancard number scan,
-    pancard/document_coordinates.py:44): every word whose text ``hit``s adds its box; the value is the hit tokens
-    each joined as ``" " + t``, or with ``last`` only the last hit token.
-    ``dedupe`` skips a box already found; ``trim`` width-trims the boxes
-    (:func:`_trim`). No hit gives ``key`` with value ``default``, no boxes."""
+    pancard/document_coordinates.py:44): every word whose text ``hit``s
+    adds its box; the value is the hit tokens each joined as ``" " + t``,
+    or with ``last`` only the last hit token. ``dedupe`` skips a box
+    already found; ``trim`` width-trims the boxes (:func:`_trim`). No hit
+    gives ``key`` with value ``default``, no boxes."""
     value, found = "", []
-    for x1, y1, x2, y2, t in words:
-        if hit(t):
-            value = t if last else value + " " + t
-            if not (dedupe and [x1, y1, x2, y2] in found):
-                found.append([x1, y1, x2, y2])
+    for w in words:                 # no unpacking: most words miss
+        if hit(w[4]):
+            value = w[4] if last else value + " " + w[4]
+            box = list(w[:4])
+            if not (dedupe and box in found):
+                found.append(box)
     if not found:
         return _field(key, default)
     if trim is not None:
@@ -113,11 +115,11 @@ def _back_join(words, tokens, dedupe=False, stop=False, exclude=()):
     same, as the count changes only on an append, and an empty ``tokens``
     stops at once either way."""
     out = []
-    for x1, y1, x2, y2, t in words:
+    for w in words:
         if stop and len(out) == len(tokens):
             break
-        if t in tokens:
-            box = [x1, y1, x2, y2]
+        if w[4] in tokens:
+            box = list(w[:4])
             if not (dedupe and box in out) and box not in exclude:
                 out.append(box)
     return out

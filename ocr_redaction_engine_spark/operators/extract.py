@@ -62,11 +62,11 @@ def _qr_tuples(row):
 def extract_page_rows(pages: DataFrame, level: int = 1,
                       counters: dict | None = None,
                       places: list[str] | None = None) -> DataFrame:
-    """Runs kernel.identify_page + kernel.extract_page per page inside Arrow
-    batches. Identification happens HERE, not as a JVM when-chain: the regex
-    bank is compiled once per worker at module import (the spark-submit
-    --py-files equivalent of a broadcast automaton) and a page costs ~50 µs
-    to classify — vs the reference's ≤7 re-OCR identify passes
+    """Runs kernel.process_page (identify_page, then extract_page) per page
+    inside Arrow batches. Identification happens HERE, not as a JVM
+    when-chain: the regex bank is compiled once per worker at module import
+    (the spark-submit --py-files equivalent of a broadcast automaton) and a
+    page costs ~50 µs to classify — vs the reference's ≤7 re-OCR identify passes
     (document_identification/identify_doc.py:33-45) and vs Catalyst
     re-evaluating a 25-regex CASE chain in every expression that references
     the column. UNKNOWN pages shortcut to the REJECTED 80 % box row.
