@@ -5,32 +5,25 @@ applies after filtering/dedup).
 
 The hard part at scale is the GLOBAL running offset. A naive
 ``Window.orderBy(...)`` with no partition key collapses the whole corpus
-into one reducer — the classic single-task bottleneck. This module instead
-uses the textbook two-pass distributed prefix sum:
-
-1. range-partition by the deterministic order key (global order is then
-   preserved ACROSS partitions, whatever boundaries the sampler picks);
-2. per-partition token totals — one tiny aggregate, ≤P rows — prefix-summed
-   on the driver and broadcast back as a literal map (bytes to the driver,
-   same pattern as the IVF centroids);
-3. a within-partition cumulative sum (window PARTITIONED by the physical
-   partition id, so every partition scans in parallel).
-
-start_offset is boundary-independent: the order key (md5(doc_id), doc_id)
-is a total order, so any contiguous split yields the same global cumsum —
-rerun-stable even though RangePartitioner samples.
+into one reducer — the classic single-task bottleneck. The offset is
+instead a [[running_total]] of token counts on its wide plan: the textbook
+two-pass distributed prefix sum (range partition by the order key,
+per-partition totals, a within-partition cumulative sum). start_offset is
+boundary-independent: the order key (md5(doc_id), doc_id) is a total
+order, so any contiguous split yields the same global cumsum — rerun-stable
+even though RangePartitioner samples.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .ranks import running_total
 from .text import with_tokens
 
 
-def pack_offsets(docs: DataFrame, budget_tokens: int = 512,
-                 num_partitions: int | None = None) -> DataFrame:
+def pack_offsets(docs: DataFrame, budget_tokens: int = 512) -> DataFrame:
     """Assign every document its start offset in the concatenated token
     stream, the training-window id that offset falls in, and whether the
     document straddles a window boundary (straddlers get split across two
@@ -38,39 +31,19 @@ def pack_offsets(docs: DataFrame, budget_tokens: int = 512,
 
     Output: (doc_id, n_tokens, start_offset, bin_id, straddle).
     """
-    sc = docs.sparkSession.sparkContext
-    parts = num_partitions or sc.defaultParallelism
     d = with_tokens(docs).select(
         "doc_id",
         F.size("tokens").alias("n_tokens"),
         F.md5(F.col("doc_id").cast("string")).alias("h"),
     )
-    # localCheckpoint pins ONE materialization of the range exchange: the
-    # totals collect (pass 1) and the cumsum job (pass 2) must see identical
-    # partition boundaries — same discipline as _doc_nodes/_grouped_rank.
-    # (RangePartitioner is deterministic on an identical lineage, but the
-    # pin removes the dependence on that implementation detail.)
-    d = (d.repartitionByRange(parts, "h", "doc_id")
-         .withColumn("pid", F.spark_partition_id())
-         .localCheckpoint(eager=False))
-    # pass 1: per-partition totals; only ≤`parts` (pid, total) rows leave the
-    # executors, and only the prefix map rides back in the plan
-    totals = {r["pid"]: r["tot"] for r in
-              d.groupBy("pid").agg(F.sum("n_tokens").alias("tot")).collect()}
-    prefix, run = {}, 0
-    for pid in sorted(totals):
-        prefix[pid] = run
-        run += totals[pid]
-    omap = F.create_map(
-        *[F.lit(x) for pid in sorted(prefix) for x in (pid, prefix[pid])])
-    # pass 2: parallel within-partition cumsum
-    w = Window.partitionBy("pid").orderBy("h", "doc_id")
-    cum = F.sum("n_tokens").over(w)
-    start = (omap[F.col("pid")] + cum - F.col("n_tokens")).cast("long")
+    # the running total includes the current document: subtract it
+    ends = running_total(d, [], ["h", "doc_id"], "end_offset",
+                         value="n_tokens", wide=True)
+    start = F.col("end_offset") - F.col("n_tokens")
     b = int(budget_tokens)
     # integer DIV, not floor(double /): a 100 TB token stream overflows the
     # 2^53 exact-double range long before it overflows int64
-    return d.select("doc_id", "n_tokens", start.alias("start_offset")).selectExpr(
+    return ends.select("doc_id", "n_tokens", start.alias("start_offset")).selectExpr(
         "doc_id",
         "n_tokens",
         "start_offset",

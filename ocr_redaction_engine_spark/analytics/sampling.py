@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .ranks import salted_topk
+from .ranks import running_total, salted_topk
 from .text import md5_long, with_tokens
 
 _HEX15 = 16 ** 15  # 15 hex digits fit a signed 64-bit long exactly
@@ -74,61 +74,21 @@ def char_budget_mix(docs: DataFrame, budget_chars: int,
 
     The per-source running total is the scale trap: sources are FEW and
     huge, so ``Window.partitionBy("source")`` would drag a source's whole
-    slice of a 100 TB corpus through one sorted task. Instead the cumsum
-    runs as the two-pass distributed prefix sum [[pack_sequences]] uses:
-    range-partition on (source, hash, doc_id) — partition ranges are disjoint
-    and ordered in that tuple order, so a source's rows in earlier
-    partitions all precede its rows here — take per-(partition, source)
-    totals (≤ parallelism × |sources| rows to the driver), prefix them per
-    source, and broadcast the offsets back as a literal map; the final
-    window partitions by (physical partition, source), so every partition
-    cumsums in parallel. Offsets + local cumsum reconstruct the exact
-    global per-source running total for ANY partition boundaries — the
-    order key (h, doc_id) is total, so the result is bit-identical to the
-    single-window formulation. Output: (doc_id, source, n_chars,
-    cum_chars)."""
+    slice of a 100 TB corpus through one sorted task. Instead it is a
+    [[running_total]] of n_chars per source over the total order
+    (hash, doc_id) on the wide, range-partitioned plan — the same numbers
+    as the single window, NULL source included. Output: (doc_id, source,
+    n_chars, cum_chars)."""
     w_col = F.when(F.col("source").isin(*boosted) if boosted else F.lit(False),
                    F.lit(float(boost))).otherwise(F.lit(1.0))
     total_w = float(
         docs.select("source").distinct().agg(F.sum(w_col)).collect()[0][0]
     )
-    sc = docs.sparkSession.sparkContext
     h = _hash_frac(F.col("doc_id").cast("string"))
     d = docs.select("doc_id", "source", "n_chars").withColumn("__h", h)
-    # localCheckpoint pins ONE materialization of the range exchange (the
-    # totals agg and the cumsum window must see identical boundaries;
-    # RangePartitioner's sample seed is per-RDD-instance — same discipline
-    # as webgraph._doc_nodes)
-    d = (d.repartitionByRange(sc.defaultParallelism, "source", "__h", "doc_id")
-         .withColumn("pid", F.spark_partition_id())
-         .localCheckpoint(eager=False))
-    totals = d.groupBy("pid", "source").agg(F.sum("n_chars").alias("tot")).collect()
-    # NULL source is a legal group: key it with a sentinel on BOTH sides
-    # (concat_ws silently skips NULL, which would desync the lookup key from
-    # the Python-built map and NULL-out every null-source row's offset; the
-    # plain tuple sort would also raise on None-vs-str)
-    null_k = "\x00NULL"
-    run: dict = {}
-    entries = []
-    for r in sorted(totals,
-                    key=lambda r: (r["source"] is None, r["source"] or "",
-                                   r["pid"])):
-        s = null_k if r["source"] is None else r["source"]
-        entries.append((f'{r["pid"]}:{s}', run.get(s, 0)))
-        run[s] = run.get(s, 0) + r["tot"]
-    omap = F.create_map(*[
-        c for mk, off0 in entries
-        for c in (F.lit(mk), F.lit(off0).cast("long"))]) \
-        if entries else F.create_map()
-    win = (
-        Window.partitionBy("pid", "source")
-        .orderBy(F.col("__h").asc(), F.col("doc_id").asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    off = omap[F.concat_ws(":", F.col("pid").cast("string"),
-                           F.coalesce(F.col("source"), F.lit(null_k)))]
     return (
-        d.withColumn("cum_chars", off + F.sum("n_chars").over(win))
+        running_total(d, ["source"], ["__h", "doc_id"], "cum_chars",
+                      value="n_chars", wide=True)
         .filter(F.col("cum_chars") <= F.lit(float(budget_chars)) * w_col / F.lit(total_w))
         .select("doc_id", "source", "n_chars", "cum_chars")
     )

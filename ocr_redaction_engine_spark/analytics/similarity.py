@@ -671,7 +671,7 @@ def negative_pairs(embeddings: DataFrame, k: int = 3) -> DataFrame:
     shorting some anchors below k partners. The precondition is checked in
     the same metadata-scale aggregate that sizes the draw and violated
     input RAISES (sparse ids need an id-compaction pass first, e.g. the
-    two-phase rank in webgraph._doc_nodes).
+    ranks.running_total row number webgraph._doc_nodes uses).
     """
     row = embeddings.agg(
         F.count("*").alias("n"), F.min("vec_id").alias("mn"),

@@ -19,9 +19,10 @@ the extractor and the iteration code is unchanged.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .ranks import running_total, salted_topk
 from .text import md5_long
 
 ANCHOR_PAIR = r'<a href="([^"]*)"[^>]*>([^<]*)</a>'
@@ -59,55 +60,22 @@ SCALE = 10**12  # integer micro-rank units
 DAMPING_PCT = 85  # pagerank / trustrank damping d, in percent
 
 
-def _doc_nodes(docs: DataFrame, wide_threshold: int | None = None) -> DataFrame:
-    """Stable integer node ids 0..N-1 by doc_id order. Two plans, same
-    bits (a planted-equality unit pins them identical):
-
-    - NARROW input (scan partitions ≤ ``wide_threshold``, default the
-      cluster's defaultParallelism — a small corpus): the plain global
-      ``row_number`` window. One tiny sorted partition, no extra jobs.
-    - WIDE input (warehouse scale — thousands of splits): a bare
-      ``Window.orderBy`` would funnel every distinct doc_id through ONE
-      sorted partition, so switch to the classic two-phase rank:
-      range-repartition on doc_id (RangePartitioner keeps partition
-      ranges disjoint and ordered by partition id), rank locally per
-      partition, add per-partition offsets from a metadata-scale count
-      agg (≤ parallelism rows). Bit-identical to the global row_number
-      for ANY boundary placement — offsets + local ranks reconstruct the
-      exact global rank — which the [[web_pagerank]]/[[web_bfs_depth]]
-      oracles pin.
-
-    The same narrow-only conditional discipline as [[simhash]]'s
-    repartition (VERDICT r2 #3): the scale-safe plan costs a sampling
-    job + an extra materialization, so it is NOT the default on inputs
-    where the single-partition sort is a few milliseconds. (Node ids are
-    corpus scaffolding for the synthetic graph; real crawls carry edge
-    lists already keyed by URL.)"""
-    sc = docs.sparkSession.sparkContext
-    thr = wide_threshold if wide_threshold is not None else sc.defaultParallelism
-    ids = docs.select("doc_id").distinct()
-    if docs.select("doc_id").rdd.getNumPartitions() <= thr:
-        w = Window.orderBy("doc_id")
-        # cast matches the wide path's long (off + row_number): the node
-        # column's type must not flip with the input's partition count
-        return ids.select(
-            "doc_id", (F.row_number().over(w) - 1).cast("long").alias("node"))
-    # localCheckpoint pins ONE materialization of the range exchange: the
-    # offsets agg and the rank join both read the same partitioning, so
-    # consistency never depends on exchange reuse (RangePartitioner's
-    # sample seed is per-RDD-instance — two independent evaluations could
-    # legally draw different boundaries).
-    ids = (ids.repartitionByRange(sc.defaultParallelism, "doc_id")
-           .withColumn("pid", F.spark_partition_id())
-           .localCheckpoint(eager=False))
-    offs = ids.groupBy("pid").agg(F.count("*").alias("cnt"))
-    woff = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = offs.select(
-        "pid", F.coalesce(F.sum("cnt").over(woff), F.lit(0)).alias("off"))
-    wloc = Window.partitionBy("pid").orderBy("doc_id")
-    return ids.join(F.broadcast(offs), "pid").select(
-        "doc_id",
-        (F.col("off") + F.row_number().over(wloc) - 1).alias("node"))
+def _doc_nodes(docs: DataFrame) -> DataFrame:
+    """Stable integer node ids 0..N-1 by doc_id order: the
+    [[running_total]] row number over the distinct ids, minus 1. The plan
+    choice probes the docs' own scan (metadata-cheap), not the shuffled
+    distinct: the plain global window on a narrow input (a small corpus),
+    the range-partitioned two-pass rank on a wide one, where a bare
+    ``Window.orderBy`` would funnel every doc_id through one sorted task.
+    Both plans give the same ids, which the [[web_pagerank]] /
+    [[web_bfs_depth]] oracles pin. (Node ids are corpus scaffolding for
+    the synthetic graph; real crawls carry edge lists already keyed by
+    URL.)"""
+    wide = (docs.select("doc_id").rdd.getNumPartitions()
+            > docs.sparkSession.sparkContext.defaultParallelism)
+    ranked = running_total(docs.select("doc_id").distinct(), [], ["doc_id"],
+                           "node", wide=wide)
+    return ranked.select("doc_id", (F.col("node") - 1).alias("node"))
 
 
 def synth_edges(docs: DataFrame, n_nodes: int) -> DataFrame:
@@ -254,68 +222,6 @@ def synth_hosts(docs: DataFrame) -> DataFrame:
     )
 
 
-def _grouped_rank(df: DataFrame, group_cols: list, order_cols: list,
-                  rank_name: str,
-                  wide_threshold: int | None = None,
-                  wide: bool | None = None) -> DataFrame:
-    """``row_number()`` per group over a TOTAL order, Zipf-safe — the
-    grouped generalization of [[_doc_nodes]]' two-phase rank, for rankers
-    that must number EVERY row (a salted two-stage top-k only bounds
-    top-k survivors; wave/rank assignments need the full numbering).
-
-    Narrow inputs (scan partitions ≤ threshold) keep the plain window —
-    zero extra cost, same conditional discipline as _doc_nodes. Wide
-    inputs range-repartition on (group, order) — a group's rows are then
-    contiguous across ordered partitions — rank locally per (partition,
-    group), and add per-(partition, group) offsets. The offsets stay
-    DISTRIBUTED: each group spans only the few partitions its rows
-    straddle, so the offset table is ~|groups| + parallelism rows and its
-    prefix window per group is trivially small; nothing group-shaped ever
-    lands in one task (with no group_cols the offsets are ≤ parallelism
-    rows and broadcast). Offsets + local ranks reconstruct the exact
-    single-window numbering for ANY partition boundaries.
-
-    ``wide`` skips the partition-count probe: ``df.rdd`` on a SHUFFLED
-    plan forces AQE to materialize every upstream stage just to learn
-    the partition count, and the real query then re-executes them (no
-    cross-query exchange reuse) — callers whose input hangs below an
-    aggregation pass ``wide=True`` ([[domain_gini]]); the probe default
-    is only for scan/map-only inputs where ``.rdd`` is metadata-cheap.
-    The rank is LongType on BOTH paths: the wide path exists precisely
-    for the >2^31-rows-per-group regime, where an int rank wraps."""
-    sc = df.sparkSession.sparkContext
-    thr = wide_threshold if wide_threshold is not None else sc.defaultParallelism
-    if wide is None:
-        wide = df.rdd.getNumPartitions() > thr
-    if not wide:
-        w = (Window.partitionBy(*group_cols) if group_cols else Window) \
-            .orderBy(*order_cols)
-        return df.withColumn(rank_name, F.row_number().over(w).cast("long"))
-    # localCheckpoint pins ONE materialization of the range exchange (the
-    # offsets agg and the rank join must see identical boundaries)
-    d = (df.repartitionByRange(sc.defaultParallelism,
-                               *[F.col(c) for c in group_cols], *order_cols)
-         .withColumn("__pid", F.spark_partition_id())
-         .localCheckpoint(eager=False))
-    offs = d.groupBy("__pid", *group_cols).agg(F.count("*").alias("__cnt"))
-    woff = ((Window.partitionBy(*group_cols) if group_cols else Window)
-            .orderBy("__pid")
-            .rowsBetween(Window.unboundedPreceding, -1))
-    offs = offs.select(
-        "__pid", *group_cols,
-        F.coalesce(F.sum("__cnt").over(woff), F.lit(0)).alias("__off"))
-    if not group_cols:
-        offs = F.broadcast(offs)
-    wloc = Window.partitionBy("__pid", *group_cols).orderBy(*order_cols)
-    # re-select in the input's column order: the join hoists its keys to the
-    # front, which would make the output schema flip between the narrow and
-    # wide paths (i.e. with the input's partition count)
-    return (d.join(offs, ["__pid", *group_cols])
-            .withColumn(rank_name,
-                        (F.col("__off") + F.row_number().over(wloc)).cast("long"))
-            .select(*df.columns, rank_name))
-
-
 def domain_cap(pages: DataFrame, cap: int = 5, salts: int = 8) -> DataFrame:
     """Per-domain document quota (the RefinedWeb/C4 'no domain may dominate'
     rule): keep at most ``cap`` documents per registrable domain, chosen by
@@ -323,29 +229,19 @@ def domain_cap(pages: DataFrame, cap: int = 5, salts: int = 8) -> DataFrame:
 
     Skew is the whole problem here — crawl domains are Zipf (one domain can
     own half the corpus), so a single window over ``domain`` puts half of
-    100 TB in one task. Two-stage top-k instead: stage 1 ranks within
-    (domain, salt) — ``salts`` × more, evenly loaded partitions — and keeps
-    ``cap`` per salted group; stage 2 re-ranks the ≤ salts·cap survivors per
-    domain. The union of per-salt top-caps is a superset of the global
-    top-cap, so the result is EXACTLY the single-window answer (the unit
-    test pins this), while no task ever holds more than one salt's share.
+    100 TB in one task. The rank therefore runs through [[salted_topk]]:
+    the result is EXACTLY the single-window answer (the unit test pins
+    this), while no task ever holds more than one salt's share.
 
     Returns (doc_id, domain, rank), rank ≤ cap.
     """
     domain = F.regexp_extract("host", r"([^.]+\.[^.]+)$", 1)
     h = md5_long(F.concat_ws(":", "doc_id", F.lit("rank")))
-    base = pages.select(
-        "doc_id", domain.alias("domain"), h.alias("h"),
-        F.pmod(h, F.lit(salts)).alias("salt"))
-    w1 = Window.partitionBy("domain", "salt").orderBy(
-        F.col("h").asc(), F.col("doc_id").asc())
-    s1 = (base.withColumn("r1", F.row_number().over(w1))
-          .filter(F.col("r1") <= cap))
-    w2 = Window.partitionBy("domain").orderBy(
-        F.col("h").asc(), F.col("doc_id").asc())
-    return (s1.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= cap)
-            .select("doc_id", "domain", "rank"))
+    base = pages.select("doc_id", domain.alias("domain"), h.alias("h"))
+    return salted_topk(
+        base, ["domain"], [F.col("h").asc(), F.col("doc_id").asc()], cap,
+        salt_on="doc_id", salts=salts,
+    ).select("doc_id", "domain", "rank")
 
 
 #: default robots ruleset for the driver gate: longest-match semantics make
@@ -533,14 +429,15 @@ def crawl_frontier(docs: DataFrame, budget_waves: int = 3) -> DataFrame:
     The wave is a per-host rank, and crawl frontiers are Zipf-skewed — a
     hot host can own half the frontier, so a bare
     ``Window.partitionBy(host)`` would sort that half in ONE task. The
-    rank therefore runs through [[_grouped_rank]]: the plain window on
-    narrow inputs (zero extra cost at bench scale), the two-phase
-    range-partitioned rank on wide ones — bit-identical numbering either
-    way. The priority is a deterministic md5 draw standing in for a
-    PageRank/freshness score. Integer-exact, engine-portable."""
+    rank therefore runs through [[running_total]] (the row number per host),
+    which keeps the plain window on narrow inputs (zero extra cost at bench
+    scale) and takes the range-partitioned two-pass plan on wide ones —
+    the same numbering either way. The priority is a deterministic md5
+    draw standing in for a PageRank/freshness score. Integer-exact,
+    engine-portable."""
     hosts = synth_hosts(docs)
     prio = md5_long(F.concat_ws(":", "doc_id", F.lit("prio"))).alias("prio")
-    ranked = _grouped_rank(
+    ranked = running_total(
         hosts.select("doc_id", "host", prio),
         ["host"], [F.desc("prio"), F.asc("doc_id")], "__rn")
     return (
@@ -668,17 +565,16 @@ def domain_gini(docs: DataFrame) -> DataFrame:
     promotes to) rather than silently wrapping with ANSI off; same
     discipline as [[basket_lift]]. The rank itself runs over the
     |domains|-row aggregate — metadata-scale next to the corpus, but at
-    1e8 domains still too big for one sorted task, so it goes through
-    [[_grouped_rank]] (plain global window on narrow inputs, two-phase
-    range rank on wide ones; identical numbering). Returns one row
-    (n_domains, total_docs, gini_e6).
+    1e8 domains still too big for one sorted task, so it is a
+    [[running_total]] row number. Returns one row (n_domains, total_docs,
+    gini_e6).
     """
     counts = synth_hosts(docs).groupBy("host").agg(F.count("*").alias("x"))
     # wide=True: counts hangs below an aggregation, so the narrow/wide
     # partition probe would materialize the whole scan+groupBy once just
-    # to pick a plan, then re-execute it for the real query; the two-phase
-    # rank's extra exchanges run over the |domains|-row aggregate only
-    ranked = _grouped_rank(
+    # to pick a plan, then re-execute it for the real query; the two-pass
+    # plan's extra exchanges run over the |domains|-row aggregate only
+    ranked = running_total(
         counts, [], [F.col("x").asc(), F.col("host").asc()], "i", wide=True)
     return ranked.agg(
         F.count("*").cast("long").alias("n_domains"),

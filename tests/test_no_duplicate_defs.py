@@ -213,8 +213,6 @@ def test_only_get_spark_builds_a_session():
 #: data input, which a test supplies to compare against a hand-computed
 #: reference. Parameters of ALLOWED_TEST_ONLY defs are exempt: tests are
 #: those defs' only callers. Every other default is folded into the code.
-_WIDE = ("seam: 0 / 10**9 force the distributed or the single-window plan "
-         "at test sizes, which the equality test pins identical")
 _SALTS = ("seam: salts=1 is the plain one-window rank the salted two-stage "
           "rank (default 8) is checked equal to")
 _CM = ("seam: a 2x2 sketch forces count-min collisions, which the default "
@@ -229,8 +227,6 @@ ALLOWED_DEFAULT_ONLY = {
     "dedup.simhash(min_partitions)":
         "seam: 0 skips the width probe and the rescue repartition that a "
         "narrow test input otherwise always gets",
-    "packing.pack_offsets(num_partitions)":
-        "seam: 2 vs 13 range partitions pin the offsets partition-invariant",
     "sampling.stratified_sample(salts)": _SALTS,
     "sampling._kmv_sketch(salts)": _SALTS,
     "sampling.heavy_hitters_cm(d)": _CM,
@@ -238,8 +234,6 @@ ALLOWED_DEFAULT_ONLY = {
     "similarity.semantic_dedup(max_cluster_size)":
         "seam: a bound of 10 makes the mega-cluster guard raise at test "
         "sizes (default 50,000 vectors)",
-    "webgraph._doc_nodes(wide_threshold)": _WIDE,
-    "webgraph._grouped_rank(wide_threshold)": _WIDE,
     "dedup.dedup_cluster_stats(pairs)":
         "data input: planted pairs with hand-counted cluster sizes",
     "search.bm25_topk(queries)":

@@ -83,15 +83,6 @@ def test_pack_offsets_matches_python_oracle_and_is_contiguous(spark):
         pos += r["n_tokens"]
 
 
-def test_pack_offsets_partition_count_invariant(spark):
-    """start_offset must not depend on where RangePartitioner cuts."""
-    texts = [" ".join(["w"] * (1 + i % 9)) for i in range(80)]
-    docs = _docs(spark, texts)
-    a = sorted(map(tuple, pack_offsets(docs, 32, num_partitions=2).collect()))
-    b = sorted(map(tuple, pack_offsets(docs, 32, num_partitions=13).collect()))
-    assert a == b
-
-
 # --------------------------------------------------------------- pii density
 
 def test_pii_density_counts(spark):

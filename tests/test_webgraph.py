@@ -358,54 +358,6 @@ def test_domain_gini_bounds_and_reference(spark, docs):
     assert one.gini_e6 == 0  # single domain: no inequality
 
 
-def test_doc_nodes_distributed_rank_equals_global_window(spark):
-    """The wide-input two-phase rank (range repartition + local row_number
-    + offsets) must be bit-identical to the narrow-input global window for
-    the same corpus — node ids are pinned by every graph oracle."""
-    from ocr_redaction_engine_spark.analytics.webgraph import _doc_nodes
-
-    rows = [(f"doc-{i:04d}",) for i in range(257)]
-    # multi-partition, shuffled arrival order, plus duplicate ids
-    df = spark.createDataFrame(rows + rows[:40], "doc_id string").repartition(7)
-    narrow = {(r.doc_id, r.node)
-              for r in _doc_nodes(df, wide_threshold=10**9).collect()}
-    wide = {(r.doc_id, r.node)
-            for r in _doc_nodes(df, wide_threshold=0).collect()}
-    assert wide == narrow
-    assert sorted(n for _, n in wide) == list(range(257))
-
-
-def test_grouped_rank_wide_equals_window(spark):
-    """The grouped two-phase rank must be bit-identical to the plain
-    per-group window, including on a planted hot group (Zipf shape)."""
-    from pyspark.sql import functions as F
-    from ocr_redaction_engine_spark.analytics.webgraph import _grouped_rank
-
-    rows = [("hot", i) for i in range(400)] + \
-           [(f"h{i % 7}", 1000 + i) for i in range(120)]
-    df = spark.createDataFrame(rows, "host string, doc_id long").repartition(6)
-    order = [F.desc("doc_id"), F.asc("host")]
-    narrow = {tuple(r) for r in _grouped_rank(
-        df, ["host"], order, "rn", wide_threshold=10**9).collect()}
-    wide = {tuple(r) for r in _grouped_rank(
-        df, ["host"], order, "rn", wide_threshold=0).collect()}
-    assert wide == narrow
-    # global (no-group) variant too
-    gn = {tuple(r) for r in _grouped_rank(
-        df, [], [F.asc("doc_id"), F.asc("host")], "rn",
-        wide_threshold=10**9).collect()}
-    gw = {tuple(r) for r in _grouped_rank(
-        df, [], [F.asc("doc_id"), F.asc("host")], "rn",
-        wide_threshold=0).collect()}
-    assert gn == gw
-    assert sorted(r[2] for r in gw) == list(range(1, 521))
-
-    # schema stability: the wide path must not reorder columns vs the input
-    # (the join hoists its keys to the front without the trailing re-select)
-    assert _grouped_rank(df, ["host"], order, "rn",
-                         wide_threshold=0).columns == ["host", "doc_id", "rn"]
-
-
 def _synth_graph(doc_ids):
     """The deterministic synth_edges graph, independently re-derived."""
     def h8(s):
