@@ -18,7 +18,9 @@ reach any output sink.
 
 Scale shape: the probe joins only (doc_id, media_ref) pairs against a
 (media_ref, document_name) projection — Parquet column pruning keeps the
-page side narrow (no word boxes/lines ride this shuffle). The invalid set
+page side narrow (no word boxes/lines ride this shuffle), and nested
+pruning keeps the documents side to doc_id, spans.kind and spans.media_ref
+(no span text), with no re-read of the table under a narrower schema. The invalid set
 is then |invalid documents| rows — broadcast it into the anti-join that
 gates the main pipeline, so the routing adds one slim shuffle plus
 map-side anti-joins, never a second full resolve join.
@@ -48,13 +50,16 @@ def invalid_documents(documents: DataFrame, media_pages: DataFrame,
     winning when a document has both (matches the reference's check order:
     path first, extension second).
     """
-    # HOF projection BEFORE the explode so Parquet nested-schema pruning
-    # drops spans.text (the bulk of the table) from the scan — explode-then-
-    # filter defeats the pruner and reads the whole struct
+    # Parquet nested-schema pruning reaches array-of-struct field access
+    # (spans.kind, spans.media_ref) but not a lambda over the whole struct,
+    # so the filter runs over the zipped field arrays: the scan then reads
+    # spans.kind and spans.media_ref only, never spans.text (the bulk of
+    # the table)
     refs = documents.select(
         "doc_id",
         F.explode(F.expr(
-            "transform(filter(spans, s -> s.kind = 'media'), s -> s.media_ref)"
+            "filter(arrays_zip(spans.kind, spans.media_ref),"
+            " s -> s.kind = 'media').media_ref"
         )).alias("media_ref"))
     pages = media_pages.select(
         "media_ref",
@@ -96,12 +101,6 @@ def validity_route(documents: DataFrame, media_pages: DataFrame,
 
 INVALID_DDL = "doc_id string, status string, task_result string, reason string"
 
-#: Schema-pruned documents view for the probe: Spark's generator
-#: nested-column aliasing cannot prune a multi-field struct access through
-#: an explode, so an explicit pruned re-read is how the probe avoids
-#: reading spans.text.
-PROBE_DDL = "doc_id string, spans array<struct<kind:string,media_ref:string>>"
-
 #: Above this many invalid documents the collected route refuses (driver
 #: memory guard) and callers fall back to the lazy anti-join plan.
 COLLECT_CAP = 100_000
@@ -140,22 +139,18 @@ def route_with_collected(documents: DataFrame, invalid_rows) -> tuple:
 
 
 def split_valid(documents: DataFrame, media_pages: DataFrame,
-                whitelist: tuple = VALID_EXTENSIONS,
-                probe_documents: DataFrame | None = None
+                whitelist: tuple = VALID_EXTENSIONS
                 ) -> tuple[DataFrame, DataFrame]:
     """(valid documents, invalid status rows) — the one P1 route every job
     takes before any processing.
 
-    The slim (doc_id, media_ref)⋈(media_ref, ext) probe over
-    ``probe_documents`` (a :data:`PROBE_DDL` re-read of the same documents;
-    default ``documents``) runs EAGERLY here, exactly once, like the
-    reference's promotion-time check, so the sink plans carry only a
-    map-side filter — zero added cost when the corpus is clean. Past
-    COLLECT_CAP invalid documents it falls back to the lazy
-    :func:`validity_route`."""
-    inv_rows = collect_invalid(
-        documents if probe_documents is None else probe_documents,
-        media_pages, whitelist)
+    The slim (doc_id, media_ref)⋈(media_ref, ext) probe (its scan of
+    ``documents`` pruned to doc_id, spans.kind and spans.media_ref) runs
+    EAGERLY here, exactly once, like the reference's promotion-time check,
+    so the sink plans carry only a map-side filter — zero added cost when
+    the corpus is clean. Past COLLECT_CAP invalid documents it falls back
+    to the lazy :func:`validity_route`."""
+    inv_rows = collect_invalid(documents, media_pages, whitelist)
     if inv_rows is None:
         return validity_route(documents, media_pages, whitelist)
     return route_with_collected(documents, inv_rows)

@@ -34,7 +34,7 @@ from .operators.extract import extract_page_rows
 from .operators.redactions import build_redactions, build_values
 from .operators.reassemble import assemble_documents, reassemble_flat
 from .operators.tokenize import tokenize_fixture
-from .operators.validate import PROBE_DDL, VALID_EXTENSIONS, split_valid
+from .operators.validate import VALID_EXTENSIONS, split_valid
 
 
 @dataclass
@@ -108,10 +108,8 @@ def run_job(spark: SparkSession, documents_path: str, media_pages_path: str,
     documents = spark.read.parquet(documents_path)
     media_pages = spark.read.parquet(media_pages_path)
 
-    # P1 validity over the whole corpus, probed through a schema-pruned scan
-    slim_docs = spark.read.schema(PROBE_DDL).parquet(documents_path)
-    documents, invalid = split_valid(documents, media_pages,
-                                     cfg.ext_whitelist, slim_docs)
+    # P1 validity over the whole corpus (the probe's scan prunes spans.text)
+    documents, invalid = split_valid(documents, media_pages, cfg.ext_whitelist)
     inv_obs = Observation()
     ckpt.write_buckets(invalid.observe(inv_obs, F.count(F.lit(1)).alias("n")),
                        cfg.n_buckets, f"{out_dir}/invalid")

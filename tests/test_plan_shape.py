@@ -5,7 +5,8 @@
   codegen, no ArrowEvalPython/BatchEvalPython/PythonUDF anywhere;
 * media branch: exactly ONE Arrow stage (MapInPandas), ONE join, and no
   exchange after the Arrow stage (sinks are narrow);
-* scans: predicate pushdown and column pruning reach the parquet reader.
+* scans: predicate pushdown and column pruning reach the parquet reader,
+  including the validity probe's nested pruning of the documents scan.
 """
 
 from __future__ import annotations
@@ -15,6 +16,7 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
+from ocr_redaction_engine_spark.operators.validate import invalid_documents
 from ocr_redaction_engine_spark.pipeline import PipelineConfig, run_pipeline
 
 
@@ -28,6 +30,7 @@ def plans(spark, corpus_dfs, tmp_path_factory):
     docs = spark.read.parquet(f"{base}/documents")
     pages = spark.read.parquet(f"{base}/media_pages")
     outs = run_pipeline(docs, pages, PipelineConfig())
+    outs["probe"] = invalid_documents(docs, pages)
     return {k: v._jdf.queryExecution().executedPlan().toString()
             for k, v in outs.items()}
 
@@ -36,6 +39,15 @@ def test_text_branch_has_no_python(plans):
     plan = plans["spans"]
     for marker in ("ArrowEvalPython", "BatchEvalPython", "PythonUDF", "MapInPandas"):
         assert marker not in plan, f"text branch must stay JVM-side, found {marker}"
+
+
+def test_validity_probe_prunes_span_text(plans):
+    """The probe over a plain documents read scans doc_id, spans.kind and
+    spans.media_ref only: spans.text, the bulk of the table, stays on
+    disk without a schema-pruned re-read."""
+    assert ("ReadSchema: struct<doc_id:string,"
+            "spans:array<struct<kind:string,media_ref:string>>>"
+            in plans["probe"])
 
 
 def test_media_branch_single_arrow_stage(plans):
