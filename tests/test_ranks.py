@@ -110,13 +110,12 @@ _RT_CASES = {
 def test_running_total_wide_equals_narrow(spark, case):
     """Both plans of running_total equal a sequential per-group running
     sum over the total order, with the input's columns first and in input
-    order: every row survives, NULL group keys included (a group-key
-    inner join on the wide plan used to drop them)."""
+    order: every row survives, NULL group keys included (a plain equi-join
+    of the wide plan's offsets on the group keys would drop them)."""
     rows, ddl, groups, order, value, key = _RT_CASES[case]
-    df = spark.createDataFrame(rows, ddl).repartition(7)
-    if case == "row_number_distinct_ids":
-        df = df.distinct()
-        rows = sorted(set(rows))
+    # distinct(): the node-id case plants duplicate input ids
+    df = spark.createDataFrame(rows, ddl).repartition(7).distinct()
+    rows = set(rows)
     cols = df.columns
     gi = [cols.index(c) for c in groups]
     vi = None if value is None else cols.index(value)
