@@ -2581,9 +2581,9 @@ _MEDIA_CTE = f"""
 """
 
 # Shared k-means CTE chain (exact int64 fixed-point, 2 Lloyd iterations,
-# md5-order seeds — the DuckDB twin of similarity.kmeans_centroids): used by
-# both the IVF ANN oracle and the SemDeDup oracle so the quantizer SQL
-# cannot drift between them.
+# md5-order seeds — the DuckDB twin of similarity.pq_codebooks with m=1):
+# used by both the IVF ANN oracle and the SemDeDup oracle so the quantizer
+# SQL cannot drift between them.
 _KMEANS_C2 = """
             WITH dims AS (
               SELECT vec_id, unnest(CAST(embedding AS DOUBLE[])) AS x,

@@ -512,6 +512,27 @@ def bloom_bitmap(docs: DataFrame, n_hashes: int = BLOOM_K,
     )
 
 
+def _bloom_hits(fps: DataFrame, key: str, bitmap: DataFrame, n_hashes: int,
+                m_bits: int) -> DataFrame:
+    """One row with a boolean ``hit`` per Bloom position of each (key, fp)
+    row: the fingerprint's ``n_hashes`` positions split into 64-bit word
+    and bit, a broadcast left join to the ≤m/64-row bitmap, then the bit
+    test (a word the bitmap lacks has no bit set)."""
+    pos = fps.select(
+        key,
+        F.explode(F.array(*[_bloom_pos(F.col("fp"), i, m_bits)
+                            for i in range(n_hashes)])).alias("pos"))
+    return (
+        pos.withColumn("word", (F.col("pos") / 64).cast("long"))
+        .withColumn("bit", (F.col("pos") % 64).cast("int"))
+        .join(F.broadcast(bitmap), "word", "left")
+        .withColumn(
+            "hit",
+            F.coalesce(F.col("bits"), F.lit(0).cast("long"))
+            .bitwiseAND(F.expr("shiftleft(CAST(1 AS BIGINT), bit)")) != 0)
+    )
+
+
 def bloom_probe(base_docs: DataFrame, probe_docs: DataFrame) -> DataFrame:
     """Probe a new document batch against the Bloom bitmap of an existing
     corpus: (doc_id, hits, maybe_seen). ``maybe_seen`` has Bloom semantics —
@@ -522,22 +543,9 @@ def bloom_probe(base_docs: DataFrame, probe_docs: DataFrame) -> DataFrame:
     against the ≤m/64-row bitmap, then a per-doc bool_and — map-only from
     the probe side's perspective, so a 100 TB daily crawl probes at scan
     speed."""
-    bitmap = bloom_bitmap(base_docs)
     fp = with_tokens(probe_docs).select(
         "doc_id", F.md5(F.concat_ws(" ", "tokens")).alias("fp"))
-    pos = fp.select(
-        "doc_id",
-        F.explode(F.array(*[_bloom_pos(F.col("fp"), i, BLOOM_M)
-                            for i in range(BLOOM_K)])).alias("pos"))
-    probed = (
-        pos.withColumn("word", (F.col("pos") / 64).cast("long"))
-        .withColumn("bit", (F.col("pos") % 64).cast("int"))
-        .join(F.broadcast(bitmap), "word", "left")
-        .withColumn(
-            "hit",
-            F.coalesce(F.col("bits"), F.lit(0).cast("long"))
-            .bitwiseAND(F.expr("shiftleft(CAST(1 AS BIGINT), bit)")) != 0)
-    )
+    probed = _bloom_hits(fp, "doc_id", bloom_bitmap(base_docs), BLOOM_K, BLOOM_M)
     return probed.groupBy("doc_id").agg(
         F.sum(F.col("hit").cast("int")).alias("hits"),
         F.bool_and("hit").alias("maybe_seen"),
@@ -1069,20 +1077,9 @@ def bloom_fpr_calibration(docs: DataFrame, n_probes: int = 2000,
         probes = spark.range(n_probes).select(
             "id", F.md5(F.concat(F.lit("fpr-probe:"),
                                  F.col("id").cast("string"))).alias("fp"))
-        pos = probes.select(
-            "id",
-            F.explode(F.array(*[_bloom_pos(F.col("fp"), i, m_bits)
-                                for i in range(k)])).alias("pos"))
-        probed = (
-            pos.withColumn("word", (F.col("pos") / 64).cast("long"))
-            .withColumn("bit", (F.col("pos") % 64).cast("int"))
-            .join(F.broadcast(bitmap), "word", "left")
-            .withColumn(
-                "hit",
-                F.coalesce(F.col("bits"), F.lit(0).cast("long"))
-                .bitwiseAND(F.expr("shiftleft(CAST(1 AS BIGINT), bit)")) != 0))
         outs.append(
-            probed.groupBy("id").agg(F.bool_and("hit").alias("fp_hit"))
+            _bloom_hits(probes, "id", bitmap, k, m_bits)
+            .groupBy("id").agg(F.bool_and("hit").alias("fp_hit"))
             .agg(F.sum(F.col("fp_hit").cast("long")).alias("fp_hits"))
             .select(
                 F.lit(m_bits).cast("long").alias("m_bits"),

@@ -136,7 +136,7 @@ def t_closeness_audit(customers: DataFrame, sens_bucket: int = 2000,
     Scale shape: two hash-aggs over the scan (per-(QI,bucket) and
     per-bucket). The global bucket distribution is bounded by the VALUE
     DOMAIN of the sensitive attribute (m buckets, dozens at any corpus
-    size), so — like the IVF centroid matrix in similarity.kmeans_centroids
+    size), so — like the IVF centroid matrix in similarity.pq_codebooks
     — it is collected once and re-attached as a literal array: the spine
     becomes a map-side explode (|QI|×m rows), with NO cross join in the
     plan (a nested-loop join is a scale hazard the plan audit bans).

@@ -29,6 +29,23 @@ def _norm(a: str | Column) -> Column:
                               F.lit(0.0), lambda acc, v: acc + v))
 
 
+def _cosine(a: str | Column, b: str | Column) -> Column:
+    """Cosine of two vector columns rounded to 6 places: the one score
+    every exact path ranks or thresholds by."""
+    return F.round(_dot(a, b) / (_norm(a) * _norm(b)), 6)
+
+
+def _topk_by_cosine(pairs: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of (q_id, q_emb, c_id, c_emb) pairs by (sim desc,
+    c_id asc), through the two-stage salted top-k: q_id cardinality is tiny
+    and the scored candidate set scales with the corpus, so a bare q_id
+    window would sort one query's candidates in ONE task."""
+    scored = pairs.select("q_id", "c_id", _cosine("q_emb", "c_emb").alias("sim"))
+    return salted_topk(
+        scored, ["q_id"], [F.col("sim").desc(), F.col("c_id").asc()],
+        k, salt_on="c_id")
+
+
 def cosine_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10) -> DataFrame:
     """Top-k cosine neighbours among vec_id >= n_queries for each query
     vec_id < n_queries. Deterministic tie-break (sim desc, vec_id asc)."""
@@ -45,24 +62,14 @@ def cosine_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10) -> DataF
         F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb"),
         F.pmod(F.col("vec_id"), F.lit(1)).alias("__k"),
     )
-    scored = (
-        c.join(F.broadcast(q), "__k")
-        .withColumn("sim", F.round(_dot("q_emb", "c_emb") / (_norm("q_emb") * _norm("c_emb")), 6))
-        .select("q_id", "c_id", "sim")
-    )
-    # per-query rank via the two-stage salted top-k: q_id cardinality is
-    # tiny and the scored candidate set scales with the corpus, so a bare
-    # q_id window would sort one query's candidates in ONE task
-    return salted_topk(
-        scored, ["q_id"], [F.col("sim").desc(), F.col("c_id").asc()],
-        k, salt_on="c_id")
+    return _topk_by_cosine(c.join(F.broadcast(q), "__k"), k)
 
 
 def cosine_pairs(embeddings: DataFrame, threshold: float = 0.95) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (a < b, cosine >= threshold).
     Brute-force upper-triangle cross join in double precision — the
-    correctness baseline; at scale, restrict candidates with lsh_buckets and
-    join on bucket instead of the cross join."""
+    correctness baseline; at scale, :func:`cosine_pairs_bucketed` restricts
+    candidates with lsh_table_buckets and joins on bucket instead."""
     def side(prefix: str) -> DataFrame:
         return embeddings.select(
             F.col("vec_id").alias(f"{prefix}_id"),
@@ -73,13 +80,10 @@ def cosine_pairs(embeddings: DataFrame, threshold: float = 0.95) -> DataFrame:
     return (
         F.broadcast(a).crossJoin(b)
         .filter(F.col("a_id") < F.col("b_id"))
-        .withColumn("sim", F.round(_dot("a_emb", "b_emb") / (_norm("a_emb") * _norm("b_emb")), 6))
+        .withColumn("sim", _cosine("a_emb", "b_emb"))
         .filter(F.col("sim") >= threshold)
         .select(F.col("a_id").alias("a"), F.col("b_id").alias("b"), "sim")
     )
-
-
-BUCKET_SCHEMA = "vec_id long, bucket long"
 
 
 def _plane_matrix(n_planes: int, dim: int, seed: int) -> "np.ndarray":
@@ -108,31 +112,6 @@ def _fixed_point(M: "np.ndarray") -> "np.ndarray":
     import numpy as np
 
     return np.floor(M * 1_000_000.0).astype(np.int64)
-
-
-def lsh_buckets(embeddings: DataFrame, n_planes: int = 12) -> DataFrame:
-    """Random-hyperplane bucket id per vector: sign bits of integer dot
-    products between the fixed-point vector and md5-derived integer
-    hyperplanes. Deterministic AND engine-exact (see _plane_matrix)."""
-    import numpy as np
-    import pandas as pd
-
-    def run(batches):
-        H = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({"vec_id": pd.Series(dtype="int64"),
-                                    "bucket": pd.Series(dtype="int64")})
-                continue
-            M = np.array([np.asarray(e, dtype=np.float64) for e in pdf["embedding"]])
-            if H is None:
-                H = _plane_matrix(n_planes, M.shape[1], 7)
-            dots = _fixed_point(M) @ H.T            # exact int64
-            bucket = (dots > 0).dot(1 << np.arange(n_planes, dtype=np.int64))
-            yield pd.DataFrame({"vec_id": pdf["vec_id"].astype("int64"),
-                                "bucket": bucket.astype("int64")})
-
-    return embeddings.select("vec_id", "embedding").mapInPandas(run, schema=BUCKET_SCHEMA)
 
 
 TABLE_BUCKET_SCHEMA = "vec_id long, tbl int, bucket long"
@@ -202,7 +181,7 @@ def cosine_pairs_bucketed(embeddings: DataFrame, threshold: float = 0.99,
         F.transform("embedding", lambda x: x.cast("double")).alias("b_emb"))
     return (
         cand.join(ea, "a").join(eb, "b")
-        .withColumn("sim", F.round(_dot("a_emb", "b_emb") / (_norm("a_emb") * _norm("b_emb")), 6))
+        .withColumn("sim", _cosine("a_emb", "b_emb"))
         .filter(F.col("sim") >= threshold)
         .select("a", "b", "sim")
     )
@@ -214,182 +193,58 @@ def _fixed_point_col():
         "embedding", lambda x: F.floor(x.cast("double") * 1000000).cast("long"))
 
 
-def kmeans_centroids(embeddings: DataFrame, n_clusters: int = 16) -> "np.ndarray":
-    """Two deterministic Lloyd iterations for the IVF coarse quantizer, in
-    **exact int64 fixed-point** arithmetic so every engine (and every
-    partitioning) produces identical centroids.
-
-    Init: the ``n_clusters`` vectors with the smallest md5(vec_id) hex (a
-    seedless deterministic sample), cluster id = rank in that md5 order.
-    Assignment is an Arrow-batched numpy int64 distance; the recompute step
-    is a per-(cluster, dim) exact SUM/COUNT hash agg (fully distributed —
-    only the k×dim centroid matrix ever reaches the driver), with
-    truncating division (DuckDB ``//`` semantics) and empty clusters keeping
-    their previous centroid."""
+def _query_distances(embeddings: DataFrame, n_queries: int, codebooks):
+    """[(q_id, d2)] for each query vec_id < n_queries, collected to the
+    driver (Q rows, metadata-scale): d2[s, c] is the exact int64 squared
+    L2 between the query's sub-vector s and code c of subspace s."""
     import numpy as np
 
-    seed_ids = embeddings.select(
-        "vec_id", F.md5(F.col("vec_id").cast("string")).alias("h")
-    ).orderBy("h").limit(n_clusters)
-    init = (
-        embeddings.join(seed_ids, "vec_id")
-        .select("h", _fixed_point_col().alias("fx")).orderBy("h").collect()
-    )
-    centroids = np.array([r.fx for r in init], dtype=np.int64)
-
-    for _ in range(2):
-        # assignment + per-partition partial sums FUSED in one numpy Arrow
-        # stage (r4): the old plan joined the assignment back and
-        # posexplode'd N×dim (vec, dim, q) rows through a shuffle per
-        # iteration; the fused stage ships only ≤ partitions×k×(dim+1)
-        # partial rows — int64 sums are order-free, so the distributed
-        # re-combine is bit-identical to the exploded formulation
-        dims = (_assign_partial_sums(embeddings, centroids)
-                .groupBy("cluster", "dim")
-                .agg(F.sum("s").alias("s"))
-                .collect())
-        counts = {r.cluster: int(r.s) for r in dims if r.dim == -1}
-        new = centroids.copy()
-        for r in dims:
-            if r.dim < 0:
-                continue
-            s, n = int(r.s), counts[r.cluster]
-            new[r.cluster, r.dim] = (abs(s) // n) * (1 if s >= 0 else -1)
-        centroids = new
-    return centroids
-
-
-PARTIAL_SUMS_SCHEMA = "cluster int, dim int, s long"
-
-
-def _assign_partial_sums(embeddings: DataFrame, centroids) -> DataFrame:
-    """One Arrow pass: nearest-centroid assignment + per-batch int64
-    component sums. Emits (cluster, dim, s) partials plus (cluster, -1,
-    count) rows; exact under any partitioning (integer sums commute)."""
-    import numpy as np
-
-    C = np.asarray(centroids, dtype=np.int64)
-    k, d = C.shape
-
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({"cluster": pd.Series(dtype="int32"),
-                                    "dim": pd.Series(dtype="int32"),
-                                    "s": pd.Series(dtype="int64")})
-                continue
-            M = np.array([np.asarray(e, dtype=np.float64) for e in pdf["embedding"]])
-            Q = _fixed_point(M)
-            d2 = ((Q[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            a = d2.argmin(axis=1)
-            sums = np.zeros((k, d), dtype=np.int64)
-            np.add.at(sums, a, Q)
-            cnt = np.bincount(a, minlength=k).astype(np.int64)
-            present = np.flatnonzero(cnt)
-            rows = {
-                "cluster": np.concatenate(
-                    [np.repeat(present, d), present]).astype("int32"),
-                "dim": np.concatenate(
-                    [np.tile(np.arange(d), len(present)),
-                     np.full(len(present), -1)]).astype("int32"),
-                "s": np.concatenate(
-                    [sums[present].ravel(), cnt[present]]),
-            }
-            yield pd.DataFrame(rows)
-
-    return (embeddings.select("vec_id", "embedding")
-            .mapInPandas(run, schema=PARTIAL_SUMS_SCHEMA))
-
-
-ASSIGN_SCHEMA = "vec_id long, cluster int"
-
-
-def assign_clusters(embeddings: DataFrame, centroids) -> DataFrame:
-    """vec → nearest centroid (exact int64 fixed-point L2; ties break to the
-    smallest cluster id), numpy per Arrow batch."""
-    import numpy as np
-
-    C = np.asarray(centroids, dtype=np.int64)
-
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({"vec_id": pd.Series(dtype="int64"),
-                                    "cluster": pd.Series(dtype="int32")})
-                continue
-            M = np.array([np.asarray(e, dtype=np.float64) for e in pdf["embedding"]])
-            Q = _fixed_point(M)
-            d2 = ((Q[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            # np.argmin returns the FIRST minimum → smallest cluster id
-            yield pd.DataFrame({"vec_id": pdf["vec_id"].astype("int64"),
-                                "cluster": d2.argmin(axis=1).astype("int32")})
-
-    return embeddings.select("vec_id", "embedding").mapInPandas(run, schema=ASSIGN_SCHEMA)
+    C = np.asarray(codebooks, dtype=np.int64)       # (m, k, dsub)
+    m, _, dsub = C.shape
+    rows = embeddings.filter(F.col("vec_id") < n_queries) \
+        .select("vec_id", "embedding").collect()
+    return [(int(r.vec_id),
+             ((_fixed_point(np.asarray(r.embedding, dtype=np.float64))
+               .reshape(m, 1, dsub) - C) ** 2).sum(axis=2))
+            for r in rows]
 
 
 def ivf_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10) -> DataFrame:
     """IVF ANN: coarse-quantize candidates into 16 inverted lists; each
     query scores only the 4 nearest lists (exact-cosine scores within
-    them). Same output shape as cosine_topk."""
+    them). Same output shape as cosine_topk. The coarse quantizer is
+    product quantization with one subspace."""
     import numpy as np
 
-    C = kmeans_centroids(embeddings)
+    C = pq_codebooks(embeddings, m=1, n_codes=16, n_iters=2)
 
     cand = embeddings.filter(F.col("vec_id") >= n_queries)
-    cand_assign = assign_clusters(cand, C)
-    cands = cand.join(cand_assign, "vec_id").select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb"), "cluster")
+    cands = cand.join(pq_assign(cand, C), "vec_id").select(
+        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb"),
+        F.col("code").alias("cluster"))
 
-    q_rows = embeddings.filter(F.col("vec_id") < n_queries) \
-        .select("vec_id", "embedding").collect()
-    probe_rows = []
-    for r in q_rows:
-        qv = _fixed_point(np.asarray(r.embedding, dtype=np.float64)[None, :])[0]
-        d2 = ((C - qv[None, :]) ** 2).sum(axis=1)
-        order = np.argsort(d2, kind="stable")[:4]  # ties → smallest id
-        for cl in order:
-            probe_rows.append((int(r.vec_id), int(cl)))
+    # stable argsort: ties → smallest cluster id
+    probe_rows = [(q_id, int(cl))
+                  for q_id, d2 in _query_distances(embeddings, n_queries, C)
+                  for cl in np.argsort(d2[0], kind="stable")[:4]]
     probes = embeddings.sparkSession.createDataFrame(
         probe_rows, "q_id long, cluster int")
     q = embeddings.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"))
-
-    scored = (
-        F.broadcast(probes.join(q, "q_id")).join(cands, "cluster")
-        .withColumn("sim", F.round(_dot("q_emb", "c_emb") / (_norm("q_emb") * _norm("c_emb")), 6))
-        .select("q_id", "c_id", "sim")
-    )
-    # per-query rank via the two-stage salted top-k: q_id cardinality is
-    # tiny and the scored candidate set scales with the corpus, so a bare
-    # q_id window would sort one query's candidates in ONE task
-    return salted_topk(
-        scored, ["q_id"], [F.col("sim").desc(), F.col("c_id").asc()],
-        k, salt_on="c_id")
+    return _topk_by_cosine(
+        F.broadcast(probes.join(q, "q_id")).join(cands, "cluster"), k)
 
 
 def lsh_bucketed_topk(embeddings: DataFrame, n_queries: int = 5,
                       k: int = 10) -> DataFrame:
-    """ANN: score only same-bucket pairs (8-plane buckets). Same output
-    shape as cosine_topk (rank within retrieved candidates)."""
-    b = lsh_buckets(embeddings, 8)
-    e = embeddings.join(b, "vec_id")
+    """ANN: score only same-bucket pairs (one 8-plane LSH table). Same
+    output shape as cosine_topk (rank within retrieved candidates)."""
+    e = embeddings.join(lsh_table_buckets(embeddings, 1, 8), "vec_id")
     q = e.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"), "bucket")
     c = e.filter(F.col("vec_id") >= n_queries).select(
         F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb"), "bucket")
-    scored = (
-        q.join(c, "bucket")
-        .withColumn("sim", F.round(_dot("q_emb", "c_emb") / (_norm("q_emb") * _norm("c_emb")), 6))
-        .select("q_id", "c_id", "sim")
-    )
-    # per-query rank via the two-stage salted top-k: q_id cardinality is
-    # tiny and the scored candidate set scales with the corpus, so a bare
-    # q_id window would sort one query's candidates in ONE task
-    return salted_topk(
-        scored, ["q_id"], [F.col("sim").desc(), F.col("c_id").asc()],
-        k, salt_on="c_id")
+    return _topk_by_cosine(q.join(c, "bucket"), k)
 
 
 def quantize_int8(embeddings: DataFrame) -> DataFrame:
@@ -441,15 +296,15 @@ def semantic_dedup(embeddings: DataFrame, n_clusters: int | None = None,
     size) and the function RAISES rather than silently launching a quadratic
     stage — a skewed embedding space (mass at one point) must be visible,
     not a 10-hour stage. The within-cluster join itself is an equi-join on
-    cluster id, never a cross join. The k-means reuses
-    :func:`kmeans_centroids` (exact int64 fixed-point → engine-identical
+    cluster id, never a cross join. The k-means is :func:`pq_codebooks`
+    with one subspace (exact int64 fixed-point → engine-identical
     centroids, only k×dim on the driver).
 
     Returns (vec_id, cluster, keep).
     """
     if n_clusters is None:
         n_clusters = max(16, embeddings.count() // 1000)
-    C = kmeans_centroids(embeddings, n_clusters)
+    C = pq_codebooks(embeddings, m=1, n_codes=n_clusters, n_iters=2)
     # persist the (vec_id, cluster) assignment — two longs per row — so
     # the mega-cluster guard's eager action below materializes the SAME
     # blocks the dedup join then reuses; without it the guard and the
@@ -462,7 +317,8 @@ def semantic_dedup(embeddings: DataFrame, n_clusters: int | None = None,
     # assignment fits the threshold and shuffle past it. The CacheManager
     # entry (two longs per vector) lives until session end; callers
     # cycling corpora should spark.catalog.clearCache() between them.
-    assign = assign_clusters(embeddings, C).persist()
+    assign = pq_assign(embeddings, C).select(
+        "vec_id", F.col("code").alias("cluster")).persist()
     assigned = embeddings.join(assign, "vec_id")
     biggest = (assign.groupBy("cluster").count()
                .agg(F.max("count")).first()[0]) or 0
@@ -484,8 +340,7 @@ def semantic_dedup(embeddings: DataFrame, n_clusters: int | None = None,
     dup = (
         side("a").join(side("b"), "cluster")
         .filter(F.col("a") < F.col("b"))
-        .withColumn("sim", F.round(_dot("a_emb", "b_emb") /
-                                   (_norm("a_emb") * _norm("b_emb")), 6))
+        .withColumn("sim", _cosine("a_emb", "b_emb"))
         .filter(F.col("sim") >= threshold)
         .select(F.col("b").alias("vec_id")).distinct()
         .withColumn("dropped", F.lit(True))
@@ -497,11 +352,60 @@ def semantic_dedup(embeddings: DataFrame, n_clusters: int | None = None,
                 F.coalesce(~F.col("dropped"), F.lit(True)).alias("keep"))
     )
 
+
 # ---------------------------------------------------------------------------
 # Product quantization (PQ) — the memory-compression ANN scale path
 # ---------------------------------------------------------------------------
 
 PQ_CODE_SCHEMA = "vec_id long, sub int, code int"
+PARTIAL_SUMS_SCHEMA = "cell int, dim int, s long"
+
+
+def _nearest_codes(pdf, C) -> tuple:
+    """(Q, codes) for one Arrow batch: Q the (n, m, dsub) int64 fixed-point
+    sub-vectors, codes the (n, m) nearest code per subspace by exact int64
+    squared L2 — ``argmin`` takes the FIRST minimum, so ties break to the
+    smallest code."""
+    import numpy as np
+
+    m, _, dsub = C.shape
+    M = np.array([np.asarray(e, dtype=np.float64) for e in pdf["embedding"]])
+    Q = _fixed_point(M).reshape(len(pdf), m, dsub)
+    return Q, ((Q[:, :, None, :] - C[None]) ** 2).sum(axis=3).argmin(axis=2)
+
+
+def _assign_partial_sums(embeddings: DataFrame, codebooks) -> DataFrame:
+    """One Lloyd step's data pass, fused in one Arrow stage: nearest-code
+    assignment per subspace plus per-batch int64 component sums. Emits
+    (cell, dim, s) partials and (cell, -1, count) rows, cell = sub·k + code
+    — at most partitions×m·k×(dsub+1) rows, never N×dim; integer sums
+    commute, so the distributed re-combine is exact under any
+    partitioning."""
+    import numpy as np
+
+    C = np.asarray(codebooks, dtype=np.int64)       # (m, k, dsub)
+    m, k, dsub = C.shape
+
+    def run(batches):
+        import pandas as pd
+        for pdf in batches:
+            Q, codes = _nearest_codes(pdf, C)
+            cell = (codes + np.arange(m) * k).ravel()
+            sums = np.zeros((m * k, dsub), dtype=np.int64)
+            np.add.at(sums, cell, Q.reshape(-1, dsub))
+            cnt = np.bincount(cell, minlength=m * k).astype(np.int64)
+            present = np.flatnonzero(cnt)
+            yield pd.DataFrame({
+                "cell": np.concatenate(
+                    [np.repeat(present, dsub), present]).astype("int32"),
+                "dim": np.concatenate(
+                    [np.tile(np.arange(dsub), len(present)),
+                     np.full(len(present), -1)]).astype("int32"),
+                "s": np.concatenate([sums[present].ravel(), cnt[present]]),
+            })
+
+    return (embeddings.select("vec_id", "embedding")
+            .mapInPandas(run, schema=PARTIAL_SUMS_SCHEMA))
 
 
 def pq_codebooks(embeddings: DataFrame, m: int = 4, n_codes: int = 16,
@@ -509,10 +413,17 @@ def pq_codebooks(embeddings: DataFrame, m: int = 4, n_codes: int = 16,
     """Per-subspace k-means codebooks (Jegou et al. 2011, "Product
     Quantization for Nearest Neighbor Search"): dimension D is split into
     ``m`` contiguous subspaces; each gets its own ``n_codes``-centroid
-    quantizer. Same exact int64 fixed-point arithmetic as
-    :func:`kmeans_centroids` (engine- and partitioning-identical), same
-    md5-order seeds (shared across subspaces), truncating-division
-    recompute. Only the (m, n_codes, D/m) codebook reaches the driver.
+    quantizer. With ``m=1`` this is plain k-means — the IVF coarse
+    quantizer and SemDeDup's clusters.
+
+    Exact int64 fixed-point Lloyd iterations, so every engine (and every
+    partitioning) produces identical codebooks. Init: the ``n_codes``
+    vectors with the smallest md5(vec_id) hex (a seedless deterministic
+    sample, shared across subspaces), code = rank in that md5 order. Each
+    iteration is one :func:`_assign_partial_sums` pass plus a per-(cell,
+    dim) exact SUM hash agg; the recompute divides with truncation (DuckDB
+    ``//`` semantics) and an empty code keeps its previous centroid. Only
+    the (m, n_codes, D/m) codebook reaches the driver.
     """
     import numpy as np
 
@@ -523,27 +434,22 @@ def pq_codebooks(embeddings: DataFrame, m: int = 4, n_codes: int = 16,
         embeddings.join(seed_ids, "vec_id")
         .select("h", _fixed_point_col().alias("fx")).orderBy("h").collect()
     )
-    dim = len(init[0].fx)
-    dsub = dim // m
+    dsub = len(init[0].fx) // m
     C = np.array([r.fx for r in init], dtype=np.int64).reshape(
-        n_codes, m, dsub).transpose(1, 0, 2).copy()   # (m, n_codes, dsub)
+        len(init), m, dsub).transpose(1, 0, 2).copy()   # (m, n_codes, dsub)
 
-    fx = embeddings.select(
-        "vec_id", F.posexplode(_fixed_point_col()).alias("d", "q")
-    ).withColumn("sub", (F.col("d") / dsub).cast("int"))
     for _ in range(n_iters):
-        assigned = pq_assign(embeddings, C)
-        rows = (
-            fx.join(assigned, ["vec_id", "sub"])
-            .groupBy("sub", "code", "d")
-            .agg(F.sum("q").alias("s"), F.count("*").alias("n"))
-            .collect()
-        )
-        new = C.copy()
+        rows = (_assign_partial_sums(embeddings, C)
+                .groupBy("cell", "dim")
+                .agg(F.sum("s").alias("s"))
+                .collect())
+        counts = {r.cell: int(r.s) for r in rows if r.dim < 0}
+        C = C.copy()
+        cells = C.reshape(-1, dsub)                 # view: row sub·k + code
         for r in rows:
-            s, n = int(r.s), int(r.n)
-            new[r.sub, r.code, r.d % dsub] = (abs(s) // n) * (1 if s >= 0 else -1)
-        C = new
+            if r.dim >= 0:
+                s, n = int(r.s), counts[r.cell]
+                cells[r.cell, r.dim] = (abs(s) // n) * (1 if s >= 0 else -1)
     return C
 
 
@@ -553,24 +459,15 @@ def pq_assign(embeddings: DataFrame, codebooks) -> DataFrame:
     import numpy as np
 
     C = np.asarray(codebooks, dtype=np.int64)       # (m, k, dsub)
-    m, _, dsub = C.shape
+    m = C.shape[0]
 
     def run(batches):
         import pandas as pd
         for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({"vec_id": pd.Series(dtype="int64"),
-                                    "sub": pd.Series(dtype="int32"),
-                                    "code": pd.Series(dtype="int32")})
-                continue
-            M = np.array([np.asarray(e, dtype=np.float64) for e in pdf["embedding"]])
-            Q = _fixed_point(M).reshape(len(M), m, dsub)
-            # (n, m, k): exact integer squared distances per subspace
-            d2 = ((Q[:, :, None, :] - C[None, :, :, :]) ** 2).sum(axis=3)
-            codes = d2.argmin(axis=2)               # first min → smallest code
+            _, codes = _nearest_codes(pdf, C)
             yield pd.DataFrame({
                 "vec_id": np.repeat(pdf["vec_id"].to_numpy(dtype="int64"), m),
-                "sub": np.tile(np.arange(m, dtype=np.int32), len(M)),
+                "sub": np.tile(np.arange(m, dtype=np.int32), len(pdf)),
                 "code": codes.reshape(-1).astype(np.int32),
             })
 
@@ -594,18 +491,9 @@ def pq_adc_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
     import numpy as np
 
     C = pq_codebooks(embeddings, m=m, n_codes=n_codes, n_iters=n_iters)
-    dsub = C.shape[2]
-
-    q_rows = embeddings.filter(F.col("vec_id") < n_queries) \
-        .select("vec_id", "embedding").collect()
-    table_rows = []
-    for r in q_rows:
-        qv = _fixed_point(np.asarray(r.embedding, dtype=np.float64)[None, :])[0]
-        qs = qv.reshape(m, dsub)
-        d2 = ((qs[:, None, :] - C) ** 2).sum(axis=2)    # (m, n_codes) int64
-        for s in range(m):
-            for c in range(n_codes):
-                table_rows.append((int(r.vec_id), s, c, int(d2[s, c])))
+    table_rows = [(q_id, s, c, int(v))
+                  for q_id, d2 in _query_distances(embeddings, n_queries, C)
+                  for (s, c), v in np.ndenumerate(d2)]
     table = embeddings.sparkSession.createDataFrame(
         table_rows, "q_id long, sub int, code int, pdist long")
 
@@ -804,7 +692,7 @@ def top_component(embeddings: DataFrame, n_iters: int = 2) -> DataFrame:
     recommend removing it before cosine retrieval): v ← Σ_x x·(xᵀv),
     renormalized to a fixed ±2^19 integer range after each round.
 
-    Determinism contract (the [[ann_ivf_topk]]/[[kmeans_centroids]]
+    Determinism contract (the [[ann_ivf_topk]]/[[ann_pq_adc]]
     discipline): vectors quantize to ×1e6 int64; v₀ is the md5-derived
     integer hyperplane (seed 'pca', the _plane_matrix construction);
     per-row dots are int64 (≤3.2e13 at dim 64); per-dim sums fold in
@@ -812,7 +700,7 @@ def top_component(embeddings: DataFrame, n_iters: int = 2) -> DataFrame:
     by the max |y| (SQL integer-division semantics, not Python floor) —
     every step reproducible bit-for-bit in SQL (oracle unrolls the
     iterations like the k-means CTE chain). The 64-row y vector is
-    collected per round (metadata-scale, the kmeans precedent); each
+    collected per round (metadata-scale, the pq_codebooks precedent); each
     round is ONE posexplode hash-agg over the corpus.
 
     Output: (dim, loading) — v after ``n_iters`` rounds, integer in
@@ -856,9 +744,9 @@ def whitened_topk(embeddings: DataFrame, n_queries: int = 5,
     embedding spaces: x' = x·(v·v) − v·(x·v), the scale-free integer form
     of projecting out [[embed_top_component]]'s v (cosine is invariant to
     the (v·v) scaling, so no division enters the integer path; v is
-    pre-shrunk ÷1024 to keep every product inside int64). Query/candidate
-    protocol and tie-breaks identical to [[ann_cosine_topk]], so the two
-    result tables diff directly — the before/after evidence for whether
+    pre-shrunk ÷1024 to keep every product inside int64). The corrected
+    vectors then run :func:`cosine_topk` itself, so the two result tables
+    diff directly — the before/after evidence for whether
     whitening helps on this corpus.
     """
     v_rows = top_component(embeddings, n_iters=2).collect()
@@ -875,18 +763,5 @@ def whitened_topk(embeddings: DataFrame, n_queries: int = 5,
         "vec_id",
         F.zip_with("fx", lit_v,
                    lambda a, b: (a * F.lit(vv) - b * F.col("xv"))
-                   .cast("double")).alias("emb"))
-    q = corrected.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), F.col("emb").alias("q_emb"),
-        F.pmod(F.col("vec_id"), F.lit(1)).alias("__k"))
-    c = corrected.filter(F.col("vec_id") >= n_queries).select(
-        F.col("vec_id").alias("c_id"), F.col("emb").alias("c_emb"),
-        F.pmod(F.col("vec_id"), F.lit(1)).alias("__k"))
-    scored = (
-        c.join(F.broadcast(q), "__k")
-        .withColumn("sim", F.round(
-            _dot("q_emb", "c_emb") / (_norm("q_emb") * _norm("c_emb")), 6))
-        .select("q_id", "c_id", "sim"))
-    return salted_topk(
-        scored, ["q_id"], [F.col("sim").desc(), F.col("c_id").asc()],
-        k, salt_on="c_id")
+                   .cast("double")).alias("embedding"))
+    return cosine_topk(corrected, n_queries, k)

@@ -19,7 +19,7 @@ the extractor and the iteration code is unchanged.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .ranks import running_total, salted_topk
@@ -78,57 +78,80 @@ def _doc_nodes(docs: DataFrame) -> DataFrame:
     return ranked.select("doc_id", (F.col("node") - 1).alias("node"))
 
 
+def _outdeg() -> Column:
+    """Out-degree of node ``doc_id``: 2 + md5(doc_id:deg) % 3."""
+    return (F.conv(F.substring(F.md5(F.concat_ws(":", "doc_id", F.lit("deg"))), 1, 8), 16, 10)
+            .cast("long") % 3 + 2)
+
+
+def _edge_dst(k: Column, n_nodes: int) -> Column:
+    """Destination of edge ``k`` of node ``doc_id``: md5(doc_id:k) % N."""
+    return (F.conv(F.substring(F.md5(F.concat_ws(":", "doc_id", k.cast("string"))), 1, 8), 16, 10)
+            .cast("long") % n_nodes)
+
+
 def synth_edges(docs: DataFrame, n_nodes: int) -> DataFrame:
     """Deterministic outlinks: node i gets 2 + (md5 % 3) edges, edge k
     pointing at md5(doc_id:k) % N. Pure column expressions — the same rows
     in any engine."""
     nodes = _doc_nodes(docs)
-    deg = (F.conv(F.substring(F.md5(F.concat_ws(":", "doc_id", F.lit("deg"))), 1, 8), 16, 10)
-           .cast("long") % 3 + 2).alias("outdeg")
-    with_deg = nodes.select("doc_id", "node", deg)
+    with_deg = nodes.select("doc_id", "node", _outdeg().alias("outdeg"))
     ks = with_deg.select(
         "node", "outdeg",
         F.explode(F.sequence(F.lit(0), F.col("outdeg") - 1)).alias("k"),
         "doc_id",
     )
-    dst = (F.conv(F.substring(F.md5(F.concat_ws(":", "doc_id", F.col("k").cast("string"))), 1, 8), 16, 10)
-           .cast("long") % n_nodes).alias("dst")
-    return ks.select(F.col("node").alias("src"), "outdeg", dst)
+    return ks.select(F.col("node").alias("src"), "outdeg",
+                     _edge_dst(F.col("k"), n_nodes).alias("dst"))
 
 
-def pagerank(docs: DataFrame, iters: int = 3) -> DataFrame:
-    """PageRank over the synthetic outlink graph, ``iters`` unrolled
-    join+agg rounds in integer micro-rank units:
+def _rank_flow(docs: DataFrame, iters: int, seed: Column | None) -> DataFrame:
+    """The integer rank-flow loop PageRank and TrustRank share, ``iters``
+    unrolled join+agg rounds in micro-rank units over the synthetic
+    outlink graph. The teleport mass goes to the seed nodes (``seed`` true;
+    None makes every node a seed, which is PageRank), n_s of them:
 
+        rank₀(node)  = seed ? SCALE/n_s : 0
         contrib(e)   = rank(src) DIV outdeg(src)
-        rank'(node)  = (100-d)%·SCALE/N  +  d%·Σ contrib  (integer DIV 100)
+        rank'(node)  = (seed ? (100-d)%·SCALE/n_s : 0)  +  d%·Σ contrib
+                       (integer DIV 100)
 
     Integer sums are order-independent, so the distributed aggregation is
     bit-identical to the sequential oracle. One shuffle per iteration (agg on
-    dst) plus the rank-join — the canonical scalable shape."""
+    dst) plus the rank-join — the canonical scalable shape. Returns
+    (node, doc_id, is_seed, rank)."""
     n_nodes = docs.select("doc_id").distinct().count()  # metadata-scale scalar
-    nodes = _doc_nodes(docs)
-    edges = synth_edges(docs, n_nodes).persist()
-    base = SCALE * (100 - DAMPING_PCT) // 100 // n_nodes
+    nodes = _doc_nodes(docs).withColumn(
+        "is_seed", F.lit(True) if seed is None else seed)
+    n_seeds = max(n_nodes if seed is None else nodes.where("is_seed").count(), 1)
+    edges = synth_edges(docs, n_nodes)
+    base = SCALE * (100 - DAMPING_PCT) // 100 // n_seeds
 
-    ranks = nodes.select("node", F.lit(SCALE // n_nodes).cast("long").alias("rank"))
+    ranks = nodes.select(
+        "node",
+        F.when(F.col("is_seed"), F.lit(SCALE // n_seeds))
+         .otherwise(F.lit(0)).cast("long").alias("rank"))
     for _ in range(iters):
         contribs = (
             edges.join(ranks, edges.src == ranks.node)
             .select("dst", F.expr("rank div outdeg").alias("contrib"))
-            .groupBy("dst").agg(F.sum("contrib").alias("inflow"))
-        )
+            .groupBy("dst").agg(F.sum("contrib").alias("inflow")))
         ranks = (
             nodes.join(contribs, nodes.node == contribs.dst, "left")
             .select(
                 "node",
-                F.expr(f"CAST({base} + (coalesce(inflow, 0) * {DAMPING_PCT}) div 100 AS BIGINT)")
-                .alias("rank"),
-            )
-        )
-    out = nodes.join(ranks, "node").select("doc_id", F.col("rank").alias("rank_micro"))
-    edges.unpersist()
-    return out
+                F.expr(
+                    f"CAST((CASE WHEN is_seed THEN {base} ELSE 0 END)"
+                    f" + (coalesce(inflow, 0) * {DAMPING_PCT}) div 100"
+                    " AS BIGINT)").alias("rank")))
+    return nodes.join(ranks, "node")
+
+
+def pagerank(docs: DataFrame, iters: int = 3) -> DataFrame:
+    """PageRank over the synthetic outlink graph: :func:`_rank_flow` with
+    every node a seed, i.e. the uniform (100-d)%·SCALE/N teleport."""
+    return _rank_flow(docs, iters, None).select(
+        "doc_id", F.col("rank").alias("rank_micro"))
 
 
 # ---------------------------------------------------------------------------
@@ -516,8 +539,10 @@ def random_walks(docs: DataFrame, walk_len: int = 3,
     identical walks (the determinism a resumable 10^12-edge job needs).
 
     Each step is ONE equi-join back to the node table (cur → doc_id) to
-    derive out-degree and the chosen edge's destination from expressions —
-    state per walk is a single long plus the path string, there is no
+    derive out-degree and the chosen edge's destination from synth_edges'
+    own expressions (``_outdeg``, ``_edge_dst``), so a walk only follows
+    edges of the edge graph. State per walk is a single long plus the path
+    string, there is no
     neighbor-list explosion: ``walk_len`` joins total, all on the node key.
     Returns (node, walk, path) with path = '>'-joined node ids.
     """
@@ -530,14 +555,10 @@ def random_walks(docs: DataFrame, walk_len: int = 3,
         F.col("node").cast("string").alias("path"),
     )
     for step in range(walk_len):
-        deg = (F.conv(F.substring(F.md5(F.concat_ws(":", "doc_id", F.lit("deg"))), 1, 8),
-                      16, 10).cast("long") % 3 + 2)
         pick = (F.conv(F.substring(F.md5(F.concat_ws(
             ":", F.col("node").cast("string"), F.col("walk").cast("string"),
-            F.lit(f"s{step}"))), 1, 8), 16, 10).cast("long") % deg)
-        nxt = (F.conv(F.substring(F.md5(F.concat_ws(
-            ":", "doc_id", pick.cast("string"))), 1, 8), 16, 10)
-            .cast("long") % n_nodes)
+            F.lit(f"s{step}"))), 1, 8), 16, 10).cast("long") % _outdeg())
+        nxt = _edge_dst(pick, n_nodes)
         state = (
             state.join(nodes.select(F.col("node").alias("cur"), "doc_id"), "cur")
             .select(
@@ -798,41 +819,15 @@ def trustrank(docs: DataFrame, iters: int = 3, seed_mod: int = 10) -> DataFrame:
 
     Seeds are the md5-gated doc sample ``md5(doc_id:trust) % seed_mod ==
     0`` (deterministic; a real deployment injects its curated list).
-    Same integer micro-rank arithmetic and the same one-shuffle-per-
-    iteration join+agg loop as pagerank — sums are order-independent, so
-    the distributed fold is bit-identical to the sequential oracle.
+    The same :func:`_rank_flow` loop as pagerank — sums are
+    order-independent, so the distributed fold is bit-identical to the
+    sequential oracle.
     """
-    n_nodes = docs.select("doc_id").distinct().count()
-    nodes = _doc_nodes(docs)
     seed_flag = (F.conv(F.substring(F.md5(F.concat(
         F.col("doc_id").cast("string"), F.lit(":trust"))), 1, 8), 16, 10)
         .cast("long") % seed_mod == 0)
-    nodes = nodes.withColumn("is_seed", seed_flag)
-    n_seeds = nodes.where("is_seed").count()  # metadata-scale scalar
-    edges = synth_edges(docs, n_nodes).persist()
-    base = SCALE * (100 - DAMPING_PCT) // 100 // max(n_seeds, 1)
-
-    ranks = nodes.select(
-        "node",
-        F.when(F.col("is_seed"), F.lit(SCALE // max(n_seeds, 1)))
-         .otherwise(F.lit(0)).cast("long").alias("rank"))
-    for _ in range(iters):
-        contribs = (
-            edges.join(ranks, edges.src == ranks.node)
-            .select("dst", F.expr("rank div outdeg").alias("contrib"))
-            .groupBy("dst").agg(F.sum("contrib").alias("inflow")))
-        ranks = (
-            nodes.join(contribs, nodes.node == contribs.dst, "left")
-            .select(
-                "node",
-                F.expr(
-                    f"CAST((CASE WHEN is_seed THEN {base} ELSE 0 END)"
-                    f" + (coalesce(inflow, 0) * {DAMPING_PCT}) div 100"
-                    " AS BIGINT)").alias("rank")))
-    out = (nodes.join(ranks, "node")
-           .select("doc_id", F.col("rank").alias("trust_micro"), "is_seed"))
-    edges.unpersist()
-    return out
+    return _rank_flow(docs, iters, seed_flag).select(
+        "doc_id", F.col("rank").alias("trust_micro"), "is_seed")
 
 
 def synth_redirects(docs: DataFrame, redirect_mod: int = 5) -> DataFrame:

@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 
 from ocr_redaction_engine_spark.analytics.similarity import (
-    cosine_topk, ivf_topk, kmeans_centroids)
+    cosine_topk, ivf_topk, pq_assign, pq_codebooks)
 
 
 @pytest.fixture(scope="module")
@@ -14,10 +14,69 @@ def embeddings(spark):
 
 
 def test_centroids_deterministic(spark, embeddings):
-    c1 = kmeans_centroids(embeddings, n_clusters=8)
-    c2 = kmeans_centroids(embeddings, n_clusters=8)
-    assert (c1 == c2).all()
+    # k-means is product quantization with one subspace
+    c1 = pq_codebooks(embeddings, m=1, n_codes=8, n_iters=2)[0]
+    c2 = pq_codebooks(embeddings, m=1, n_codes=8, n_iters=2)[0]
+    assert (c1 == c2).all() and c1.shape == (8, 64)
     assert c1.dtype.kind == "i"  # exact int64 fixed-point — engine-portable
+
+
+def _sequential_lloyd(vecs, m, k, n_iters):
+    """Lloyd iterations written the way the DuckDB oracle writes them, one
+    vector at a time: md5(vec_id)-order seeds, floor(x·1e6) fixed point,
+    first-minimum assignment, truncating division, and an empty code keeps
+    its centroid. Returns (codebooks, whether some code was ever empty)."""
+    import hashlib
+
+    import numpy as np
+
+    seeds = sorted(vecs, key=lambda i: hashlib.md5(str(i).encode()).hexdigest())[:k]
+    fx = {i: [int(np.floor(float(x) * 1000000.0)) for x in v]
+          for i, v in vecs.items()}
+    dsub = len(fx[seeds[0]]) // m
+    C = [[fx[i][s * dsub:(s + 1) * dsub] for i in seeds] for s in range(m)]
+    empty = False
+    for _ in range(n_iters):
+        for s in range(m):
+            members = [[] for _ in range(k)]
+            for v in fx.values():
+                sub = v[s * dsub:(s + 1) * dsub]
+                dist = [sum((a - b) ** 2 for a, b in zip(sub, c)) for c in C[s]]
+                members[dist.index(min(dist))].append(sub)
+            for c, mem in enumerate(members):
+                if not mem:
+                    empty = True
+                    continue
+                for d in range(dsub):
+                    tot = sum(row[d] for row in mem)
+                    C[s][c][d] = (abs(tot) // len(mem)) * (1 if tot >= 0 else -1)
+    return np.array(C, dtype=np.int64), empty
+
+
+@pytest.mark.parametrize("m,n_iters", [(1, 2), (4, 1), (4, 2)])
+def test_pq_codebooks_match_sequential_lloyd(spark, m, n_iters):
+    """The one trainer equals an independent sequential Lloyd. The seed of
+    md5 rank 1 is a planted duplicate of the seed of rank 0, so code 1 wins
+    no vector in the first round (first-minimum ties go to code 0) and must
+    keep its centroid, in every subspace."""
+    import hashlib
+
+    import numpy as np
+
+    rng = np.random.RandomState(11)
+    vecs = {i: [float(x) for x in rng.randn(8).astype(np.float32)]
+            for i in range(40)}
+    order = sorted(vecs, key=lambda i: hashlib.md5(str(i).encode()).hexdigest())
+    vecs[order[1]] = list(vecs[order[0]])
+    vecs[order[7]] = list(vecs[order[0]])
+    emb = spark.createDataFrame(sorted(vecs.items()),
+                                "vec_id long, embedding array<float>")
+
+    expect, empty = _sequential_lloyd(vecs, m, 4, n_iters)
+    assert empty
+    got = pq_codebooks(emb, m=m, n_codes=4, n_iters=n_iters)
+    assert got.shape == (m, 4, 8 // m)
+    assert np.array_equal(got, expect)
 
 
 def test_ivf_recall_vs_bruteforce(spark, embeddings):
@@ -54,16 +113,15 @@ def test_semantic_dedup_matches_within_cluster_bruteforce(spark, embeddings):
     """Differential: drop set == {b : exists a<b, same cluster, cos>=tau}
     computed independently via assignments + the brute-force pair scorer."""
     from ocr_redaction_engine_spark.analytics.similarity import (
-        assign_clusters, cosine_pairs, semantic_dedup)
+        cosine_pairs, semantic_dedup)
 
     tau = 0.5  # random 64-dim vectors: near-1 cosines don't occur, pick low
     got = {r.vec_id: (r.cluster, r.keep)
            for r in semantic_dedup(embeddings, n_clusters=8, threshold=tau).collect()}
     assert len(got) == embeddings.count()          # every vector gets a verdict
 
-    C = kmeans_centroids(embeddings, n_clusters=8)
-    cl = {r.vec_id: r.cluster
-          for r in assign_clusters(embeddings, C).collect()}
+    C = pq_codebooks(embeddings, m=1, n_codes=8, n_iters=2)
+    cl = {r.vec_id: r.code for r in pq_assign(embeddings, C).collect()}
     pairs = cosine_pairs(embeddings, threshold=tau).collect()
     expect_drop = {r.b for r in pairs if cl[r.a] == cl[r.b]}
 
@@ -110,7 +168,6 @@ def test_semantic_dedup_megacluster_guard_and_auto_k(spark):
 
 
 def test_pq_codebooks_deterministic_and_shaped(spark, embeddings):
-    from ocr_redaction_engine_spark.analytics.similarity import pq_codebooks
     c1 = pq_codebooks(embeddings, m=4, n_codes=8, n_iters=1)
     c2 = pq_codebooks(embeddings, m=4, n_codes=8, n_iters=1)
     assert (c1 == c2).all() and c1.shape == (4, 8, 16)
@@ -123,7 +180,7 @@ def test_pq_adc_matches_codewise_reference(spark, embeddings):
     recomputed independently from the codes."""
     import numpy as np
     from ocr_redaction_engine_spark.analytics.similarity import (
-        _fixed_point, pq_adc_topk, pq_assign, pq_codebooks)
+        _fixed_point, pq_adc_topk)
 
     C = pq_codebooks(embeddings, m=4, n_codes=8, n_iters=1)
     codes = {}
