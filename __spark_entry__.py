@@ -1761,7 +1761,7 @@ def dedup_banding_eval(spark, sf_dir):
     candidates are the real banding run restricted to the sample)."""
     from ocr_redaction_engine_spark.analytics.dedup import banding_eval
     return banding_eval(_t(spark, sf_dir, "documents"),
-                        threshold=0.8, n_bands=4, sample_mod=8)
+                        threshold=0.8, sample_mod=8)
 
 
 def pack_fill_stats(spark, sf_dir):

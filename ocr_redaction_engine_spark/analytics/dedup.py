@@ -5,11 +5,14 @@ Scale notes (the 100 TB design point):
 
 * exact — one hash-agg on the md5 fingerprint; map-side partial agg makes
   the shuffle tiny.
-* minhash bands — signatures are per-doc aggregates (hash-agg, no pairwise
-  work); candidate generation is B equi-joins on (band signature), i.e. the
-  LSH trick replaces the O(N²) pair space with join-key collisions. AQE
-  splits hot buckets (boilerplate-heavy signatures are the classic skew key).
-* jaccard verify — only candidate pairs pay the set-intersection join.
+* MinHash LSH — one pipeline, written once and shared by every banding
+  consumer (pairs, decontamination, incremental dedup, calibration):
+  ``_signatures`` is a per-doc hash-agg (band signatures and set size, no
+  pairwise work); ``_band_pairs`` generates candidates by ONE equi-join on
+  (band, sig), i.e. the LSH trick replaces the O(N²) pair space with
+  join-key collisions, and AQE splits hot buckets (boilerplate-heavy
+  signatures are the classic skew key); ``_verified`` makes only the
+  candidate pairs pay the exact set-intersection join.
 * simhash — Arrow-batched (numpy) hashing; the 64-bit signature then joins
   on (band of bits) the same way.
 
@@ -46,7 +49,8 @@ def exact_dupes(docs: DataFrame) -> DataFrame:
 
 def doc_tokens_distinct(docs: DataFrame,
                         shingle_n: int | None = None) -> DataFrame:
-    """The per-doc set the MinHash family hashes and verifies over.
+    """(doc_id, token): the per-doc unit set the MinHash family hashes and
+    verifies over.
 
     ``shingle_n=None`` (default) = distinct unigram tokens — the
     oracle-pinned demo configuration. Production corpora set ``shingle_n``
@@ -54,100 +58,100 @@ def doc_tokens_distinct(docs: DataFrame,
     enough individual WORDS that unigram band signatures collide for nearly
     every cross pair (measured at sf0.1: 94 % of the cross product
     banded as candidates; 3-gram shingles cut that 280x — see
-    [[incremental_dedup]], which defaults to shingles). Shingle values are
-    the shared 60-bit fingerprints rendered as decimal strings so the band
-    hash below stays one md5 of a short string either way."""
-    if shingle_n:
-        return (
-            with_tokens(docs)
-            .select("doc_id",
-                    F.explode(F.array_distinct(gram_fp64_expr(shingle_n)))
-                    .alias("gram"))
-            .select("doc_id", F.col("gram").cast("string").alias("token"))
-        )
+    [[incremental_dedup]], which defaults to shingles). Shingle units are
+    the shared 60-bit fingerprint longs; [[_signatures]] hashes either
+    kind through its decimal string form."""
+    units = gram_fp64_expr(shingle_n) if shingle_n else F.col("tokens")
+    return with_tokens(docs).select(
+        "doc_id", F.explode(F.array_distinct(units)).alias("token"))
+
+
+def _signatures(units: DataFrame) -> DataFrame:
+    """(doc_id, sig_0..sig_{N_BANDS-1}, n) of a (doc_id, token) unit set in
+    ONE hash-agg: per band, the min over the doc's units of md5(band ||
+    ':' || unit), the unit rendered as a string; ``n`` is the set size the
+    Jaccard denominators read, so no consumer runs a second size agg.
+    The md5 expression is the determinism contract mirrored by the DuckDB
+    oracles — this is its only copy."""
+    return units.groupBy("doc_id").agg(
+        *[F.min(F.md5(F.concat(F.lit(f"{b}:"), F.col("token").cast("string"))))
+          .alias(f"sig_{b}") for b in range(N_BANDS)],
+        F.count("*").alias("n"))
+
+
+def _band_pairs(sigs_a: DataFrame, sigs_b: DataFrame | None = None) -> DataFrame:
+    """Distinct LSH candidate pairs (a, b): doc_ids whose signatures agree
+    in any band. The band dimension melts to (doc, band, sig) rows, so
+    candidates are ONE equi-join on (band, sig) whatever the band count —
+    a single shuffle, hot buckets split under AQE.
+
+    Without ``sigs_b`` it is a self-join of ``sigs_a`` keeping a < b. With
+    ``sigs_b``, ``a`` comes from ``sigs_a`` and ``b`` from ``sigs_b``,
+    which broadcasts (the small side: an eval set or a crawl batch), so no
+    within-side pair can appear."""
+    def melt(sigs: DataFrame, side: str) -> DataFrame:
+        return sigs.select(
+            F.col("doc_id").alias(side),
+            F.posexplode(F.array(*[F.col(f"sig_{b}") for b in range(N_BANDS)]))
+            .alias("band", "sig"))
+
+    left = melt(sigs_a, "a")
+    if sigs_b is None:
+        pairs = (left.join(melt(sigs_a, "b"), ["band", "sig"])
+                 .filter(F.col("a") < F.col("b")))
+    else:
+        pairs = left.join(F.broadcast(melt(sigs_b, "b")), ["band", "sig"])
+    return pairs.select("a", "b").distinct()
+
+
+def _jaccard() -> F.Column:
+    """Set Jaccard of the ``inter``, ``na`` and ``nb`` counts, rounded to 6
+    dp first — the cross-engine rule every oracle mirrors."""
+    return F.round(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6)
+
+
+def _verified(pairs: DataFrame, units_a: DataFrame, units_b: DataFrame,
+              sigs_a: DataFrame, sigs_b: DataFrame) -> DataFrame:
+    """Exact set Jaccard of candidate ``pairs``: (a, b, inter, na, nb,
+    jaccard), ``a`` over (``units_a``, ``sigs_a``) and ``b`` over
+    (``units_b``, ``sigs_b``). Only candidates pay the set-intersection
+    join; the set sizes are the signature tables' ``n``. A band collision
+    implies a shared unit, so every candidate yields a row."""
+    inter = (
+        pairs.join(units_a.withColumnRenamed("doc_id", "a"), "a")
+        .join(units_b.withColumnRenamed("doc_id", "b"), ["b", "token"])
+        .groupBy("a", "b").agg(F.count("*").alias("inter"))
+    )
+    na = sigs_a.select(F.col("doc_id").alias("a"), F.col("n").alias("na"))
+    nb = sigs_b.select(F.col("doc_id").alias("b"), F.col("n").alias("nb"))
     return (
-        with_tokens(docs)
-        .select("doc_id", F.explode(F.array_distinct("tokens")).alias("token"))
+        inter.join(na, "a").join(nb, "b")
+        .select("a", "b", "inter", "na", "nb", _jaccard().alias("jaccard"))
     )
 
 
-def _band_sig_aggs(n_bands: int) -> list:
-    """The canonical per-band MinHash aggregate: min over the doc's unit
-    set of md5(band || ':' || unit), unit rendered in the ``token`` column.
-    This expression is the determinism contract shared by every banding
-    consumer in this module AND mirrored by the DuckDB oracles — there must
-    be exactly one copy of it."""
-    return [
-        F.min(F.md5(F.concat(F.lit(f"{b}:"), F.col("token")))).alias(f"sig_{b}")
-        for b in range(n_bands)
-    ]
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """Per-doc MinHash signature per band over the doc's distinct unigrams:
+    (doc_id, sig_0..sig_{N_BANDS-1}), one hash-agg."""
+    return _signatures(doc_tokens_distinct(docs)).drop("n")
 
 
-def _melt_bands(sigs: DataFrame, id_col: str, n_bands: int) -> DataFrame:
-    """Melt a (id, sig_0..sig_{B-1}) signature table to (id, band, sig)
-    rows, so candidate generation is ONE equi-join on (band, sig) no matter
-    the band count. The single canonical copy of the band-melt idiom."""
-    return sigs.select(
-        id_col,
-        F.posexplode(F.array(*[F.col(f"sig_{b}") for b in range(n_bands)]))
-        .alias("band", "sig"),
-    )
-
-
-def minhash_signatures(docs: DataFrame, n_bands: int = N_BANDS,
-                       shingle_n: int | None = None) -> DataFrame:
-    """Per-doc MinHash signature per band: min over the doc's unit set
-    (unigrams, or ``shingle_n``-gram shingles — see [[doc_tokens_distinct]])
-    of md5(band || ':' || unit). Shape (doc_id, sig_0..sig_{B-1}) — one
-    hash-agg, no explode of the band dimension."""
-    toks = doc_tokens_distinct(docs, shingle_n)
-    return toks.groupBy("doc_id").agg(*_band_sig_aggs(n_bands))
-
-
-def candidate_pairs(docs: DataFrame, n_bands: int = N_BANDS,
-                    shingle_n: int | None = None) -> DataFrame:
-    """LSH candidate pairs: docs sharing any band signature (a < b).
-
-    The band dimension is melted to rows so candidate generation is ONE
-    self-equi-join on (band, sig) — a single shuffle regardless of band
-    count, vs one join per band; hot buckets split under AQE. At corpus
-    scale pass ``shingle_n`` (precision envelope: see
-    [[doc_tokens_distinct]])."""
-    sigs = minhash_signatures(docs, n_bands, shingle_n)
-    melted = _melt_bands(sigs, "doc_id", n_bands)
-    left = melted.select(F.col("doc_id").alias("a"), "band", "sig")
-    right = melted.select(F.col("doc_id").alias("b"), "band", "sig")
-    return (
-        left.join(right, ["band", "sig"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b").distinct()
-    )
+def candidate_pairs(docs: DataFrame) -> DataFrame:
+    """LSH candidate pairs (a < b) over distinct unigrams: docs sharing any
+    band signature."""
+    return _band_pairs(minhash_signatures(docs))
 
 
 def jaccard_pairs(docs: DataFrame, threshold: float = 0.5,
-                  n_bands: int = N_BANDS,
                   shingle_n: int | None = None) -> DataFrame:
     """Verify LSH candidates with exact set Jaccard ≥ threshold, over the
     same unit set that banded them (unigrams, or ``shingle_n``-gram
     shingles — the corpus-scale configuration; see
     [[doc_tokens_distinct]])."""
-    toks = doc_tokens_distinct(docs, shingle_n)
-    sizes = toks.groupBy("doc_id").agg(F.count("*").alias("n"))
-    cands = candidate_pairs(docs, n_bands, shingle_n)
-    ta = toks.select(F.col("doc_id").alias("a"), "token")
-    tb = toks.select(F.col("doc_id").alias("b"), "token")
-    inter = (
-        cands.join(ta, "a").join(tb, ["b", "token"])
-        .groupBy("a", "b").agg(F.count("*").alias("inter"))
-    )
-    na = sizes.select(F.col("doc_id").alias("a"), F.col("n").alias("na"))
-    nb = sizes.select(F.col("doc_id").alias("b"), F.col("n").alias("nb"))
-    return (
-        inter.join(na, "a").join(nb, "b")
-        .withColumn("jaccard", F.round(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", "inter", "na", "nb", "jaccard")
-    )
+    units = doc_tokens_distinct(docs, shingle_n)
+    sigs = _signatures(units)
+    return (_verified(_band_pairs(sigs), units, units, sigs, sigs)
+            .filter(F.col("jaccard") >= threshold))
 
 
 SIMHASH_SCHEMA = "doc_id long, simhash long"
@@ -685,37 +689,17 @@ def minhash_decontaminate(train: DataFrame, eval_docs: DataFrame,
     Returns one row per eval doc: (doc_id, n_candidates, n_contaminated,
     max_jaccard) — zero-filled for clean docs so coverage is auditable.
     """
-    def melted(docs: DataFrame, alias: str) -> DataFrame:
-        sigs = minhash_signatures(docs, N_BANDS)
-        return _melt_bands(sigs.withColumnRenamed("doc_id", alias),
-                           alias, N_BANDS)
-
-    cand = (
-        melted(train, "t").join(F.broadcast(melted(eval_docs, "e")),
-                                ["band", "sig"])
-        .select("e", "t").distinct()
-    )
-    tt = doc_tokens_distinct(train).select(F.col("doc_id").alias("t"), "token")
-    te = doc_tokens_distinct(eval_docs).select(F.col("doc_id").alias("e"), "token")
-    sizes_t = tt.groupBy("t").agg(F.count("*").alias("nt"))
-    sizes_e = te.groupBy("e").agg(F.count("*").alias("ne"))
-    inter = (
-        cand.join(te, "e").join(tt, ["t", "token"])
-        .groupBy("e", "t").agg(F.count("*").alias("inter"))
-    )
-    jacc = (
-        inter.join(sizes_t, "t").join(sizes_e, "e")
-        .withColumn("jaccard", F.round(
-            F.col("inter") / (F.col("nt") + F.col("ne") - F.col("inter")), 6))
-    )
-    per_eval = jacc.groupBy("e").agg(
+    units_t, units_e = doc_tokens_distinct(train), doc_tokens_distinct(eval_docs)
+    sigs_t, sigs_e = _signatures(units_t), _signatures(units_e)
+    jacc = _verified(_band_pairs(sigs_t, sigs_e), units_t, units_e, sigs_t, sigs_e)
+    per_eval = jacc.groupBy("b").agg(
         F.count("*").cast("long").alias("n_candidates"),
         F.sum((F.col("jaccard") >= threshold).cast("long")).alias("n_contaminated"),
         F.max("jaccard").alias("max_jaccard"),
     )
     return (
         eval_docs.select(F.col("doc_id"))
-        .join(per_eval.withColumnRenamed("e", "doc_id"), "doc_id", "left")
+        .join(per_eval.withColumnRenamed("b", "doc_id"), "doc_id", "left")
         .select(
             "doc_id",
             F.coalesce("n_candidates", F.lit(0)).alias("n_candidates"),
@@ -753,8 +737,9 @@ def prefix_jaccard_join(docs: DataFrame, t_num: int = 4, t_den: int = 5) -> Data
     (5.1 M true pairs on the template-heavy corpus) is ~10⁹ intermediate
     rows and dominated the whole bench (72 s → ~8 s; same results, pinned
     by the brute-force completeness oracle). Returns (a, b, inter, na, nb,
-    jaccard) with the filter applied as ``inter·t_den ≥ t_num·(na+nb−inter)``
-    in BIGINTs.
+    jaccard) with the filter applied as ``inter·(t_num+t_den) ≥
+    t_num·(na+nb)`` (``inter·t_den ≥ t_num·(na+nb−inter)`` rearranged) in
+    BIGINTs.
     """
     from pyspark import StorageLevel
 
@@ -851,12 +836,8 @@ def prefix_jaccard_join(docs: DataFrame, t_num: int = 4, t_den: int = 5) -> Data
     )
     return (
         inter
-        .filter(F.col("inter") * t_den >= t_num * (F.col("na") + F.col("nb") - F.col("inter")))
-        .select(
-            "a", "b", "inter", "na", "nb",
-            F.round(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6)
-            .alias("jaccard"),
-        )
+        .filter(F.col("inter") * (t_num + t_den) >= t_num * (F.col("na") + F.col("nb")))
+        .select("a", "b", "inter", "na", "nb", _jaccard().alias("jaccard"))
     )
 
 
@@ -902,81 +883,32 @@ def incremental_dedup(old_docs: DataFrame, new_docs: DataFrame) -> DataFrame:
     (doc_id, n_old_dups, first_new_dup, keep) — zero/NULL-filled so the
     keep decision is auditable per document.
     """
-    def shingles(docs: DataFrame, alias: str) -> DataFrame:
-        return (
-            with_tokens(docs)
-            .select(F.col("doc_id").alias(alias),
-                    F.explode(F.array_distinct(gram_fp64_expr(3))).alias("gram"))
-        )
+    # The batch side feeds both candidate lanes and both verifies; persist
+    # its units (accurate-stats rule, see ccnet_buckets / the prefix-jaccard
+    # bisect in COVERAGE.md) so the batch shingles once, not four times.
+    # The corpus side is scanned exactly twice: sigs_old below (persisted —
+    # it is the per-doc signature+size aggregate, corpus-row-count × ~140 B,
+    # the steady-state "signature table") and the verify join's shingle side.
+    units_old = doc_tokens_distinct(old_docs, 3)
+    units_new = doc_tokens_distinct(new_docs, 3).persist()
+    sigs_old = _signatures(units_old).persist()
+    sigs_new = _signatures(units_new).persist()
 
-    def sized_sigs(sh: DataFrame, alias: str, sz_alias: str) -> DataFrame:
-        # Band signatures AND the exact set size ride ONE hash-agg, so the
-        # scan that produces them is paid once per side. The signature
-        # expression is the module-wide canonical one (_band_sig_aggs);
-        # shingle fingerprints render as decimal strings, matching
-        # doc_tokens_distinct's shingle path and the DuckDB oracle.
-        units = sh.select(alias, F.col("gram").cast("string").alias("token"))
-        return units.groupBy(alias).agg(
-            *_band_sig_aggs(N_BANDS), F.count("*").alias(sz_alias))
-
-    t_old = shingles(old_docs, "o")
-    # The batch side feeds both candidate lanes and both verifies; persist it
-    # (accurate-stats rule, see ccnet_buckets / the prefix-jaccard bisect in
-    # COVERAGE.md) so the batch shingles once, not four times. The corpus
-    # side is scanned exactly twice: sig_old below (persisted — it is the
-    # per-doc signature+size aggregate, corpus-row-count × ~140 B, the
-    # steady-state "signature table") and the verify join's shingle side.
-    t_new = shingles(new_docs, "n").persist()
-    sig_old = sized_sigs(t_old, "o", "no").persist()
-    sig_new = sized_sigs(t_new, "n", "nn")
-    sz_old = sig_old.select("o", "no")
-    sz_new = sig_new.select("n", "nn")
-
-    def verified(cand: DataFrame, left: str, right: str,
-                 tl: DataFrame, tr: DataFrame,
-                 szl: DataFrame, szr: DataFrame) -> DataFrame:
-        inter = (
-            cand.join(tl, left).join(tr, [right, "gram"])
-            .groupBy(left, right).agg(F.count("*").alias("inter"))
-        )
-        return (
-            inter.join(szl, left).join(szr, right)
-            .withColumn("jaccard", F.round(
-                F.col("inter") /
-                (F.col(szl.columns[1]) + F.col(szr.columns[1]) - F.col("inter")), 6))
-            .filter(F.col("jaccard") >= 0.5)
-        )
-
-    new_m = _melt_bands(sig_new, "n", N_BANDS).persist()
-    cand_old = (
-        _melt_bands(sig_old, "o", N_BANDS)
-        .join(F.broadcast(new_m), ["band", "sig"])
-        .select("n", "o").distinct()
-    )
     vs_old = (
-        verified(cand_old, "n", "o", t_new, t_old, sz_new, sz_old)
-        .groupBy("n").agg(F.count("*").cast("long").alias("n_old_dups"))
-    )
-
-    cand_new = (
-        new_m.select(F.col("n").alias("a"), "band", "sig")
-        .join(new_m.select(F.col("n").alias("b"), "band", "sig"),
-              ["band", "sig"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b").distinct()
+        _verified(_band_pairs(sigs_old, sigs_new),
+                  units_old, units_new, sigs_old, sigs_new)
+        .filter(F.col("jaccard") >= 0.5)
+        .groupBy("b").agg(F.count("*").cast("long").alias("n_old_dups"))
     )
     vs_new = (
-        verified(cand_new, "a", "b",
-                 t_new.withColumnRenamed("n", "a"),
-                 t_new.withColumnRenamed("n", "b"),
-                 sz_new.withColumnRenamed("n", "a").withColumnRenamed("nn", "na"),
-                 sz_new.withColumnRenamed("n", "b").withColumnRenamed("nn", "nb"))
+        _verified(_band_pairs(sigs_new), units_new, units_new, sigs_new, sigs_new)
+        .filter(F.col("jaccard") >= 0.5)
         .groupBy("b").agg(F.min("a").alias("first_new_dup"))
     )
 
     return (
         new_docs.select("doc_id")
-        .join(vs_old.withColumnRenamed("n", "doc_id"), "doc_id", "left")
+        .join(vs_old.withColumnRenamed("b", "doc_id"), "doc_id", "left")
         .join(vs_new.withColumnRenamed("b", "doc_id"), "doc_id", "left")
         .select(
             "doc_id",
@@ -1095,7 +1027,7 @@ def bloom_fpr_calibration(docs: DataFrame, n_probes: int = 2000,
 
 
 def banding_eval(docs: DataFrame, threshold: float = 0.8,
-                 n_bands: int = N_BANDS, sample_mod: int = 8) -> DataFrame:
+                 sample_mod: int = 8) -> DataFrame:
     """Measured recall/precision of the MinHash banding ([[dedup_minhash_bands]]
     → [[dedup_jaccard_pairs]] pipeline) against EXACT Jaccard ground truth
     on a deterministic doc sample — the calibration row you check before
@@ -1116,21 +1048,18 @@ def banding_eval(docs: DataFrame, threshold: float = 0.8,
     sample = docs.where(
         md5_long(F.concat(F.col("doc_id").cast("string"),
                           F.lit(":mheval"))) % sample_mod == 0)
-    toks = doc_tokens_distinct(sample)
-    sizes = toks.groupBy("doc_id").agg(F.count("*").alias("n"))
-    ta = toks.select(F.col("doc_id").alias("a"), "token")
-    tb = toks.select(F.col("doc_id").alias("b"), "token")
-    inter = (ta.join(tb, "token").where(F.col("a") < F.col("b"))
-             .groupBy("a", "b").agg(F.count("*").alias("i")))
+    units = doc_tokens_distinct(sample)
+    sigs = _signatures(units)
+    ua = units.select(F.col("doc_id").alias("a"), "token")
+    ub = units.select(F.col("doc_id").alias("b"), "token")
     truth = (
-        inter
-        .join(sizes.select(F.col("doc_id").alias("a"), F.col("n").alias("na")), "a")
-        .join(sizes.select(F.col("doc_id").alias("b"), F.col("n").alias("nb")), "b")
-        .where(F.round(F.col("i") / (F.col("na") + F.col("nb") - F.col("i")), 6)
-               >= threshold)
+        ua.join(ub, "token").where(F.col("a") < F.col("b"))
+        .groupBy("a", "b").agg(F.count("*").alias("inter"))
+        .join(sigs.select(F.col("doc_id").alias("a"), F.col("n").alias("na")), "a")
+        .join(sigs.select(F.col("doc_id").alias("b"), F.col("n").alias("nb")), "b")
+        .where(_jaccard() >= threshold)
         .select("a", "b"))
-    cands = (candidate_pairs(sample, n_bands)
-             .select("a", "b").distinct())
+    cands = _band_pairs(sigs)
     t = truth.withColumn("in_truth", F.lit(1))
     c = cands.withColumn("in_cand", F.lit(1))
     both = t.join(c, ["a", "b"], "full").select(
@@ -1198,8 +1127,7 @@ def onion_funnel(docs: DataFrame, jaccard_t: float = 0.8,
     s2 = (flagged.where(F.col("stage").isNull())
           .select("doc_id", "text").persist())
     try:
-        pairs = jaccard_pairs(s2, threshold=jaccard_t, n_bands=N_BANDS,
-                              shingle_n=shingle_n)
+        pairs = jaccard_pairs(s2, threshold=jaccard_t, shingle_n=shingle_n)
         r3_n = pairs.select(F.col("b").alias("doc_id")).distinct().count()
 
         per = {r["stage"]: r["n"] for r in

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .text import TOKEN_SPLIT, with_tokens
+from .text import with_tokens
 
 # Deterministic train/score split: md5(doc_id) first two hex chars < 0xc0
 # puts ~75% of documents in the training fold. Hash-based so any engine

@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .ranks import salted_topk
-from .text import TOKEN_SPLIT
+from .text import tokens_expr
 
 #: default query workload for the driver gate: fixed strings over the
 #: corpus vocabulary, one row per (query_id, term) after splitting.
@@ -39,7 +39,7 @@ def postings(docs: DataFrame) -> DataFrame:
     length in tokens) rides along from the pre-explode projection so no
     separate per-doc aggregate (and no extra shuffle) is needed."""
     toks = docs.select(
-        "doc_id", F.split(F.trim("text"), TOKEN_SPLIT).alias("tokens")
+        "doc_id", tokens_expr().alias("tokens")
     ).select("doc_id", F.size("tokens").alias("dl"),
              F.explode("tokens").alias("term"))
     return (
@@ -79,7 +79,7 @@ def bm25_topk(docs: DataFrame, queries: list[str] | None = None,
     # trick) — keeps the repo-wide no-BNLJ plan gate green
     stats = docs.select(
         F.count("*").cast("long").alias("n_docs"),
-        (F.sum(F.size(F.split(F.trim("text"), TOKEN_SPLIT))) /
+        (F.sum(F.size(tokens_expr())) /
          F.count("*")).alias("avgdl"),
     ).withColumn("__k", F.pmod(F.col("n_docs"), F.lit(1)))
     # df only for the handful of query terms: semi-join prunes first
@@ -132,7 +132,7 @@ def mlt_topk(docs: DataFrame, n_queries: int = 5, k: int = 10) -> DataFrame:
         .select(
             F.col("doc_id").alias("q_id"),
             F.explode(F.array_distinct(F.slice(
-                F.split(F.trim("text"), TOKEN_SPLIT), 1, 16)))
+                tokens_expr(), 1, 16)))
             .alias("term"),
         )
         .filter(F.col("term") != "")
@@ -247,7 +247,7 @@ def phrase_search(docs: DataFrame, phrases: list[str] | None = None) -> DataFram
 
     positions = (
         docs.select("doc_id",
-                    F.posexplode(F.split(F.trim("text"), TOKEN_SPLIT))
+                    F.posexplode(tokens_expr())
                     .alias("pos", "token"))
         .filter(F.col("token") != "")
     )

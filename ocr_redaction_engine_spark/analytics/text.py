@@ -12,11 +12,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-TOKEN_SPLIT = r"\s+"
+
+def tokens_expr() -> F.Column:
+    """The one tokenizer: ``text`` trimmed, then split on whitespace runs.
+    Every token count, vocabulary and n-gram of the analytics layer reads
+    this split; the DuckDB oracles mirror it as
+    ``string_split_regex(trim(text), '\\s+')``."""
+    return F.split(F.trim("text"), r"\s+")
 
 
 def with_tokens(docs: DataFrame) -> DataFrame:
-    return docs.withColumn("tokens", F.split(F.trim("text"), TOKEN_SPLIT))
+    return docs.withColumn("tokens", tokens_expr())
 
 
 def md5_long(col) -> F.Column:
@@ -551,7 +557,7 @@ def bpe_pair_counts(docs: DataFrame, k: int = 30) -> DataFrame:
     from pyspark.sql import Window
 
     words = (
-        docs.select(F.explode(F.split(F.trim("text"), TOKEN_SPLIT)).alias("w"))
+        docs.select(F.explode(tokens_expr()).alias("w"))
         .filter(F.col("w") != "")
         .groupBy("w").agg(F.count("*").cast("long").alias("wcount"))
     )
@@ -630,7 +636,7 @@ def _bpe_apply(word: str, ranks: dict) -> list:
 
 def _word_counts(docs: DataFrame) -> DataFrame:
     return (
-        docs.select(F.explode(F.split(F.trim("text"), TOKEN_SPLIT)).alias("w"))
+        docs.select(F.explode(tokens_expr()).alias("w"))
         .filter(F.col("w") != "")
         .groupBy("w").agg(F.count("*").cast("long").alias("wcount"))
     )
@@ -706,7 +712,7 @@ def bpe_encode(docs: DataFrame, merges: list) -> DataFrame:
         run, "w string, pieces array<string>")
     toks = (
         docs.select("doc_id",
-                    F.posexplode(F.split(F.trim("text"), TOKEN_SPLIT))
+                    F.posexplode(tokens_expr())
                     .alias("word_pos", "w"))
         .filter(F.col("w") != "")
     )
@@ -749,7 +755,7 @@ def tokenizer_fertility(docs: DataFrame, merges: list) -> DataFrame:
 
     gw = (
         docs.select(F.col("lang").alias("grp"),
-                    F.explode(F.split(F.trim("text"), TOKEN_SPLIT)).alias("w"))
+                    F.explode(tokens_expr()).alias("w"))
         .filter(F.col("w") != "")
         .groupBy("grp", "w").agg(F.count("*").cast("long").alias("wcount"))
     )
@@ -976,7 +982,7 @@ def source_kl_divergence(docs: DataFrame) -> DataFrame:
     Output: (source, n_tokens, kl)."""
     st = (
         docs.select("source",
-                    F.explode(F.split(F.trim("text"), TOKEN_SPLIT)).alias("t"))
+                    F.explode(tokens_expr()).alias("t"))
         .filter(F.col("t") != "")
         .groupBy("source", "t").agg(F.count("*").cast("long").alias("c_st"))
     )
@@ -1108,9 +1114,7 @@ def zipf_fit(docs: DataFrame, top_n: int = 200,
     template-heavy sources drift shallow/steep, so the slope is a cheap
     source-level quality gate alongside [[text_source_kl]]).
 
-    Determinism discipline (same as lm.py): every ln and every product is
-    F.round()-ed to 6 decimals BEFORE summation and each sum re-rounded,
-    so engine-order float drift cannot reach the released digits. Rank
+    Same 6dp float discipline as every ln-ln fit ([[_lnln_fit]]). Rank
     ties break lexicographically.
 
     Scale shape: one (source, token) hash-agg over the scan, a per-source
@@ -1129,28 +1133,42 @@ def zipf_fit(docs: DataFrame, top_n: int = 200,
                                              F.col("tok").asc())
     ranked = (counts.withColumn("r", F.row_number().over(w))
               .where(F.col("r") <= top_n))
-    x = F.round(F.log(F.col("r").cast("double")), 6)
-    y = F.round(F.log(F.col("c").cast("double")), 6)
-    terms = ranked.select(
-        "source", x.alias("x"), y.alias("y"),
-        F.round(x * y, 6).alias("xy"), F.round(x * x, 6).alias("xx"))
-    agg = terms.groupBy("source").agg(
-        F.count("*").alias("n_terms"),
+    return _lnln_fit(ranked, ["source"], "r", "c",
+                     ("n_terms", "slope", "intercept"))
+
+
+def _lnln_fit(pts: DataFrame, groups: list, x: str, y: str,
+              out: tuple) -> DataFrame:
+    """Least-squares line through (ln x, ln y) per ``groups`` (one fit
+    when empty): (*groups, n, slope, intercept) under the names in
+    ``out``, fits of fewer than 3 points dropped.
+
+    Determinism discipline (same as lm.py): every ln and every product is
+    F.round()-ed to 6 decimals BEFORE summation and each sum re-rounded,
+    so engine-order float drift cannot reach the released digits."""
+    n, slope, icpt = out
+    lx = F.round(F.log(F.col(x).cast("double")), 6)
+    ly = F.round(F.log(F.col(y).cast("double")), 6)
+    terms = pts.select(
+        *groups, lx.alias("x"), ly.alias("y"),
+        F.round(lx * ly, 6).alias("xy"), F.round(lx * lx, 6).alias("xx"))
+    agg = terms.groupBy(*groups).agg(
+        F.count("*").alias(n),
         F.round(F.sum("x"), 6).alias("sx"),
         F.round(F.sum("y"), 6).alias("sy"),
         F.round(F.sum("xy"), 6).alias("sxy"),
         F.round(F.sum("xx"), 6).alias("sxx"))
     # + 0.0 collapses IEEE negative zero (a flat fit rounds to -0.0 in one
     # engine and +0.0 in another; %.6g then formats them differently)
-    slope = F.round(
-        (F.col("n_terms") * F.col("sxy") - F.col("sx") * F.col("sy"))
-        / (F.col("n_terms") * F.col("sxx") - F.col("sx") * F.col("sx")), 6) + F.lit(0.0)
-    return (agg.where(F.col("n_terms") >= 3)
-            .withColumn("slope", slope)
-            .select("source", "n_terms", "slope",
-                    (F.round((F.col("sy") - F.col("slope") * F.col("sx"))
-                             / F.col("n_terms"), 6) + F.lit(0.0))
-                    .alias("intercept")))
+    b = F.round(
+        (F.col(n) * F.col("sxy") - F.col("sx") * F.col("sy"))
+        / (F.col(n) * F.col("sxx") - F.col("sx") * F.col("sx")), 6) + F.lit(0.0)
+    return (agg.where(F.col(n) >= 3)
+            .withColumn(slope, b)
+            .select(*groups, n, slope,
+                    (F.round((F.col("sy") - F.col(slope) * F.col("sx"))
+                             / F.col(n), 6) + F.lit(0.0))
+                    .alias(icpt)))
 
 
 def source_overlap(docs: DataFrame, n: int = 5) -> DataFrame:
@@ -1203,7 +1221,7 @@ def readability(docs: DataFrame) -> DataFrame:
     runs, floored at 1. Pure per-row regexp expressions — map-only, no
     shuffle; banding is a broadcast-free CASE.
     """
-    words = F.size(F.split(F.trim("text"), TOKEN_SPLIT))
+    words = F.size(tokens_expr())
     sents = F.greatest(
         F.lit(1),
         F.size(F.expr("regexp_extract_all(text, '[.!?]+', 0)")))
@@ -1269,26 +1287,8 @@ def heaps_fit(docs: DataFrame, n_buckets: int = 64) -> DataFrame:
                 F.sum("toks").over(w).alias("cum_toks"),
                 F.sum("new_vocab").over(w).alias("cum_vocab"))
         .where((F.col("cum_toks") > 0) & (F.col("cum_vocab") > 0)))
-    x = F.round(F.log(F.col("cum_toks").cast("double")), 6)
-    y = F.round(F.log(F.col("cum_vocab").cast("double")), 6)
-    terms = pts.select(
-        x.alias("x"), y.alias("y"),
-        F.round(x * y, 6).alias("xy"), F.round(x * x, 6).alias("xx"))
-    agg = terms.agg(
-        F.count("*").alias("n_points"),
-        F.round(F.sum("x"), 6).alias("sx"),
-        F.round(F.sum("y"), 6).alias("sy"),
-        F.round(F.sum("xy"), 6).alias("sxy"),
-        F.round(F.sum("xx"), 6).alias("sxx"))
-    beta = F.round(
-        (F.col("n_points") * F.col("sxy") - F.col("sx") * F.col("sy"))
-        / (F.col("n_points") * F.col("sxx") - F.col("sx") * F.col("sx")), 6) + F.lit(0.0)
-    return (agg.where(F.col("n_points") >= 3)
-            .withColumn("beta", beta)
-            .select("n_points", "beta",
-                    (F.round((F.col("sy") - F.col("beta") * F.col("sx"))
-                             / F.col("n_points"), 6) + F.lit(0.0))
-                    .alias("ln_k")))
+    return _lnln_fit(pts, [], "cum_toks", "cum_vocab",
+                     ("n_points", "beta", "ln_k"))
 
 
 CODE_KEYWORDS = ("def", "return", "import", "class", "void", "int",
@@ -1312,9 +1312,8 @@ def code_detection(docs: DataFrame) -> DataFrame:
     symbols = (F.length("text")
                - F.length(F.translate("text", "{}();=[]<>", ""))).cast("long")
     kw = "|".join(CODE_KEYWORDS)
-    kw_hits = F.size(F.expr(
-        f"filter(split(trim(text), '\\\\s+'), t -> t RLIKE '^({kw})$')"
-    )).cast("long")
+    kw_hits = F.size(F.filter(tokens_expr(), lambda t: t.rlike(f"^({kw})$"))
+                     ).cast("long")
     digits = (F.length("text")
               - F.length(F.regexp_replace("text", "[0-9]", ""))).cast("long")
     scored = docs.select(

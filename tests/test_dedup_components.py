@@ -170,7 +170,7 @@ def test_banding_eval_counts_match_mirror(spark):
     docs = spark.createDataFrame(
         [(k, v, "en", "s", 1) for k, v in corp.items()],
         "doc_id long, text string, lang string, source string, n_chars long")
-    got = banding_eval(docs, threshold=0.8, n_bands=4, sample_mod=1).collect()[0]
+    got = banding_eval(docs, threshold=0.8, sample_mod=1).collect()[0]
 
     def sig(toks, i):
         return min(hashlib.md5(f"{i}:{t}".encode()).hexdigest() for t in toks)

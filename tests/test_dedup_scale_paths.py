@@ -313,8 +313,11 @@ def test_minhash_family_shingle_mode(spark):
     docs = spark.createDataFrame(rows, "doc_id string, text string")
 
     uni = candidate_pairs(docs).count()
-    shi = candidate_pairs(docs, shingle_n=3)
-    shi_pairs = {(r.a, r.b) for r in shi.collect()}
+    # threshold 0 keeps every shingle candidate: a band collision implies
+    # a shared shingle, so each candidate verifies with inter >= 1
+    shi = jaccard_pairs(docs, threshold=0.0, shingle_n=3).collect()
+    assert all(r.inter >= 1 for r in shi)
+    shi_pairs = {(r.a, r.b) for r in shi}
     assert ("d0", "d99") in shi_pairs
     assert len(shi_pairs) < uni  # the unigram mode over-bands the template
 
@@ -322,3 +325,98 @@ def test_minhash_family_shingle_mode(spark):
            for r in jaccard_pairs(docs, threshold=0.5, shingle_n=3).collect()}
     assert ver[("d0", "d99")] == 1.0
     assert all(p == ("d0", "d99") for p in ver)
+
+
+def _lsh_units_py(text: str, shingle_n):
+    """The unit set of doc_tokens_distinct, in Python: distinct tokens, or
+    the 60-bit md5 longs of each space-joined shingle_n-token window."""
+    toks = text.split()
+    if not shingle_n:
+        return set(toks)
+    return {int(hashlib.md5(" ".join(toks[i:i + shingle_n]).encode())
+                .hexdigest()[:15], 16)
+            for i in range(len(toks) - shingle_n + 1)}
+
+
+@pytest.mark.parametrize("cross", [False, True], ids=["self", "cross"])
+@pytest.mark.parametrize("shingle_n", [None, 3], ids=["unigram", "3gram"])
+def test_band_join_and_verify_match_python_sets(spark, shingle_n, cross):
+    """_band_pairs + _verified against pure-Python set arithmetic on seeded
+    random corpora: the emitted pairs are exactly the band collisions, and
+    every pair's inter/na/nb/jaccard equals the set counts with the same
+    6-dp half-up rounding. Self mode emits only a < b; cross mode only
+    (side A, side B) pairs, though side A holds colliding pairs of its own."""
+    import random
+    from decimal import ROUND_HALF_UP, Decimal
+
+    from ocr_redaction_engine_spark.analytics.dedup import (
+        N_BANDS, _band_pairs, _signatures, _verified, doc_tokens_distinct)
+
+    rng = random.Random(20 + 2 * bool(shingle_n) + cross)
+    vocab = [f"w{i}" for i in range(8)]
+
+    def corpus(prefix: str, n: int) -> dict:
+        texts = {f"{prefix}{i:02d}": [rng.choice(vocab)
+                                      for _ in range(rng.randint(1, 9))]
+                 for i in range(n)}
+        for j in range(4):  # near-dups: one token of an earlier doc swapped
+            toks = list(texts[rng.choice(sorted(texts))])
+            toks[rng.randrange(len(toks))] = rng.choice(vocab)
+            texts[f"{prefix}{n + j:02d}"] = toks
+        # an exact within-side pair
+        texts[f"{prefix}{n + 4:02d}"] = texts[f"{prefix}00"] + ["tail"]
+        texts[f"{prefix}{n + 5:02d}"] = texts[f"{prefix}00"] + ["tail"]
+        # every third doc has a space run, some a leading space (trimmed)
+        return {k: rng.choice(["", " "]) + "  ".join(v) if j % 3 == 0
+                else " ".join(v) for j, (k, v) in enumerate(texts.items())}
+
+    side_a = corpus("a", 16)
+    side_b = side_a
+    if cross:  # side B also holds near-copies of side A docs
+        side_b = corpus("b", 12)
+        side_b.update({f"b9{j}": side_a[k] + " w0"
+                       for j, k in enumerate(sorted(side_a)[::5])})
+    units = {k: _lsh_units_py(t, shingle_n)
+             for k, t in {**side_a, **side_b}.items()}
+    sig = {k: tuple(min(hashlib.md5(f"{b}:{u}".encode()).hexdigest()
+                        for u in s) for b in range(N_BANDS))
+           for k, s in units.items() if s}
+
+    def collide(x, y):
+        return x in sig and y in sig and any(
+            p == q for p, q in zip(sig[x], sig[y]))
+
+    def round6(v: float) -> float:
+        return float(Decimal(repr(v)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+    expect = {}
+    for x in sorted(side_a):
+        for y in sorted(side_b):
+            if (cross or x < y) and collide(x, y):
+                i, na, nb = len(units[x] & units[y]), len(units[x]), len(units[y])
+                expect[(x, y)] = (i, na, nb, round6(i / (na + nb - i)))
+    assert len(expect) >= 3
+    assert any(j < 1.0 for *_, j in expect.values())
+    if cross:
+        assert any(collide(x, y) for x in side_a for y in side_a if x < y)
+
+    def frame(texts: dict):
+        return spark.createDataFrame(sorted(texts.items()),
+                                     "doc_id string, text string")
+
+    units_a = doc_tokens_distinct(frame(side_a), shingle_n)
+    sigs_a = _signatures(units_a)
+    if cross:
+        units_b = doc_tokens_distinct(frame(side_b), shingle_n)
+        sigs_b = _signatures(units_b)
+        pairs = _band_pairs(sigs_a, sigs_b)
+    else:
+        units_b, sigs_b = units_a, sigs_a
+        pairs = _band_pairs(sigs_a)
+    got = {(r.a, r.b): (r.inter, r.na, r.nb, r.jaccard)
+           for r in _verified(pairs, units_a, units_b, sigs_a, sigs_b).collect()}
+    assert got == expect
+    if cross:
+        assert all(a in side_a and b in side_b for a, b in got)
+    else:
+        assert all(a < b for a, b in got)
